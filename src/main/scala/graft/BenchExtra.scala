@@ -106,7 +106,7 @@ object BenchExtra {
     }
 
     val json = results.map { sweep =>
-      sweep.map { case (n, s) => f""""$n":$s%.3f""" }.mkString("{", ",", "}")
+      sweep.map { case (n, s) => s""""$n":${BenchEmit.num(s, 3)}""" }.mkString("{", ",", "}")
     }.mkString("""{"sweeps":[""", ",", "]}")
     println(json)
     spark.stop()

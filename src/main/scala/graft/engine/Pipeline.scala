@@ -530,35 +530,14 @@ object Pipeline {
   private def docIndexFpPath(outDir: String) =
     new org.apache.hadoop.fs.Path(outDir, "_doc_index.fp")
 
-  /** Deep content stamp of a local directory tree (every file's name,
-    * length and mtime folded): the cheap invalidation key for
-    * [[chunkSetFingerprint]]'s memo. Parquet files are immutable once
-    * committed — any append/rewrite adds, removes or replaces files,
-    * which changes the stamp. Non-local filesystems return 0 (memo
-    * disabled, every call recomputes — the pre-memo behavior).
+  /** Session memo of [[chunkSetFingerprint]] per chunks directory:
+    * every freshness check still VALIDATES against the current
+    * directory contents (an appended chunk changes the stamp and forces
+    * a recompute — the stale-index fallback contract is untouched), but
+    * repeated lookups against an unchanged table stop paying one Spark
+    * job each. Nothing persists across JVMs.
     */
-  private def dirStampDeep(path: String): Long = {
-    def walk(f: java.io.File, acc: Long): Long = {
-      val kids = Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-      kids.foldLeft(acc * 1099511628211L ^ f.getName.hashCode.toLong) { (a, k) =>
-        if (k.isDirectory) walk(k, a)
-        else a * 1099511628211L ^ k.getName.hashCode.toLong ^ k.lastModified() ^ k.length()
-      }
-    }
-    val f = new java.io.File(path)
-    if (!f.exists()) 0L else walk(f, -3750763034362895579L) // FNV-1a offset basis
-  }
-
-  /** Session-scoped memo of [[chunkSetFingerprint]], keyed by the
-    * chunks directory's deep content stamp: every freshness check
-    * still VALIDATES against the current directory contents (an
-    * appended chunk changes the stamp and forces a recompute — the
-    * stale-index fallback contract is untouched), but repeated lookups
-    * against an unchanged table stop paying one Spark job each. The
-    * same derived-metadata-cache convention as SparkEntry's encode
-    * caches; nothing persists across JVMs.
-    */
-  private val fpMemo = scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
+  private val fpMemo = new SessionMemo[String, String](_ => ())
 
   /** Order-independent fingerprint of the chunk-id set — one tiny
     * single-column agg (memoized per content stamp); pairs the index
@@ -567,25 +546,14 @@ object Pipeline {
     */
   private def chunkSetFingerprint(spark: SparkSession, outDir: String): String = {
     val cp = chunksPath(outDir)
-    val appId = spark.sparkContext.applicationId
-    // entries of other applications belong to stopped sessions — drop
-    // them so a long-lived JVM never accumulates dead memo entries
-    // (same eviction convention as SparkEntry's encode caches)
-    fpMemo.keys.filter(!_.startsWith(s"$appId:")).foreach(fpMemo.remove)
-    val key = s"$appId:${new java.io.File(cp).getAbsolutePath}"
-    val stamp = dirStampDeep(cp)
-    fpMemo.get(key) match {
-      case Some((st, fp)) if st == stamp && stamp != 0L => fp
-      case _ =>
-        val r = spark.read
-          .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-          .parquet(cp)
-          .select(xxhash64(col("chunk_id")).as("h"))
-          .agg(count(lit(1)), sum(col("h").cast("decimal(20,0)"))).first()
-        val s = if (r.isNullAt(1)) "0" else r.getDecimal(1).toBigInteger.toString
-        val fp = s"${r.getLong(0)}:$s"
-        if (stamp != 0L) fpMemo(key) = (stamp, fp)
-        fp
+    fpMemo(spark, cp, cp) {
+      val r = spark.read
+        .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
+        .parquet(cp)
+        .select(xxhash64(col("chunk_id")).as("h"))
+        .agg(count(lit(1)), sum(col("h").cast("decimal(20,0)"))).first()
+      val s = if (r.isNullAt(1)) "0" else r.getDecimal(1).toBigInteger.toString
+      s"${r.getLong(0)}:$s"
     }
   }
 

@@ -1,0 +1,96 @@
+package graft
+
+import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
+import graft.engine.{Fixtures, Pipeline, SessionMemo, Verifier}
+
+/** The session memos against a live Spark session: what a release frees,
+  * and what a hit costs.
+  */
+class SessionMemoSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private val sf = "/root/testdata/sf0.001"
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .appName("graft-session-memo-spec")
+    .config("spark.sql.shuffle.partitions", "8")
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    .getOrCreate()
+  locally { spark.sparkContext.setLogLevel("WARN") }
+
+  override def afterAll(): Unit = spark.stop()
+
+  private def checkpointRddIds(df: DataFrame): Seq[Int] =
+    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }
+
+  /** Spark jobs `body` submits. The status store fills from the listener
+    * bus in event order, so once a marker job submitted after `body` is
+    * visible, every job of `body` is too.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"memo-spec-${System.nanoTime()}"
+    def inGroup(g: String)(f: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    inGroup(group)(body)
+    inGroup(s"$group-marker")(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(s"$group-marker").nonEmpty)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("q64: regenerating the corpus releases the evicted components checkpoint") {
+    val dir = Files.createTempDirectory("graft-memo-q64").toString
+    def regenerate(): Unit = spark.read.parquet(s"$sf/documents.parquet")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val q64 = SparkEntry.queries("q64_neardup_clusters")
+    regenerate()
+    val first = q64(spark, dir)
+    val ids = checkpointRddIds(first)
+    assert(ids.nonEmpty, "q64 reads the localCheckpoint-backed labeling")
+    assert(ids.forall(spark.sparkContext.getPersistentRDDs.contains))
+    val rows = first.collect().toSeq
+    regenerate()
+    val second = q64(spark, dir)
+    val persistent = spark.sparkContext.getPersistentRDDs.keySet
+    assert(ids.forall(id => !persistent.contains(id)),
+      s"evicted checkpoint RDDs still persisted: ${ids.filter(persistent.contains)}")
+    assert(second.collect().toSeq == rows, "same corpus, same clusters")
+    Verifier.rmTree(dir)
+  }
+
+  test("a second docIndexIsFresh on an unchanged directory submits no job") {
+    val local = Files.createTempDirectory("graft-memo-fp").toString
+    Pipeline.run(spark, Fixtures.tokenTable(spark, 400, seed = 3, partitions = 2),
+      local, tokensPerChunk = 16 * 1024, waves = 1)
+    Pipeline.buildDocIndex(spark, local)
+    // the same directory by plain path and by qualified URI
+    Seq(local, s"file:$local").foreach { dir =>
+      assert(Pipeline.docIndexIsFresh(spark, dir))
+      val jobs = jobsOf(assert(Pipeline.docIndexIsFresh(spark, dir)))
+      assert(jobs == 0, s"$dir: repeat freshness check submitted $jobs job(s)")
+    }
+    Verifier.rmTree(local)
+  }
+
+  // runs last: it stops the suite's session. A raw unpersist of a
+  // stopped session's persisted Dataset or checkpoint RDD throws (its
+  // block manager endpoint is gone), which would fail the next lookup
+  // of whichever memo holds it.
+  test("releasing a stopped session's Dataset does nothing") {
+    val ds = spark.range(10).toDF().localCheckpoint().persist()
+    ds.count()
+    spark.stop()
+    SessionMemo.unpersist(ds)
+  }
+}
