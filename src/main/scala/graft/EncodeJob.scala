@@ -193,18 +193,15 @@ object EncodeJob {
     spark.sparkContext.setLogLevel("WARN")
     if (lookup) {
       val docs = opts("doc").split(',').toSeq.filter(_.nonEmpty)
-      val rows =
-        if (docs.lengthCompare(1) == 0)
-          Pipeline.readTokensForDocId(spark, out, docs.head).collect()
-        else Pipeline.readTokensForDocIds(spark, out, docs).collect()
+      val rows = Pipeline.readTokensForDocIds(spark, out, docs).collect()
       rows.foreach { r =>
-        println(s"""{"doc_id":"${r.doc_id}","source":"${r.source}","n_tok":${r.n_tok}}""")
+        println(s"""{"doc_id":${jstr(r.doc_id)},"source":${jstr(r.source)},"n_tok":${r.n_tok}}""")
       }
       val found = rows.map(_.doc_id).toSet
-      docs.filterNot(found).foreach(d => println(s"""{"doc_id":"$d","found":false}"""))
+      docs.filterNot(found).foreach(d => println(s"""{"doc_id":${jstr(d)},"found":false}"""))
     } else {
       val n = Pipeline.readDocIndex(spark, out).count()
-      println(s"""{"index_rows":$n,"out":"$out"}""")
+      println(s"""{"index_rows":$n,"out":${jstr(out)}}""")
     }
     spark.stop()
   }

@@ -583,7 +583,7 @@ object SparkEntry {
     // reference's precise row-range pruning from page min/max stats
     // (reference: search/constraint.go:394-433) at chunk grain — and
     // WITHIN the surviving chunk only the target doc's token slice is
-    // materialized (Decoder.decodeDocTokens -> IntCodec.decodeRange:
+    // materialized (Decoder.decodeDocsTokensWhere -> IntCodec.decodeRange:
     // O(doc), not O(chunk) — the reference's page-grain row-range
     // materialization, search/iterators.go:359-494).
     // Oracle-checked: a wrong bound or slice offset would drop the row
@@ -594,7 +594,7 @@ object SparkEntry {
       val key = "42"
       chunksFor(s, dir, tokensPerChunk = 16384)
         .filter(col("min_doc_id") <= key && col("max_doc_id") >= key)
-        .flatMap(c => Decoder.decodeDocTokens(c, key))
+        .flatMap(c => Decoder.decodeDocsTokensWhere(c, _ == key))
         .map(r => (r.doc_id.toLong, r.n_tok.toLong))
         .toDF("doc_id", "n_tok")
         .orderBy(col("doc_id"))
@@ -604,7 +604,7 @@ object SparkEntry {
     // AT-REST chunks — build the (doc_id, chunk_id) index once, then a
     // batch lookup probes it with a pushed isin filter (parquet min/max
     // on the sorted files prune to ~one row-group) and decodes each
-    // candidate chunk once for all its keys (Decoder.decodeDocsTokens)
+    // candidate chunk once for all its keys (Decoder.decodeDocsTokensWhere)
     "q53_doc_index_lookup" -> ((s, dir) => {
       val spark = s
       import spark.implicits._

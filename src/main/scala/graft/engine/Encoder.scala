@@ -239,60 +239,24 @@ object Decoder {
     chunks.flatMap(c => decodeChunk(c, verifyChecksum))
   }
 
-  /** Point decode: one doc's row out of a chunk, materializing O(doc)
-    * tokens instead of O(chunk) — the reference's page-grain row-range
-    * materialization (reference: search/constraint.go:520-595 binary
-    * search on the sorted column; search/iterators.go:359-494
-    * RowRangesValueIterator decodes only the selected ranges) brought
-    * within the chunk: the doc index (ids + lengths, tiny) locates the
-    * doc and its token offset by prefix sum; [[graft.codec.IntCodec
-    * .decodeRange]] then decodes only that slice for offset-addressable
-    * codecs (plain/bitpack/for/for8/forsplit/dict; fordelta falls back
-    * to a full decode).
+  /** Slice decode: every doc of one chunk whose id satisfies `pred`,
+    * materializing O(hits) tokens instead of O(chunk) — the reference's
+    * page-grain row-range materialization (reference:
+    * search/constraint.go:520-595 binary search on the sorted column;
+    * search/iterators.go:359-494 RowRangesValueIterator decodes only the
+    * selected ranges) brought within the chunk: one doc-index pass (ids
+    * + lengths, tiny) finds the hits and their token offsets by prefix
+    * sum; [[graft.codec.IntCodec.decodeRange]] then decodes only each
+    * hit's slice for offset-addressable codecs
+    * (plain/bitpack/for/for8/forsplit/dict; fordelta falls back to a
+    * full decode). Misses cost one predicate call. The one slice decoder
+    * behind every doc-id read (point, batch, range, prefix —
+    * [[Pipeline.readTokensForDocIds]] and friends); a repeated doc_id
+    * yields every copy.
     *
     * Skips checksum verification by design — the checksum covers the
     * whole token stream, and hashing it would cost the O(chunk) decode
     * this path exists to avoid.
-    */
-  def decodeDocTokens(c: EncodedChunk, docId: String): Option[TokenRow] = {
-    val docIds = StrCodec.decode(c.doc_ids_enc)
-    var idx = -1
-    var i = 0
-    while (idx < 0 && i < docIds.length) {
-      if (docIds(i) == docId) idx = i
-      i += 1
-    }
-    if (idx < 0) None
-    else {
-      val lengths = IntCodec.decode(c.lengths_enc)
-      var off = 0
-      i = 0
-      while (i < idx) { off += lengths(i); i += 1 }
-      val toks = IntCodec.decodeRange(c.tokens_enc, off, lengths(idx))
-      val source = StrCodec.decode(c.sources_enc)(idx)
-      Some(TokenRow(docId, toks, lengths(idx), source))
-    }
-  }
-
-  /** Batch point decode: every requested doc of one chunk in a single
-    * doc-index pass — k lookups pay ONE doc_ids/lengths decode instead
-    * of k ([[decodeDocTokens]] repeated), and each hit still
-    * materializes only its own token slice. The natural consumer is
-    * [[Pipeline.readTokensForDocIds]], where a candidate chunk often
-    * holds several of the requested keys.
-    */
-  def decodeDocsTokens(c: EncodedChunk, keys: Set[String]): Iterator[TokenRow] = {
-    if (keys.isEmpty) Iterator.empty
-    else decodeDocsTokensWhere(c, keys.contains)
-  }
-
-  /** Predicate decode: every doc of one chunk whose id satisfies
-    * `pred`, in a single doc-index pass with per-hit token slicing —
-    * the range/prefix generalization of [[decodeDocsTokens]] (the
-    * reference derives [minv,maxv] page bounds for prefix regexes,
-    * reference: search/constraint.go:894-909; the chunk-grain analog
-    * needs an arbitrary id predicate at decode time). Only the hits'
-    * token slices are materialized; misses cost one string compare.
     */
   def decodeDocsTokensWhere(
       c: EncodedChunk,

@@ -80,17 +80,13 @@ object Pipeline {
     * left_anti against lineage) and APPENDS duplicates. Orphans are
     * ADOPTED: their lineage rows are derived from the written chunk
     * metadata (each wave's parquet commit is atomic, so a chunk present
-    * in the directory is complete and valid). Metadata-only read — the
-    * payload columns are pruned by the explicit select.
+    * in the directory is complete and valid). Metadata-only read —
+    * [[chunkMeta]] prunes the payload columns.
     */
   def adoptOrphans(spark: SparkSession, outDir: String): Long = {
     val chunksMeta =
-      try {
-        withMetadataDefaults(spark.read
-          .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-          .parquet(chunksPath(outDir))
-          .drop("doc_ids_enc", "sources_enc", "lengths_enc", "tokens_enc"))
-      } catch { case _: org.apache.spark.sql.AnalysisException => return 0L }
+      try chunkMeta(spark, outDir)
+      catch { case _: org.apache.spark.sql.AnalysisException => return 0L }
     val orphans = readLineage(spark, outDir) match {
       case Some(lin) =>
         chunksMeta.join(broadcast(lin.select("chunk_id").distinct()), Seq("chunk_id"), "left_anti")
@@ -139,6 +135,15 @@ object Pipeline {
     }
   }
 
+  /** Payload-free chunk metadata: every chunk column but the four
+    * encoded payloads (never read from parquet), defaults filled.
+    */
+  private def chunkMeta(spark: SparkSession, outDir: String): DataFrame =
+    withMetadataDefaults(spark.read
+      .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
+      .parquet(chunksPath(outDir))
+      .drop("doc_ids_enc", "sources_enc", "lengths_enc", "tokens_enc"))
+
   def readChunks(spark: SparkSession, outDir: String): Dataset[EncodedChunk] = {
     import spark.implicits._
     withMetadataDefaults(spark.read.parquet(chunksPath(outDir))).as[EncodedChunk]
@@ -156,12 +161,20 @@ object Pipeline {
       outDir: String,
       sources: Seq[String] = Nil,
       verifyChecksum: Boolean = true
-  ): Dataset[TokenRow] = {
+  ): Dataset[TokenRow] =
+    Decoder.decode(chunksOfSources(spark, outDir, sources), verifyChecksum)
+
+  /** The chunks of `sources` (all chunks when empty), pruned on the
+    * `part_source` partition column.
+    */
+  private def chunksOfSources(
+      spark: SparkSession,
+      outDir: String,
+      sources: Seq[String]
+  ): Dataset[EncodedChunk] = {
     val chunks = readChunks(spark, outDir)
-    val pruned =
-      if (sources.isEmpty) chunks
-      else chunks.filter(org.apache.spark.sql.functions.col("part_source").isin(sources: _*))
-    Decoder.decode(pruned, verifyChecksum)
+    if (sources.isEmpty) chunks
+    else chunks.filter(col("part_source").isin(sources: _*))
   }
 
   /** [[readTokens]] behind admission control: the decode's cost (rows,
@@ -190,13 +203,9 @@ object Pipeline {
       budgets: Admission.Budgets,
       sources: Seq[String] = Nil,
       verifyChecksum: Boolean = true
-  ): (Dataset[TokenRow], Admission.AdmittedCost) = {
-    val chunks = readChunks(spark, outDir)
-    val pruned =
-      if (sources.isEmpty) chunks
-      else chunks.filter(col("part_source").isin(sources: _*))
-    Admission.decodeAdmittedWithCost(pruned, budgets, verifyChecksum)
-  }
+  ): (Dataset[TokenRow], Admission.AdmittedCost) =
+    Admission.decodeAdmittedWithCost(
+      chunksOfSources(spark, outDir, sources), budgets, verifyChecksum)
 
   /** Compact one or more chunks tables into a NEW deduplicated table —
     * the maintenance analog of the reference's multi-block conversion
@@ -442,73 +451,6 @@ object Pipeline {
     rpt.copy(rowsDropped = dirMeta.map(_._4).sum - outRows)
   }
 
-  /** Point-lookup decode: only chunks whose [min_doc_id, max_doc_id]
-    * covers the key are decoded — the reference's precise row-range
-    * pruning from page min/max statistics re-expressed at chunk grain
-    * (reference: search/constraint.go:394-433, binary search on the
-    * sorted column 520-595). The bounds live as plain parquet columns,
-    * so parquet row-group stats prune the SCAN too, before the kernel
-    * ever sees a chunk.
-    */
-  def readTokensForDocId(
-      spark: SparkSession,
-      outDir: String,
-      docId: String
-  ): Dataset[TokenRow] = {
-    import spark.implicits._
-    // prefer the doc-sorted index (log-pruned probe) when one is fresh;
-    // the range+bloom metadata scan is the always-available fallback
-    val ids = lookupChunkIdsViaIndex(spark, outDir, Seq(docId))
-      .getOrElse(pointLookupChunkIds(spark, outDir, docId))
-    // phase 2: payload read restricted to the surviving chunk ids —
-    // chunk_id is a plain parquet column, so the isin pushes to
-    // row-group stats; within each survivor, decode only the target
-    // doc's token slice (O(doc), not O(chunk) — Decoder.decodeDocTokens)
-    val hit =
-      if (ids.isEmpty)
-        readChunks(spark, outDir).filter(lit(false))
-      else if (ids.length <= 1024)
-        readChunks(spark, outDir).filter(col("chunk_id").isin(ids: _*))
-      else
-        // old-layout dir (null blooms): the candidate list is every
-        // range-covering chunk — too many for an In-list expression;
-        // fall back to the pushable range predicate (same result set)
-        readChunks(spark, outDir)
-          .filter(col("min_doc_id") <= docId && col("max_doc_id") >= docId)
-    hit.flatMap(c => Decoder.decodeDocTokens(c, docId))
-  }
-
-  /** Phase 1 of a point lookup: the candidate chunk ids, from a
-    * PAYLOAD-FREE metadata scan (chunk_id, doc_id bounds, doc bloom —
-    * tokens_enc never read) filtered by the two pruning rungs:
-    *   1. [min_doc_id, max_doc_id] covers the key (also pushed to
-    *      parquet row-group stats);
-    *   2. the per-chunk doc_id Bloom filter may contain the key
-    *      ([[DocBloom]] — the rung that stays selective under hash
-    *      bucketing, where rung 1 alone approaches all-chunks at
-    *      production rows-per-chunk; null bloom = may-contain).
-    * Only the surviving ids come back to the driver — bounded by the
-    * bloom FPR (<1% of chunks) plus true hits, never by corpus size.
-    */
-  def pointLookupChunkIds(
-      spark: SparkSession,
-      outDir: String,
-      docId: String
-  ): Seq[Long] = {
-    import spark.implicits._
-    withMetadataDefaults(spark.read
-      .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-      .parquet(chunksPath(outDir))
-      .drop("doc_ids_enc", "sources_enc", "lengths_enc", "tokens_enc"))
-      .filter(col("min_doc_id") <= docId && col("max_doc_id") >= docId)
-      .select(col("chunk_id"), col("doc_bloom"))
-      .as[(Long, Array[Byte])]
-      .filter(r => DocBloom.mayContain(r._2, docId))
-      .map(_._1)
-      .collect()
-      .toSeq
-  }
-
   // ---- doc_id → chunk_id index (the log-pruning lookup path) --------
   //
   // The bloom rung bounds a point lookup's DECODE work, but its scan
@@ -623,25 +565,6 @@ object Pipeline {
     } finally in.close()
   }
 
-  /** Candidate chunk ids for a key set via the index, or None when the
-    * index is absent or stale (its fingerprint no longer matches the
-    * chunk-id set — e.g. chunks appended since the build). The probe is
-    * a pushed isin filter over doc-sorted parquet: min/max stats prune
-    * to the few row-groups covering the keys.
-    */
-  def lookupChunkIdsViaIndex(
-      spark: SparkSession,
-      outDir: String,
-      docIds: Seq[String]
-  ): Option[Seq[Long]] = {
-    import spark.implicits._
-    if (!docIndexIsFresh(spark, outDir)) return None
-    Some(spark.read.parquet(docIndexPath(outDir))
-      .filter(col("doc_id").isin(docIds: _*))
-      .select(col("chunk_id")).distinct()
-      .as[Long].collect().toSeq)
-  }
-
   /** Least string strictly greater (in UTF-8 order, [[Utf8Order]] =
     * Spark's string order) than every string with the given prefix —
     * the exclusive upper bound that turns `doc_id LIKE 'p%'` into the
@@ -671,155 +594,236 @@ object Pipeline {
     }
   }
 
-  /** Candidate chunk ids whose doc_id span intersects [lo, hi) —
-    * hi = None means unbounded above. The chunk-grain analog of the
-    * reference's regex-derived page bounds (it turns a prefix/set
-    * regex into [minv,maxv] and prunes pages on sorted-column stats,
-    * reference: search/constraint.go:894-909): graft's chunks are
-    * hash-bucketed, so the ordered structure lives in the DERIVED
-    * doc-sorted index — when fresh, the probe is a pushed range filter
-    * whose parquet min/max stats prune to the few row-groups covering
-    * [lo, hi), O(log) in corpus size. Absent/stale index falls back to
-    * the chunks' [min_doc_id, max_doc_id] metadata columns (the Bloom
-    * rung serves only point probes — a Bloom cannot answer a range).
-    */
-  def lookupChunkIdsForRange(
-      spark: SparkSession,
-      outDir: String,
-      lo: String,
-      hi: Option[String]
-  ): Seq[Long] = {
-    import spark.implicits._
-    val viaIndex =
-      if (!docIndexIsFresh(spark, outDir)) None
-      else {
-        val probe = spark.read.parquet(docIndexPath(outDir))
-          .filter(hi.foldLeft(col("doc_id") >= lo)((p, h) => p && col("doc_id") < h))
-        Some(probe.select(col("chunk_id")).distinct().as[Long].collect().toSeq)
-      }
-    viaIndex.getOrElse {
-      withMetadataDefaults(spark.read
-        .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-        .parquet(chunksPath(outDir))
-        .drop("doc_ids_enc", "sources_enc", "lengths_enc", "tokens_enc"))
-        .filter(hi.foldLeft(col("max_doc_id") >= lo)((p, h) => p && col("min_doc_id") < h))
-        .select(col("chunk_id"))
-        .as[Long]
-        .collect()
-        .toSeq
+  // ---- doc-id reads: one key set, one lookup path -------------------
+  //
+  // Point, batch, range and prefix reads differ only in their key set.
+  // [[DocKeys]] owns every rule that turns keys into a filter — the
+  // chunk-grain analog of the reference's single Constraint interface
+  // (reference: search/constraint.go:33-49: a cheap superset test from
+  // stats and blooms, then an exact filter, applied by one search
+  // loop). Every read runs the same two phases: candidate chunk ids
+  // ([[candidateChunkIds]]: one index probe, or one payload-free
+  // metadata scan), then one payload job that decodes only the
+  // matching docs' token slices ([[fetchAndDecode]]).
+
+  /** A doc-id key set and the four filters it implies. */
+  private sealed trait DocKeys extends Serializable {
+    def isEmpty: Boolean = false
+    /** (a) doc-index rows holding a key — a pushed filter over the
+      * doc-sorted index, whose min/max stats prune it to the few
+      * row-groups covering the keys.
+      */
+    def indexFilter: Column
+    /** (b) chunks whose [min_doc_id, max_doc_id] may hold a key — pushed
+      * to parquet row-group stats. Also the candidate fetch's filter
+      * when the id list is too long for an In-list.
+      */
+    def chunkFilter: Column
+    /** (c) may a chunk that passed (b), with these stored bounds and doc
+      * bloom, hold a key? Null bloom = may-contain.
+      */
+    def admits(minId: String, maxId: String, bloom: Array[Byte]): Boolean
+    /** (d) exact per-doc decode predicate. */
+    def matches(docId: String): Boolean
+  }
+
+  private object DocKeys {
+
+    /** Exact keys. Key extremes and bound compares use [[Utf8Order]]:
+      * they must agree with the Spark column predicates and the stored
+      * bounds, both UTF-8 byte order.
+      */
+    final case class Ids(keys: Seq[String]) extends DocKeys {
+      private val keySet = keys.toSet
+      override def isEmpty: Boolean = keys.isEmpty
+      def indexFilter: Column = col("doc_id").isin(keys: _*)
+      def chunkFilter: Column =
+        col("min_doc_id") <= keys.max(Utf8Order) && col("max_doc_id") >= keys.min(Utf8Order)
+      // the bloom rung keeps a point probe selective under hash
+      // bucketing, where (b) alone approaches all-chunks at production
+      // rows-per-chunk ([[DocBloom]])
+      def admits(minId: String, maxId: String, bloom: Array[Byte]): Boolean =
+        keys.exists(k => Utf8Order.lteq(minId, k) && Utf8Order.lteq(k, maxId) &&
+          DocBloom.mayContain(bloom, k))
+      def matches(docId: String): Boolean = keySet(docId)
+    }
+
+    /** lo <= doc_id < hi in UTF-8 order, hi = None unbounded above. A
+      * Bloom cannot answer a range, so (c) admits whatever (b) kept.
+      */
+    final case class Range(lo: String, hi: Option[String]) extends DocKeys {
+      def indexFilter: Column =
+        hi.foldLeft(col("doc_id") >= lo)((p, h) => p && col("doc_id") < h)
+      def chunkFilter: Column =
+        hi.foldLeft(col("max_doc_id") >= lo)((p, h) => p && col("min_doc_id") < h)
+      def admits(minId: String, maxId: String, bloom: Array[Byte]): Boolean = true
+      def matches(docId: String): Boolean =
+        Utf8Order.lteq(lo, docId) && hi.forall(Utf8Order.lt(docId, _))
     }
   }
 
+  /** Longest chunk-id list fetched as an In-list; a longer one (an
+    * old-layout dir with null blooms names every range-covering chunk)
+    * falls back to the pushable [[DocKeys.chunkFilter]], which selects a
+    * superset the decode predicate then makes exact.
+    */
+  private val MaxInListIds = 1024
+
+  /** Candidates from the doc-sorted index, or None when the index is
+    * absent or stale (its fingerprint no longer matches the chunk-id
+    * set — e.g. chunks appended since the build).
+    */
+  private def probeIndex(
+      spark: SparkSession,
+      outDir: String,
+      keys: DocKeys
+  ): Option[Seq[Long]] = {
+    import spark.implicits._
+    if (!docIndexIsFresh(spark, outDir)) None
+    else Some(spark.read.parquet(docIndexPath(outDir))
+      .filter(keys.indexFilter)
+      .select(col("chunk_id")).distinct()
+      .as[Long].collect().toSeq)
+  }
+
+  /** Candidates from ONE payload-free metadata scan (chunk_id, doc_id
+    * bounds, doc bloom — tokens_enc never read) filtered by (b) then
+    * (c). Only the survivors come back to the driver: for exact keys,
+    * bounded by the bloom FPR (<1% of chunks) plus true hits, never by
+    * corpus size.
+    */
+  private def scanChunkMeta(
+      spark: SparkSession,
+      outDir: String,
+      keys: DocKeys
+  ): Seq[Long] = {
+    import spark.implicits._
+    chunkMeta(spark, outDir)
+      .filter(keys.chunkFilter)
+      .select(col("chunk_id"), col("min_doc_id"), col("max_doc_id"), col("doc_bloom"))
+      .as[(Long, String, String, Array[Byte])]
+      .filter(r => keys.admits(r._2, r._3, r._4))
+      .map(_._1)
+      .collect()
+      .toSeq
+  }
+
+  /** Phase 1: the index probe when the index is fresh, else the
+    * metadata scan.
+    */
+  private def candidateChunkIds(
+      spark: SparkSession,
+      outDir: String,
+      keys: DocKeys
+  ): Seq[Long] =
+    if (keys.isEmpty) Nil
+    else probeIndex(spark, outDir, keys).getOrElse(scanChunkMeta(spark, outDir, keys))
+
+  /** Phase 2: read the candidate chunks — chunk_id is a plain parquet
+    * column, so the In-list pushes to row-group stats — and decode each
+    * ONCE for all its matching docs, materializing only their token
+    * slices ([[Decoder.decodeDocsTokensWhere]]: O(doc), not O(chunk)).
+    */
+  private def fetchAndDecode(
+      spark: SparkSession,
+      outDir: String,
+      ids: Seq[Long],
+      keys: DocKeys
+  ): Dataset[TokenRow] = {
+    import spark.implicits._
+    if (ids.isEmpty || keys.isEmpty) return spark.emptyDataset[TokenRow]
+    val chunks = readChunks(spark, outDir)
+    val hit =
+      if (ids.length <= MaxInListIds) chunks.filter(col("chunk_id").isin(ids: _*))
+      else chunks.filter(keys.chunkFilter)
+    hit.flatMap(c => Decoder.decodeDocsTokensWhere(c, keys.matches))
+  }
+
+  private def readDocs(spark: SparkSession, outDir: String, keys: DocKeys): Dataset[TokenRow] =
+    fetchAndDecode(spark, outDir, candidateChunkIds(spark, outDir, keys), keys)
+
+  /** Point lookup: every row with this doc_id, decoding only chunks the
+    * index (or the bounds and bloom) admit — the reference's precise
+    * row-range pruning from page min/max statistics re-expressed at
+    * chunk grain (reference: search/constraint.go:394-433, binary
+    * search on the sorted column 520-595).
+    */
+  def readTokensForDocId(spark: SparkSession, outDir: String, docId: String): Dataset[TokenRow] =
+    readDocs(spark, outDir, DocKeys.Ids(Seq(docId)))
+
+  /** Batch point lookup: all requested docs in one pass, each candidate
+    * chunk decoded once for all its requested keys.
+    */
+  def readTokensForDocIds(
+      spark: SparkSession,
+      outDir: String,
+      docIds: Seq[String]
+  ): Dataset[TokenRow] =
+    readDocs(spark, outDir, DocKeys.Ids(docIds))
+
   /** Range read over AT-REST chunks: every doc with lo <= doc_id < hi
-    * (UTF-8 order — hi = None means unbounded). Candidates from
-    * [[lookupChunkIdsForRange]]; each surviving chunk decodes its doc
-    * index once and slices ONLY the in-range docs' tokens
-    * ([[Decoder.decodeDocsTokensWhere]]).
+    * (UTF-8 order — hi = None means unbounded). The chunk-grain analog
+    * of the reference's regex-derived page bounds (reference:
+    * search/constraint.go:894-909): chunks are hash-bucketed, so the
+    * ordered structure lives in the DERIVED doc-sorted index.
     */
   def readTokensForDocIdRange(
       spark: SparkSession,
       outDir: String,
       lo: String,
       hi: Option[String]
-  ): Dataset[TokenRow] = {
-    import spark.implicits._
-    val ids = lookupChunkIdsForRange(spark, outDir, lo, hi)
-    val inRange = (id: String) => Utf8Order.lteq(lo, id) &&
-      hi.forall(h => Utf8Order.lt(id, h))
-    val hit =
-      if (ids.isEmpty) readChunks(spark, outDir).filter(lit(false))
-      else if (ids.length <= 1024)
-        readChunks(spark, outDir).filter(col("chunk_id").isin(ids: _*))
-      else readChunks(spark, outDir)
-        .filter(hi.foldLeft(col("max_doc_id") >= lo)((p, h) => p && col("min_doc_id") < h))
-    hit.flatMap(c => Decoder.decodeDocsTokensWhere(c, inRange))
-  }
+  ): Dataset[TokenRow] =
+    readDocs(spark, outDir, DocKeys.Range(lo, hi))
 
-  /** Prefix read: every doc whose id starts with `prefix` — the
-    * `doc_id LIKE 'prefix%'` point-family lookup, served as the range
-    * [prefix, [[prefixSuccessor]]) so the doc-sorted index prunes it
-    * like any range probe. The decode predicate is startsWith (exact,
-    * order-free); the range bounds only select candidates.
+  /** Prefix read: every doc whose id starts with `prefix` — `doc_id LIKE
+    * 'prefix%'` served as the range [prefix, [[prefixSuccessor]]). The
+    * successor bound is exact, so the range test is the prefix test.
     */
   def readTokensForDocIdPrefix(
       spark: SparkSession,
       outDir: String,
       prefix: String
-  ): Dataset[TokenRow] = {
-    import spark.implicits._
-    val ids = lookupChunkIdsForRange(spark, outDir, prefix, prefixSuccessor(prefix))
-    val hit =
-      if (ids.isEmpty) readChunks(spark, outDir).filter(lit(false))
-      else if (ids.length <= 1024)
-        readChunks(spark, outDir).filter(col("chunk_id").isin(ids: _*))
-      else readChunks(spark, outDir).filter(
-        prefixSuccessor(prefix).foldLeft(col("max_doc_id") >= prefix)(
-          (p, h) => p && col("min_doc_id") < h))
-    hit.flatMap(c => Decoder.decodeDocsTokensWhere(c, _.startsWith(prefix)))
-  }
+  ): Dataset[TokenRow] =
+    readDocs(spark, outDir, DocKeys.Range(prefix, prefixSuccessor(prefix)))
 
-  /** Batch point lookup: all requested docs in one pass. Candidates
-    * come from the index when fresh (log-pruned probe), else from the
-    * range+bloom metadata scan; each surviving chunk is decoded ONCE
-    * for all its requested keys ([[Decoder.decodeDocsTokens]]).
-    */
-  def readTokensForDocIds(
-      spark: SparkSession,
-      outDir: String,
-      docIds: Seq[String]
-  ): Dataset[TokenRow] = {
-    import spark.implicits._
-    if (docIds.isEmpty) return spark.emptyDataset[TokenRow]
-    val ids = lookupChunkIdsViaIndex(spark, outDir, docIds).getOrElse {
-      // bloom path: one payload-free metadata scan, any-key semantics.
-      // Utf8Order for the driver/kernel-side key extremes and bound
-      // compares — they must agree with the Spark column predicate and
-      // the stored bounds, both UTF-8 byte order
-      val kMax = docIds.max(Utf8Order)
-      val kMin = docIds.min(Utf8Order)
-      withMetadataDefaults(spark.read
-        .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-        .parquet(chunksPath(outDir))
-        .drop("doc_ids_enc", "sources_enc", "lengths_enc", "tokens_enc"))
-        .filter(col("min_doc_id") <= kMax && col("max_doc_id") >= kMin)
-        .select(col("chunk_id"), col("min_doc_id"), col("max_doc_id"), col("doc_bloom"))
-        .as[(Long, String, String, Array[Byte])]
-        .filter { case (_, lo, hi, bloom) =>
-          docIds.exists(k => Utf8Order.lteq(lo, k) && Utf8Order.lteq(k, hi) &&
-            DocBloom.mayContain(bloom, k))
-        }
-        .map(_._1)
-        .collect()
-        .toSeq
-    }
-    readTokensForChunkIds(spark, outDir, ids, docIds)
-  }
-
-  /** Decode phase of a batch point lookup: given the surviving
-    * candidate chunk ids (from an index probe or the bloom scan),
-    * decode each chunk ONCE for all requested keys. Public so a caller
-    * that already probed the index (e.g. to decide whether to build
-    * it) reuses its candidates instead of paying a second freshness
-    * check + probe.
+  /** Phase 2 of a batch point lookup on candidates the caller already
+    * holds — e.g. from a probe that also decided whether to build the
+    * index, so no second freshness check + probe is paid.
     */
   def readTokensForChunkIds(
       spark: SparkSession,
       outDir: String,
       ids: Seq[Long],
       docIds: Seq[String]
-  ): Dataset[TokenRow] = {
-    import spark.implicits._
-    if (docIds.isEmpty) return spark.emptyDataset[TokenRow]
-    val keys = docIds.toSet
-    val hit =
-      if (ids.isEmpty) readChunks(spark, outDir).filter(lit(false))
-      else if (ids.length <= 1024)
-        readChunks(spark, outDir).filter(col("chunk_id").isin(ids: _*))
-      else readChunks(spark, outDir)
-        .filter(col("max_doc_id") >= docIds.min(Utf8Order) &&
-          col("min_doc_id") <= docIds.max(Utf8Order))
-    hit.flatMap(c => Decoder.decodeDocsTokens(c, keys))
-  }
+  ): Dataset[TokenRow] =
+    fetchAndDecode(spark, outDir, ids, DocKeys.Ids(docIds))
+
+  /** Phase 1 of a point lookup through the metadata scan alone, fresh
+    * index or not.
+    */
+  def pointLookupChunkIds(spark: SparkSession, outDir: String, docId: String): Seq[Long] =
+    scanChunkMeta(spark, outDir, DocKeys.Ids(Seq(docId)))
+
+  /** Phase 1 of a batch point lookup through the index alone: None when
+    * the index is absent or stale.
+    */
+  def lookupChunkIdsViaIndex(
+      spark: SparkSession,
+      outDir: String,
+      docIds: Seq[String]
+  ): Option[Seq[Long]] =
+    probeIndex(spark, outDir, DocKeys.Ids(docIds))
+
+  /** Phase 1 of a range read: chunk ids whose doc_id span intersects
+    * [lo, hi).
+    */
+  def lookupChunkIdsForRange(
+      spark: SparkSession,
+      outDir: String,
+      lo: String,
+      hi: Option[String]
+  ): Seq[Long] =
+    candidateChunkIds(spark, outDir, DocKeys.Range(lo, hi))
 
   /** Projection-aware metadata read: (chunk_id, doc_id, n_tok, source)
     * without touching the token payload — neither its bytes (the scan

@@ -248,7 +248,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Pipeline.readTokensForDocId(spark, out, "no-such-doc-id").isEmpty)
   }
 
-  test("decodeDocTokens materializes O(doc), not O(chunk)") {
+  test("decodeDocsTokensWhere materializes O(doc), not O(chunk)") {
     import spark.implicits._
     // one big chunk, many docs; pick a doc in the middle
     val rows = (0 until 200).map { i =>
@@ -265,17 +265,17 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     info(s"tokens codec under point decode: ${c.codec_tokens}")
     assert(c.codec_tokens != "fordelta" && c.codec_tokens != "rle")
     val target = rows(123)
-    val got = Decoder.decodeDocTokens(c, target.doc_id)
-    assert(got.isDefined)
-    assert(got.get.tokens.sameElements(target.tokens),
+    val got = Decoder.decodeDocsTokensWhere(c, _ == target.doc_id).toSeq
+    assert(got.length == 1)
+    assert(got.head.tokens.sameElements(target.tokens),
       "point decode differs from source")
     // exactly the doc's tokens are materialized by construction
     // (decodeRange returns a len-sized array); also: a missing key
-    assert(got.get.tokens.length == target.n_tok)
-    assert(Decoder.decodeDocTokens(c, "no-such-doc").isEmpty)
+    assert(got.head.tokens.length == target.n_tok)
+    assert(Decoder.decodeDocsTokensWhere(c, _ == "no-such-doc").isEmpty)
   }
 
-  test("decodeDocTokens falls back correctly on non-addressable codecs") {
+  test("decodeDocsTokensWhere: exact on non-addressable codecs") {
     import spark.implicits._
     // sorted-ascending tokens force the fordelta codec, which has no
     // offset access — the point decode must still return exact rows
@@ -289,9 +289,9 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val c = chunks.head
     info(s"tokens codec under fallback test: ${c.codec_tokens}")
     val target = rows(17)
-    val got = Decoder.decodeDocTokens(c, target.doc_id)
-    assert(got.isDefined && got.get.tokens.sameElements(target.tokens))
-    assert(got.get.source == "web" && got.get.n_tok == 300)
+    val got = Decoder.decodeDocsTokensWhere(c, _ == target.doc_id).toSeq
+    assert(got.length == 1 && got.head.tokens.sameElements(target.tokens))
+    assert(got.head.source == "web" && got.head.n_tok == 300)
   }
 
   test("adopted orphans keep the input_split they were encoded under") {
@@ -556,6 +556,105 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Utf8Order.lt(preSurrogate, dSucc))
     // the bound stays tight: any string with the prefix sorts below it
     assert(Utf8Order.lt(preSurrogate + "zzz", dSucc))
+  }
+
+  test("prefix test equals the successor range test (property)") {
+    import org.scalacheck.Gen
+    // code points weighted toward the bound's edge cases: U+10FFFF (no
+    // increment, dropped), U+D7FF (increment skips the surrogates),
+    // supplementary characters, and the UTF-8 width boundaries
+    val edge = Seq(0x10FFFF, 0x10FFFE, 0xD7FF, 0xE000, 0xFFFF, 0x10000, 0x1F600,
+      0x7F, 0x80, 0x7FF, 0x800)
+    val cp = Gen.frequency(
+      4 -> Gen.oneOf(edge),
+      4 -> Gen.choose('a'.toInt, 'c'.toInt),
+      1 -> Gen.choose(0, 0xD7FF),
+      1 -> Gen.choose(0xE000, 0x10FFFF))
+    val cps = Gen.choose(0, 5).flatMap(Gen.listOfN(_, cp))
+    def str(xs: Seq[Int]) = new String(xs.toArray, 0, xs.length)
+    // the neighbouring valid code point: U+D7FF and U+E000 are adjacent
+    def step(c: Int, d: Int) = c + d match {
+      case n if n >= 0xD800 && n <= 0xDFFF => if (d > 0) 0xE000 else 0xD7FF
+      case n => n
+    }
+    // s: an extension of p, an unrelated string, p cut short, or p with
+    // its last code point moved by one (the near misses at the bound)
+    val pairs = for {
+      p <- cps
+      t <- cps
+      shape <- Gen.choose(0, 3)
+      d <- Gen.oneOf(-1, 1)
+    } yield {
+      val s = shape match {
+        case 0 => p ++ t
+        case 1 => t
+        case 2 => p.dropRight(1) ++ t
+        case _ => p.dropRight(1) ++ p.lastOption.map(step(_, d))
+          .filter(c => c >= 0 && c <= 0x10FFFF) ++ t
+      }
+      (str(p), str(s))
+    }
+    var hits, misses = 0
+    graft.codec.PropCheck.forAll(pairs, n = 2000) { case (p, s) =>
+      val inRange = Utf8Order.lteq(p, s) &&
+        Pipeline.prefixSuccessor(p).forall(Utf8Order.lt(s, _))
+      assert(s.startsWith(p) == inRange,
+        s"prefix ${p.codePoints.toArray.map(_.toHexString).mkString(" ")} vs " +
+          s"${s.codePoints.toArray.map(_.toHexString).mkString(" ")}")
+      if (inRange) hits += 1 else misses += 1
+    }
+    assert(hits > 200 && misses > 200, s"degenerate sample: $hits hits, $misses misses")
+  }
+
+  test("a repeated row comes back from every doc-id read shape") {
+    import spark.implicits._
+    val base = Fixtures.tokenTable(spark, 300, seed = 91, medianLen = 64, maxLen = 512, partitions = 2)
+      .collect()
+    val dup = base(150)
+    val out = tmpDir()
+    Pipeline.run(spark, spark.createDataset(base.toSeq :+ dup), out,
+      tokensPerChunk = 16 * 1024, waves = 1)
+    // chunk_id depends only on (planTag, source, doc_id): both copies
+    // land in one chunk
+    val holders = Pipeline.readDocIndex(spark, out).filter(_.doc_id == dup.doc_id).collect()
+    assert(holders.length == 2 && holders.map(_.chunk_id).distinct.length == 1)
+    def bag(rs: Array[TokenRow]) =
+      rs.toSeq.groupMapReduce(r => (r.doc_id, r.source, r.n_tok, r.tokens.toSeq))(_ => 1)(_ + _)
+    val scan = bag(Pipeline.readTokens(spark, out).filter(_.doc_id == dup.doc_id).collect())
+    assert(scan == Map((dup.doc_id, dup.source, dup.n_tok, dup.tokens.toSeq) -> 2))
+    // metadata-scan candidates first, then index-probe candidates
+    for (indexed <- Seq(false, true)) {
+      if (indexed) Pipeline.buildDocIndex(spark, out)
+      assert(Pipeline.docIndexIsFresh(spark, out) == indexed)
+      assert(bag(Pipeline.readTokensForDocId(spark, out, dup.doc_id).collect()) == scan,
+        s"point lookup, index=$indexed")
+      assert(bag(Pipeline.readTokensForDocIds(spark, out, Seq(dup.doc_id)).collect()) == scan,
+        s"batch lookup, index=$indexed")
+    }
+  }
+
+  test("fetch past the 1024-id In-list cap matches the In-list") {
+    import spark.implicits._
+    val ds = Fixtures.tokenTable(spark, 1500, seed = 92, medianLen = 64, maxLen = 512, partitions = 4)
+    val out = tmpDir()
+    Pipeline.run(spark, ds, out, tokensPerChunk = 32 * 1024, waves = 1)
+    val keys = Seq("doc_000000000007", "doc_000000000433", "doc_000000001111")
+    val real = Pipeline.readDocIndex(spark, out).filter(r => keys.contains(r.doc_id))
+      .map(_.chunk_id).distinct().collect().toSeq
+    val all = Pipeline.readChunks(spark, out).map(_.chunk_id).collect().toSet
+    // 1025 ids that name no chunk push the list past the 1024 cap
+    val ghosts = Iterator.iterate(1L)(_ + 1).filterNot(all).take(1025).toSeq
+    val viaIn = Pipeline.readTokensForChunkIds(spark, out, real, keys)
+    val viaBounds = Pipeline.readTokensForChunkIds(spark, out, real ++ ghosts, keys)
+    // the long list really takes the bounds branch
+    val plan = viaBounds.queryExecution.executedPlan.toString
+    assert(plan.contains("min_doc_id") && !plan.contains("chunk_id IN") &&
+      !plan.contains("chunk_id INSET"), plan.take(2000))
+    def byId(rs: Array[TokenRow]) = rs.map(r => r.doc_id -> (r.source, r.n_tok, r.tokens.toSeq)).toMap
+    val want = byId(viaIn.collect())
+    assert(want.keySet == keys.toSet)
+    val got = viaBounds.collect()
+    assert(got.length == keys.length && byId(got) == want)
   }
 
   test("prefix/range lookup: index range probe is exact and pushed, stale index falls back") {
