@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.engine.{Admission, Chunker, Pipeline, Quota, ResourceExhausted, TokenRow, Verifier}
+import graft.BenchEmit.{jstr, num}
 
 /** spark-submit entry point for the production encode job.
   *
@@ -86,24 +87,13 @@ object EncodeJob {
     } else ""
 
     println(
-      s"""{"job":"graft-encode","input":"$input","out":"$out",""" +
+      s"""{"job":"graft-encode","input":${jstr(input)},"out":${jstr(out)},""" +
         s""""chunksEncoded":${report.chunksEncoded},"chunksSkipped":${report.chunksSkipped},""" +
         s""""rows":${report.rows},"tokens":${report.tokens},""" +
         s""""rawBytes":${report.rawBytes},"encodedBytes":${report.encodedBytes},""" +
-        f""""encodeSecs":$encodeSecs%.2f$verifyJson}""")
+        s""""encodeSecs":${num(encodeSecs, 2)}$verifyJson}""")
     spark.stop()
   }
-
-  /** JSON string escape for interpolated values (paths can carry quotes
-    * or backslashes; the exit-3 refusal line is machine-consumed).
-    */
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   /** Admission-controlled bulk decode (mode=read): the decode's cost is
     * pre-flighted from chunk metadata and reserved against the given
@@ -179,7 +169,7 @@ object EncodeJob {
         s""""out":${jstr(out)},"chunksEncoded":${r.chunksEncoded},""" +
         s""""rows":${r.rows},"rowsDropped":${r.rowsDropped},"tokens":${r.tokens},""" +
         s""""encodedBytes":${r.encodedBytes},"verified":$doVerify,""" +
-        f""""compactSecs":$secs%.2f}""")
+        s""""compactSecs":${num(secs, 2)}}""")
     spark.stop()
   }
 
@@ -220,7 +210,7 @@ object EncodeJob {
     Pipeline.buildDocIndex(spark, out,
       indexFiles = opts.getOrElse("indexFiles", "0").toInt)
     val n = spark.read.parquet(Pipeline.docIndexPath(out)).count()
-    println(s"""{"index_rows":$n,"index":"${Pipeline.docIndexPath(out)}"}""")
+    println(s"""{"index_rows":$n,"index":${jstr(Pipeline.docIndexPath(out))}}""")
     spark.stop()
   }
 }

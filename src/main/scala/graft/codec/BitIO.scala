@@ -168,18 +168,28 @@ object BitIO {
     if (accBits > 0) out.addByte((acc & 0xff).toByte)
   }
 
-  /** Unpack n values of `width` bits from buf starting at bytePos into
-    * dst[dstFrom..). Returns the byte position after the packed run.
+  /** Unpack values [start, start+n) of a run packed at `width` bits
+    * from bytePos into dst[dstFrom..): seeks to bit start*width and
+    * reads only the slice's bytes. Returns the byte position after the
+    * slice's last value, which is the end of the run when the slice
+    * reaches it.
     */
-  def unpackBits(buf: Array[Byte], bytePos: Int, n: Int, width: Int,
+  def unpackBits(buf: Array[Byte], bytePos: Int, start: Int, n: Int, width: Int,
                  dst: Array[Int], dstFrom: Int): Int = {
     if (width == 0) {
       java.util.Arrays.fill(dst, dstFrom, dstFrom + n, 0)
       return bytePos
     }
+    val startBit = start.toLong * width
+    var pos = bytePos + (startBit >>> 3).toInt
     var acc = 0L
     var accBits = 0
-    var pos = bytePos
+    val skip = (startBit & 7L).toInt
+    if (skip > 0 && n > 0) {
+      acc = (buf(pos) & 0xffL) >>> skip
+      accBits = 8 - skip
+      pos += 1
+    }
     val mask = if (width == 32) 0xffffffffL else (1L << width) - 1
     var i = 0
     while (i < n) {

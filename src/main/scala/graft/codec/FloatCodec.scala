@@ -20,6 +20,8 @@ sealed trait FloatCodec {
     encode(a, 0, a.length, out)
     out.result()
   }
+  /** Decode the n values after the (id, n) header at r into dst. */
+  private[codec] def decodeInto(r: Reader, n: Int, dst: Array[Float]): Unit
 }
 
 object FloatCodec {
@@ -32,6 +34,15 @@ object FloatCodec {
       var i = 0
       while (i < n) {
         out.addIntLE(java.lang.Float.floatToRawIntBits(a(from + i)))
+        i += 1
+      }
+    }
+    private[codec] def decodeInto(r: Reader, n: Int, dst: Array[Float]): Unit = {
+      var i = 0
+      while (i < n) {
+        val bits = (r.readByte() & 0xff) | (r.readByte() & 0xff) << 8 |
+          (r.readByte() & 0xff) << 16 | (r.readByte() & 0xff) << 24
+        dst(i) = java.lang.Float.intBitsToFloat(bits)
         i += 1
       }
     }
@@ -61,6 +72,23 @@ object FloatCodec {
         plane += 1
       }
     }
+    private[codec] def decodeInto(r: Reader, n: Int, dst: Array[Float]): Unit = {
+      val buf = r.buf
+      val base = r.pos
+      if (buf.length - base < 4 * n)
+        throw new IllegalArgumentException(
+          s"fsplit payload truncated: need ${4 * n} bytes, have ${buf.length - base}")
+      var i = 0
+      while (i < n) {
+        val bits = (buf(base + i) & 0xff) |
+          (buf(base + n + i) & 0xff) << 8 |
+          (buf(base + 2 * n + i) & 0xff) << 16 |
+          (buf(base + 3 * n + i) & 0xff) << 24
+        dst(i) = java.lang.Float.intBitsToFloat(bits)
+        i += 1
+      }
+      r.pos = base + 4 * n
+    }
   }
 
   val all: Seq[FloatCodec] = Seq(Plain, Split)
@@ -68,35 +96,10 @@ object FloatCodec {
   def decode(buf: Array[Byte]): Array[Float] = {
     val r = new Reader(buf, 0)
     val id = r.readByte()
-    val n = r.readUvarint()
-    val out = new Array[Float](n)
-    id match {
-      case 0 =>
-        var i = 0
-        while (i < n) {
-          val bits = (r.readByte() & 0xff) | (r.readByte() & 0xff) << 8 |
-            (r.readByte() & 0xff) << 16 | (r.readByte() & 0xff) << 24
-          out(i) = java.lang.Float.intBitsToFloat(bits)
-          i += 1
-        }
-      case 1 =>
-        val base = r.pos
-        if (buf.length - base < 4 * n)
-          throw new IllegalArgumentException(
-            s"fsplit payload truncated: need ${4 * n} bytes, have ${buf.length - base}")
-        var i = 0
-        while (i < n) {
-          val bits = (buf(base + i) & 0xff) |
-            (buf(base + n + i) & 0xff) << 8 |
-            (buf(base + 2 * n + i) & 0xff) << 16 |
-            (buf(base + 3 * n + i) & 0xff) << 24
-          out(i) = java.lang.Float.intBitsToFloat(bits)
-          i += 1
-        }
-        r.pos = base + 4 * n
-      case other =>
-        throw new IllegalArgumentException(s"unknown FloatCodec id $other")
-    }
+    val c = all.find(_.id == id).getOrElse(
+      throw new IllegalArgumentException(s"unknown FloatCodec id ${id & 0xff}"))
+    val out = new Array[Float](r.readUvarint())
+    c.decodeInto(r, out.length, out)
     out
   }
 

@@ -10,6 +10,12 @@ import BitIO._
   * format (reference: schema/encoder.go:200-222, uvarint(encoding)
   * prefix), re-designed for int32 token streams.
   *
+  * Each codec object owns its whole layout: `encode`, the cost model's
+  * `estimate` of what encode writes, and one slice reader,
+  * `decodeInto`. A full decode is the whole-range slice, as the
+  * reference's value iterators serve full and row-range reads alike
+  * (reference: search/iterators.go:359-595).
+  *
   * All arithmetic is integer-only and wraps mod 2^32 where needed, so
   * round-trips are bit-identical for the full Int range including
   * Int.MinValue / Int.MaxValue (SURVEY.md §7.5 bit-exactness).
@@ -24,15 +30,53 @@ sealed trait IntCodec {
     encode(a, 0, a.length, out)
     out.result()
   }
+  /** Cost-model estimate of the bytes `encode` writes (header +
+    * payload) for a slice with these stats; Long.MaxValue rules the
+    * codec out.
+    */
+  def estimate(s: ChunkStats): Long
+  /** Decode values [start, start+len) of an n-value block into
+    * dst[0, len), with r just past the block's (id, n) header and
+    * 0 < len, start + len <= n. After the whole-range slice r.pos is at
+    * the end of the payload; after a partial slice it is unspecified.
+    */
+  private[codec] def decodeInto(r: Reader, n: Int, start: Int, len: Int, dst: Array[Int]): Unit
 }
 
 object IntCodec {
+  /** Bytes of the (id, n) header every block starts with. */
+  private def hdr(s: ChunkStats): Long = 1L + uvarintSize(s.n)
+
+  /** (min, max) of a[from, from+n), n > 0. */
+  private def minMax(a: Array[Int], from: Int, n: Int): (Int, Int) = {
+    var mn = a(from); var mx = a(from)
+    var i = 1
+    while (i < n) {
+      val v = a(from + i)
+      if (v < mn) mn = v
+      if (v > mx) mx = v
+      i += 1
+    }
+    (mn, mx)
+  }
+
   case object Plain extends IntCodec {
     val id: Byte = 0; val name = "plain"
     def encode(a: Array[Int], from: Int, n: Int, out: ByteSink): Unit = {
       out.addByte(id); writeUvarint(out, n)
       var i = 0
       while (i < n) { out.addIntLE(a(from + i)); i += 1 }
+    }
+    def estimate(s: ChunkStats): Long = hdr(s) + 4L * s.n
+    /** One bulk little-endian copy: it runs at copy speed even before the
+      * JIT has compiled this reader, which a codec the data rarely picks
+      * never gets hot enough for.
+      */
+    private[codec] def decodeInto(r: Reader, n: Int, start: Int, len: Int, dst: Array[Int]): Unit = {
+      val p = r.pos + 4 * start
+      java.nio.ByteBuffer.wrap(r.buf, p, 4 * len).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .asIntBuffer().get(dst, 0, len)
+      r.pos = p + 4 * len
     }
   }
 
@@ -53,27 +97,44 @@ object IntCodec {
       out.addByte(width.toByte)
       packBitsZigzag(a, from, n, width, out)
     }
+    def estimate(s: ChunkStats): Long = hdr(s) + 1 + packedBytes(s.n, bitsLong(s.maxZigzag))
+    private[codec] def decodeInto(r: Reader, n: Int, start: Int, len: Int, dst: Array[Int]): Unit = {
+      val width = r.readByte() & 0xff
+      r.pos = unpackBits(r.buf, r.pos, start, len, width, dst, 0)
+      var i = 0
+      while (i < len) { dst(i) = unzigzag(dst(i)); i += 1 }
+    }
   }
 
-  /** Frame-of-reference: subtract min, bit-pack the non-negative offsets. */
-  case object For extends IntCodec {
-    val id: Byte = 2; val name = "for"
+  /** Frame-of-reference: subtract min, bit-pack the non-negative offsets
+    * at `packWidth` of their bit range. [[For]] and [[ForAligned]] share
+    * this layout and differ only in that width.
+    */
+  sealed abstract class FrameOfReference extends IntCodec {
+    protected def packWidth(rangeBits: Int): Int
     def encode(a: Array[Int], from: Int, n: Int, out: ByteSink): Unit = {
       out.addByte(id); writeUvarint(out, n)
       if (n == 0) return
-      var mn = a(from); var mx = a(from)
-      var i = 1
-      while (i < n) {
-        val v = a(from + i)
-        if (v < mn) mn = v
-        if (v > mx) mx = v
-        i += 1
-      }
+      val (mn, mx) = minMax(a, from, n)
       writeUvarint(out, zigzag(mn))
-      val width = bitsLong(mx.toLong - mn.toLong)
+      val width = packWidth(bitsLong(mx.toLong - mn.toLong))
       out.addByte(width.toByte)
       packBitsOffset(a, from, n, width, mn, out) // (v - mn) wraps mod 2^32: ok
     }
+    def estimate(s: ChunkStats): Long =
+      hdr(s) + uvarintSize(zigzag(s.min)) + 1 + packedBytes(s.n, packWidth(s.rangeWidth))
+    private[codec] def decodeInto(r: Reader, n: Int, start: Int, len: Int, dst: Array[Int]): Unit = {
+      val mn = unzigzag(r.readUvarint())
+      val width = r.readByte() & 0xff
+      r.pos = unpackBits(r.buf, r.pos, start, len, width, dst, 0)
+      var i = 0
+      while (i < len) { dst(i) += mn; i += 1 }
+    }
+  }
+
+  case object For extends FrameOfReference {
+    val id: Byte = 2; val name = "for"
+    protected def packWidth(rangeBits: Int): Int = rangeBits
   }
 
   /** Delta (frame-of-reference on successive differences) + zigzag +
@@ -98,6 +159,29 @@ object IntCodec {
       out.addByte(width.toByte)
       packBitsDeltaZigzag(a, from, n, width, out)
     }
+    def estimate(s: ChunkStats): Long =
+      hdr(s) + uvarintSize(zigzag(s.min)) + 1 + packedBytes(s.n - 1, bitsLong(s.maxZigzagDelta))
+    /** Prefix-dependent: the deltas [1, start+len) are summed from the
+      * front, and nothing past the slice's end is unpacked or even
+      * read. From start 0 they unpack and sum in place in dst.
+      */
+    private[codec] def decodeInto(r: Reader, n: Int, start: Int, len: Int, dst: Array[Int]): Unit = {
+      var prev = unzigzag(r.readUvarint()) // value 0
+      val end = start + len
+      val width = if (end > 1) r.readByte() & 0xff else 0
+      if (start == 0) {
+        dst(0) = prev
+        r.pos = unpackBits(r.buf, r.pos, 0, end - 1, width, dst, 1)
+        var i = 1
+        while (i < end) { prev += unzigzag(dst(i)); dst(i) = prev; i += 1 }
+      } else {
+        val deltas = new Array[Int](end - 1) // deltas(i - 1) is delta i
+        r.pos = unpackBits(r.buf, r.pos, 0, end - 1, width, deltas, 0)
+        var i = 1
+        while (i < start) { prev += unzigzag(deltas(i - 1)); i += 1 }
+        while (i < end) { prev += unzigzag(deltas(i - 1)); dst(i - start) = prev; i += 1 }
+      }
+    }
   }
 
   /** Frame-of-reference with the pack width rounded UP to a whole number
@@ -107,24 +191,9 @@ object IntCodec {
     * zstd(for8) ≈ zstd(original text) while zstd(tight bitpack) is near
     * incompressible. Only ever chosen by the zstd-aware trial.
     */
-  case object ForAligned extends IntCodec {
+  case object ForAligned extends FrameOfReference {
     val id: Byte = 6; val name = "for8"
-    def encode(a: Array[Int], from: Int, n: Int, out: ByteSink): Unit = {
-      out.addByte(id); writeUvarint(out, n)
-      if (n == 0) return
-      var mn = a(from); var mx = a(from)
-      var i = 1
-      while (i < n) {
-        val v = a(from + i)
-        if (v < mn) mn = v
-        if (v > mx) mx = v
-        i += 1
-      }
-      writeUvarint(out, zigzag(mn))
-      val width = (bitsLong(mx.toLong - mn.toLong) + 7) / 8 * 8
-      out.addByte(width.toByte)
-      packBitsOffset(a, from, n, width, mn, out)
-    }
+    protected def packWidth(rangeBits: Int): Int = (rangeBits + 7) / 8 * 8
   }
 
   /** Frame-of-reference with byte-plane decomposition: offsets are
@@ -141,14 +210,7 @@ object IntCodec {
     def encode(a: Array[Int], from: Int, n: Int, out: ByteSink): Unit = {
       out.addByte(id); writeUvarint(out, n)
       if (n == 0) return
-      var mn = a(from); var mx = a(from)
-      var i = 1
-      while (i < n) {
-        val v = a(from + i)
-        if (v < mn) mn = v
-        if (v > mx) mx = v
-        i += 1
-      }
+      val (mn, mx) = minMax(a, from, n)
       writeUvarint(out, zigzag(mn))
       val w = (bitsLong(mx.toLong - mn.toLong) + 7) / 8
       out.addByte(w.toByte)
@@ -156,13 +218,34 @@ object IntCodec {
       var plane = 0
       while (plane < w) {
         val shift = plane * 8
-        i = 0
+        var i = 0
         while (i < n) {
           out.addByte(((a(from + i) - mn) >>> shift).toByte)
           i += 1
         }
         plane += 1
       }
+    }
+    def estimate(s: ChunkStats): Long =
+      hdr(s) + uvarintSize(zigzag(s.min)) + 1 + ((s.rangeWidth + 7) / 8).toLong * s.n
+    /** Value i's plane-p byte is at p0 + p*n + i: a slice reads only its
+      * own bytes. Each plane adds its bits onto min (wrapping mod 2^32).
+      */
+    private[codec] def decodeInto(r: Reader, n: Int, start: Int, len: Int, dst: Array[Int]): Unit = {
+      val mn = unzigzag(r.readUvarint())
+      val w = r.readByte() & 0xff
+      val b = r.buf
+      val p0 = r.pos
+      java.util.Arrays.fill(dst, 0, len, mn)
+      var plane = 0
+      while (plane < w) {
+        val shift = plane * 8
+        val pp = p0 + plane * n + start
+        var i = 0
+        while (i < len) { dst(i) += (b(pp + i) & 0xff) << shift; i += 1 }
+        plane += 1
+      }
+      r.pos = p0 + w * n
     }
   }
 
@@ -179,6 +262,21 @@ object IntCodec {
         writeUvarint(out, zigzag(v))
         writeUvarint(out, j - i)
         i = j
+      }
+    }
+    def estimate(s: ChunkStats): Long = hdr(s) + s.rleBytes
+    /** Walks the runs up to the slice's end: O(runs) work, O(len) output. */
+    private[codec] def decodeInto(r: Reader, n: Int, start: Int, len: Int, dst: Array[Int]): Unit = {
+      val end = start + len
+      var seen = 0 // values in the runs read so far
+      while (seen < end) {
+        val v = unzigzag(r.readUvarint())
+        val run = r.readUvarint()
+        require(run > 0 && run <= n - seen, s"rle run of $run at value $seen overruns $n values")
+        val runEnd = seen + run
+        if (runEnd > start)
+          java.util.Arrays.fill(dst, math.max(seen, start) - start, math.min(runEnd, end) - start, v)
+        seen = runEnd
       }
     }
   }
@@ -237,6 +335,36 @@ object IntCodec {
         if (accBits > 0) out.addByte((acc & 0xff).toByte)
       }
     }
+    def estimate(s: ChunkStats): Long =
+      if (s.distinct < 0) Long.MaxValue // overflowed the cap: reject
+      else {
+        // dict values ~ delta-varint coded; bound each delta by the
+        // range spread / distinct (plus varint slack)
+        val avgDeltaBits = math.max(1, s.rangeWidth - bits(math.max(s.distinct - 1, 1)) + 1)
+        val dictBytes = uvarintSize(s.distinct) + 5L + s.distinct.toLong * ((avgDeltaBits + 6) / 7 + 1)
+        hdr(s) + dictBytes + packedBytes(s.n, bits(s.distinct - 1))
+      }
+    /** The sorted distinct values, with r just past the (id, n) header
+      * of a non-empty block; leaves r.pos on the code width byte.
+      */
+    private[IntCodec] def values(r: Reader): Array[Int] = {
+      val dict = new Array[Int](r.readUvarint())
+      dict(0) = unzigzag(r.readUvarint())
+      var i = 1
+      while (i < dict.length) {
+        dict(i) = (dict(i - 1).toLong + r.readUvarintLong()).toInt
+        i += 1
+      }
+      dict
+    }
+    /** O(distinct) header, then only the slice's packed codes. */
+    private[codec] def decodeInto(r: Reader, n: Int, start: Int, len: Int, dst: Array[Int]): Unit = {
+      val dict = values(r)
+      val width = r.readByte() & 0xff
+      r.pos = unpackBits(r.buf, r.pos, start, len, width, dst, 0)
+      var i = 0
+      while (i < len) { dst(i) = dict(dst(i)); i += 1 }
+    }
   }
 
   val all: Seq[IntCodec] = Seq(Plain, BitPack, For, ForDelta, Rle, Dict, ForAligned, ForSplit)
@@ -245,8 +373,11 @@ object IntCodec {
     all.foreach(c => arr(c.id) = c)
     arr
   }
-  def forId(id: Byte): IntCodec = byId(id)
-  def forName(name: String): IntCodec = all.find(_.name == name).get
+
+  /** The codec of an id byte; an unknown id throws IllegalArgumentException. */
+  def forId(id: Byte): IntCodec =
+    if (id >= 0 && id < byId.length && byId(id) != null) byId(id)
+    else throw new IllegalArgumentException(s"unknown codec id ${id & 0xff}")
 
   /** O(distinct) read of the sorted dictionary values of a Dict-coded
     * buffer, WITHOUT unpacking the per-value codes — the analog of the
@@ -257,21 +388,8 @@ object IntCodec {
   def dictValues(buf: Array[Byte]): Option[Array[Int]] = {
     val r = new Reader(buf, 0)
     if (r.readByte() != Dict.id) None
-    else {
-      val n = r.readUvarint()
-      if (n == 0) Some(Array.empty[Int])
-      else {
-        val distinct = r.readUvarint()
-        val dict = new Array[Int](distinct)
-        dict(0) = unzigzag(r.readUvarint())
-        var i = 1
-        while (i < distinct) {
-          dict(i) = (dict(i - 1).toLong + r.readUvarintLong()).toInt
-          i += 1
-        }
-        Some(dict)
-      }
-    }
+    else if (r.readUvarint() == 0) Some(Array.emptyIntArray)
+    else Some(Dict.values(r))
   }
 
   /** Decode only values [start, start+len) of a self-describing buffer,
@@ -291,217 +409,26 @@ object IntCodec {
     */
   def decodeRange(buf: Array[Byte], start: Int, len: Int): Array[Int] = {
     val r = new Reader(buf, 0)
-    val id = r.readByte()
+    val c = forId(r.readByte())
     val n = r.readUvarint()
     require(start >= 0 && len >= 0 && start + len <= n,
       s"range [$start, ${start + len}) out of bounds for $n values")
     val dst = new Array[Int](len)
-    if (len == 0) return dst
-    id match {
-      case 0 => // plain: fixed 4 bytes per value
-        val b = r.buf
-        var p = r.pos + 4 * start
-        var i = 0
-        while (i < len) {
-          dst(i) = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-            ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
-          p += 4; i += 1
-        }
-      case 1 => // bitpack: value i starts at bit i*width
-        val width = r.readByte() & 0xff
-        unpackBitsRange(r.buf, r.pos, width, start, len, dst)
-        var i = 0
-        while (i < len) { dst(i) = unzigzag(dst(i)); i += 1 }
-      case 2 | 6 => // for / for8
-        val mn = unzigzag(r.readUvarint())
-        val width = r.readByte() & 0xff
-        unpackBitsRange(r.buf, r.pos, width, start, len, dst)
-        var i = 0
-        while (i < len) { dst(i) += mn; i += 1 }
-      case 7 => // forsplit: value i's plane-p byte is at p0 + p*n + i
-        val mn = unzigzag(r.readUvarint())
-        val w = r.readByte() & 0xff
-        val b = r.buf
-        val p0 = r.pos
-        var plane = 0
-        while (plane < w) {
-          val shift = plane * 8
-          val pp = p0 + plane * n + start
-          var i = 0
-          while (i < len) { dst(i) |= (b(pp + i) & 0xff) << shift; i += 1 }
-          plane += 1
-        }
-        var i = 0
-        while (i < len) { dst(i) += mn; i += 1 }
-      case 5 => // dict: O(distinct) header + the slice's packed codes
-        val distinct = r.readUvarint()
-        val dict = new Array[Int](distinct)
-        dict(0) = unzigzag(r.readUvarint())
-        var i = 1
-        while (i < distinct) {
-          dict(i) = (dict(i - 1).toLong + r.readUvarintLong()).toInt
-          i += 1
-        }
-        val width = r.readByte() & 0xff
-        unpackBitsRange(r.buf, r.pos, width, start, len, dst)
-        i = 0
-        while (i < len) { dst(i) = dict(dst(i)); i += 1 }
-      case 4 => // rle: skip runs before the slice — O(runs), not O(n)
-        var seen = 0
-        var i = 0
-        while (i < len) {
-          val v = unzigzag(r.readUvarint())
-          val run = r.readUvarint()
-          val runEnd = seen + run
-          if (runEnd > start) {
-            val fillFrom = math.max(seen, start) - start
-            val fillTo = math.min(runEnd, start + len) - start
-            java.util.Arrays.fill(dst, fillFrom, fillTo, v)
-            i = fillTo
-          }
-          seen = runEnd
-        }
-      case 3 => // fordelta: prefix-dependent — decode deltas [1, end)
-        // only. The prefix before `start` must be summed regardless,
-        // but nothing past the slice's end is unpacked or even read.
-        var prev = unzigzag(r.readUvarint()) // value 0
-        if (start == 0) dst(0) = prev
-        val end = start + len
-        if (n > 1 && end > 1) {
-          val width = r.readByte() & 0xff
-          val deltas = new Array[Int](end - 1)
-          unpackBitsRange(r.buf, r.pos, width, 0, end - 1, deltas)
-          var i = 1
-          while (i < end) {
-            prev += unzigzag(deltas(i - 1))
-            if (i >= start) dst(i - start) = prev
-            i += 1
-          }
-        }
-      case other => throw new IllegalArgumentException(s"unknown codec id $other")
-    }
+    if (len > 0) c.decodeInto(r, n, start, len, dst)
     dst
-  }
-
-  /** Unpack values [start, start+len) of a fixed-width bit-packed run
-    * beginning at basePos: seeks to bit start*width and reads only the
-    * slice's bytes.
-    */
-  private def unpackBitsRange(buf: Array[Byte], basePos: Int, width: Int,
-                              start: Int, len: Int, dst: Array[Int]): Unit = {
-    if (width == 0) { java.util.Arrays.fill(dst, 0, len, 0); return }
-    val startBit = start.toLong * width
-    var pos = basePos + (startBit >>> 3).toInt
-    var acc = 0L
-    var accBits = 0
-    val skip = (startBit & 7L).toInt
-    if (skip > 0) {
-      acc = (buf(pos) & 0xffL) >>> skip
-      accBits = 8 - skip
-      pos += 1
-    }
-    val mask = if (width == 32) 0xffffffffL else (1L << width) - 1
-    var i = 0
-    while (i < len) {
-      while (accBits < width) {
-        acc |= (buf(pos) & 0xffL) << accBits
-        pos += 1
-        accBits += 8
-      }
-      dst(i) = (acc & mask).toInt
-      acc >>>= width
-      accBits -= width
-      i += 1
-    }
   }
 
   /** Decode a self-describing buffer produced by any IntCodec. */
   def decode(buf: Array[Byte]): Array[Int] = decode(new Reader(buf, 0))
 
+  /** Decode the block at r.pos (the whole-range slice) and leave r.pos at
+    * the end of its payload: [[StrCodec]] embeds int blocks back to back.
+    */
   def decode(r: Reader): Array[Int] = {
-    val id = r.readByte()
+    val c = forId(r.readByte())
     val n = r.readUvarint()
     val dst = new Array[Int](n)
-    id match {
-      case 0 => // plain
-        var i = 0
-        val b = r.buf
-        var p = r.pos
-        while (i < n) {
-          dst(i) = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-            ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
-          p += 4; i += 1
-        }
-        r.pos = p
-      case 1 => // bitpack
-        if (n > 0) {
-          val width = r.readByte() & 0xff
-          r.pos = unpackBits(r.buf, r.pos, n, width, dst, 0)
-          var i = 0
-          while (i < n) { dst(i) = unzigzag(dst(i)); i += 1 }
-        }
-      case 2 | 6 => // for / for8 (same layout, different width choice)
-        if (n > 0) {
-          val mn = unzigzag(r.readUvarint())
-          val width = r.readByte() & 0xff
-          r.pos = unpackBits(r.buf, r.pos, n, width, dst, 0)
-          var i = 0
-          while (i < n) { dst(i) = dst(i) + mn; i += 1 }
-        }
-      case 3 => // fordelta
-        if (n > 0) {
-          var prev = unzigzag(r.readUvarint())
-          dst(0) = prev
-          if (n > 1) {
-            val width = r.readByte() & 0xff
-            r.pos = unpackBits(r.buf, r.pos, n - 1, width, dst, 1)
-            var i = 1
-            while (i < n) { prev += unzigzag(dst(i)); dst(i) = prev; i += 1 }
-          }
-        }
-      case 4 => // rle
-        var i = 0
-        while (i < n) {
-          val v = unzigzag(r.readUvarint())
-          val run = r.readUvarint()
-          java.util.Arrays.fill(dst, i, i + run, v)
-          i += run
-        }
-      case 7 => // forsplit
-        if (n > 0) {
-          val mn = unzigzag(r.readUvarint())
-          val w = r.readByte() & 0xff
-          val b = r.buf
-          val p0 = r.pos
-          var plane = 0
-          while (plane < w) {
-            val shift = plane * 8
-            val pp = p0 + plane * n
-            var i = 0
-            while (i < n) { dst(i) |= (b(pp + i) & 0xff) << shift; i += 1 }
-            plane += 1
-          }
-          var i = 0
-          while (i < n) { dst(i) += mn; i += 1 }
-          r.pos = p0 + w * n
-        }
-      case 5 => // dict
-        if (n > 0) {
-          val distinct = r.readUvarint()
-          val dict = new Array[Int](distinct)
-          dict(0) = unzigzag(r.readUvarint())
-          var i = 1
-          while (i < distinct) {
-            dict(i) = (dict(i - 1).toLong + r.readUvarintLong()).toInt
-            i += 1
-          }
-          val width = r.readByte() & 0xff
-          r.pos = unpackBits(r.buf, r.pos, n, width, dst, 0)
-          i = 0
-          while (i < n) { dst(i) = dict(dst(i)); i += 1 }
-        }
-      case other => throw new IllegalArgumentException(s"unknown codec id $other")
-    }
+    if (n > 0) c.decodeInto(r, n, 0, n, dst)
     dst
   }
 }

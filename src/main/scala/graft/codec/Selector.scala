@@ -141,39 +141,6 @@ object Selector {
     distinct
   }
 
-  /** Estimated encoded bytes per codec (header + payload). */
-  def estimate(c: IntCodec, s: ChunkStats): Long = {
-    val hdr = 1L + uvarintSize(s.n)
-    if (s.n == 0) return hdr
-    c match {
-      case IntCodec.Plain => hdr + 4L * s.n
-      case IntCodec.BitPack =>
-        hdr + 1 + BitIO.packedBytes(s.n, bitsLong(s.maxZigzag)).toLong
-      case IntCodec.For =>
-        hdr + uvarintSize(zigzag(s.min)) + 1 +
-          BitIO.packedBytes(s.n, s.rangeWidth).toLong
-      case IntCodec.ForAligned =>
-        hdr + uvarintSize(zigzag(s.min)) + 1 +
-          BitIO.packedBytes(s.n, (s.rangeWidth + 7) / 8 * 8).toLong
-      case IntCodec.ForSplit =>
-        hdr + uvarintSize(zigzag(s.min)) + 1 +
-          ((s.rangeWidth + 7) / 8).toLong * s.n
-      case IntCodec.ForDelta =>
-        hdr + uvarintSize(zigzag(s.min)) + 1 +
-          BitIO.packedBytes(s.n - 1, bitsLong(s.maxZigzagDelta)).toLong
-      case IntCodec.Rle => hdr + s.rleBytes
-      case IntCodec.Dict =>
-        if (s.distinct < 0) Long.MaxValue // overflowed the cap: reject
-        else {
-          // dict values ~ delta-varint coded; bound each delta by the
-          // range spread / distinct (plus varint slack)
-          val avgDeltaBits = math.max(1, s.rangeWidth - bits(math.max(s.distinct - 1, 1)) + 1)
-          val dictBytes = uvarintSize(s.distinct) + 5L + s.distinct.toLong * ((avgDeltaBits + 6) / 7 + 1)
-          hdr + dictBytes + BitIO.packedBytes(s.n, bits(s.distinct - 1)).toLong
-        }
-    }
-  }
-
   /** Choose the cheapest codec for the slice by the cost model.
     * Chunks above [[SampleThreshold]] are measured on a strided sample
     * (the "sampled" in sampled cost model) — encode cost stays O(n),
@@ -196,7 +163,7 @@ object Selector {
   }
 
   def chooseFromStats(s: ChunkStats): IntCodec =
-    IntCodec.all.minBy(c => estimate(c, s))
+    IntCodec.all.minBy(_.estimate(s))
 
   /** Encode with the auto-selected codec; falls back to Plain if the
     * estimate misled us and the result is larger than Plain would be.
@@ -251,7 +218,7 @@ object Selector {
         while (i < m) { sample(i) = a(from + i * stride); i += 1 }
         stats(sample, 0, m).copy(n = n)
       }
-    val ranked = IntCodec.all.sortBy(c => estimate(c, s))
+    val ranked = IntCodec.all.sortBy(_.estimate(s))
     // ForAligned/ForSplit/Plain are always trialed: they lose pre-zstd
     // by construction but often win post-zstd (byte alignment / plane
     // decomposition)

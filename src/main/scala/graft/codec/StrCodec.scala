@@ -115,6 +115,34 @@ object StrCodec {
     }
   }
 
+  /** The n strings whose UTF-8 bytes lie back to back from buf(off),
+    * lens(i) bytes each.
+    */
+  private def strings(buf: Array[Byte], off0: Int, lens: Array[Int], n: Int): Array[String] = {
+    val out = new Array[String](n)
+    var off = off0
+    var i = 0
+    while (i < n) {
+      out(i) = new String(buf, off, lens(i), UTF_8)
+      off += lens(i)
+      i += 1
+    }
+    out
+  }
+
+  /** The dictionary block of a DictId buffer (entry count, lengths
+    * block, byte count, bytes), with r just past the row count; leaves
+    * r.pos after the dictionary bytes.
+    */
+  private def readDict(r: Reader): Array[String] = {
+    val dn = r.readUvarint()
+    val dlens = IntCodec.decode(r)
+    val total = r.readUvarint()
+    val dict = strings(r.buf, r.pos, dlens, dn)
+    r.pos += total
+    dict
+  }
+
   /** O(distinct) read of the sorted dictionary of a Dict-coded string
     * buffer, without decoding the per-row codes — distinct values of a
     * column chunk straight from its dictionary header (the reference's
@@ -126,18 +154,7 @@ object StrCodec {
     if (r.readByte() != DictId) None
     else {
       r.readUvarint() // row count, unused here
-      val dn = r.readUvarint()
-      val dlens = IntCodec.decode(r)
-      r.readUvarint() // total dict bytes
-      val dict = new Array[String](dn)
-      var off = r.pos
-      var i = 0
-      while (i < dn) {
-        dict(i) = new String(r.buf, off, dlens(i), UTF_8)
-        off += dlens(i)
-        i += 1
-      }
-      Some(dict)
+      Some(readDict(r))
     }
   }
 
@@ -150,46 +167,19 @@ object StrCodec {
       case PlainId =>
         val lens = IntCodec.decode(r)
         val total = r.readUvarint()
-        val out = new Array[String](n)
-        var off = r.pos
-        var i = 0
-        while (i < n) {
-          out(i) = new String(r.buf, off, lens(i), UTF_8)
-          off += lens(i)
-          i += 1
-        }
+        val out = strings(r.buf, r.pos, lens, n)
         r.pos += total
         out
       case DictId =>
-        val dn = r.readUvarint()
-        val dlens = IntCodec.decode(r)
-        val total = r.readUvarint()
-        val dict = new Array[String](dn)
-        var off = r.pos
-        var i = 0
-        while (i < dn) {
-          dict(i) = new String(r.buf, off, dlens(i), UTF_8)
-          off += dlens(i)
-          i += 1
-        }
-        r.pos += total
+        val dict = readDict(r)
         val codes = IntCodec.decode(r)
         val out = new Array[String](n)
-        i = 0
+        var i = 0
         while (i < n) { out(i) = dict(codes(i)); i += 1 }
         out
       case FsstId =>
         val lens = IntCodec.decode(r)
-        val bytes = Fsst.decompress(r)
-        val out = new Array[String](n)
-        var off = 0
-        var i = 0
-        while (i < n) {
-          out(i) = new String(bytes, off, lens(i), UTF_8)
-          off += lens(i)
-          i += 1
-        }
-        out
+        strings(Fsst.decompress(r), 0, lens, n)
       case other => throw new IllegalArgumentException(s"unknown str codec $other")
     }
   }

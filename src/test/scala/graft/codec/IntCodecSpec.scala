@@ -113,6 +113,25 @@ class IntCodecSpec extends AnyFunSuite {
     }
   }
 
+  // StrCodec embeds int blocks back to back, so a decode must stop
+  // exactly at the end of its own payload
+  for (codec <- IntCodec.all) {
+    test(s"property: ${codec.name} blocks decode back to back and leave r.pos past them") {
+      val sentinel: Byte = 0x5a
+      forAll(Gen.zip(genArray, genArray)) { case (a, b) =>
+        val out = new ByteSink()
+        codec.encode(a, 0, a.length, out)
+        codec.encode(b, 0, b.length, out)
+        out.addByte(sentinel)
+        val buf = out.result()
+        val r = new BitIO.Reader(buf, 0)
+        assert(IntCodec.decode(r).sameElements(a))
+        assert(IntCodec.decode(r).sameElements(b))
+        assert(r.pos == buf.length - 1 && buf(r.pos) == sentinel)
+      }
+    }
+  }
+
   test("property: auto decode∘encode == id and size <= plain+slack") {
     forAll(genArray) { a =>
       val (_, enc) = Selector.encodeAuto(a)
@@ -149,9 +168,20 @@ class IntCodecSpec extends AnyFunSuite {
       val data = Array.tabulate(257)(i => (i * 0x9e3779b9) & mask)
       val out = new ByteSink()
       BitIO.packBits(data, 0, data.length, width, out)
+      val packed = out.result()
       val dst = new Array[Int](data.length)
-      BitIO.unpackBits(out.result(), 0, data.length, width, dst, 0)
+      BitIO.unpackBits(packed, 0, 0, data.length, width, dst, 0)
       assert(dst.sameElements(data), s"width $width")
+      // nonzero start offsets: the slice's values, and the position
+      // after its last packed bit
+      for (start <- Seq(1, 7, 130); len <- Seq(0, 1, 9, data.length - start)) {
+        val slice = new Array[Int](len + 3)
+        val end = BitIO.unpackBits(packed, 0, start, len, width, slice, 3)
+        assert(slice.drop(3).sameElements(data.slice(start, start + len)),
+          s"width $width start $start len $len")
+        if (len > 0) assert(end == BitIO.packedBytes(start + len, width),
+          s"end position at width $width start $start len $len")
+      }
     }
   }
 
@@ -173,6 +203,25 @@ class IntCodecSpec extends AnyFunSuite {
           java.util.Arrays.copyOfRange(full, start, start + len)),
           s"${codec.name} range [$start,+$len) on $name")
       }
+    }
+  }
+
+  test("unknown codec ids throw IllegalArgumentException") {
+    val (strId, strBuf) = StrCodec.encodeAuto(Array("a", "bc", "d"))
+    assert(strId == StrCodec.PlainId && strBuf(0) == 10)
+    val bufs = Seq(8, 0xff).map(id => Array[Byte](id.toByte, 3, 1, 2, 3, 4, 5, 6, 7, 8)) :+ strBuf
+    for (buf <- bufs) {
+      intercept[IllegalArgumentException](IntCodec.decode(buf))
+      intercept[IllegalArgumentException](IntCodec.decodeRange(buf, 0, 1))
+    }
+  }
+
+  test("rle runs that overrun the value count throw") {
+    val enc = IntCodec.Rle.encode(Array(7, 7, 7, 9)) // id, n, (14, 3), (18, 1)
+    for (badRun <- Seq(0, 5)) {
+      enc(3) = badRun.toByte
+      intercept[IllegalArgumentException](IntCodec.decode(enc))
+      intercept[IllegalArgumentException](IntCodec.decodeRange(enc, 0, 2))
     }
   }
 

@@ -46,6 +46,12 @@ class StrCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("unknown codec id throws IllegalArgumentException") {
+    intercept[IllegalArgumentException](StrCodec.decode(Array[Byte](9, 0)))
+    // an int block is not a string block
+    intercept[IllegalArgumentException](StrCodec.decode(IntCodec.Plain.encode(Array(1, 2))))
+  }
+
   test("low-cardinality picks dict and shrinks hard") {
     val data = Array.tabulate(10000)(i => Seq("web", "books", "code", "wiki")((i * 7919) % 4))
     val (id, enc) = StrCodec.encodeAuto(data)
