@@ -34,10 +34,10 @@ import graft.BenchEmit.{jstr, num}
   * Reads the token table (doc_id, tokens, n_tok, source), runs the
   * resumable chunk-encode pipeline ([[graft.engine.Pipeline.run]]),
   * optionally round-trip-verifies, and prints one JSON report line.
-  * Re-running the same command after a failure resumes: completed
-  * chunks are skipped via the lineage table's left_anti join (chunks
-  * orphaned by a crash between chunk and lineage writes are adopted
-  * first, never re-encoded).
+  * Re-running the same command after a failure resumes: chunks already
+  * in the chunks table are skipped via a left_anti join on their ids
+  * (the table is the only ledger; each wave commits atomically, so
+  * nothing is re-encoded or duplicated).
   *
   * No master/parallelism is set here — spark-submit owns cluster
   * sizing (the north rule's N vs 4N executors); the job's explicit

@@ -2102,7 +2102,7 @@ object SparkEntry {
     // count, sum(n_tokens) = corpus code points, sum(raw_bytes) = the
     // documented 4*n_tok + |doc_id| + |source| + 4 per row — proving no
     // split was lost or double-encoded (the resume-from-checkpoint
-    // invariant the lineage table exists to guarantee). One metadata
+    // invariant the chunk ledger exists to guarantee). One metadata
     // agg over the (persisted) chunks — the payload never decodes.
     "q82_lineage_reconcile" -> ((s, dir) => {
       chunksFor(s, dir, tokensPerChunk = 16384)

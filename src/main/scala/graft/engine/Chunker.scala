@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   *
   * chunk ids are derived from the data (xxhash64 of source/doc_id),
   * never from time or randomness, so re-runs reproduce identical chunks
-  * — the property that makes resume-from-lineage sound (the reference
+  * — the property that makes resume from the chunks table sound (the reference
   * gets the same reproducibility from its global sort + rowsPerShard
   * ceiling math, reference: convert/convert.go:765, 777-784).
   *
@@ -85,20 +85,31 @@ object Chunker {
     // cheaper row-equivalent metadata plan
     val statsIn = meta.getOrElse(df).select(col("source"), col("doc_id"), col("n_tok"))
 
-    // pre-pass 1: token mass per source -> base bucket count per source.
-    // |sources| is tiny relative to rows; broadcast it.
-    val perSource = statsIn
+    // Both pre-passes yield small tables (|sources| rows; the
+    // overweight buckets). Each is collected to the driver and looked
+    // up per row from an ordinary broadcast map, not joined: a
+    // broadcast join's hash relation takes a whole Tungsten page
+    // (16 MB at the default page size) however few its rows, and the
+    // driver keeps it until the ContextCleaner drops the broadcast.
+    val sc = df.sparkSession.sparkContext
+
+    // pre-pass 1: token mass per source -> base bucket count per source
+    val numBase = sc.broadcast(statsIn
       .groupBy(col("source"))
       .agg(sum(col("n_tok")).as("src_tokens"))
+      .where(col("source").isNotNull) // an inner join never matches null
       .select(
         col("source"),
         greatest(
           lit(1L),
           ceil(col("src_tokens").cast("double") / tokensPerChunk).cast("long")
-        ).as("num_base"))
-
-    val withBase = df
-      .join(broadcast(perSource), Seq("source"))
+        ))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+    val numBaseOf = udf((s: String) => numBase.value.get(s).map(Long.box).orNull)
+    // rows whose source has no base count drop out, as in an inner join
+    def withBase(rows: DataFrame) = rows
+      .withColumn("num_base", numBaseOf(col("source")))
+      .where(col("num_base").isNotNull)
       .withColumn("base_id", pmod(xxhash64(col("doc_id")), col("num_base")))
       .drop("num_base")
 
@@ -106,9 +117,7 @@ object Chunker {
     // the overweight minority (long-tail n_tok / hot hash buckets).
     // Aggregated from statsIn (same rows, same base_id formula) so an
     // expensive df is not evaluated a third time.
-    val splits = statsIn
-      .join(broadcast(perSource), Seq("source"))
-      .withColumn("base_id", pmod(xxhash64(col("doc_id")), col("num_base")))
+    val splits = sc.broadcast(withBase(statsIn)
       .groupBy(col("source"), col("base_id"))
       .agg(sum(col("n_tok")).as("bucket_tokens"))
       .select(
@@ -122,19 +131,19 @@ object Chunker {
           )
         ).cast("int").as("split")
       )
-      .where(col("split") > 1) // broadcast only the skewed minority
+      .where(col("split") > 1) // keep only the skewed minority
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap)
+    val splitOf = udf((s: String, base: Long) => splits.value.getOrElse((s, base), 1))
 
-    withBase
-      .join(broadcast(splits), Seq("source", "base_id"), "left")
-      .withColumn("split", coalesce(col("split"), lit(1)))
+    withBase(df)
       .withColumn(
         "chunk_id",
         xxhash64(
           lit(planTag),
           col("source"),
           col("base_id"),
-          pmod(xxhash64(col("doc_id"), lit("salt")), col("split").cast("long"))))
-      .drop("base_id", "split")
+          pmod(xxhash64(col("doc_id"), lit("salt")), splitOf(col("source"), col("base_id")).cast("long"))))
+      .drop("base_id")
   }
 
   /** Typed variant producing ChunkedRow. */

@@ -31,11 +31,10 @@ final case class EncodedChunk(
     chunk_id: Long,
     part_source: String,
     /** The input split this chunk was encoded from (Chunker planTag).
-      * Persisted IN the chunk so lineage derived from durable chunks —
-      * including orphan adoption after a crash — records the split the
-      * chunk was actually written under, not whatever split a later
-      * resuming run happens to pass (splits may differ across runs,
-      * e.g. streaming micro-batches).
+      * Persisted IN the chunk so lineage, a view of chunk metadata,
+      * records the split the chunk was actually written under, not
+      * whatever split a later resuming run happens to pass (splits may
+      * differ across runs, e.g. streaming micro-batches).
       */
     input_split: String,
     n_rows: Int,
@@ -97,28 +96,4 @@ final case class DocIndexRow(
     doc_id: String,
     n_tok: Int,
     source: String
-)
-
-/** Per-chunk lineage/metrics record (FIXTURES.md §2) — the analog of the
-  * reference's file KV metadata + page statistics
-  * (reference: schema/schema_builder.go:41-55), lifted into a queryable
-  * table so failed partitions resume without re-encoding completed ones.
-  */
-final case class LineageRecord(
-    chunk_id: Long,
-    part_source: String,
-    input_split: String,
-    min_doc_id: String,
-    max_doc_id: String,
-    token_cardinality: Int,
-    codec_tokens: String,
-    codec_lengths: String,
-    codec_doc_id: String,
-    codec_source: String,
-    row_count: Long,
-    token_count: Long,
-    raw_bytes: Long,
-    encoded_bytes: Long,
-    checksum: Long,
-    status: String
 )

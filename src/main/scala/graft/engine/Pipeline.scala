@@ -3,19 +3,21 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Job wiring: resumable encode with per-chunk lineage.
+/** Job wiring: a resumable encode whose chunks table is its own ledger.
   *
-  * The metrics/lineage table is the Iceberg-manifest analog (SURVEY.md
-  * §1.5 note: no Iceberg runtime jar ships in this sandbox, so the
-  * "Iceberg table" is a partitioned Parquet directory + an explicit
-  * manifest table — the exact subset of Iceberg semantics the north
-  * rule exercises).
+  * Chunk metadata is the manifest, the Iceberg-manifest analog
+  * (SURVEY.md §1.5 note: no Iceberg runtime jar ships in this sandbox,
+  * so the "Iceberg table" is a partitioned Parquet directory whose
+  * per-chunk metadata columns describe its data). As in the reference,
+  * which keeps a file's metadata in the file it describes (reference:
+  * schema/schema_builder.go:41-55), a chunk's record commits with the
+  * chunk, so no second table can lag the data; [[readLineage]] is a
+  * view of that metadata.
   *
   * Resume model: encoding proceeds in `waves` (hash-partitioned groups
-  * of chunk ids); each wave is one atomic Spark write (chunks, then the
-  * lineage derived from the *written* chunks — so a lineage row exists
-  * only for durably persisted data). A failure kills at most the
-  * current wave; a re-run left_anti-joins completed chunk ids out of
+  * of chunk ids); each wave is one atomic Spark write of its chunks,
+  * its only write boundary. A failure kills at most the current wave;
+  * a re-run left_anti-joins the chunk ids already in the table out of
   * the plan and re-encodes only the remainder — per-partition
   * checkpointing at the granularity a 1000-executor job needs.
   */
@@ -38,7 +40,6 @@ object Pipeline {
   )
 
   def chunksPath(outDir: String) = s"$outDir/chunks"
-  def lineagePath(outDir: String) = s"$outDir/lineage"
 
   private def fsOf(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(path)
@@ -53,10 +54,9 @@ object Pipeline {
       org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(id, 42L),
       waves.toLong)
 
-  /** Lineage rows derived from durable chunk metadata. `input_split`
-    * comes from the CHUNK (persisted at encode time), never from the
-    * currently-running job's argument: an adopted orphan may have been
-    * written under a different split than the run that adopts it.
+  /** Lineage rows over chunk metadata. `input_split` comes from the
+    * CHUNK (persisted at encode time), so it names the split each chunk
+    * was written under, whatever split a later run passes.
     */
   private def lineageFromChunks(chunks: DataFrame): DataFrame =
     chunks.select(
@@ -74,37 +74,13 @@ object Pipeline {
       lit("completed").as("status")
     )
 
-  /** Reconcile chunks that are durable but missing from lineage — the
-    * crash window between a wave's chunk write and its lineage write.
-    * Without this, resume re-encodes those chunks (they fail the
-    * left_anti against lineage) and APPENDS duplicates. Orphans are
-    * ADOPTED: their lineage rows are derived from the written chunk
-    * metadata (each wave's parquet commit is atomic, so a chunk present
-    * in the directory is complete and valid). Metadata-only read —
-    * [[chunkMeta]] prunes the payload columns.
+  /** Per-chunk lineage (FIXTURES.md §2): a view of the chunk metadata,
+    * payload never read; None when `outDir` holds no chunks table.
+    * `status` is always `completed` — a chunk is in the table only once
+    * its wave's write committed.
     */
-  def adoptOrphans(spark: SparkSession, outDir: String): Long = {
-    val chunksMeta =
-      try chunkMeta(spark, outDir)
-      catch { case _: org.apache.spark.sql.AnalysisException => return 0L }
-    val orphans = readLineage(spark, outDir) match {
-      case Some(lin) =>
-        chunksMeta.join(broadcast(lin.select("chunk_id").distinct()), Seq("chunk_id"), "left_anti")
-      case None => chunksMeta
-    }
-    // one tiny metadata job; zero when the previous run committed cleanly
-    val adopted = orphans.count()
-    if (adopted > 0)
-      lineageFromChunks(orphans)
-        .write.mode(SaveMode.Append).parquet(lineagePath(outDir))
-    adopted
-  }
-
   def readLineage(spark: SparkSession, outDir: String): Option[DataFrame] =
-    try {
-      val df = spark.read.parquet(lineagePath(outDir))
-      Some(df)
-    } catch { case _: org.apache.spark.sql.AnalysisException => None }
+    existingChunkMeta(spark, outDir).map(lineageFromChunks)
 
   /** Schema evolution for chunks at rest: metadata columns added in
     * later engine versions (input_split, token_cardinality, min_token /
@@ -143,6 +119,12 @@ object Pipeline {
       .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
       .parquet(chunksPath(outDir))
       .drop("doc_ids_enc", "sources_enc", "lengths_enc", "tokens_enc"))
+
+  /** [[chunkMeta]], or None when `outDir` holds no chunks table yet. */
+  private def existingChunkMeta(spark: SparkSession, outDir: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(chunksPath(outDir))
+    if (fsOf(spark, outDir).exists(p)) Some(chunkMeta(spark, outDir)) else None
+  }
 
   def readChunks(spark: SparkSession, outDir: String): Dataset[EncodedChunk] = {
     import spark.implicits._
@@ -207,45 +189,6 @@ object Pipeline {
     Admission.decodeAdmittedWithCost(
       chunksOfSources(spark, outDir, sources), budgets, verifyChecksum)
 
-  /** Compact one or more chunks tables into a NEW deduplicated table —
-    * the maintenance analog of the reference's multi-block conversion
-    * with duplicate-series merge (reference: convert/convert.go
-    * `ConvertTSDBBlock` over several blocks; convert_test.go:641-759
-    * asserts duplicated series across blocks merge). Streaming ingest
-    * accumulates a wave per micro-batch and incremental backfills
-    * accumulate whole directories; compaction folds them into one table
-    * of full-size chunks.
-    *
-    * Duplicate doc_ids (within or across inputs) keep ONE deterministic
-    * winner — min by (source, n_tok, content checksum) — so the output
-    * is a pure function of the input SET, independent of directory
-    * order, partitioning or cluster size (the same idempotence
-    * discipline as chunk ids and resume).
-    *
-    * Scale shape: inputs are decoded once (chunk-parallel); dedup is
-    * one shuffle on doc_id with map-side combine (reduceGroups); then
-    * the standard encode pipeline (one payload shuffle + write).
-    * When the inputs are PROVABLY duplicate-free ([[compactPlan]]'s
-    * metadata checks) the dedup shuffle is skipped entirely — the
-    * common 100 TB compaction (backfills of disjoint date/id ranges)
-    * pays one payload shuffle, not two.
-    */
-  /** The decoded-and-deduplicated row plan a compaction encodes, plus
-    * whether the dedup shuffle was provably unnecessary and skipped.
-    *
-    * Fast path (the common case at scale — backfills compact disjoint
-    * date/id ranges): when (a) the input dirs' doc_id RANGES are
-    * pairwise disjoint (exact proof from chunk metadata min/max — one
-    * tiny agg per dir) and (b) each dir is internally duplicate-free
-    * (count == countDistinct over the payload-free doc index), no doc
-    * can appear twice, so the union feeds the encoder directly and the
-    * only payload shuffle left is run()'s repartition-by-chunk. The
-    * proofs are metadata-priced: (a) never touches row data at all,
-    * (b) shuffles only doc_id strings with partial aggregation. Any
-    * doubt (overlapping ranges, an internal duplicate, an empty dir
-    * answer) falls back to the full dedup — the fast path is an
-    * optimization, never a correctness gate.
-    */
   /** Per-input-dir chunk metadata in ONE Spark job (guide §1/§2: the
     * former shape paid one tiny driver job per dir per question —
     * ranges, fingerprint, row counts — 3·|dirs| scheduling floors for
@@ -258,7 +201,7 @@ object Pipeline {
       inDirs: Seq[String]
   ): IndexedSeq[(Option[String], Option[String], Option[java.math.BigDecimal], Long)] = {
     val per = inDirs.zipWithIndex.map { case (d, i) =>
-      spark.read.parquet(chunksPath(d)).select(
+      chunkMeta(spark, d).select(
         lit(i).as("dir"),
         col("min_doc_id"), col("max_doc_id"),
         xxhash64(col("chunk_id"), col("checksum"), col("n_rows"))
@@ -275,11 +218,26 @@ object Pipeline {
     inDirs.indices.map(i => rows.getOrElse(i, (None, None, None, 0L)))
   }
 
-  /** Internal plan: winners + fast-path verdict + the metadata-only
-    * (source, doc_id, n_tok) row-equivalent of the winners, which
-    * [[run]] feeds to the Chunker pre-passes so the expensive
-    * decode(+dedup) plan evaluates once, not three times
-    * ([[Chunker.assignChunks]] meta).
+  /** The decoded-and-deduplicated row plan a compaction encodes, plus
+    * whether the dedup shuffle was provably unnecessary and skipped.
+    *
+    * Fast path (the common case at scale — backfills compact disjoint
+    * date/id ranges): when (a) the input dirs' doc_id RANGES are
+    * pairwise disjoint (exact proof from chunk metadata min/max — one
+    * tiny agg per dir) and (b) each dir is internally duplicate-free
+    * (count == countDistinct over the payload-free doc index), no doc
+    * can appear twice, so the union feeds the encoder directly and the
+    * only payload shuffle left is run()'s repartition-by-chunk. The
+    * proofs are metadata-priced: (a) never touches row data at all,
+    * (b) shuffles only doc_id strings with partial aggregation. Any
+    * doubt (overlapping ranges, an internal duplicate, an empty dir
+    * answer) falls back to the full dedup — the fast path is an
+    * optimization, never a correctness gate.
+    *
+    * Also returns the metadata-only (source, doc_id, n_tok)
+    * row-equivalent of the winners, which [[run]] feeds to the Chunker
+    * pre-passes so the expensive decode(+dedup) plan evaluates once,
+    * not three times ([[Chunker.assignChunks]] meta).
     */
   private def compactPlanInternal(
       spark: SparkSession,
@@ -353,6 +311,29 @@ object Pipeline {
     (winners, fast)
   }
 
+  /** Compact one or more chunks tables into a NEW deduplicated table —
+    * the maintenance analog of the reference's multi-block conversion
+    * with duplicate-series merge (reference: convert/convert.go
+    * `ConvertTSDBBlock` over several blocks; convert_test.go:641-759
+    * asserts duplicated series across blocks merge). Streaming ingest
+    * accumulates a wave per micro-batch and incremental backfills
+    * accumulate whole directories; compaction folds them into one table
+    * of full-size chunks.
+    *
+    * Duplicate doc_ids (within or across inputs) keep ONE deterministic
+    * winner — min by (source, n_tok, content checksum) — so the output
+    * is a pure function of the input SET, independent of directory
+    * order, partitioning or cluster size (the same idempotence
+    * discipline as chunk ids and resume).
+    *
+    * Scale shape: inputs are decoded once (chunk-parallel); dedup is
+    * one shuffle on doc_id with map-side combine (reduceGroups); then
+    * the standard encode pipeline (one payload shuffle + write).
+    * When the inputs are PROVABLY duplicate-free ([[compactPlan]]'s
+    * metadata checks) the dedup shuffle is skipped entirely — the
+    * common 100 TB compaction (backfills of disjoint date/id ranges)
+    * pays one payload shuffle, not two.
+    */
   def compact(
       spark: SparkSession,
       inDirs: Seq[String],
@@ -397,17 +378,15 @@ object Pipeline {
         .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
       if (dirMeta.forall(_._3.isEmpty)) "0" else tot.toBigInteger.toString
     }
-    val targetHadChunks =
-      fsOf(spark, chunksPath(outDir)).exists(new org.apache.hadoop.fs.Path(chunksPath(outDir)))
-    if (targetHadChunks) {
-      val splits = readChunks(spark, outDir).toDF()
-        .select("input_split").distinct().collect().map(_.getString(0)).toSet
+    val targetMeta = existingChunkMeta(spark, outDir)
+    targetMeta.foreach { meta =>
+      val splits = meta.select("input_split").distinct().collect().map(_.getString(0)).toSet
       require(splits == Set(tag),
         s"compact target $outDir holds a chunks table from a different input set " +
           s"(${splits.mkString(", ")}); compaction writes a NEW table or resumes its own partial output")
       if (fs.exists(fpFile)) {
         val stored = readSmallText(fs, fpFile, 64) // a Long prints in <= 20 chars
-        require(stored == contentFp.toString,
+        require(stored == contentFp,
           s"compact inputs changed since the partial run in $outDir " +
             s"(fingerprint $stored -> $contentFp); inputs must be immutable across " +
             "a resumed compaction — restart into a fresh target")
@@ -416,8 +395,7 @@ object Pipeline {
       // the tag check alone (pre-fingerprint behavior), and gains the
       // file below for subsequent resumes
     }
-    val out = fs.create(fpFile, true)
-    try out.write(contentFp.toString.getBytes("UTF-8")) finally out.close()
+    writeSmallText(fs, fpFile, contentFp)
     val (winners, _, metaWinnersRaw) = compactPlanInternal(spark, inDirs, dirMeta)
     // persist the METADATA twin for the duration of the encode: the two
     // Chunker pre-passes both aggregate it, and without the persist the
@@ -443,9 +421,9 @@ object Pipeline {
     // row count; only a resumed target (pre-existing chunks) re-reads
     // the directory.
     val outRows =
-      if (!targetHadChunks) rpt.rows
+      if (targetMeta.isEmpty) rpt.rows
       else {
-        val r = spark.read.parquet(chunksPath(outDir)).agg(sum("n_rows")).first()
+        val r = chunkMeta(spark, outDir).agg(sum("n_rows")).first()
         if (r.isNullAt(0)) 0L else r.getLong(0)
       }
     rpt.copy(rowsDropped = dirMeta.map(_._4).sum - outRows)
@@ -489,9 +467,7 @@ object Pipeline {
   private def chunkSetFingerprint(spark: SparkSession, outDir: String): String = {
     val cp = chunksPath(outDir)
     fpMemo(spark, cp, cp) {
-      val r = spark.read
-        .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-        .parquet(cp)
+      val r = chunkMeta(spark, outDir)
         .select(xxhash64(col("chunk_id")).as("h"))
         .agg(count(lit(1)), sum(col("h").cast("decimal(20,0)"))).first()
       val s = if (r.isNullAt(1)) "0" else r.getDecimal(1).toBigInteger.toString
@@ -540,10 +516,7 @@ object Pipeline {
       .sortWithinPartitions(col("doc_id"))
       .write.mode(SaveMode.Overwrite).option("compression", "zstd")
       .parquet(docIndexPath(outDir))
-    val fs = fsOf(spark, outDir)
-    val out = fs.create(docIndexFpPath(outDir), true)
-    try out.write(fpAtStart.getBytes("UTF-8"))
-    finally out.close()
+    writeSmallText(fsOf(spark, outDir), docIndexFpPath(outDir), fpAtStart)
   }
 
   /** Whole small file as trimmed UTF-8, short-read safe (Hadoop input
@@ -563,6 +536,16 @@ object Pipeline {
       while (off < cap && { n = in.read(buf, off, cap - off); n > 0 }) off += n
       new String(buf, 0, off, "UTF-8").trim
     } finally in.close()
+  }
+
+  /** Write `text` as the whole small file `p` (UTF-8), replacing it. */
+  private def writeSmallText(
+      fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path,
+      text: String
+  ): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   /** Least string strictly greater (in UTF-8 order, [[Utf8Order]] =
@@ -869,51 +852,32 @@ object Pipeline {
   ): EncodeReport = {
     import spark.implicits._
 
-    // crash-window repair BEFORE planning: chunks durable from a run
-    // that died between its chunk write and its lineage write are
-    // adopted into lineage, so the left_anti below skips them instead
-    // of re-encoding duplicates
-    adoptOrphans(spark, outDir)
-
     // inputSplit scopes chunk identity (Chunker.assignChunks planTag):
     // re-running the SAME split resumes/replays idempotently; a
     // different split gets disjoint chunk ids
     val planned = Chunker.chunked(input, tokensPerChunk, planTag = inputSplit, meta = planMeta)
 
-    // chunks already durable from a previous (partial) run
-    val completed: Option[DataFrame] =
-      readLineage(spark, outDir).map(_.select("chunk_id").distinct())
+    // the ledger: chunks durable from a previous (partial) run. Each
+    // wave's parquet commit is atomic, so a chunk present in the table
+    // is complete and valid
+    val done = existingChunkMeta(spark, outDir)
     // report-only: skipped = planned ∩ completed. Chunk ids are scoped
     // by input_split (disjoint across splits), so the completed chunks
     // OF THIS SPLIT are exactly the planned ones a resume skips —
-    // counting all lineage rows would overstate skips when the target
-    // also holds chunks from other splits (e.g. streaming micro-batches)
-    val skippedCount = readLineage(spark, outDir)
-      .map { lin =>
-        // pre-input_split lineage (older layout): no way to scope, keep
-        // the permissive all-rows count there
-        val scoped =
-          if (lin.columns.contains("input_split"))
-            lin.filter(coalesce(col("input_split"), lit("")) === inputSplit)
-          else lin
-        scoped.select("chunk_id").distinct().count()
-      }
+    // counting every chunk would overstate skips when the target also
+    // holds chunks from other splits (e.g. streaming micro-batches). A
+    // chunk of an older layout without input_split reads as ""
+    val skippedCount = done
+      .map(_.filter(col("input_split") === inputSplit).select("chunk_id").distinct().count())
       .getOrElse(0L)
 
-    val pending = completed match {
-      case Some(done) =>
+    val pending = done match {
+      case Some(d) =>
         // completed chunk ids are tiny relative to data: broadcast anti-join
-        planned.join(broadcast(done), Seq("chunk_id"), "left_anti")
+        planned.join(broadcast(d.select("chunk_id").distinct()), Seq("chunk_id"), "left_anti")
           .as[ChunkedRow]
       case None => planned
     }
-
-    var encoded = 0L
-    var rows = 0L
-    var tokens = 0L
-    var rawB = 0L
-    var encB = 0L
-    var wavesRun = 0
 
     // wave = hash of chunk_id, NOT chunk_id % waves: chunk ids are
     // base*MaxSplit + salt, and MaxSplit ≡ 0 mod any small wave count,
@@ -922,7 +886,7 @@ object Pipeline {
 
     // ---- stage the plan ONCE, wave-partitioned --------------------------
     // Waves exist for checkpoint granularity (each wave is one atomic
-    // chunks-write + lineage commit; a crash loses at most one wave).
+    // chunks write; a crash loses at most one wave).
     // Round 1 paid for that granularity with `waves` FULL input scans —
     // pending.filter(waveOf) recomputed the whole scan+chunk-plan per
     // wave, the dominant cost of the job at 100 TB. Now the planned rows
@@ -932,8 +896,6 @@ object Pipeline {
     // staging write + 1x staging read + 1x shuffle + 1x final write.
     val wavesEff = math.max(1, waves)
     val stagingDir = s"$outDir/_staging"
-    val hadoopPath = new org.apache.hadoop.fs.Path(stagingDir)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stagedSchema = org.apache.spark.sql.Encoders.product[ChunkedRow].schema
       .add("wave", org.apache.spark.sql.types.LongType)
 
@@ -951,28 +913,24 @@ object Pipeline {
             .as[ChunkedRow]
       }
 
-    var w = 0
-    while (w < wavesEff) {
+    // each wave's report sums: chunks written, then these chunk columns
+    val summed = Seq("n_rows", "n_tokens", "raw_bytes", "encoded_bytes")
+    val waveStats = (0 until wavesEff).map { w =>
       val enc = Encoder.encode(source(w), inputSplit).map { c =>
         if (failOnChunk(c.chunk_id))
           throw new RuntimeException(s"injected failure on chunk ${c.chunk_id}")
         c
       }(org.apache.spark.sql.Encoders.product[EncodedChunk])
 
-      // wave write: chunks first; lineage derived from what was written
-      // (a lineage row exists only for durably persisted data). Reading
-      // back only touches metadata columns — parquet prunes the payload.
+      // the wave's one write: its chunks, which are the ledger. The
+      // report sums ride it as observed metrics — nothing is read back.
       // zstd whole-file compression on top of our per-column codecs —
       // the reference's layering too (parquet encodings under zstd,
       // reference: schema/schema.go:38-75)
-      // Hive-partitioned by (wave_id, source). wave_id FIRST so each
-      // wave owns its own subtree: deriving a wave's lineage reads
-      // ONLY that wave's directory — round 2 re-listed and stat-scanned
-      // the entire chunks tree every wave, O(waves x total-files)
-      // driver-side listings that become the bottleneck at 10^6-10^7
-      // chunks. The source level below it keeps decode-side partition
-      // pruning (a one-source read touches one directory per wave —
-      // the Spark-native analog of the reference's stats-driven
+      // Hive-partitioned by (wave_id, source): each wave appends into
+      // its own subtree. The source level below it keeps decode-side
+      // partition pruning (a one-source read touches one directory per
+      // wave — the Spark-native analog of the reference's stats-driven
       // row-range pruning, reference: search/constraint.go:394-433).
       // Bloom filters on chunk_id serve point lookups: hash-derived
       // chunk ids span the full int64 range in every row group, so
@@ -982,50 +940,21 @@ object Pipeline {
       // groups (~30 multi-MB chunks each; 4096 is generous headroom at
       // ~5KB/row-group) — the parquet default assumes 1M NDV and pads
       // 1MB per row group, which dwarfs small files.
+      val obs = org.apache.spark.sql.Observation(s"wave-$w-stats")
       enc.toDF().withColumn("wave_id", lit(w))
+        .observe(obs, count(lit(1)).as("chunks"),
+          summed.map(c => coalesce(sum(c), lit(0L)).as(c)): _*)
         .write.mode(SaveMode.Append)
         .option("compression", "zstd")
         .option("parquet.bloom.filter.enabled#chunk_id", "true")
         .option("parquet.bloom.filter.expected.ndv#chunk_id", "4096")
         .partitionBy("wave_id", "part_source")
         .parquet(chunksPath(outDir))
-
-      // this wave's lineage, derived from this wave's directory ALONE
-      // (O(1) listings per wave). The dir is absent when the wave had
-      // nothing pending (empty append writes no partition dirs).
-      val waveDir = s"${chunksPath(outDir)}/wave_id=$w"
-      if (fsOf(spark, waveDir).exists(new org.apache.hadoop.fs.Path(waveDir))) {
-        val writtenAll = spark.read
-          .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-          .parquet(waveDir)
-        // on resume, the dir also holds chunks from the previous run:
-        // exclude anything already in the lineage table
-        val written = completed match {
-          case Some(done) => writtenAll.join(broadcast(done), Seq("chunk_id"), "left_anti")
-          case None => writtenAll
-        }
-        // wave stats ride the lineage write as observed metrics (one
-        // job instead of a write + a second aggregate over the same
-        // directory)
-        val obs = org.apache.spark.sql.Observation(s"wave-$w-stats")
-        val lin = lineageFromChunks(written).observe(obs,
-          count(lit(1)).as("n"), sum("row_count").as("r"),
-          sum("token_count").as("t"), sum("raw_bytes").as("rb"),
-          sum("encoded_bytes").as("eb"))
-        lin.write.mode(SaveMode.Append).parquet(lineagePath(outDir))
-        val stats = obs.get
-        encoded += stats("n").asInstanceOf[Long]
-        if (stats("r") != null) {
-          rows += stats("r").asInstanceOf[Long]
-          tokens += stats("t").asInstanceOf[Long]
-          rawB += stats("rb").asInstanceOf[Long]
-          encB += stats("eb").asInstanceOf[Long]
-        }
-      }
-      wavesRun += 1
-      w += 1
+      obs.get
     }
-    if (wavesEff > 1) fs.delete(hadoopPath, true)
-    EncodeReport(wavesRun, encoded, skippedCount, rows, tokens, rawB, encB)
+    if (wavesEff > 1) fsOf(spark, stagingDir).delete(new org.apache.hadoop.fs.Path(stagingDir), true)
+    def total(k: String) = waveStats.map(_(k).asInstanceOf[Long]).sum
+    EncodeReport(wavesEff, total("chunks"), skippedCount, total("n_rows"), total("n_tokens"),
+      total("raw_bytes"), total("encoded_bytes"))
   }
 }

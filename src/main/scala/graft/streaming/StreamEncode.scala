@@ -12,13 +12,13 @@ import graft.engine.{Chunker, Pipeline, TokenRow}
   * ([[graft.engine.Pipeline.run]]) with the batch id as the input
   * split tag; chunk ids are deterministic functions of the data, so a
   * replayed micro-batch (at-least-once source semantics) left_anti-joins
-  * against lineage and re-encodes nothing — end-to-end idempotence from
+  * against the chunks table and re-encodes nothing — end-to-end idempotence from
   * the same mechanism that gives batch resume. Checkpointing of source
   * offsets is Spark's own (checkpointLocation).
   *
   * At scale this is the continuous-ingest topology: a file/Kafka source
-  * of token rows, foreachBatch boundaries every few minutes, lineage as
-  * the exactly-once ledger.
+  * of token rows, foreachBatch boundaries every few minutes, the chunks
+  * table as the exactly-once ledger.
   */
 object StreamEncode {
 

@@ -90,6 +90,17 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mixed == 0L, s"$mixed chunks mix sources")
   }
 
+  test("chunker: rows with a null source drop out and leave the plan unchanged") {
+    import spark.implicits._
+    val ds = Fixtures.tokenTable(spark, 1500, seed = 12, medianLen = 128, maxLen = 4096, partitions = 4)
+    val nullSource = ds.limit(40).map(r => r.copy(doc_id = "null-" + r.doc_id, source = null))
+    def plan(in: org.apache.spark.sql.Dataset[TokenRow]) = Chunker.chunked(in, tokensPerChunk = 8 * 1024)
+      .select("doc_id", "chunk_id").as[(String, Long)].collect().toMap
+    val withNulls = plan(ds.union(nullSource))
+    assert(!withNulls.keys.exists(_.startsWith("null-")), "a null-source row was planned")
+    assert(withNulls == plan(ds), "null-source rows changed other rows' chunk ids")
+  }
+
   test("encode -> decode round-trip is bit-identical (keystone)") {
     val ds = Fixtures.tokenTable(spark, 3000, seed = 3, medianLen = 200, maxLen = 8192, partitions = 4)
     val out = tmpDir()
@@ -137,6 +148,64 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(v.ok, s"post-resume verify failed: $v")
   }
 
+  /** (chunks, rows, tokens, raw bytes, encoded bytes) summed over the
+    * chunks table, and the same fields of a report.
+    */
+  private def tableSums(out: String): Seq[Long] = {
+    val cs = Pipeline.readChunks(spark, out).collect()
+    Seq(cs.length.toLong, cs.map(_.n_rows.toLong).sum, cs.map(_.n_tokens).sum,
+      cs.map(_.raw_bytes).sum, cs.map(_.encoded_bytes).sum)
+  }
+  private def reportSums(r: Pipeline.EncodeReport): Seq[Long] =
+    Seq(r.chunksEncoded, r.rows, r.tokens, r.rawBytes, r.encodedBytes)
+
+  test("EncodeReport of a fresh multi-wave run equals the chunks table's sums") {
+    val ds = Fixtures.tokenTable(spark, 1200, seed = 43, medianLen = 100, maxLen = 2048, partitions = 4)
+    val out = tmpDir()
+    val waves = 8
+    val report = Pipeline.run(spark, ds, out, tokensPerChunk = 32 * 1024, waves = waves)
+    val ids = Pipeline.readChunks(spark, out).collect().map(_.chunk_id)
+    val used = ids.map(Pipeline.waveOfId(_, waves)).toSet
+    // pins the fixture: several waves write, and some write nothing
+    assert(used.size > 1 && used.size < waves, s"waves with chunks: $used")
+    assert(report.wavesRun == waves && report.chunksSkipped == 0)
+    assert(reportSums(report) == tableSums(out))
+    assert(report.rows == 1200)
+  }
+
+  test("a killed then resumed run reports every chunk once") {
+    val ds = Fixtures.tokenTable(spark, 1500, seed = 4, medianLen = 100, maxLen = 2048, partitions = 4)
+    val out = tmpDir()
+    intercept[Exception](Pipeline.run(spark, ds, out, tokensPerChunk = 64 * 1024, waves = 3,
+      failOnChunk = id => Pipeline.waveOfId(id, 3) == 2))
+    // the killed run's report is lost with it; its work is what it
+    // committed to the table
+    val killed = tableSums(out)
+    assert(killed.head > 0)
+    val resumed = Pipeline.run(spark, ds, out, tokensPerChunk = 64 * 1024, waves = 3)
+    assert(resumed.chunksSkipped == killed.head)
+    assert(killed.zip(reportSums(resumed)).map { case (a, b) => a + b } == tableSums(out))
+    assert(resumed.rows + killed(1) == 1500)
+  }
+
+  test("a re-run with every wave done reports zeros and returns") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val ds = Fixtures.tokenTable(spark, 600, seed = 44, medianLen = 64, maxLen = 1024, partitions = 2)
+    Seq(1, 3).foreach { waves =>
+      val out = tmpDir()
+      Pipeline.run(spark, ds, out, tokensPerChunk = 32 * 1024, waves = waves)
+      val before = tableSums(out)
+      // every wave's observed write is empty: its metrics must still arrive
+      val again = Await.result(Future(
+        Pipeline.run(spark, ds, out, tokensPerChunk = 32 * 1024, waves = waves)), 5.minutes)
+      assert(reportSums(again) == Seq(0L, 0L, 0L, 0L, 0L), s"waves=$waves: $again")
+      assert(again.chunksSkipped == before.head && again.wavesRun == waves)
+      assert(tableSums(out) == before)
+    }
+  }
+
   test("size bar: encoded output <= stock parquet zstd on same rows") {
     val ds = Fixtures.tokenTable(spark, 4000, seed = 5, medianLen = 300, maxLen = 4096, partitions = 4)
     val out = tmpDir()
@@ -182,25 +251,33 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"wave count multiplied input scans: $scans1 vs $scans4")
   }
 
-  test("orphan chunks (crash between chunk and lineage write) are adopted") {
+  test("the chunks table is the only ledger: a leftover lineage/ dir is inert") {
     val ds = Fixtures.tokenTable(spark, 400, seed = 31, medianLen = 64, maxLen = 512, partitions = 2)
     val out = tmpDir()
     Pipeline.run(spark, ds, out, tokensPerChunk = 32 * 1024, waves = 2)
+    val linDir = new org.apache.hadoop.fs.Path(out, "lineage")
+    val fs = linDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(linDir), "a run must write no second ledger")
     val nChunks = Pipeline.readChunks(spark, out).count()
     val nRows = Pipeline.readTokens(spark, out).count()
-    // simulate the crash window: chunks durable, lineage lost
-    val linPath = new org.apache.hadoop.fs.Path(Pipeline.lineagePath(out))
-    linPath.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(linPath, true)
-    // resume must ADOPT the orphans (derive lineage from written chunk
-    // metadata), not re-encode them into duplicates
-    val report = Pipeline.run(spark, ds, out, tokensPerChunk = 32 * 1024, waves = 2)
-    assert(report.chunksEncoded == 0, s"re-encoded ${report.chunksEncoded} adopted chunks")
-    assert(Pipeline.readChunks(spark, out).count() == nChunks, "duplicate chunks appended")
-    assert(Pipeline.readTokens(spark, out).count() == nRows, "decode emits duplicates")
     val lin = Pipeline.readLineage(spark, out).get
-    assert(lin.count() == nChunks, "adopted lineage incomplete")
-    val v = Verifier.verify(ds, Pipeline.readChunks(spark, out))
-    assert(v.ok, s"post-adoption verify failed: $v")
+    assert(lin.count() == nChunks)
+    // the previous layout wrote a lineage/ table after each wave's
+    // chunks: complete, lagging the chunks (a crash between the two
+    // writes), or absent (a crash before the first). None of it is read
+    val leftovers = Seq("complete" -> Some(lin), "lagging" -> Some(lin.limit(1)), "absent" -> None)
+    leftovers.foreach { case (state, leftover) =>
+      fs.delete(linDir, true)
+      leftover.foreach(_.write.parquet(linDir.toString))
+      val report = Pipeline.run(spark, ds, out, tokensPerChunk = 32 * 1024, waves = 2)
+      assert(report.chunksEncoded == 0, s"$state lineage: re-encoded ${report.chunksEncoded} chunks")
+      assert(report.chunksSkipped == nChunks, s"$state lineage: skipped ${report.chunksSkipped}")
+      assert(Pipeline.readChunks(spark, out).count() == nChunks, s"$state lineage: duplicate chunks appended")
+      assert(Pipeline.readTokens(spark, out).count() == nRows, s"$state lineage: decode emits duplicates")
+      assert(Pipeline.readLineage(spark, out).get.count() == nChunks)
+      val v = Verifier.verify(ds, Pipeline.readChunks(spark, out))
+      assert(v.ok, s"$state lineage: verify failed: $v")
+    }
   }
 
   test("point lookup decodes only a bounded fraction of chunks at production docs-per-chunk") {
@@ -294,29 +371,34 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.head.source == "web" && got.head.n_tok == 300)
   }
 
-  test("adopted orphans keep the input_split they were encoded under") {
+  test("readLineage reports the input_split each chunk was written under") {
+    import spark.implicits._
     val ds = Fixtures.tokenTable(spark, 300, seed = 41, medianLen = 64, maxLen = 512, partitions = 2)
+    val inA = ds.filter(_.doc_id < "doc_000000000150")
+    val inB = ds.filter(_.doc_id >= "doc_000000000150")
     val out = tmpDir()
-    Pipeline.run(spark, ds, out, tokensPerChunk = 32 * 1024, waves = 1, inputSplit = "split-A")
-    // crash window: lineage lost, chunks durable
-    val linPath = new org.apache.hadoop.fs.Path(Pipeline.lineagePath(out))
-    linPath.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(linPath, true)
-    // the adopting run does NOT know the original split — lineage must
-    // come from the chunk metadata, not the adopter's argument
-    val adopted = Pipeline.adoptOrphans(spark, out)
-    assert(adopted > 0)
-    val splits = Pipeline.readLineage(spark, out).get
-      .select("input_split").distinct().collect().map(_.getString(0)).toSeq
-    assert(splits == Seq("split-A"), s"adopted lineage lost the original split: $splits")
+    Pipeline.run(spark, inA, out, tokensPerChunk = 32 * 1024, waves = 1, inputSplit = "split-A")
+    Pipeline.run(spark, inB, out, tokensPerChunk = 32 * 1024, waves = 1, inputSplit = "split-B")
+    val splitOf = Pipeline.readLineage(spark, out).get
+      .select("chunk_id", "input_split").as[(Long, String)].collect().toMap
+    assert(splitOf.values.toSet == Set("split-A", "split-B"), s"splits: ${splitOf.values.toSet}")
+    // every doc's chunk carries the split its run passed
+    Pipeline.readDocIndex(spark, out).collect().foreach { r =>
+      val want = if (r.doc_id < "doc_000000000150") "split-A" else "split-B"
+      assert(splitOf(r.chunk_id) == want, s"${r.doc_id} in chunk ${r.chunk_id}: ${splitOf(r.chunk_id)}")
+    }
+    // a resume skips only the chunks of its own split
+    val again = Pipeline.run(spark, inA, out, tokensPerChunk = 32 * 1024, waves = 1, inputSplit = "split-A")
+    assert(again.chunksEncoded == 0)
+    assert(again.chunksSkipped == splitOf.values.count(_ == "split-A"))
   }
 
   test("each wave owns its own chunk subdirectory (O(1) listings per wave)") {
     val ds = Fixtures.tokenTable(spark, 900, seed = 42, medianLen = 64, maxLen = 512, partitions = 2)
     val out = tmpDir()
     Pipeline.run(spark, ds, out, tokensPerChunk = 16 * 1024, waves = 3)
-    // layout: chunks/wave_id=<w>/part_source=<s>/... — per-wave lineage
-    // derivation lists ONE wave_id dir, never the whole tree (round-2
-    // regression: O(waves x total-files) listings)
+    // layout: chunks/wave_id=<w>/part_source=<s>/... — each wave
+    // appends into its own wave_id dir
     val waveDirs = new java.io.File(Pipeline.chunksPath(out))
       .listFiles().filter(_.isDirectory).map(_.getName).filter(_.startsWith("wave_id=")).sorted
     assert(waveDirs.nonEmpty && waveDirs.forall(_.matches("wave_id=\\d+")),
@@ -867,8 +949,8 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val someDoc = decoded.head
     val found = Pipeline.readTokensForDocId(spark, old, someDoc.doc_id).collect()
     assert(found.length == 1 && found.head.tokens.sameElements(someDoc.tokens))
-    // resume over the old dir: adoption/lineage derivation doesn't crash
-    // and records the unknown-split default
+    // resume over the old dir: the chunk ledger reads the absent
+    // input_split as the unknown-split default
     val rpt = Pipeline.run(spark, ds, old, tokensPerChunk = 16 * 1024, waves = 1)
     assert(rpt.chunksSkipped > 0, "adopted old chunks must be resumable")
     assert(rpt.chunksEncoded == 0,
