@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{Chunker, Decoder, EncodedChunk, Encoder, SessionMemo, TokenRow, Verifier}
+import graft.engine.{EncodedChunk, Encoder, SessionMemo, TokenRow, Verifier}
+import graft.queries.{Ann, CodecReads, Dedup, Events, Packing, Query, TextQuality, Tpch}
 
 /** Driver contract — queries demonstrating every operator family from
   * SURVEY.md §2 plus the training-data pipeline ops, each with a DuckDB
@@ -10,10 +11,15 @@ import graft.engine.{Chunker, Decoder, EncodedChunk, Encoder, SessionMemo, Token
   * the Spark plan and the oracle SQL (the driver hashes values under
   * name-sorted columns); every query carries a total-order ORDER BY so
   * row order can never fail the compare.
+  *
+  * Each query is one [[graft.queries.Query]] record (name, plan,
+  * oracle) in its family object under `graft.queries`; this object
+  * keeps the fixtures the families share and merges the records into
+  * [[queries]] and [[oracleSql]].
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
   /** Scale-adaptive kernel parallelism (guide §2.5 "input skew — one
@@ -28,7 +34,7 @@ object SparkEntry {
     * is on by default) and every consumer here is a per-row kernel or
     * an aggregate, so results are partitioning-independent.
     */
-  private def spread(s: SparkSession, df: DataFrame): DataFrame = {
+  private[graft] def spread(s: SparkSession, df: DataFrame): DataFrame = {
     val cores = s.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= cores) df else df.repartition(cores)
   }
@@ -63,126 +69,6 @@ object SparkEntry {
       Encoder.encodeTable(tokenTable(s, dir), tokensPerChunk, meta = Some(meta))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-
-  /** q38's pipeline body — the scalable near-dup pair computation,
-    * memoized per session via [[neardupPairsFor]] (q38 itself plus the
-    * q64/q65 consumers all read the one persisted copy; whichever runs
-    * first pays). Unordered; q38's entry adds the total-order sort.
-    */
-  private def shingleNeardupPairs(s: SparkSession, dir: String): DataFrame = {
-    val spark = s
-    import spark.implicits._
-    val docsRaw = spread(s, t(s, dir, "documents").select(col("doc_id"), col("text")))
-    // one md5 per shingle, four 32-bit band windows, map-only typed
-    // kernel (see q18 — one pass per doc, band minima tracked in-row)
-    // materialized ONCE before the self-join consumes it from both
-    // sides: the two join inputs are separate map stages that Spark
-    // schedules concurrently, so a lazy persist races and both stages
-    // re-run the md5 kernel + scan (measured: the kernel is this
-    // pipeline's dominant CPU). One tiny count guarantees single
-    // evaluation; [[shingleNeardupPairsMaterialized]] unpersists it
-    // once the pair set is durable. At 10^9 docs the signature table
-    // is rows × ~20 B — materializing LSH signatures before the band
-    // join is the standard practice this mirrors.
-    val mh = docsRaw.as[(Long, String)]
-      .map { case (id, text) =>
-        (id, graft.text.Analyzer.minhashBands(text, k = 3))
-      }
-      .toDF("doc_id", "mhs")
-      .select(col("doc_id"), posexplode(col("mhs")).as(Seq("band", "bucket")))
-      .filter(col("bucket").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    mh.count()
-    // the candidate-pair set is tiny relative to the corpus (that is
-    // the point of LSH), so persist it: without the persist the plan
-    // re-runs the band self-join once per downstream use, and the
-    // exact-verify joins below re-shingle the ENTIRE corpus once per
-    // side. Instead, semi-join documents down to candidate docs FIRST
-    // and only then shingle (explicit order — a typed map is opaque
-    // to Catalyst, so the semi join cannot be pushed below it), so
-    // verify-side shingling is O(candidate docs), not O(corpus) —
-    // at 10^9 docs with ~1% candidates that is ~100x less transform
-    // work and the only full-corpus shingle pass is the minhash one.
-    val cand = mh.select(col("band"), col("bucket"), col("doc_id").as("a"))
-      .join(mh.select(col("band"), col("bucket"), col("doc_id").as("b")),
-        Seq("band", "bucket"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val candDocs = cand.select(col("a").as("doc_id"))
-      .union(cand.select(col("b").as("doc_id"))).distinct()
-    // verify on 64-bit shingle fingerprints, not strings: only the
-    // PAIR IDENTITIES reach the output, so hashed intersect/union
-    // sizes are exact unless two distinct shingles collide in 64
-    // bits — and the oracle verifies with raw-string Jaccard, so a
-    // collision would fail the compare (same argument as q50). The
-    // candidate join ships 8 B/shingle instead of whole strings.
-    // same single-evaluation guard as mh: candSh feeds both verify
-    // joins (a side and b side) — candidate-doc signatures are small
-    // by LSH design, so materializing them is scale-sane
-    val candSh = docsRaw.join(candDocs, Seq("doc_id"), "left_semi")
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        (id, graft.text.Analyzer.wordShingleHash64(text, k = 3))
-      }
-      .toDF("doc_id", "sh")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    candSh.count()
-    val pairs = cand
-      .join(candSh.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
-      .join(candSh.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))).cast("long"))
-      .withColumn("uni", size(array_union(col("sha"), col("shb"))).cast("long"))
-      .filter(col("uni") > 0 && col("inter") * 2 >= col("uni"))
-      .select(col("a"), col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // the durable artifact of this pipeline
-    // the pair set is materialized — drop the intermediates (a cache
-    // miss later would lazily recompute them, it just cannot happen
-    // for the persisted pair rows themselves)
-    mh.unpersist()
-    candSh.unpersist()
-    cand.unpersist()
-    pairs
-  }
-
-  /** Compute-once memo for the q38 near-dup pair set: q38 itself
-    * always runs (and times) the full minhash→band-join→exact-verify
-    * pipeline, while the CONSUMERS of its pair graph (q64 cluster
-    * resolution, q65 applied dedup) reuse one session-persisted copy —
-    * a production dedup pipeline materializes pairs once and derives
-    * clusters and the keep/drop decision from the same artifact.
-    * shingleNeardupPairs returns its pair set already persisted and
-    * materialized (it owns the lifecycle of its intermediates).
-    */
-  private val pairsMemo = new SessionMemo[String, DataFrame](SessionMemo.unpersist)
-  private def neardupPairsFor(s: SparkSession, dir: String): DataFrame =
-    pairsMemo(s, dir, s"$dir/documents.parquet")(shingleNeardupPairs(s, dir))
-
-  /** Compute-once memo for the connected-components labeling of the
-    * q38 pair graph — the third artifact of the dedup family (pairs →
-    * clusters → keep/drop): a production pipeline resolves clusters
-    * once and both the cluster report (q64) and the applied dedup (q65)
-    * read that one labeling. The first consumer (q64 in bench order)
-    * pays the O(diameter) label-propagation rounds. The labels table is
-    * already materialized (its convergence aggregate ran over the final
-    * localCheckpoint), so memoizing the DataFrame needs no extra job;
-    * releasing it drops that checkpoint.
-    */
-  private val componentsMemo = new SessionMemo[String, DataFrame](SessionMemo.unpersist)
-  private def neardupComponentsFor(s: SparkSession, dir: String): DataFrame =
-    componentsMemo(s, dir, s"$dir/documents.parquet")(
-      graft.similarity.Components.connectedComponents(neardupPairsFor(s, dir)))
-
-  /** Corpus-size probe for the LSH width derivations (q34's bitsFor,
-    * q37's bitsPerBandFor): |vectors| per corpus, counted once per
-    * session and content stamp — the two queries would otherwise each
-    * pay an identical count job for the same scalar. The count is
-    * sizing metadata (like tokensPerChunk), not a query result.
-    */
-  private val embedCountMemo = new SessionMemo[String, Long](_ => ())
-  private def embeddingsCount(s: SparkSession, dir: String): Long =
-    embedCountMemo(s, dir, s"$dir/embeddings.parquet")(t(s, dir, "embeddings").count())
 
   /** One JVM-wide scratch root with a single cleanup hook; queries that
     * need at-rest scratch (q27's partitioned write, q52's compaction
@@ -245,14 +131,6 @@ object SparkEntry {
     (s"$root/a", s"$root/b")
   }
 
-  /** Previous q52 compact target per corpus: each invocation writes a
-    * fresh out dir (compact refuses populated foreign targets), so the
-    * prior one — a full compacted-corpus copy — is deleted when the
-    * next invocation replaces it (its lazy DataFrame was consumed by
-    * then; long-lived JVMs must not grow scratch per invocation).
-    */
-  private val q52LastOut = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** documents → input_hint-shaped token table: tokens = unicode code
     * points of `text` (deterministic, oracle-checkable: DuckDB
     * `unicode()` over per-char splits).
@@ -274,3274 +152,22 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q10_roundtrip_encode_decode")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // S1/S5 scan + F1/F3 pushdown filter + P1/P2 projection
-    "q01_scan_filter_project" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") < to_timestamp(lit("1996-01-01")) &&
-          col("l_quantity") > 45)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    // A-family aggregation (TPC-H Q1 shape). Sums are exact integer
-    // CENTS, not DECIMAL: the driver's value-hash treats Spark-parquet
-    // decimals and DuckDB decimals differently (r02 q02/q06 failed hash
-    // with judge-verified-identical values), so the output is made
-    // representation-proof — per-row round(x*100) is exact (inputs have
-    // <= 2 decimals), and a sum of longs has one canonical encoding.
-    "q02_agg_groupby" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(round(col("l_quantity") * 100).cast("long")).as("sum_qty_cents"),
-          sum(round(col("l_extendedprice") * 100).cast("long")).as("sum_price_cents"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // A3/A4 distinct values (the dictionary-page trick's query shape)
-    "q03_distinct_sorted" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("source")).distinct()
-        .orderBy(col("source"))
-    }),
-
-    // O1-O5 sort + top-k
-    "q04_sort_topk" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(20)
-    }),
-
-    // §2.7 union + distinct (k-way merge analog)
-    "q05_union_distinct" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      d.filter(col("n_chars") < 100).select(col("doc_id"))
-        .union(d.filter(col("source") === "src1").select(col("doc_id")))
-        .distinct()
-        .orderBy(col("doc_id"))
-    }),
-
-    // §2.3 the one real join: equi join + aggregate (integer cents —
-    // same decimal-representation-proofing as q02)
-    "q06_join_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          count(lit(1)).as("n_items"),
-          sum(round(col("l_quantity") * 100).cast("long")).as("sum_qty_cents"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    // F4 regex constraint
-    "q07_filter_regex" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .filter(col("text").rlike("hash (join|agg)"))
-        .groupBy(col("source")).agg(count(lit(1)).as("n"))
-        .orderBy(col("source"))
-    }),
-
-    // F2/F5 set-match + NOT constraints
-    "q08_filter_in_not" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_returnflag").isin("A", "R") && !(col("l_linestatus") === "F"))
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // tokenizer: n_tok == unicode codepoint count (oracle: length(text))
-    "q09_tokenize_counts" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      tokenTable(s, dir)
-        .map(r => (r.doc_id.toLong, r.n_tok.toLong))
-        .toDF("doc_id", "n_tok")
-        .orderBy(col("doc_id"))
-    }),
-
-    // THE ENGINE: encode → decode → aggregate; oracle recomputes the
-    // same sums from raw text codepoints in DuckDB
-    "q10_roundtrip_encode_decode" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val chunks = chunksFor(s, dir, tokensPerChunk = 16384)
-      Decoder.decode(chunks)
-        .map(r => (r.source, r.tokens.foldLeft(0L)(_ + _), 1L))
-        .toDF("source", "tok_sum", "one")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("tok_sum")).as("token_sum"))
-        .orderBy(col("source"))
-    }),
-
-    // exact near-dup grouping on a canonical prefix (md5 fingerprint)
-    "q11_dedup_exact" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(md5(col("text").substr(1, 20)).as("fp"), col("doc_id"))
-        .groupBy(col("fp"))
-        .agg(count(lit(1)).as("n"), min(col("doc_id")).as("keeper"))
-        .filter(col("n") > 1)
-        .orderBy(col("fp"))
-    }),
-
-    // per-source dedup stats (distinct-hash counting)
-    "q12_dedup_stats" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(md5(col("text"))).as("n_unique"))
-        .orderBy(col("source"))
-    }),
-
-    // window function: top-3 busiest days per event type
-    "q13_window_rank" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).cast("date").as("day"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy(col("event_type"))
-        .orderBy(col("n").desc, col("day"))
-      daily.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
-        .orderBy(col("event_type"), col("rk"))
-    }),
-
-    // text quality scoring: word count + stopword occurrences
-    "q14_quality_score" -> ((s, dir) => {
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("word_cnt"),
-        ((length(col("text")) - length(regexp_replace(col("text"), "the", ""))) / 3)
-          .cast("long").as("the_cnt"),
-        col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // language-ID heuristic (content marker based)
-    "q15_langid" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .withColumn("predicted",
-          when(col("text").contains(" the "), lit("en")).otherwise(lit("other")))
-        .groupBy(col("lang"), col("predicted"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("lang"), col("predicted"))
-    }),
-
-    // whitespace token counting
-    "q16_token_count_ws" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_ws_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // BPE-style pre-tokenizer counting (regex runs of letters / digits /
-    // punctuation) — the same pattern string is the DuckDB oracle
-    "q25_token_count_bpe" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          size(regexp_extract_all(col("text"), lit(graft.text.Analyzer.BpeIshPattern), lit(0)))
-            .cast("long").as("n_bpe_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // document fingerprinting (full-text md5)
-    "q17_fingerprint" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), md5(col("text")).as("fp"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // MinHash signatures over word 3-shingles, 4 hash families —
-    // deterministic and oracle-checkable. ONE md5 per shingle, sliced
-    // into four disjoint 32-bit hex windows (the standard k-bands-from-
-    // one-hash minhash construction): the per-band salted-md5 version
-    // cost 4x the digest work, and md5 dominates this whole query
-    // family's CPU. The shingle + band minima run as ONE typed-map
-    // kernel per doc (Analyzer.minhashBands — bit-identical md5; the
-    // SQL higher-order-function formulation evaluated interpreted with
-    // split(text) inlined per lambda element, 30x the cost). Docs with
-    // < 3 words yield all-NULL minima, matching the oracle's
-    // list_min(empty) = NULL.
-    "q18_minhash" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, text) =>
-          val m = graft.text.Analyzer.minhashBands(text, k = 3)
-          (id, m(0), m(1), m(2), m(3))
-        }
-        .toDF("doc_id", "mh0", "mh1", "mh2", "mh3")
-        .orderBy(col("doc_id"))
-    }),
-
-    // LSH banding: bucket the minhash bands, report collision buckets.
-    // posexplode, NOT a 4-way self-union: each union branch would
-    // recompute the whole minhash subtree (4x the md5 work); the
-    // explode computes signatures once and emits one row per band
-    "q19_lsh_buckets" -> ((s, dir) => {
-      val mh = queries("q18_minhash")(s, dir)
-      mh.select(col("doc_id"),
-          posexplode(array(col("mh0"), col("mh1"), col("mh2"), col("mh3")))
-            .as(Seq("band", "bucket")))
-        .groupBy(col("band"), col("bucket"))
-        .agg(count(lit(1)).as("n_docs"))
-        .filter(col("n_docs") > 1)
-        .orderBy(col("band"), col("bucket"))
-    }),
-
-    // n-gram (3-shingle) Jaccard similarity of each doc vs doc 0,
-    // restricted to first 25 docs — exact set ops, oracle-checkable
-    "q20_ngram_jaccard" -> ((s, dir) => {
-      val d = t(s, dir, "documents").filter(col("doc_id") < 25)
-        .withColumn("words", split(col("text"), " "))
-        // same short-doc guard as q18 (empty shingle set, not ANSI error)
-        .withColumn("sh", expr(
-          "CASE WHEN size(words) >= 3 THEN array_distinct(transform(sequence(1, size(words)-2), i -> " +
-            "concat_ws(' ', element_at(words,i), element_at(words,i+1), element_at(words,i+2)))) " +
-            "ELSE CAST(array() AS array<string>) END"))
-        .select(col("doc_id"), col("sh"))
-      val probe = d.filter(col("doc_id") === 0)
-        .select(col("sh").as("probe_sh"))
-      // explicit broadcast of the 1-row probe side (round-5 verdict
-      // item: every other probe crossJoin in this file pins the plan
-      // with the hint instead of relying on AQE to pick BNL)
-      d.crossJoin(broadcast(probe))
-        .select(
-          col("doc_id"),
-          size(array_intersect(col("sh"), col("probe_sh"))).cast("long").as("inter"),
-          size(array_union(col("sh"), col("probe_sh"))).cast("long").as("uni"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // embeddings scan/aggregate
-    "q21_embed_stats" -> ((s, dir) => {
-      t(s, dir, "embeddings")
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n"),
-          min(col("vec_id")).as("min_id"), max(col("vec_id")).as("max_id"))
-        .orderBy(col("label"))
-    }),
-
-    // §2.7 set ops: INTERSECT / EXCEPT (row-range intersect/complement
-    // analog, reference: search/rowrange.go:50-132)
-    "q24_intersect_except" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val a = d.filter(col("n_chars") > 200).select(col("doc_id"))
-      val b = d.filter(col("source").isin("src1", "src2", "src3")).select(col("doc_id"))
-      a.intersect(b).withColumn("op", lit("both"))
-        .union(a.except(b).withColumn("op", lit("only_long")))
-        .orderBy(col("op"), col("doc_id"))
-    }),
-
-    // partition-pruned selective decode: only chunks of one source are
-    // decoded (single-source chunks by construction; the chunks table is
-    // Hive-partitioned by part_source, so at rest this read touches one
-    // directory). Oracle-checked: a mixed-source chunk would emit wrong
-    // rows and fail the compare.
-    "q23_decode_pruned" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val chunks = chunksFor(s, dir, tokensPerChunk = 16384)
-      Decoder.decode(chunks.filter(col("part_source") === "src1"))
-        .map(r => (r.doc_id.toLong, r.n_tok.toLong))
-        .toDF("doc_id", "n_tok")
-        .orderBy(col("doc_id"))
-    }),
-
-    // multimodal: opaque binary payload + typed metadata, oracle-checked
-    // on byte length and content fingerprint (DuckDB md5(VARCHAR) hashes
-    // the same UTF-8 bytes Spark's md5(binary) sees)
-    "q22_media_meta" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      graft.multimodal.Media.fromDocuments(t(s, dir, "documents"))
-        .map(r => (r.doc_id, r.media_type, r.payload.length.toLong))
-        .toDF("doc_id", "media_type", "n_bytes")
-        .join(
-          t(s, dir, "documents").select(col("doc_id"), md5(encode(col("text"), "UTF-8")).as("fp")),
-          Seq("doc_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // scalable near-dup dedup end-to-end: LSH band collisions generate
-    // candidate pairs (equi self-join per band — never all-pairs), then
-    // EXACT shingle Jaccard confirms, integer-ratio threshold (>= 0.5)
-    // so the oracle compare is float-free. This is q20's capability
-    // without its probe-vs-25-docs demo scoping: the candidate set, not
-    // the corpus square, bounds the exact-verify work at 10^9 docs.
-    // First consumer through neardupPairsFor pays the computation
-    // (chunksFor precedent); q64/q65 reuse the persisted pair set.
-    "q38_shingle_neardup_pairs" -> ((s, dir) =>
-      neardupPairsFor(s, dir).orderBy(col("a"), col("b"))),
-
-
-    // chunk-stat pruned point lookup: only chunks whose
-    // [min_doc_id, max_doc_id] covers the key are decoded — the
-    // reference's precise row-range pruning from page min/max stats
-    // (reference: search/constraint.go:394-433) at chunk grain — and
-    // WITHIN the surviving chunk only the target doc's token slice is
-    // materialized (Decoder.decodeDocsTokensWhere -> IntCodec.decodeRange:
-    // O(doc), not O(chunk) — the reference's page-grain row-range
-    // materialization, search/iterators.go:359-494).
-    // Oracle-checked: a wrong bound or slice offset would drop the row
-    // or change n_tok.
-    "q26_decode_point_lookup" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val key = "42"
-      chunksFor(s, dir, tokensPerChunk = 16384)
-        .filter(col("min_doc_id") <= key && col("max_doc_id") >= key)
-        .flatMap(c => Decoder.decodeDocsTokensWhere(c, _ == key))
-        .map(r => (r.doc_id.toLong, r.n_tok.toLong))
-        .toDF("doc_id", "n_tok")
-        .orderBy(col("doc_id"))
-    }),
-
-    // doc-sorted index lookup: the log-pruning point-lookup path over
-    // AT-REST chunks — build the (doc_id, chunk_id) index once, then a
-    // batch lookup probes it with a pushed isin filter (parquet min/max
-    // on the sorted files prune to ~one row-group) and decodes each
-    // candidate chunk once for all its keys (Decoder.decodeDocsTokensWhere)
-    "q53_doc_index_lookup" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val tmp = chunksDirFor(s, dir, tokensPerChunk = 16384)
-      val keys = Seq("42", "123", "321")
-      // one probe decides build-or-lookup AND supplies the candidates —
-      // a fresh-index lookup pays exactly one freshness check + probe
-      val ids = graft.engine.Pipeline.lookupChunkIdsViaIndex(s, tmp, keys).getOrElse {
-        graft.engine.Pipeline.buildDocIndex(s, tmp)
-        graft.engine.Pipeline.lookupChunkIdsViaIndex(s, tmp, keys)
-          .getOrElse(sys.error(s"doc index stale immediately after build in $tmp"))
-      }
-      graft.engine.Pipeline.readTokensForChunkIds(s, tmp, ids, keys)
-        .map(r => (r.doc_id.toLong, r.source, r.n_tok.toLong, r.tokens.foldLeft(0L)(_ + _)))
-        .toDF("doc_id", "source", "n_tok", "token_sum")
-        .orderBy(col("doc_id"))
-    }),
-
-    // Gopher-style repetition quality rule (Rae et al. 2021 §A1.1):
-    // per-doc word/2-gram repetition counts from a map-only typed
-    // kernel, flag = most-frequent-2-gram fraction >= 0.2 via integer
-    // cross-multiplication (5*max >= n), so the rule is value-exact in
-    // the oracle. Counts, not fractions, reach the output — no float
-    // compare anywhere.
-    "q54_repetition_stats" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, text) =>
-          val st = graft.text.Analyzer.repetitionStats(text)
-          val flag = if (st.n2grams > 0 && st.max2gramCount * 5 >= st.n2grams) 1L else 0L
-          (id, st.nWords, st.nDistinctWords, st.n2grams, st.max2gramCount, flag)
-        }
-        .toDF("doc_id", "n_words", "n_distinct_words", "n_2grams",
-          "max_2gram_count", "flag_repetitive")
-        .orderBy(col("doc_id"))
-    }),
-
-    // vocabulary induction: global word counts with a min-count floor,
-    // top-50 by (count desc, word asc) — the canonical partial-agg
-    // shape: the explode shuffles only (word, partial count) pairs
-    // after map-side combine, so the shuffle is bounded by vocab size
-    // per partition, not corpus words; the top-k is a
-    // TakeOrderedAndProject, never a global sort
-    "q55_vocab_topk" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("word"))
-        .groupBy(col("word")).agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 10)
-        .orderBy(col("n").desc, col("word"))
-        .limit(50)
-        .select(col("word"), col("n"))
-    }),
-
-    // gap-based sessionization: a new session opens when the gap to the
-    // user's previous event exceeds 30 min. EXACTLY one shuffle — the
-    // window partition on user_id — then lag/cumsum/agg all run inside
-    // the per-user sort (the two windows and the groupBy share the
-    // user_id clustering, so Catalyst plans a single Exchange); at 100
-    // TB the cost is one repartition of the event log, the same shape
-    // as the reference's single-key merge paths. Microsecond-exact
-    // integer time math (unix_micros/epoch_us) keeps the oracle
-    // value-identical.
-    "q56_sessionize" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val byUser = Window.partitionBy(col("user_id")).orderBy(col("tus"))
-      // ts is TIMESTAMP_NTZ; every session pins UTC, so the NTZ->LTZ
-      // cast is epoch-exact and matches DuckDB's epoch_us(naive ts)
-      val sessions = t(s, dir, "events")
-        .select(col("user_id"), unix_micros(col("ts").cast("timestamp")).as("tus"))
-        .withColumn("new_s",
-          when(col("tus") - lag(col("tus"), 1).over(byUser) <= 1800000000L, 0L)
-            .otherwise(1L))
-        .withColumn("sid", sum(col("new_s")).over(
-          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("user_id"), col("sid"))
-        .agg(count(lit(1)).as("n_ev"), (max(col("tus")) - min(col("tus"))).as("dur"))
-      sessions.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_sessions"), sum(col("n_ev")).as("n_events"),
-          max(col("n_ev")).as("max_session_events"),
-          max(col("dur")).as("max_session_us"))
-        .orderBy(col("user_id"))
-    }),
-
-    // as-of join (most recent prior click for each purchase, per user)
-    // via the scale shape Spark lacks as a builtin: tag-and-union both
-    // sides, ONE shuffle on user_id, and a running last(ignoreNulls)
-    // over the merged time order carries the as-of click forward onto
-    // each purchase row. O((n+m) log) per user vs the O(n*m) range
-    // self-join a naive `ON p.user_id = c.user_id AND c.ts <= p.ts` +
-    // max() would plan; no broadcast needed on either side. Ties
-    // (click.ts == purchase.ts) count as prior — the union sorts the
-    // click tag (0) before the purchase tag (1) at equal ts, matching
-    // DuckDB's ASOF `ON p.ts >= c.ts`.
-    "q57_asof_join" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events").select(
-        col("event_id"), col("user_id"),
-        unix_micros(col("ts").cast("timestamp")).as("tus"), // NTZ + UTC session
-        col("event_type"))
-      val clicks = ev.filter(col("event_type") === "click").select(
-        col("user_id"), col("tus"), lit(0).as("tag"),
-        col("event_id").as("click_event_id"), col("tus").as("click_tus"),
-        lit(null).cast("long").as("purchase_event_id"))
-      val purchases = ev.filter(col("event_type") === "purchase").select(
-        col("user_id"), col("tus"), lit(1).as("tag"),
-        lit(null).cast("long").as("click_event_id"),
-        lit(null).cast("long").as("click_tus"),
-        col("event_id").as("purchase_event_id"))
-      val merged = Window.partitionBy(col("user_id"))
-        .orderBy(col("tus"), col("tag"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      clicks.unionByName(purchases)
-        .withColumn("asof_click", last(col("click_event_id"), ignoreNulls = true).over(merged))
-        .withColumn("asof_ctus", last(col("click_tus"), ignoreNulls = true).over(merged))
-        .filter(col("tag") === 1 && col("asof_click").isNotNull)
-        .select(col("purchase_event_id").as("event_id"),
-          col("asof_click").as("click_event_id"),
-          (col("tus") - col("asof_ctus")).as("gap_us"))
-        .orderBy(col("event_id"))
-    }),
-
-    // range (interval) join with NO equi key: per error event, count
-    // purchases in the following 5 minutes, corpus-wide. The naive
-    // `ON p.ts > e.ts AND p.ts <= e.ts + 5min` plans a nested-loop/
-    // cartesian — O(n*m) and a non-starter at 100 TB. The scale shape:
-    // bucket both sides into bins of exactly the window width; a
-    // purchase in bin b can only match errors in bins {b-1, b}, so
-    // exploding the error side into 2 candidate bins turns the interval
-    // predicate into an EQUI join on bin (one shuffle each side,
-    // uniform keys) + a residual range filter. Each (error, purchase)
-    // pair meets on exactly one bin — no post-join dedup. PlanSpec
-    // pins no NestedLoop/Cartesian in the plan.
-    "q58_range_join" -> ((s, dir) => {
-      val binUs = 300000000L // 5 min in micros == the bin width
-      val ev = t(s, dir, "events").select(
-        col("event_id"), unix_micros(col("ts").cast("timestamp")).as("tus"),
-        col("event_type"))
-      val err = ev.filter(col("event_type") === "error")
-        .select(col("event_id"), col("tus"))
-      val pur = ev.filter(col("event_type") === "purchase")
-        .select(col("tus").as("ptus"), floor(col("tus") / binUs).as("bin"))
-      val errBins = err.withColumn("bin",
-        explode(array(floor(col("tus") / binUs), floor(col("tus") / binUs) + 1)))
-      val counts = errBins.join(pur, "bin")
-        .filter(col("ptus") > col("tus") && col("ptus") <= col("tus") + binUs)
-        .groupBy(col("event_id")).agg(count(lit(1)).as("n_purchases_5min"))
-      err.join(counts, Seq("event_id"), "left")
-        .select(col("event_id"),
-          coalesce(col("n_purchases_5min"), lit(0L)).as("n_purchases_5min"))
-        .orderBy(col("event_id"))
-    }),
-
-    // int8 embedding quantization — the standard 4x payload reduction
-    // for vector storage at 100 TB (per-vector symmetric scale
-    // maxabs/127, the scalar-quantizer scheme of FAISS SQ8 / the
-    // Parquet-embedding pattern). Map-only kernel: widen to double,
-    // quantize each vector into [-127, 127], round-trip the quantized
-    // ints through the engine's auto-selected int codec (the int8
-    // range makes bitpack/FoR win), and reduce to per-label EXACT
-    // integer aggregates. n_sat pins saturation behavior (each
-    // vector's max-|x| element lands exactly on ±127, so n_sat >=
-    // n_vecs on non-degenerate data); n_mismatch is the structural-
-    // zero codec round-trip gate. Rounding is half-away-from-zero on
-    // the EXACT binary double (BigDecimal(double) + HALF_UP ==
-    // C++/DuckDB std::round), and the expression order (x * 127.0) / m
-    // matches the oracle so both sides produce bit-identical doubles.
-    // Scale shape: zero shuffle until the final tiny per-label agg —
-    // the quantize+encode pass streams each partition once.
-    "q59_embed_quantize" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      t(s, dir, "embeddings")
-        .select(col("vec_id").cast("long"), col("embedding"), col("label"))
-        .as[(Long, Array[Float], Int)]
-        .mapPartitions { it =>
-          // label -> (n_vecs, n_dims, sum_q, sum_abs_q, n_sat, n_mismatch)
-          val acc = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
-          it.foreach { case (_, v, label) =>
-            val q = graft.codec.Quantize.int8(v)
-            val (_, enc) = graft.codec.Selector.encodeAuto(q)
-            val dec = graft.codec.IntCodec.decode(enc)
-            var mism = 0L
-            var i = 0
-            if (dec.length != q.length) mism += 1
-            else {
-              while (i < q.length) { if (dec(i) != q(i)) mism += 1; i += 1 }
-            }
-            val a = acc.getOrElseUpdate(label, new Array[Long](6))
-            a(0) += 1
-            i = 0
-            while (i < q.length) {
-              a(1) += 1
-              a(2) += q(i)
-              a(3) += math.abs(q(i))
-              if (math.abs(q(i)) == 127) a(4) += 1
-              i += 1
-            }
-            a(5) += mism
-          }
-          acc.iterator.map { case (l, a) =>
-            (l, a(0), a(1), a(2), a(3), a(4), a(5))
-          }
-        }
-        .toDF("label", "n_vecs", "n_dims", "sum_q", "sum_abs_q", "n_sat",
-          "n_mismatch")
-        .groupBy(col("label"))
-        .agg(sum("n_vecs").as("n_vecs"), sum("n_dims").as("n_dims"),
-          sum("sum_q").as("sum_q"), sum("sum_abs_q").as("sum_abs_q"),
-          sum("n_sat").as("n_sat"), sum("n_mismatch").as("n_mismatch"))
-        .orderBy(col("label"))
-    }),
-
-    // ANN over the COMPRESSED representation (FAISS IVF-SQ8's scoring
-    // half): both sides quantized to int8 (4x less scan bandwidth — at
-    // 100 TB of vectors the search is memory-bandwidth-bound, so this
-    // is the production configuration, not an approximation shortcut),
-    // asymmetric score reconstructed in pure int64 as
-    // dot_q * scaleInt(doc) — the probe's own scale is constant within
-    // a probe's ranking, so dropping it changes no ranks and keeps the
-    // comparator integer-exact (no float top-k, hash-matches DuckDB).
-    // Scale shape identical to q40: probes broadcast, corpus never
-    // shuffled, per-probe top-k is the only (tiny) exchange.
-    "q60_quantized_ann" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val spark = s
-      import spark.implicits._
-      val base = t(s, dir, "embeddings")
-        .select(col("vec_id").cast("long"), col("embedding"))
-        .as[(Long, Array[Float])]
-        .mapPartitions { it =>
-          it.map { case (id, v) =>
-            (id, graft.codec.Quantize.int8(v).map(_.toLong),
-              graft.codec.Quantize.scaleInt(v))
-          }
-        }
-        .toDF("vec_id", "qe", "scale_i")
-      val probes = base.filter(col("vec_id") < 3)
-        .select(col("vec_id").as("qid"), col("qe").as("qqe"))
-      val dot = expr(
-        "aggregate(zip_with(qe, qqe, (x, y) -> x * y), 0L, (acc, x) -> acc + x)")
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("score").desc, col("vec_id"))
-      base.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("dot_q", dot)
-        .withColumn("score", col("dot_q") * col("scale_i"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("qid"), col("rank"), col("vec_id"), col("dot_q"),
-          col("scale_i"), col("score"))
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // IVF-SQ8: the full FAISS inverted-file + scalar-quantizer search —
-    // coarse assignment at x1000 precision (q42's quantizer; FAISS also
-    // runs its coarse quantizer at higher precision than the stored
-    // codes), storage and scoring over the 4x-compressed SQ8 codes with
-    // q60's integer asymmetric score (dot_q * scaleInt). At 100 TB this
-    // is THE production vector-search configuration: nProbe cells bound
-    // candidate volume (q42's property) while SQ8 bounds scan bandwidth
-    // (q60's property). Pure int64 end to end — hash-exact oracle.
-    "q63_ivf_sq8" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val spark = s
-      import spark.implicits._
-      val sq8 = spread(s, t(s, dir, "embeddings")
-        .select(col("vec_id").cast("long"), col("embedding")))
-        .as[(Long, Array[Float])]
-        .mapPartitions { it =>
-          it.map { case (id, v) =>
-            (id, v, graft.codec.Quantize.int8(v).map(_.toLong),
-              graft.codec.Quantize.scaleInt(v))
-          }
-        }
-        .toDF("vec_id", "embedding", "qe", "scale_i")
-      val base = sq8
-        .withColumn("ce",
-          expr("transform(embedding, x -> bigint(round(double(x) * 1000D)))"))
-        .drop("embedding")
-      val cents = base.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cent_id"), col("ce").as("cc"))
-        .agg(collect_list(struct(col("cent_id"), col("cc"))).as("cents"))
-      def cellsOf(vec: String, take: Int) = expr(
-        s"""transform(slice(array_sort(transform(cents, c -> named_struct(
-           |  'd2', aggregate(zip_with($vec, c.cc, (x, y) -> (x - y) * (x - y)),
-           |                  0L, (acc, v) -> acc + v),
-           |  'cid', c.cent_id))), 1, $take), s -> s.cid)""".stripMargin)
-      val assigned = base.crossJoin(broadcast(cents))
-        .withColumn("cent_id", cellsOf("ce", 1).getItem(0))
-        .select(col("vec_id"), col("qe"), col("scale_i"), col("cent_id"))
-      val probeCells = base.filter(col("vec_id") < 3).crossJoin(broadcast(cents))
-        .select(col("vec_id").as("qid"), col("qe").as("qqe"),
-          explode(cellsOf("ce", 2)).as("cent_id"))
-      val dot = expr(
-        "aggregate(zip_with(qe, qqe, (x, y) -> x * y), 0L, (acc, x) -> acc + x)")
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("score").desc, col("vec_id"))
-      assigned.join(broadcast(probeCells), Seq("cent_id"))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("dot_q", dot)
-        .withColumn("score", col("dot_q") * col("scale_i"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("qid"), col("rank"), col("vec_id"), col("cent_id"),
-          col("dot_q"), col("scale_i"), col("score"))
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // Bloom-prefiltered decontamination — q50's exact join restructured
-    // the way a 100 TB pipeline actually runs it: the benchmark shingle
-    // set folds into a Bloom filter (partition-local partials, OR-merged
-    // on the driver — WordCount longs per partition cross the wire,
-    // independent of benchmark size — then broadcast once), every
-    // training shingle is screened map-side ("definitely clean" needs
-    // no further work, no shuffle), and the exact verify join runs ONLY
-    // on Bloom hits. No false negatives, so true contamination counts
-    // equal the exact join's; false positives just add verify work and
-    // are accounted per-source. Bit positions are md5 windows
-    // (Bloom.positions), so DuckDB reproduces every verdict exactly.
-    "q61_bloom_decontaminate" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val thr = graft.sampling.Mix.thresholdHex(0.02)
-      val raw = t(s, dir, "documents")
-        .select(col("doc_id"), graft.sampling.Mix.keyCol(col("doc_id")).as("k"),
-          col("source"), col("text"))
-      // the benchmark shingle set is small BY DEFINITION, and the exact
-      // verify join below broadcasts every distinct shingle anyway — so
-      // collect the distinct set ONCE (one job), fold the Bloom from it
-      // on the driver, and reuse the same array as the verify join's
-      // build side. The former per-partition-partials fold evaluated
-      // the bench subtree (shingle kernel + distinct shuffle) twice:
-      // once for the Bloom partials, once again inside the broadcast
-      // build of the verify join. Driver traffic is unchanged — the
-      // broadcast already shipped the full distinct set; identical
-      // Bloom bits (same add() calls), identical verdicts.
-      val benchSh: Array[String] = raw.filter(col("k") < thr)
-        .as[(Long, String, String, String)]
-        .flatMap { case (_, _, _, text) =>
-          graft.text.Analyzer.wordShingles(text, k = 5)
-        }
-        .distinct().collect()
-      val bloom = {
-        val w = new Array[Long](graft.text.Bloom.WordCount)
-        benchSh.foreach(graft.text.Bloom.add(w, _))
-        w
-      }
-      val bloomBc = s.sparkContext.broadcast(bloom)
-      val probes = raw.filter(col("k") >= thr).as[(Long, String, String, String)]
-        .mapPartitions { it =>
-          val w = bloomBc.value
-          it.flatMap { case (_, _, src, text) =>
-            graft.text.Analyzer.wordShingles(text, k = 5).iterator.map { sh =>
-              val hit = graft.text.Bloom.contains(w, sh)
-              (src, if (hit) sh else null, if (hit) 1L else 0L)
-            }
-          }
-        }
-        .toDF("source", "sh", "hit")
-      // ONE probe pass feeds every output column: a broadcast LEFT
-      // join against the distinct benchmark set marks the true hits
-      // (hit=0 rows carry a null sh, which matches nothing) and one
-      // per-source aggregate folds probes / bloom hits / true hits
-      // together — the former two-branch shape (counts + verify join)
-      // re-ran the probe kernel once per branch and needed a third
-      // join to merge the per-source results.
-      probes
-        .join(broadcast(benchSh.toSeq.toDF("sh").withColumn("m", lit(1L))),
-          Seq("sh"), "left")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_probes"), sum(col("hit")).as("n_bloom_hits"),
-          sum(coalesce(col("m"), lit(0L))).as("n_true_hits"))
-        .select(col("source"), col("n_probes"), col("n_bloom_hits"),
-          col("n_true_hits"),
-          (col("n_bloom_hits") - col("n_true_hits")).as("n_false_pos"))
-        .orderBy(col("source"))
-    }),
-
-    // Deterministic epoch upsampling to per-source mixture weights —
-    // the "epochs per source" step of a training run (low-resource
-    // sources repeat >1 epoch, oversampled ones keep a fraction).
-    // Weights derive from the source index: w = 0.25 + (n % 5) * 0.5
-    // epochs, i.e. w4 = quarter-epochs in {1,3,5,7,9}. Each doc gets
-    // w4 DIV 4 full copies plus one more iff its 32-bit mix key falls
-    // below (w4 % 4) * 2^30 — a pure integer comparison: deterministic,
-    // monotone in w (raising a weight only ADDS copies), and
-    // partitioning-independent. Copies then land in 8 training shards
-    // by a per-copy hash so every shard gets an unbiased mixture
-    // slice. Built-ins end to end (md5/conv/sequence/explode, all
-    // codegen'd), map-only until the final per-(source, shard) agg.
-    "q62_epoch_upsample" -> ((s, dir) => {
-      val key32 = conv(substring(md5(concat(col("doc_id").cast("string"),
-        lit(":"), col("source"))), 1, 8), 16, 10).cast("long")
-      val shardKey = conv(substring(md5(concat(col("doc_id").cast("string"),
-        lit(":"), col("copy").cast("string"))), 1, 8), 16, 10).cast("long")
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .withColumn("w4",
-          lit(1L) + (substring(col("source"), 4, 10).cast("long") % 5) * 2)
-        .withColumn("n_copies", expr("w4 DIV 4") +
-          when(key32 < (col("w4") % 4) * lit(1073741824L), 1L).otherwise(0L))
-        .withColumn("copy", explode(
-          when(col("n_copies") >= 1, sequence(lit(1L), col("n_copies")))
-            .otherwise(array().cast("array<bigint>"))))
-        .withColumn("shard", shardKey % 8)
-        .groupBy(col("source"), col("shard"))
-        .agg(count(lit(1)).as("n_copies"), sum(col("n_chars")).as("n_tokens"))
-        .orderBy(col("source"), col("shard"))
-    }),
-
-    // projection-aware decode: ids/lengths/sources read from an at-rest
-    // chunks table WITHOUT touching the token payload — the scan prunes
-    // tokens_enc (parquet column pruning) and the kernel skips token
-    // decode (Decoder.decodeDocIndex). Oracle recomputes the same
-    // per-source stats from the raw documents.
-    "q27_decode_meta_only" -> ((s, dir) => {
-      val tmp = chunksDirFor(s, dir, tokensPerChunk = 16384)
-      graft.engine.Pipeline.readDocIndex(s, tmp)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tok_sum"))
-        .orderBy(col("source"))
-    }),
-
-    // distinct-values-without-scan: per-chunk exact token cardinality
-    // from chunk metadata (single chunk per source here), the
-    // dictionary-page-only distinct trick
-    // (reference: search/materialize.go:358-380) — the oracle recomputes
-    // count(DISTINCT codepoint) per source the hard way.
-    // Cap: Selector.exactDistinct tracks at most 2^16 distinct values
-    // and returns the -1 sentinel above that; the sentinel is surfaced
-    // as NULL ("unknown — decode the payload"), never as a fake count.
-    // 2^30 is the largest accepted target (chunk token streams are
-    // Int-indexed arrays) and still yields one chunk per source at
-    // every test SF — the single-chunk-per-source demo shape
-    "q28_distinct_from_metadata" -> ((s, dir) => {
-      chunksFor(s, dir, tokensPerChunk = 1L << 30)
-        .toDF()
-        .select(col("part_source").as("source"),
-          when(col("token_cardinality") >= 0, col("token_cardinality").cast("long"))
-            .as("n_distinct_tokens"))
-        .orderBy(col("source"))
-    }),
-
-    // O6 admission control as a queryable report: per-source decode cost
-    // pre-flighted from chunk METADATA only (n_rows/n_tokens columns;
-    // the payload is pruned from the scan), with the admission verdict
-    // computed in exact integer math (admitted = at-or-below the
-    // all-sources mean token cost) — the reference's row-count/bytes
-    // quotas (reference: search/limits.go:45-74, checks
-    // search/materialize.go:939-957) surfaced as data. The refusal path
-    // itself (Admission.decodeAdmitted throwing ResourceExhausted before
-    // any payload decode) is exercised in QuotaSpec.
-    "q39_admission_report" -> ((s, dir) => {
-      val per = chunksFor(s, dir, tokensPerChunk = 16384)
-        .toDF()
-        .groupBy(col("part_source"))
-        .agg(sum(col("n_rows")).cast("long").as("planned_rows"),
-          sum(col("n_tokens")).cast("long").as("planned_tokens"))
-      // global mean via a broadcast single-row aggregate, not a
-      // partitionBy(lit(1)) window: same integer math, and the plan
-      // stays shuffle-free past the groupBy even if the source count
-      // ever grew beyond trivial
-      val tot = per.agg(count(lit(1)).as("n_src"),
-        sum(col("planned_tokens")).as("tot_tokens"))
-      per.crossJoin(broadcast(tot))
-        .withColumn("admitted",
-          col("planned_tokens") * col("n_src") <= col("tot_tokens"))
-        .select(col("part_source").as("source"),
-          col("planned_rows"), col("planned_tokens"), col("admitted"))
-        .orderBy(col("source"))
-    }),
-
-    // F3 on the VALUE column: token-membership search through the
-    // constraint skip ladder — (1) chunk min_token/max_token bounds as
-    // plain metadata columns (Catalyst filter, and parquet row-group
-    // stats prune the scan at rest), (2) dictionary-header binary
-    // search for dict-coded chunks (O(log distinct), no payload
-    // decode), (3) full decode only for surviving chunks — the
-    // reference's Equal-constraint ladder (bloom -> page min/max ->
-    // dictionary -> read; reference: search/constraint.go:343-463)
-    // re-expressed at chunk grain. Oracle recomputes per-doc occurrence
-    // counts of the probe character from raw text.
-    "q45_token_search" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val probe = 'q'.toInt // codepoint 113 — rare (~0.5% of tokens)
-      chunksFor(s, dir, tokensPerChunk = 16384)
-        .filter(col("min_token") <= probe && col("max_token") >= probe)
-        .flatMap { c =>
-          if (!Decoder.chunkMayContainToken(c, probe)) Iterator.empty
-          else Decoder.decodeChunk(c).flatMap { r =>
-            var hits = 0L
-            r.tokens.foreach(v => if (v == probe) hits += 1)
-            if (hits > 0) Iterator.single((r.doc_id.toLong, hits)) else Iterator.empty
-          }
-        }
-        .toDF("doc_id", "n_hits")
-        .orderBy(col("doc_id"))
-    }),
-
-    // sequence-packing PLAN (training-data step: variable-length docs →
-    // fixed-budget examples): deterministic start-offset packing, one
-    // window cumsum partitioned by source — metadata only, the token
-    // payload never enters the plan (see engine/Packer.scala for the
-    // never-split / overflow-by-one-doc discipline and the scale shape)
-    "q46_pack_plan" -> ((s, dir) => {
-      graft.engine.Packer.plan(tokenTable(s, dir), binTokens = 2048)
-        .groupBy(col("source"), col("bin"))
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          sum(col("n_tok").cast("long")).as("bin_tokens"))
-        .orderBy(col("source"), col("bin"))
-    }),
-
-    // packed-example MATERIALIZATION: per (source, bin) concatenated
-    // token arrays with doc boundaries — payload shuffled once to its
-    // bin reducer (repartition + sortWithinPartitions + streaming
-    // group-consecutive, the Encoder's discipline). tok_sum makes the
-    // concatenation content (not just its shape) oracle-checkable.
-    "q47_pack_examples" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      graft.engine.Packer.pack(tokenTable(s, dir), binTokens = 2048)
-        .map(p => (p.source, p.bin, p.n_docs.toLong, p.n_tok.toLong,
-          p.tokens.foldLeft(0L)(_ + _)))
-        .toDF("source", "bin", "n_docs", "n_tok", "tok_sum")
-        .orderBy(col("source"), col("bin"))
-    }),
-
-    // training-data MIXING: deterministic per-source sampling via a
-    // content-hash threshold (sampling/Mix.scala — md5-hex key compared
-    // lexicographically, portable to the DuckDB oracle verbatim). The
-    // mix spec derives each source's keep-fraction from its numeric
-    // suffix ((id % 4 + 1)/4 → 0.25/0.50/0.75/1.00) so both sides
-    // compute it without a lookup table. Map-only + one partial-agg
-    // groupBy; membership is independent of partitioning and cluster
-    // size, and raising a weight only ADDS documents (Mix monotonicity).
-    "q48_source_mix_sample" -> ((s, dir) => {
-      val thr = element_at(
-        typedLit(Seq("40000000", "80000000", "c0000000", "g")),
-        (expr("CAST(substring(source, 4) AS INT)") % 4 + 1).cast("int"))
-      t(s, dir, "documents")
-        .filter(graft.sampling.Mix.sampled(col("doc_id"), thr))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_sampled"), sum(col("n_chars")).as("chars_sampled"))
-        .orderBy(col("source"))
-    }),
-
-    // train/val/test SPLIT assignment over the same hash key space
-    // (87.5 / 6.25 / 6.25): disjoint, exhaustive, split-stable — a doc
-    // never migrates when other sources' weights change. Per
-    // (source, split) doc and char counts.
-    "q49_split_assign" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .withColumn("split", graft.sampling.Mix.splitCol(col("doc_id"),
-          boundaries = Seq(0.875, 0.9375), labels = Seq("train", "val", "test")))
-        .groupBy(col("source"), col("split"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars_sum"))
-        .orderBy(col("source"), col("split"))
-    }),
-
-    // test-set DECONTAMINATION: flag training docs sharing any 5-word
-    // shingle with a held-out benchmark set (here: the Mix 2% key slice
-    // — in production the benchmark suite itself). Scale shape: the
-    // benchmark index is small BY DEFINITION, so its shingle set
-    // broadcasts and the 100 TB training side never shuffles except the
-    // final per-doc count. Shingles are fingerprinted to 64-bit longs
-    // in the typed kernel (Analyzer.wordShingleHash64 — 8 B/shingle
-    // regardless of text length bounds the broadcast and keeps the
-    // explode/join/countDistinct on longs). The hash never reaches the
-    // output — only the shared-shingle COUNT does — and the DuckDB
-    // oracle counts exact raw-string shingles, so an oracle pass
-    // doubles as a collision check at test scale (P ~ n^2/2^65).
-    // 5-gram width keeps common-phrase overlap out of the flags
-    // (3-grams flag 347 docs at sf0.01, 5-grams the 4 true overlaps).
-    "q50_decontaminate" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val thr = graft.sampling.Mix.thresholdHex(0.02)
-      // the Mix key is computed BEFORE the shingle kernel so each
-      // side's filter prunes at the scan (a typed map is opaque to
-      // Catalyst — a post-map filter could not push below it) and the
-      // corpus is shingled exactly once across the two branches
-      val raw = t(s, dir, "documents")
-        .select(col("doc_id"), graft.sampling.Mix.keyCol(col("doc_id")).as("k"),
-          col("text"))
-      def shingled(df: DataFrame) = df.as[(Long, String, String)]
-        .map { case (id, _, text) =>
-          (id, graft.text.Analyzer.wordShingleHash64(text, k = 5))
-        }
-        .toDF("doc_id", "sh")
-      val benchSh = shingled(raw.filter(col("k") < thr))
-        .select(explode(col("sh")).as("sh")).distinct()
-      shingled(raw.filter(col("k") >= thr))
-        .select(col("doc_id"), explode(col("sh")).as("sh"))
-        .join(broadcast(benchSh), "sh")
-        .groupBy(col("doc_id"))
-        .agg(countDistinct(col("sh")).as("n_shared_shingles"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // COMPACTION: two overlapping encoded tables (slices of the src0/
-    // src1 token table) fold into one deduplicated table via
-    // Pipeline.compact (the reference's multi-block merge with
-    // duplicate-series dedup, convert_test.go:641-759). The oracle
-    // checks the dedup-union: every doc of the two sources exactly
-    // once, with its full token count — an overlap doc appearing twice
-    // or dropped breaks both counts.
-    "q52_compact_merge" -> ((s, dir) => {
-      // the two overlapping INPUT tables are deterministic per corpus
-      // and memoized at rest per session (q52InputsFor): a real
-      // compaction reads tables that already exist — only the
-      // compact itself (decode + dedup + re-encode into a fresh
-      // target) is the operation under measurement
-      val (dirA, dirB) = q52InputsFor(s, dir)
-      val out = s"${java.nio.file.Files.createTempDirectory(scratchRoot, "q52out")}/out"
-      q52LastOut.put(dir, out).foreach(prev =>
-        graft.engine.Verifier.rmTree(new java.io.File(prev).getParent))
-      graft.engine.Pipeline.compact(s, Seq(dirA, dirB), out, tokensPerChunk = 262144, waves = 1)
-      // readback aggregate over the compacted table's doc index — the
-      // same projection-aware metadata read q27 demonstrates (ids /
-      // lengths / sources decode; the token payload is neither read
-      // nor decoded): per-doc rows and n_tok are exactly what the
-      // oracle's dedup-union counts check, and at 100 TB the readback
-      // becomes metadata-priced instead of a full second decode of the
-      // corpus just written
-      graft.engine.Pipeline.readDocIndex(s, out)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok").cast("long")).as("n_tokens"))
-        .orderBy(col("source"))
-    }),
-
-    // float-COLUMN encode round-trip over the embeddings table: vectors
-    // batch per partition into ~64k-float chunks, encode with the
-    // zstd-aware float codec (codec/FloatCodec.scala — BYTE_STREAM_SPLIT
-    // planes vs plain), decode, and verify BIT-identical in the kernel
-    // (floatToRawIntBits — NaN payloads and signed zeros included). Any
-    // mismatch lands in n_mismatch and fails the oracle's structural 0;
-    // the engine's per-row invariant extended to float payloads.
-    "q51_embed_roundtrip" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      t(s, dir, "embeddings")
-        .select(col("vec_id").cast("long"), col("embedding"))
-        .as[(Long, Array[Float])]
-        .mapPartitions { it =>
-          var nVecs = 0L; var nFloats = 0L; var mism = 0L
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Float]
-          def flush(): Unit = if (buf.nonEmpty) {
-            val a = buf.toArray
-            val (_, enc) = graft.codec.FloatCodec.encodeAutoZstdAware(a)
-            val dec = graft.codec.FloatCodec.decode(enc)
-            if (dec.length != a.length) mism += 1
-            else {
-              var i = 0
-              while (i < a.length) {
-                if (java.lang.Float.floatToRawIntBits(dec(i)) !=
-                    java.lang.Float.floatToRawIntBits(a(i))) mism += 1
-                i += 1
-              }
-            }
-            nFloats += a.length
-            buf.clear()
-          }
-          it.foreach { case (_, v) =>
-            nVecs += 1; buf ++= v
-            if (buf.length >= 64 * 1024) flush()
-          }
-          flush()
-          Iterator.single((nVecs, nFloats, mism))
-        }
-        .toDF("n_vecs", "n_floats", "n_mismatch")
-        .agg(sum("n_vecs").as("n_vecs"), sum("n_floats").as("n_floats"),
-          sum("n_mismatch").as("n_mismatch"))
-    }),
-
-    // ANN exact-oracle variant of q30: embeddings quantized to integer
-    // milli-units (round(x*1000) — exact, engine-portable longs), probe
-    // top-5 ranked by INTEGER dot product with vec_id tiebreak. Every
-    // value is a long, so the ranking (and the DuckDB oracle hash) is
-    // deterministic — this gives the similarity-search path a value-
-    // exact correctness gate that q30's float cosine cannot have.
-    // Scale shape is identical to q30: probes broadcast, corpus never
-    // shuffled, one codegen'd map + per-probe top-k.
-    "q40_ann_dot_topk" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val quant = expr("transform(embedding, x -> bigint(round(double(x) * 1000D)))")
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id").cast("long").as("vec_id"), quant.as("ce"))
-      val probes = e.filter(col("vec_id") < 3)
-        .select(col("vec_id").as("qid"), col("ce").as("qe"))
-      val dot = expr("aggregate(zip_with(ce, qe, (x, y) -> x * y), 0L, (acc, x) -> acc + x)")
-      val w = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("vec_id"))
-      e.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("dot", dot)
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("qid"), col("rank"), col("vec_id"), col("dot"))
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // Embedding near-dup with a value-exact oracle: deterministic
-    // sign-bit LSH (band b = the 8 sign bits of quantized coords
-    // 8b+1..8b+8 — hyperplane LSH with axis-aligned planes) generates
-    // candidates via a band self-join that ships ONLY (vec_id, band,
-    // sig); the verify stage re-attaches vectors by id and keeps pairs
-    // with integer cosine >= 0.40 via cross-multiplication:
-    // dot > 0 && 25*dot^2 >= 4*na2*nb2 — no sqrt, no floats, so the
-    // whole pipeline (candidates AND verdicts) hash-matches DuckDB.
-    // Widths are FIXED (4 bands x 8 bits) for oracle determinism; the
-    // corpus-size-adaptive widths (Lsh.bitsPerBandFor) remain the scale
-    // path and are exercised by q37. Long bounds: |quantized| <= ~526,
-    // dim 64 -> dot <= 1.8e7, 25*dot^2 <= 7.8e15 << 2^63.
-    "q41_embed_neardup_exact" -> ((s, dir) => {
-      val quant = expr("transform(embedding, x -> bigint(round(double(x) * 1000D)))")
-      val base = spread(s, t(s, dir, "embeddings"))
-        .select(col("vec_id").cast("long").as("vec_id"), quant.as("ce"))
-      val sigs = expr(
-        """transform(sequence(0, 3), b ->
-          |  aggregate(sequence(1, 8), 0L, (acc, i) ->
-          |    acc + IF(element_at(ce, int(b * 8 + i)) > 0L,
-          |             shiftleft(1L, int(i - 1)), 0L)))""".stripMargin)
-      val banded = base.select(col("vec_id"), posexplode(sigs).as(Seq("band", "sig")))
-      val cand = banded.select(col("band"), col("sig"), col("vec_id").as("a"))
-        .join(banded.select(col("band"), col("sig"), col("vec_id").as("b")),
-          Seq("band", "sig"))
-        .filter(col("a") < col("b"))
-        .select(col("a"), col("b"))
-        .dropDuplicates("a", "b")
-      val n2 = expr("aggregate(ce, 0L, (acc, x) -> acc + x * x)")
-      val vecs = base.select(col("vec_id"), col("ce"), n2.as("n2"))
-      val dot = expr("aggregate(zip_with(cea, ceb, (x, y) -> x * y), 0L, (acc, x) -> acc + x)")
-      cand
-        .join(vecs.select(col("vec_id").as("a"), col("ce").as("cea"), col("n2").as("na2")), Seq("a"))
-        .join(vecs.select(col("vec_id").as("b"), col("ce").as("ceb"), col("n2").as("nb2")), Seq("b"))
-        .withColumn("dot", dot)
-        .filter(col("dot") > 0 &&
-          lit(25) * col("dot") * col("dot") >= lit(4) * col("na2") * col("nb2"))
-        .select(col("a"), col("b"), col("dot"), col("na2"), col("nb2"))
-        .orderBy(col("a"), col("b"))
-    }),
-
-    // ANN scale path #2: IVF (inverted-file) — the coarse-quantizer
-    // family alongside the LSH family (q34/q37). Centroids are the
-    // first 16 corpus vectors (deterministic stand-in for trained
-    // k-means — the index structure, not the training loop, is what
-    // the engine owes); every vector is assigned to its nearest
-    // centroid by integer squared-L2 with cent_id tiebreak, each probe
-    // searches only its nProbe=2 nearest centroid cells, top-5 by
-    // integer dot. All math is on milli-quantized longs, so the whole
-    // index build AND search are value-exact against the DuckDB
-    // oracle.
-    //
-    // Scale shape (10^9 vectors, k ~ sqrt(n) centroids): the centroid
-    // table is collapsed to ONE array row and broadcast, so assignment
-    // is a map-only pass over the corpus — zero shuffles, no explode,
-    // no per-centroid row blowup (the argmin runs INSIDE one row via
-    // array_sort over k (d2, cid) structs, O(k·dim) per vector like
-    // any IVF build). Probe cells are broadcast; only the ~nProbe/k
-    // fraction of the corpus that lands in probed cells reaches the
-    // per-probe top-k window. Long bounds: coord diff <= ~2.1e3
-    // squared 4.4e6, x64 dims -> d2 <= 2.9e8; dot <= 1.8e7.
-    "q42_ann_ivf" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val quant = expr("transform(embedding, x -> bigint(round(double(x) * 1000D)))")
-      val base = t(s, dir, "embeddings")
-        .select(col("vec_id").cast("long").as("vec_id"), quant.as("ce"))
-      val cents = base.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cent_id"), col("ce").as("cc"))
-        .agg(collect_list(struct(col("cent_id"), col("cc"))).as("cents"))
-      def cellsOf(vec: String, take: Int) = expr(
-        s"""transform(slice(array_sort(transform(cents, c -> named_struct(
-           |  'd2', aggregate(zip_with($vec, c.cc, (x, y) -> (x - y) * (x - y)),
-           |                  0L, (acc, v) -> acc + v),
-           |  'cid', c.cent_id))), 1, $take), s -> s.cid)""".stripMargin)
-      // assignment (argmin over k centroids per corpus row — the
-      // interpreted-lambda hot spot) runs on the spread corpus; the
-      // centroid/probe subtrees keep their pushed vec_id scans
-      val assigned = spread(s, t(s, dir, "embeddings"))
-        .select(col("vec_id").cast("long").as("vec_id"), quant.as("ce"))
-        .crossJoin(broadcast(cents))
-        .withColumn("cent_id", cellsOf("ce", 1).getItem(0))
-        .select(col("vec_id"), col("ce"), col("cent_id"))
-      val probeCells = base.filter(col("vec_id") < 3).crossJoin(broadcast(cents))
-        .select(col("vec_id").as("qid"), col("ce").as("qe"),
-          explode(cellsOf("ce", 2)).as("cent_id"))
-      val dot = expr("aggregate(zip_with(ce, qe, (x, y) -> x * y), 0L, (acc, x) -> acc + x)")
-      val w = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("vec_id"))
-      assigned.join(broadcast(probeCells), Seq("cent_id"))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("dot", dot)
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("qid"), col("rank"), col("vec_id"), col("cent_id"), col("dot"))
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // multimodal frame-sampling pipeline: metadata-only stride
-    // selection (Media.sampleIndices) -> seekable subset decode
-    // (decodeFrameSubset touches ONLY the selected frames' byte
-    // ranges) -> 2x box-filter resize per frame. The oracle checks the
-    // full geometry chain — frame boundaries, sampled byte counts, and
-    // resized plane sizes — in pure integer SQL; the per-byte resize
-    // CONTENT is pinned by MediaSpec unit tests (DuckDB can't index
-    // into blobs cheaply, and the content math is deterministic
-    // integer means). At 100 TB this shape is the point: sampling
-    // decisions come from metadata before any payload byte is read, so
-    // a stride-s pass decodes ~1/s of the corpus bytes.
-    "q43_media_frame_sample" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      import graft.multimodal.Media
-      Media.fromDocuments(t(s, dir, "documents"))
-        .mapPartitions { rows =>
-          rows.map { r =>
-            val idx = Media.sampleIndices(r.n_frames, 2)
-            val frames = Media.MediaDecoder.Stub.decodeFrameSubset(r, idx)
-            val resized = frames.map(f => Media.resizePlane(f, r.width, 2))
-            (r.doc_id, r.n_frames.toLong, idx.length.toLong,
-              frames.map(_.length.toLong).sum,
-              resized.map(_.length.toLong).sum)
-          }
-        }
-        .toDF("doc_id", "n_frames", "n_sampled", "sampled_bytes", "resized_bytes")
-        .orderBy(col("doc_id"))
-    }),
-
-    // event-time tumbling windows via Spark's window() primitive — the
-    // same windowing streaming.StreamOps.windowedTokenStats uses with a
-    // watermark, applied batch so DuckDB's time_bucket can oracle it
-    // (both align 6h buckets to midnight). Sums are integer cents
-    // (representation-proof, see q02); window start is formatted to a
-    // string so the compare never depends on timestamp encoding.
-    "q44_event_time_windows" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(round(col("value") * 100).cast("long")).as("sum_value_cents"))
-        .select(
-          date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-          col("event_type"), col("n_events"), col("sum_value_cents"))
-        .orderBy(col("window_start"), col("event_type"))
-    }),
-
-    // near-dup PAIRS -> dedup DECISION: connected components over the
-    // q38 pair graph (iterative min-label propagation — see
-    // similarity/Components.scala for the scale argument), each doc
-    // labeled with its cluster's min doc_id; keeper = the canonical
-    // representative. The oracle reproduces the fixpoint with a DuckDB
-    // recursive-CTE transitive closure over the identical pair set —
-    // exact, because the min-id-per-component fixpoint is independent
-    // of iteration order and partitioning.
-    "q64_neardup_clusters" -> ((s, dir) => {
-      neardupComponentsFor(s, dir)
-        .select(col("id").as("doc_id"), col("lbl").as("cluster_id"),
-          (col("id") === col("lbl")).as("keeper"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // dedup APPLIED: drop every non-canonical near-dup cluster member
-    // and report the surviving corpus per source. The anti-join's
-    // build side is the loser set (~dup count, tiny vs corpus), so at
-    // 10^9 docs this is one broadcast anti-join over the corpus scan —
-    // the corpus itself is never shuffled.
-    "q65_dedup_apply" -> ((s, dir) => {
-      val losers = neardupComponentsFor(s, dir)
-        .filter(col("id") =!= col("lbl"))
-        .select(col("id").as("doc_id"))
-      t(s, dir, "documents")
-        .join(broadcast(losers), Seq("doc_id"), "left_anti")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars_sum"))
-        .orderBy(col("source"))
-    }),
-
-    // EXACT distributed quantiles (p50/p90/p99 of n_chars per source)
-    // via the histogram-cumsum formulation: groupBy (source, value)
-    // compresses the corpus to its value histogram FIRST (map-side
-    // partial aggregation — the only full-data shuffle), then the
-    // ordered cumulative sum runs over histogram rows only. A naive
-    // row_number() window over raw rows would sort each source's
-    // entire 10^11-row slice inside max-#sources tasks; here the
-    // window input is |distinct values| rows per source (bounded by
-    // the value domain, not the corpus). Rank arithmetic is pure
-    // integer (ceil(q*n) = (q_num*n + q_den-1) DIV q_den), so the
-    // oracle hash-matches with no float quantile semantics involved.
-    "q66_exact_quantiles" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val hist = t(s, dir, "documents")
-        .groupBy(col("source"), col("n_chars"))
-        .agg(count(lit(1)).as("c"))
-      val cum = hist
-        .withColumn("cum", sum(col("c")).over(
-          Window.partitionBy(col("source")).orderBy(col("n_chars"))))
-        .withColumn("cnt", sum(col("c")).over(
-          Window.partitionBy(col("source"))))
-      cum.groupBy(col("source"))
-        .agg(max(col("cnt")).as("n_docs"),
-          min(when(col("cum") >= expr("(cnt + 1) DIV 2"), col("n_chars"))).as("p50"),
-          min(when(col("cum") >= expr("(cnt * 9 + 9) DIV 10"), col("n_chars"))).as("p90"),
-          min(when(col("cum") >= expr("(cnt * 99 + 99) DIV 100"), col("n_chars"))).as("p99"))
-        .orderBy(col("source"))
-    }),
-
-    // duplicate-PASSAGE detection (8-gram grain, the RefinedWeb /
-    // "Deduplicating Training Data Makes Language Models Better"
-    // (Lee et al. 2022) substring-dedup signal at word-shingle
-    // resolution): per-doc distinct 8-gram fingerprints, grams shared
-    // by >= 2 docs flagged, per-source exposure reported. Fingerprints
-    // are 64-bit (8 B/gram through the shuffle, q50's argument); the
-    // oracle recomputes on raw strings, doubling as the collision
-    // check. Scale: the (doc, fp) stream shuffles ONCE (groupBy fp,
-    // map-side combinable since per-doc fps are pre-deduped); the
-    // dup-fp set — tiny by Zipf — joins back fp-clustered (no second
-    // full shuffle under AQE); the final per-source distinct counts
-    // run over dup hits only, not the corpus.
-    "q67_dup_passages" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val grams = spread(s, t(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("text"))).as[(Long, String, String)]
-        .flatMap { case (id, src, text) =>
-          graft.text.Analyzer.wordShingleHash64(text, k = 8).iterator.map(fp => (id, src, fp))
-        }
-        .toDF("doc_id", "source", "fp")
-      // per-doc fps are distinct by construction, so count(*) per fp
-      // IS the distinct-doc count — no countDistinct expand needed here
-      val dup = grams.groupBy(col("fp"))
-        .agg(count(lit(1)).as("ndocs"))
-        .filter(col("ndocs") >= 2)
-        .select(col("fp"))
-      grams.join(dup, Seq("fp"))
-        .groupBy(col("source"))
-        .agg(countDistinct(col("doc_id")).as("n_docs_with_dup"),
-          count(lit(1)).as("n_dup_gram_hits"),
-          countDistinct(col("fp")).as("n_dup_grams"))
-        .orderBy(col("source"))
-    }),
-
-    // cross-source duplicate-overlap MATRIX — the provenance view of
-    // q67's passage-level duplication: for every source pair, how many
-    // distinct 8-gram passages they share (mirror-site detection, the
-    // "which dumps copy from which" question asked before weighting a
-    // training mix). Same 64-bit gram kernel as q67; ONE shuffle on fp
-    // folds each gram's source set (collect_set is bounded by
-    // |sources| — a mix has tens of sources, never corpus-many, so
-    // unlike a doc-level collect this cannot skew), and the pair
-    // explosion is quadratic only in that bounded per-gram source
-    // count. The former self-join formulation evaluated the gram
-    // kernel + distinct subtree once per join side and shuffled the
-    // distinct set twice more on fp.
-    "q69_source_overlap" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val bySrc = t(s, dir, "documents")
-        .select(col("source"), col("text")).as[(String, String)]
-        .flatMap { case (src, text) =>
-          graft.text.Analyzer.wordShingleHash64(text, k = 8).iterator.map(fp => (src, fp))
-        }
-        .toDF("source", "fp")
-      bySrc.groupBy(col("fp"))
-        .agg(collect_set(col("source")).as("ss"))
-        .filter(size(col("ss")) > 1)
-        .select(explode(col("ss")).as("src_a"), col("ss"))
-        .select(col("src_a"), explode(col("ss")).as("src_b"))
-        .filter(col("src_a") < col("src_b"))
-        .groupBy(col("src_a"), col("src_b"))
-        .agg(count(lit(1)).as("n_shared_grams"))
-        .orderBy(col("src_a"), col("src_b"))
-    }),
-
-    // C4/Gopher-style quality-filter FUNNEL (sequential rules with
-    // per-stage rejection accounting — the observability surface every
-    // production cleaning pipeline needs): min-words -> language ->
-    // repetition (q54's integer rule) -> stopword marker. One typed
-    // map assigns each doc its first-failing-rule stage (0 = survivor);
-    // everything after is a 5-group aggregate plus window arithmetic
-    // over FOUR rows. All rules integer/string-exact, so the funnel is
-    // hash-checkable end to end.
-    "q68_filter_funnel" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val staged = t(s, dir, "documents")
-        .select(col("lang"), col("text")).as[(String, String)]
-        .map { case (lang, text) =>
-          val st = graft.text.Analyzer.repetitionStats(text)
-          // thresholds tuned so every stage fires on the synthetic
-          // corpus (Gopher's 0.2 repetition bar rejects nothing here;
-          // 0.1 = integer 10*max >= n rejects a measurable slice)
-          val repetitive = st.n2grams > 0 && st.max2gramCount * 10 >= st.n2grams
-          if (st.nWords < 16) 1L
-          else if (lang != "en" && lang != "de") 2L
-          else if (repetitive) 3L
-          else if (!text.contains(" the ")) 4L
-          else 0L
-        }.toDF("stage")
-      val counts = staged.groupBy(col("stage")).agg(count(lit(1)).as("n"))
-      val dim = Seq((1L, "min_words"), (2L, "lang"), (3L, "repetition"),
-        (4L, "stopword")).toDF("stage", "rule")
-      val total = counts.agg(sum(col("n")).as("total"))
-      // single-partition window is fine: it runs over exactly 4 rows
-      val w = Window.orderBy(col("stage")).rowsBetween(Window.unboundedPreceding, -1)
-      dim.join(counts, Seq("stage"), "left")
-        .withColumn("n_rejected", coalesce(col("n"), lit(0L)))
-        .crossJoin(broadcast(total))
-        .withColumn("prev_rej", coalesce(sum(col("n_rejected")).over(w), lit(0L)))
-        .select(col("stage"), col("rule"),
-          (col("total") - col("prev_rej")).as("n_in"),
-          col("n_rejected"),
-          (col("total") - col("prev_rej") - col("n_rejected")).as("n_out"))
-        .orderBy(col("stage"))
-    }),
-
-    // inverted-index build — the canonical corpus→posting-list shape
-    // (token → document frequency, collection frequency, doc-id range;
-    // the reference's dictionary-page distinct, schema/encoder.go dict
-    // path, answers the df=0/df>0 half of this). One typed flatMap
-    // emits (token, doc_id, tf) with the per-doc tf pre-counted INSIDE
-    // the row, so the shuffle carries one record per (doc,
-    // distinct-token) — bounded by per-doc vocabulary, never per token
-    // occurrence — then a single partial-agg groupBy(token) folds
-    // df/tf/doc-range. At 100 TB this is the MapReduce index-build
-    // shape; range-partition by token to write bucketed posting
-    // shards. Output projected to the a–z codepoints so the DuckDB
-    // oracle recomputes tf with integer length/replace math.
-    "q70_inverted_index" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      tokenTable(s, dir)
-        .flatMap { r =>
-          val m = scala.collection.mutable.LongMap.empty[Long]
-          r.tokens.foreach { tk => val k = tk.toLong; m(k) = m.getOrElse(k, 0L) + 1L }
-          val id = r.doc_id.toLong
-          m.iterator.map { case (tk, tf) => (tk.toInt, id, tf) }
-        }
-        .toDF("token", "doc_id", "tf")
-        .groupBy(col("token"))
-        .agg(count(lit(1)).as("df"), sum(col("tf")).as("tf_total"),
-          min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
-        // demo projection: the oracle-recomputable a-z slice; the index
-        // itself is built over the full vocabulary above
-        .filter(col("token").between(97, 122))
-        .orderBy(col("token"))
-    }),
-
-    // conjunctive token search over the ENCODED chunks — q45's
-    // Equal-skip-ladder generalized to an AND of probes: a chunk is
-    // decoded only when EVERY probe survives (1) the chunk min/max
-    // stats rung and (2) the dictionary-membership rung
-    // (chunkMayContainToken, O(log distinct) each, zero payload
-    // decode); survivors decode once and per-doc presence of all
-    // probes resolves in a single pass with a bitmask. The reference
-    // composes per-constraint row ranges by intersection
-    // (search/constraint.go:343-463, search/rowrange.go intersect);
-    // here the intersection happens at chunk grain BEFORE any decode,
-    // so the work scales with the rarest probe's posting chunks.
-    "q71_conjunctive_search" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val probes = Array('q'.toInt, 'j'.toInt, 'k'.toInt) // rare codepoints
-      var ch = chunksFor(s, dir, tokensPerChunk = 16384)
-      probes.foreach { p =>
-        ch = ch.filter(col("min_token") <= p && col("max_token") >= p)
-      }
-      val full = (1 << probes.length) - 1
-      ch.flatMap { c =>
-          if (!probes.forall(p => Decoder.chunkMayContainToken(c, p))) Iterator.empty
-          else Decoder.decodeChunk(c).flatMap { r =>
-            var mask = 0
-            r.tokens.foreach { v =>
-              var i = 0
-              while (i < probes.length) {
-                if (v == probes(i)) mask |= 1 << i
-                i += 1
-              }
-            }
-            if (mask == full) Iterator.single((r.doc_id.toLong, r.n_tok.toLong))
-            else Iterator.empty
-          }
-        }
-        .toDF("doc_id", "n_tok")
-        .orderBy(col("doc_id"))
-    }),
-
-    // dataset-version diff — the Iceberg-snapshot question ("what
-    // changed between table version 1 and 2?") answered at doc grain
-    // from content fingerprints, the same view the engine's lineage
-    // table gives per chunk (north rule: resumable, versioned encodes).
-    // v2 is DERIVED deterministically from v1 inside the query (docs
-    // ≡5 mod 7 edited, ≡3 mod 7 removed, clones of ≡4 mod 7 added
-    // under shifted ids) so the oracle can rebuild the identical pair.
-    // Both join inputs project to (doc_id, source, fp=md5) BEFORE the
-    // full-outer join, so at 100 TB the shuffle moves 48-byte
-    // fingerprint rows, never payloads — snapshot diff over a 10^12-doc
-    // corpus costs two metadata scans + one co-partitioned join.
-    "q72_snapshot_diff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      def fp(df: DataFrame) = df.select(col("doc_id"), col("source"),
-        md5(encode(col("text"), "UTF-8")).as("fp"))
-      val v1 = fp(docs)
-      val v2 = fp(
-        docs.filter(col("doc_id") % 7 =!= 3)
-          .withColumn("text",
-            when(col("doc_id") % 7 === 5, concat(col("text"), lit(" v2")))
-              .otherwise(col("text")))
-          .unionByName(docs.filter(col("doc_id") % 7 === 4)
-            .withColumn("doc_id", col("doc_id") + lit(1000000L))))
-      v1.select(col("doc_id"), col("source").as("src1"), col("fp").as("fp1"))
-        .join(v2.select(col("doc_id"), col("source").as("src2"), col("fp").as("fp2")),
-          Seq("doc_id"), "full_outer")
-        .select(coalesce(col("src1"), col("src2")).as("source"),
-          when(col("fp1").isNull, "added")
-            .when(col("fp2").isNull, "removed")
-            .when(col("fp1") =!= col("fp2"), "changed")
-            .otherwise("same").as("status"))
-        .groupBy(col("source"), col("status"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("source"), col("status"))
-    }),
-
-    // tokenizer migration — remap every token id through a frequency-
-    // ranked replacement vocabulary (the "re-index the vocab by corpus
-    // frequency" step of a tokenizer swap). The dictionary is built
-    // with ONE partial-agg shuffle whose output is |V| rows (vocab
-    // size, bounded by the tokenizer — ~50k in production, not corpus-
-    // scaled), sorted on the driver and BROADCAST; the remap itself is
-    // a map-only typed kernel over the broadcast map. The naive shape —
-    // explode tokens + shuffle-join against the vocab table — would
-    // move one row per token occurrence (10^15 at the north rule's
-    // scale); this moves |V| rows once and nothing else. PlanSpec pins
-    // the join-free plan.
-    "q73_vocab_remap" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val vocabCounts = tokenTable(s, dir)
-        .flatMap { r =>
-          val m = scala.collection.mutable.LongMap.empty[Long]
-          r.tokens.foreach { tk => val k = tk.toLong; m(k) = m.getOrElse(k, 0L) + 1L }
-          m.iterator.map { case (tk, c) => (tk.toInt, c) }
-        }
-        .toDF("token", "c")
-        .groupBy(col("token")).agg(sum(col("c")).as("c"))
-        .collect() // |V| rows — tokenizer-bounded, never corpus-scaled
-      val remap: Map[Int, Int] = vocabCounts
-        .map(r => (r.getInt(0), r.getLong(1)))
-        .sortBy { case (tk, c) => (-c, tk) } // dense ids: frequent = small
-        .iterator.zipWithIndex.map { case ((tk, _), i) => tk -> i }.toMap
-      val bc = s.sparkContext.broadcast(remap)
-      tokenTable(s, dir)
-        .flatMap { r =>
-          if (r.n_tok == 0) Iterator.empty // empty docs carry no vocab
-          else {
-            val m = bc.value
-            var sumIds = 0L
-            var maxId = -1L
-            r.tokens.foreach { tk =>
-              val v = m(tk); sumIds += v; if (v > maxId) maxId = v
-            }
-            Iterator.single((r.source, sumIds, maxId))
-          }
-        }
-        .toDF("source", "sum_ids", "max_id")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("sum_ids")).as("remapped_sum"),
-          max(col("max_id")).as("max_new_id"))
-        .orderBy(col("source"))
-    }),
-
-    // context-length bucketing — the batching-efficiency question every
-    // training pipeline asks before padding sequences to fixed shapes:
-    // docs binned to the next power-of-two context length, per bucket
-    // the doc/token counts and the exact padding waste of pad-to-bucket.
-    // Map-only + one tiny aggregate (≤ 12 bucket rows); the integer
-    // next-pow2 is shared with the oracle as a min-over-VALUES ladder.
-    // Sibling of q46/q47's packing: bucketing wastes pad tokens but
-    // keeps examples document-aligned; this query prices that trade.
-    "q74_length_buckets" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      tokenTable(s, dir)
-        .map { r =>
-          val n = math.max(1, r.n_tok)
-          // next power of two >= n, floored at 16 (tokenizer bounds the
-          // top: docs cap at 32k tokens, see Fixtures' length model)
-          val b = math.max(16, Integer.highestOneBit(n - 1) << 1)
-          (b.toLong, r.n_tok.toLong, b.toLong - r.n_tok.toLong)
-        }
-        .toDF("bucket", "n_tok", "waste")
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tok")).as("token_sum"),
-          sum(col("waste")).as("pad_waste"))
-        .orderBy(col("bucket"))
-    }),
-
-    // stratified (per-source) deterministic sample — exact k smallest
-    // md5(doc_id) per source, the split-stable "give me 5 audit docs
-    // per source" op. The scale shape is the two-phase bounded top-k:
-    // a typed mapPartitions keeps AT MOST k candidates per source per
-    // partition (O(sources·k) state), so the one shuffle carries
-    // ≤ partitions·sources·k candidate rows — never the corpus — and
-    // the final window runs over that tiny survivor set. A plain
-    // row_number window over the raw table (the naive form, and the
-    // oracle's) shuffles every row to its source's partition, which at
-    // a 70%-skewed 10^12-doc corpus puts 7·10^11 rows on one executor.
-    "q75_stratified_sample" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val k = 5
-      val cand = t(s, dir, "documents")
-        .select(col("source"), col("doc_id"),
-          md5(encode(col("doc_id").cast("string"), "UTF-8")).as("h"))
-        .as[(String, Long, String)]
-        .mapPartitions { it =>
-          // per-source max-heap of size k: largest-so-far on top, so
-          // each new candidate evicts the worst of the kept k
-          val ord = Ordering.Tuple2[String, Long]
-          val best = scala.collection.mutable.HashMap
-            .empty[String, scala.collection.mutable.PriorityQueue[(String, Long)]]
-          it.foreach { case (src, id, h) =>
-            val pq = best.getOrElseUpdate(src,
-              scala.collection.mutable.PriorityQueue.empty[(String, Long)](ord))
-            if (pq.size < k) pq.enqueue((h, id))
-            else if (ord.lt((h, id), pq.head)) { pq.dequeue(); pq.enqueue((h, id)) }
-          }
-          best.iterator.flatMap { case (src, pq) =>
-            pq.iterator.map { case (h, id) => (src, id, h) }
-          }
-        }
-        .toDF("source", "doc_id", "h")
-      val w = Window.partitionBy(col("source")).orderBy(col("h"), col("doc_id"))
-      cand.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= k)
-        .select(col("source"), col("doc_id"), col("rk"))
-        .orderBy(col("source"), col("rk"))
-    }),
-
-    // BPE pair statistics — the first step of byte-pair-encoding
-    // tokenizer training: global counts of adjacent token pairs, top-k
-    // merge candidates. Same shuffle discipline as q70's inverted
-    // index: the typed kernel pre-counts pairs INSIDE each row (packed
-    // (a << 21 | b) — codepoints fit 21 bits), so the shuffle carries
-    // one record per (doc, distinct pair) with map-side combine, never
-    // one per token position; top-k resolves as TakeOrderedAndProject
-    // (partial per-partition heaps, no global sort). At 10^15 tokens
-    // the per-position explode would BE the corpus; this is bounded by
-    // per-doc pair vocabulary.
-    "q76_bpe_pair_counts" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      tokenTable(s, dir)
-        .flatMap { r =>
-          val m = scala.collection.mutable.LongMap.empty[Long]
-          val ts = r.tokens
-          var i = 0
-          while (i + 1 < ts.length) {
-            val key = (ts(i).toLong << 21) | ts(i + 1).toLong
-            m(key) = m.getOrElse(key, 0L) + 1L
-            i += 1
-          }
-          m.iterator
-        }
-        .toDF("pair", "c")
-        .groupBy(col("pair")).agg(sum(col("c")).as("n"))
-        .select(shiftright(col("pair"), 21).cast("int").as("a"),
-          col("pair").bitwiseAND(lit(2097151L)).cast("int").as("b"),
-          col("n"))
-        .orderBy(col("n").desc, col("a"), col("b"))
-        .limit(20)
-    }),
-
-    // concat-and-chunk packing — the GPT-pretraining example builder
-    // (docs concatenated with an EOD separator, the stream cut into
-    // fixed-C-token examples that CROSS document boundaries), the
-    // other canonical packing flavor next to q46/q47's document-
-    // aligned bin packing. Docs shard deterministically by
-    // md5(doc_id) and order by (md5, doc_id) within the shard, so the
-    // example stream is reproducible under any partitioning; ONE
-    // shuffle (repartition by shard + sortWithinPartitions) then a
-    // streaming O(1)-state kernel cuts examples — no shard's token
-    // stream is ever materialized. At 10^12 sequences shard count
-    // scales with the corpus (here 8 for the demo): each shard is one
-    // contiguous run inside a partition, and remainders (< C tokens)
-    // are dropped per shard, matching the training-time behavior.
-    // Per example: token-value checksum and how many docs contributed
-    // (the packing-fragmentation metric).
-    "q77_concat_chunk_pack" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val C = 512
-      val EOD = 0x110000L // one above the Unicode max: never a real token
-      val nShards = 8
-      val key32 = conv(substring(md5(col("doc_id")), 1, 8), 16, 10).cast("long")
-      tokenTable(s, dir).toDF()
-        .select(col("doc_id"), col("tokens"),
-          md5(col("doc_id")).as("h"), (key32 % nShards).as("shard"))
-        .repartition(col("shard"))
-        .sortWithinPartitions(col("shard"), col("h"), col("doc_id"))
-        .select(col("shard"), col("tokens"))
-        .as[(Long, Array[Int])]
-        .mapPartitions { it =>
-          // shards arrive contiguously (partition sorted by shard);
-          // stream positions through the current example accumulator
-          var curShard = Long.MinValue
-          var exIdx = 0L
-          var fill = 0
-          var sum = 0L
-          var nDocs = 0L
-          var docCounted = false
-          it.flatMap { case (shard, tokens) =>
-            if (shard != curShard) { // remainder of the previous shard drops
-              curShard = shard; exIdx = 0L; fill = 0; sum = 0L; nDocs = 0L
-            }
-            docCounted = false
-            val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-            var i = 0
-            while (i <= tokens.length) { // final iteration appends EOD
-              val tk = if (i < tokens.length) tokens(i).toLong else EOD
-              if (!docCounted) { nDocs += 1; docCounted = true }
-              sum += tk
-              fill += 1
-              if (fill == C) {
-                out += ((shard, exIdx, sum, nDocs))
-                exIdx += 1; fill = 0; sum = 0L; nDocs = 0L
-                docCounted = false // this doc counts again if it spills over
-              }
-              i += 1
-            }
-            out.iterator
-          }
-        }
-        .toDF("shard", "ex_idx", "tok_sum", "n_docs")
-        .orderBy(col("shard"), col("ex_idx"))
-    }),
-
-    // corpus n-gram diversity — the dedup-health dial read while mixing
-    // sources: per source, total 5-gram positions vs distinct 5-grams
-    // (type/token ratio at shingle grain) and the duplicated-position
-    // share in permille. Two independent aggregates joined on the tiny
-    // per-source result: the positions side is metadata-only (a word
-    // count per doc, no shingle ever materialized), and the distinct
-    // side ships 8-byte fingerprints with map-side partial aggregation
-    // — never shingle strings. At 10^12+ tokens the exact countDistinct
-    // becomes the one big shuffle; the production dial swaps it for
-    // approx_count_distinct (HLL, mergeable, no second pass) — exact
-    // here so the oracle can gate it (and collision-check the fp).
-    // Collision bound of the 64-bit fingerprint convention (q78 and
-    // q80 both equate distinct fps with distinct raw shingles): ~n²/2
-    // /2^64 expected colliding pairs — negligible at bench scale
-    // (~10^8 shingles → ~3·10^-4 expected), but at 10^9+ distinct
-    // shingles whole collisions appear (~0.03 at 10^9, ~27 at 3·10^10)
-    // and n_distinct undercounts by that many; a production run at
-    // 10^12 tokens should widen to 128-bit fps (e.g. two independent
-    // 64-bit halves) — the HLL swap above has its own (larger) error
-    // anyway. The sf-scale oracle verifies with raw strings, so any
-    // collision at graded scale fails the compare rather than passing
-    // silently.
-    "q78_ngram_diversity" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("text"))
-        .as[(Long, String, String)]
-      val posBySrc = docs
-        .map { case (_, src, text) =>
-          (src, math.max(0, graft.text.Analyzer.words(text).length - 4).toLong)
-        }
-        .toDF("source", "pos")
-        .groupBy(col("source")).agg(sum(col("pos")).as("n_positions"))
-      val distBySrc = docs
-        .flatMap { case (_, src, text) =>
-          graft.text.Analyzer.wordShingleHash64(text, k = 5).iterator.map(fp => (src, fp))
-        }
-        .toDF("source", "fp")
-        .groupBy(col("source")).agg(countDistinct(col("fp")).as("n_distinct"))
-      posBySrc.join(distBySrc, Seq("source"))
-        .withColumn("dup_permille",
-          expr("((n_positions - n_distinct) * 1000) div n_positions"))
-        .select(col("source"), col("n_positions"), col("n_distinct"), col("dup_permille"))
-        .orderBy(col("source"))
-    }),
-
-    // unigram-LM commonness scoring — the cheap LM-quality proxy run
-    // before any model-scored filter: corpus unigram counts (vocab is
-    // tokenizer-bounded — same collect+broadcast two-phase as q73),
-    // every doc scored map-only by mean token commonness, top-20 most
-    // stereotyped docs via TakeOrderedAndProject (per-partition heaps,
-    // no global sort). Integer math end to end: sum-of-counts is
-    // <= n_tok_max * corpus_tokens (< 2^50 on the 2B bench corpus), so
-    // the permille scaling stays in Long; ties at the boundary break on
-    // doc_id, making the LIMIT cross-engine total.
-    "q79_unigram_lm_score" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val counts: Map[Int, Long] = tokenTable(s, dir)
-        .flatMap { r =>
-          val m = scala.collection.mutable.LongMap.empty[Long]
-          r.tokens.foreach { tk => val k = tk.toLong; m(k) = m.getOrElse(k, 0L) + 1L }
-          m.iterator.map { case (tk, c) => (tk.toInt, c) }
-        }
-        .toDF("token", "c")
-        .groupBy(col("token")).agg(sum(col("c")).as("c"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap // |V| rows
-      val bc = s.sparkContext.broadcast(counts)
-      tokenTable(s, dir)
-        .flatMap { r =>
-          if (r.n_tok == 0) Iterator.empty // no tokens, no score
-          else {
-            val m = bc.value
-            var sumC = 0L
-            r.tokens.foreach { tk => sumC += m(tk) }
-            Iterator.single((r.doc_id.toLong, (sumC * 1000L) / r.n_tok))
-          }
-        }
-        .toDF("doc_id", "score_permille")
-        .orderBy(col("score_permille").desc, col("doc_id"))
-        .limit(20)
-    }),
-
-    // duplicate-passage doc filter — the APPLY side of q67's detector:
-    // drop docs whose distinct-8-gram set is majority corpus-duplicated
-    // passages, report per-source kept/dropped docs and the surviving
-    // token mass a mix rebalance reads. Same 64-bit gram kernel and
-    // fp-clustered shuffles as q67 (per-doc gram sets are distinct by
-    // construction, so count-per-fp IS document frequency); docs too
-    // short to shingle have nothing to judge and are kept.
-    "q80_dup_passage_filter" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val grams = t(s, dir, "documents")
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .flatMap { case (id, text) =>
-          graft.text.Analyzer.wordShingleHash64(text, k = 8).iterator.map(fp => (id, fp))
-        }
-        .toDF("doc_id", "fp")
-      val dup = grams.groupBy(col("fp"))
-        .agg(count(lit(1)).as("ndocs"))
-        .filter(col("ndocs") >= 2)
-        .select(col("fp"), lit(1L).as("isdup"))
-      val perDoc = grams.join(dup, Seq("fp"), "left")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_grams"),
-          sum(coalesce(col("isdup"), lit(0L))).as("n_dup"))
-      // kept mass is reported in CHARACTERS (length(text)) and named
-      // so — a mix-rebalance consumer needing token mass joins the
-      // tokens table's n_tok instead (round-4 verdict: the old
-      // "kept_tokens" name sold char mass as tokens)
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("source"), length(col("text")).cast("long").as("n_chars"))
-        .join(perDoc, Seq("doc_id"), "left")
-        .withColumn("drop",
-          coalesce(col("n_dup") * 2 > col("n_grams"), lit(false)))
-        .groupBy(col("source"))
-        .agg(sum(when(col("drop"), 0L).otherwise(1L)).as("kept_docs"),
-          sum(when(col("drop"), 1L).otherwise(0L)).as("dropped_docs"),
-          sum(when(col("drop"), lit(0L)).otherwise(col("n_chars"))).as("kept_chars"))
-        .orderBy(col("source"))
-    }),
-
-    // prefix point-family lookup over AT-REST chunks: the reference
-    // derives [minv,maxv] page bounds for prefix regexes
-    // (search/constraint.go:894-909); graft serves doc_id LIKE 'p%' as
-    // the range [p, prefixSuccessor(p)) — a pushed range probe on the
-    // doc-sorted index (parquet min/max prunes to the few row-groups
-    // covering the range, O(log) in corpus size; absent/stale index
-    // falls back to chunk min/max metadata), then each candidate chunk
-    // decodes its doc index once and slices only the matching docs'
-    // token ranges
-    "q81_prefix_lookup" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val tmp = chunksDirFor(s, dir, tokensPerChunk = 16384)
-      // same build-if-stale discipline as q53: the index is derived
-      // metadata, rebuilt when the chunk-set fingerprint moved. The
-      // freshness question alone needs no probe job — docIndexIsFresh
-      // compares fingerprints (memoized per content stamp), where the
-      // old dummy-key lookup paid a probe collect on every invocation
-      if (!graft.engine.Pipeline.docIndexIsFresh(s, tmp))
-        graft.engine.Pipeline.buildDocIndex(s, tmp)
-      graft.engine.Pipeline.readTokensForDocIdPrefix(s, tmp, "4")
-        .map(r => (r.doc_id.toLong, r.source, r.n_tok.toLong, r.tokens.foldLeft(0L)(_ + _)))
-        .toDF("doc_id", "source", "n_tok", "token_sum")
-        .orderBy(col("doc_id"))
-    }),
-
-    // lineage reconciliation — the exact-oracle twin of q32's per-chunk
-    // lineage surface (chunk ids / codec choices are engine-specific,
-    // so q32 itself stays rows-only): the per-partition lineage records
-    // must reconcile EXACTLY with the source corpus — sum(n_rows) = doc
-    // count, sum(n_tokens) = corpus code points, sum(raw_bytes) = the
-    // documented 4*n_tok + |doc_id| + |source| + 4 per row — proving no
-    // split was lost or double-encoded (the resume-from-checkpoint
-    // invariant the chunk ledger exists to guarantee). One metadata
-    // agg over the (persisted) chunks — the payload never decodes.
-    "q82_lineage_reconcile" -> ((s, dir) => {
-      chunksFor(s, dir, tokensPerChunk = 16384)
-        .toDF()
-        .groupBy(col("part_source").as("source"))
-        .agg(sum(col("n_rows")).cast("long").as("n_docs"),
-          sum(col("n_tokens")).cast("long").as("n_tokens"),
-          sum(col("raw_bytes")).cast("long").as("raw_bytes"))
-        .orderBy(col("source"))
-    }),
-
-    // chunk-grain NOT constraint — the complement of q45's membership
-    // search. The reference cannot prefilter NOT (it decodes the
-    // child's row set and complements, constraint.go:934-967, with the
-    // why-not at :946-950); the chunk ladder actually can, in one
-    // direction: a chunk the Equal ladder PROVES token-free (min/max
-    // bounds, then dict-header binary search) is accepted WHOLESALE —
-    // every doc qualifies, and the accept is metadata-only (ids +
-    // lengths decode; the token payload is neither read past the scan
-    // nor decoded). Only may-contain chunks pay the full decode +
-    // per-doc complement. With a rare probe most chunks take the cheap
-    // path — the complement query is CHEAPER than the membership one,
-    // inverting the reference's cost order.
-    "q83_token_not_search" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val probe = 'q'.toInt // same rare probe as q45: ~0.5% of tokens
-      chunksFor(s, dir, tokensPerChunk = 16384)
-        .flatMap { c =>
-          if (!Decoder.chunkMayContainToken(c, probe))
-            Decoder.decodeDocIndex(c.chunk_id, c.doc_ids_enc, c.lengths_enc, c.sources_enc)
-              .map(r => (r.doc_id.toLong, r.n_tok.toLong))
-          else Decoder.decodeChunk(c).flatMap { r =>
-            if (r.tokens.contains(probe)) Iterator.empty
-            else Iterator.single((r.doc_id.toLong, r.n_tok.toLong))
-          }
-        }
-        .toDF("doc_id", "n_tok")
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- rows-only entries (not ANSI-SQL-expressible identically) ----
-
-    // ANN: brute-force cosine top-5 for 3 probe vectors (float math —
-    // no hash-stable oracle; ranking ties could differ)
-    "q30_ann_cosine_topk" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      // norms precomputed once per vector on each side (q37's fix):
-      // the crossJoin previously re-ran both sqrt/aggregate lambdas on
-      // every (corpus row x probe) pair — identical expressions,
-      // identical doubles, 4x fewer evaluations
-      val nrm = expr("sqrt(aggregate(transform(embedding, x -> x * x), 0D, (a, x) -> a + double(x)))")
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"), nrm.as("na"))
-      val probes = e.filter(col("vec_id") < 3)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("na").as("nb"))
-      val dot = expr("aggregate(zip_with(embedding, qe, (x, y) -> x * y), 0D, (a, x) -> a + x)")
-      val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
-      e.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("cos", dot / (col("na") * col("nb")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("qid"), col("rank"), col("vec_id"))
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // SimHash 16-bit signatures (Charikar 2002): bit-majority over
-    // per-word hashes. Word hash = first 16 bits of md5 — deterministic
-    // and engine-portable, so the whole signature is DuckDB-oracle-
-    // checkable (the earlier JVM-hashCode variant was rows-only).
-    // Pure codegen'd SQL functions: explode -> 16 conditional partial
-    // sums -> bit reassembly; no UDF, scales as a plain groupBy.
-    "q31_simhash" -> ((s, dir) => {
-      // map-only typed kernel (Analyzer.simhash16): per-word md5 votes
-      // accumulate inside the row. The explode + groupBy(doc_id)
-      // formulation this replaces shuffled one row per corpus WORD —
-      // at 100 TB that shuffle, not the hashing, is the bottleneck.
-      val spark = s
-      import spark.implicits._
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, text) => (id, graft.text.Analyzer.simhash16(text)) }
-        .toDF("doc_id", "simhash")
-        .orderBy(col("doc_id"))
-    }),
-
-    // multimodal feature extraction: batched mapPartitions kernel over
-    // binary payloads (decode step stubbed — see Media.MediaDecoder.Stub;
-    // histogram/byte math downstream of the stub is real integer math)
-    "q33_media_features" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      graft.multimodal.Media
-        .extractFeatures(graft.multimodal.Media.fromDocuments(t(s, dir, "documents")))
-        .map(f => (f.doc_id, f.media_type, f.n_bytes, f.histogram.mkString(",")))
-        .toDF("doc_id", "media_type", "n_bytes", "hist16")
-        .orderBy(col("doc_id"))
-    }),
-
-    // ANN scale path: random-hyperplane LSH bucketing (deterministic
-    // hash-derived planes), cosine ranked only within each probe's
-    // bucket — the candidate set shrinks ~2^bits-fold vs q30's brute
-    // force. The signature width is DERIVED from the corpus size
-    // (Lsh.bitsFor: ceil(log2(n/2)) — 8 bits at the 500-vector test
-    // scale, 28 at 10^9): a fixed width would leave per-bucket
-    // candidate sets growing linearly with n
-    "q34_ann_lsh" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val spark = s
-      import spark.implicits._
-      val nVec = embeddingsCount(s, dir)
-      val nBits = graft.similarity.Lsh.bitsFor(nVec)
-      val sigOf = (emb: Array[Float]) => graft.similarity.Lsh.signature(emb, nBits)
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id").cast("long"), col("embedding"), col("label"))
-        .as[(Long, Array[Float], Int)]
-        .map { case (id, emb, _) => (id, emb, sigOf(emb)) }
-        .toDF("vec_id", "embedding", "sig")
-      val probes = e.filter(col("vec_id") < 3)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("sig"))
-      val dot = expr("aggregate(zip_with(embedding, qe, (x, y) -> x * y), 0D, (a, x) -> a + x)")
-      val na = expr("sqrt(aggregate(transform(embedding, x -> x * x), 0D, (a, x) -> a + double(x)))")
-      val nb = expr("sqrt(aggregate(transform(qe, x -> x * x), 0D, (a, x) -> a + double(x)))")
-      val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
-      e.join(broadcast(probes), Seq("sig"))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("cos", dot / (na * nb))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("qid"), col("rank"), col("vec_id"))
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // winnowing fingerprints (rolling-hash k-grams + window minima,
-    // SIGMOD 2003) — near-dup detection robust to local edits
-    "q35_winnow_fingerprint" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          val fp = graft.text.Analyzer.winnow(text)
-          (id, fp.length.toLong, if (fp.isEmpty) 0L else fp.min)
-        }
-        .toDF("doc_id", "n_fingerprints", "min_fp")
-        .orderBy(col("doc_id"))
-    }),
-
-    // n-gram (bigram-profile) language-ID heuristic
-    "q36_langid_ngram" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
-        .as[(Long, String, String)]
-        .map { case (_, lang, text) => (lang, graft.text.Analyzer.langId(text)) }
-        .toDF("lang", "predicted")
-        .groupBy(col("lang"), col("predicted"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("lang"), col("predicted"))
-    }),
-
-    // embedding-cosine near-duplicate pairs: multi-band LSH candidate
-    // generation (equi self-join per band, distinct pairs across
-    // bands), exact-cosine confirmation — the banding recall/cost
-    // trade that survives 10^9 vectors, where the brute-force q30
-    // cross join does not. Per-band width r = ceil(log2(n/c)) — the
-    // FULL log2(n) (Lsh.bitsPerBandFor: 6 at the 500-vector test
-    // scale, 27 at 10^9) so random-pair collision rate 2^-r <= c/n
-    // and candidate volume stays ~ bands*c*n, linear in the corpus;
-    // bands buy recall only (see the width-vs-volume math on
-    // bitsPerBandFor — the earlier log2(n)/bands rule was n^(2-1/b)
-    // candidates: 23% of ALL pairs already at n=2000)
-    "q37_embed_neardup" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val bands = 4
-      val nVec = embeddingsCount(s, dir)
-      val bitsPerBand = graft.similarity.Lsh.bitsPerBandFor(nVec, bands)
-      // candidate generation ships ONLY (vec_id, band, sig) through the
-      // self-join — embeddings (the wide column) are re-attached by id
-      // AFTER the candidate distinct, so vectors are never shuffled
-      // through the band join (at 10^9 vectors the band join's shuffle
-      // would otherwise carry every vector once per band)
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id").cast("long"), col("embedding"))
-        .as[(Long, Array[Float])]
-        .map { case (id, emb) =>
-          val sigs = Array.tabulate(bands)(b =>
-            graft.similarity.Lsh.bandSignature(emb, b, bitsPerBand))
-          (id, sigs)
-        }
-        .toDF("vec_id", "sigs")
-      val banded = e.select(col("vec_id"), posexplode(col("sigs")).as(Seq("band", "sig")))
-      val cand = banded.select(col("band"), col("sig"), col("vec_id").as("a"))
-        .join(banded.select(col("band"), col("sig"), col("vec_id").as("b")),
-          Seq("band", "sig"))
-        .filter(col("a") < col("b"))
-        .select(col("a"), col("b"))
-        .dropDuplicates("a", "b") // a pair may collide in several bands
-      // per-vector norm computed ONCE on the 2-column vector table, not
-      // per candidate pair: a vector in k pairs previously re-ran the
-      // sqrt/aggregate lambda k times inside the verify join (identical
-      // expression, identical doubles — only the evaluation count
-      // changes, so verdicts are bit-stable)
-      val nrm = expr("sqrt(aggregate(transform(embedding, x -> x * x), 0D, (acc, x) -> acc + double(x)))")
-      val vecs = t(s, dir, "embeddings")
-        .select(col("vec_id").cast("long"), col("embedding"), nrm.as("nrm"))
-      val dot = expr("aggregate(zip_with(ea, eb, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
-      cand
-        .join(vecs.select(col("vec_id").as("a"), col("embedding").as("ea"), col("nrm").as("na")), Seq("a"))
-        .join(vecs.select(col("vec_id").as("b"), col("embedding").as("eb"), col("nrm").as("nb")), Seq("b"))
-        .withColumn("cos", dot / (col("na") * col("nb")))
-        .filter(col("cos") > 0.4)
-        .select(col("a"), col("b"))
-        .orderBy(col("a"), col("b"))
-    }),
-
-    // engine lineage surface: chunk plan + codec choices on testdata
-    "q32_encode_lineage" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      chunksFor(s, dir, tokensPerChunk = 16384)
-        .toDF()
-        .select(col("chunk_id"), col("part_source"), col("n_rows"), col("n_tokens"),
-          col("codec_tokens"), col("codec_source"),
-          col("raw_bytes"), col("encoded_bytes"))
-        .orderBy(col("chunk_id"))
-    })
-  )
-
-  /** Shared oracle CTE chain producing the q38 near-dup pair set
-    * (ends in `pairs(a, b)`): q38 selects it directly; q64/q65 build
-    * the connected-components closure on top of the identical graph.
+  /** The families' records as one list. A name given twice fails here,
+    * naming it — a `Map` literal keeps only the last of the two.
     */
-  private val shinglePairsCte: String =
-    """d AS (
-      |  SELECT doc_id,
-      |    list_distinct(list_transform(range(1, len(w) - 1),
-      |      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-      |sig AS (
-      |  SELECT doc_id,
-      |    list_min(list_transform(sh, x -> substr(md5(x), 1, 8))) AS mh0,
-      |    list_min(list_transform(sh, x -> substr(md5(x), 9, 8))) AS mh1,
-      |    list_min(list_transform(sh, x -> substr(md5(x), 17, 8))) AS mh2,
-      |    list_min(list_transform(sh, x -> substr(md5(x), 25, 8))) AS mh3
-      |  FROM d),
-      |bands AS (
-      |  SELECT 0 AS band, mh0 AS bucket, doc_id FROM sig
-      |  UNION ALL SELECT 1, mh1, doc_id FROM sig
-      |  UNION ALL SELECT 2, mh2, doc_id FROM sig
-      |  UNION ALL SELECT 3, mh3, doc_id FROM sig),
-      |cand AS (
-      |  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-      |  FROM bands l JOIN bands r ON l.band = r.band AND l.bucket = r.bucket
-      |  WHERE l.doc_id < r.doc_id AND l.bucket IS NOT NULL),
-      |j AS (
-      |  SELECT a, b,
-      |    CAST(len(list_intersect(da.sh, db.sh)) AS BIGINT) AS inter,
-      |    CAST(len(list_distinct(list_concat(da.sh, db.sh))) AS BIGINT) AS uni
-      |  FROM cand
-      |  JOIN d da ON da.doc_id = a
-      |  JOIN d db ON db.doc_id = b),
-      |pairs AS (SELECT a, b FROM j WHERE uni > 0 AND inter * 2 >= uni)""".stripMargin
-
-  /** Connected-components closure over [[shinglePairsCte]]'s pair set:
-    * `cluster(doc_id, cluster_id)` = min reachable id per vertex, the
-    * exact fixpoint Components.connectedComponents converges to.
-    */
-  private val neardupClusterCte: String =
-    shinglePairsCte +
-      """,
-        |edges AS (
-        |  SELECT a AS u, b AS v FROM pairs
-        |  UNION ALL SELECT b, a FROM pairs),
-        |reach AS (
-        |  SELECT u, v FROM edges
-        |  UNION
-        |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-        |cluster AS (
-        |  SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-        |  FROM reach GROUP BY u)""".stripMargin
-
-  /** Shared oracle CTE: per-doc word 8-grams (`g0(doc_id, source,
-    * g8)`) — q67 dedups per doc, q69 per source. The end-exclusive
-    * `range(1, len(w) - 6)` is empty for docs under 8 words, matching
-    * the kernel's short-doc guard.
-    */
-  private val gram8Cte: String =
-    """w AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
-      |g0 AS (SELECT doc_id, source,
-      |  unnest(list_transform(range(1, len(w) - 6), i ->
-      |    w[i]||' '||w[i+1]||' '||w[i+2]||' '||w[i+3]||' '||
-      |    w[i+4]||' '||w[i+5]||' '||w[i+6]||' '||w[i+7])) AS g8
-      |  FROM w)""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q64_neardup_clusters" ->
-      s"""WITH RECURSIVE $neardupClusterCte
-         |SELECT doc_id, cluster_id, doc_id = cluster_id AS keeper
-         |FROM cluster ORDER BY doc_id""".stripMargin,
-
-    "q65_dedup_apply" ->
-      s"""WITH RECURSIVE $neardupClusterCte
-         |SELECT source, count(*) AS n_docs,
-         |  CAST(sum(n_chars) AS BIGINT) AS n_chars_sum
-         |FROM documents
-         |WHERE doc_id NOT IN (SELECT doc_id FROM cluster WHERE doc_id <> cluster_id)
-         |GROUP BY source ORDER BY source""".stripMargin,
-
-    "q67_dup_passages" ->
-      s"""WITH $gram8Cte,
-         |g AS (SELECT DISTINCT doc_id, source, g8 FROM g0),
-         |d AS (SELECT g8 FROM g GROUP BY g8 HAVING count(*) >= 2)
-         |SELECT g.source,
-         |  CAST(count(DISTINCT g.doc_id) AS BIGINT) AS n_docs_with_dup,
-         |  CAST(count(*) AS BIGINT) AS n_dup_gram_hits,
-         |  CAST(count(DISTINCT g.g8) AS BIGINT) AS n_dup_grams
-         |FROM g JOIN d USING (g8)
-         |GROUP BY g.source ORDER BY g.source""".stripMargin,
-
-    "q69_source_overlap" ->
-      s"""WITH $gram8Cte,
-         |g AS (SELECT DISTINCT source, g8 FROM g0)
-         |SELECT l.source AS src_a, r.source AS src_b,
-         |  CAST(count(*) AS BIGINT) AS n_shared_grams
-         |FROM g l JOIN g r ON l.g8 = r.g8 AND l.source < r.source
-         |GROUP BY l.source, r.source ORDER BY l.source, r.source""".stripMargin,
-
-    "q68_filter_funnel" ->
-      """WITH w AS (SELECT doc_id, lang, text, string_split(text, ' ') AS w FROM documents),
-        |g AS (SELECT doc_id,
-        |  unnest(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS g2 FROM w),
-        |gc AS (SELECT doc_id, g2, count(*) AS c FROM g GROUP BY doc_id, g2),
-        |m AS (SELECT doc_id, max(c) AS mx FROM gc GROUP BY doc_id),
-        |st AS (SELECT w.doc_id,
-        |  CASE WHEN len(w.w) < 16 THEN 1
-        |       WHEN w.lang NOT IN ('en', 'de') THEN 2
-        |       WHEN len(w.w) > 1 AND coalesce(m.mx, 0) * 10 >= len(w.w) - 1 THEN 3
-        |       WHEN w.text NOT LIKE '% the %' THEN 4
-        |       ELSE 0 END AS stage
-        |  FROM w LEFT JOIN m ON w.doc_id = m.doc_id),
-        |c AS (SELECT stage, count(*) AS n FROM st GROUP BY stage),
-        |dim(stage, rule) AS (VALUES (1, 'min_words'), (2, 'lang'),
-        |  (3, 'repetition'), (4, 'stopword')),
-        |f AS (SELECT dim.stage, dim.rule, coalesce(c.n, 0) AS n_rejected
-        |      FROM dim LEFT JOIN c USING (stage)),
-        |tot AS (SELECT sum(n) AS total FROM c),
-        |acc AS (SELECT stage, rule, n_rejected,
-        |  coalesce(sum(n_rejected) OVER (ORDER BY stage
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prev_rej
-        |  FROM f)
-        |SELECT CAST(acc.stage AS BIGINT) AS stage, acc.rule,
-        |  CAST(tot.total - acc.prev_rej AS BIGINT) AS n_in,
-        |  CAST(acc.n_rejected AS BIGINT) AS n_rejected,
-        |  CAST(tot.total - acc.prev_rej - acc.n_rejected AS BIGINT) AS n_out
-        |FROM acc, tot ORDER BY acc.stage""".stripMargin,
-
-    "q70_inverted_index" ->
-      """WITH chars AS (SELECT CAST(unnest(range(97, 123)) AS INTEGER) AS cp),
-        |per AS (
-        |  SELECT c.cp, d.doc_id,
-        |    length(d.text) - length(replace(d.text, chr(c.cp), '')) AS tf
-        |  FROM documents d CROSS JOIN chars c)
-        |SELECT CAST(cp AS INTEGER) AS token,
-        |  CAST(count(CASE WHEN tf > 0 THEN 1 END) AS BIGINT) AS df,
-        |  CAST(sum(tf) AS BIGINT) AS tf_total,
-        |  CAST(min(CASE WHEN tf > 0 THEN doc_id END) AS BIGINT) AS first_doc,
-        |  CAST(max(CASE WHEN tf > 0 THEN doc_id END) AS BIGINT) AS last_doc
-        |FROM per GROUP BY cp HAVING sum(tf) > 0 ORDER BY token""".stripMargin,
-
-    "q71_conjunctive_search" ->
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |  CAST(length(text) AS BIGINT) AS n_tok
-        |FROM documents
-        |WHERE contains(text, 'q') AND contains(text, 'j') AND contains(text, 'k')
-        |ORDER BY doc_id""".stripMargin,
-
-    "q72_snapshot_diff" ->
-      """WITH v1 AS (SELECT doc_id, source, md5(text) AS fp FROM documents),
-        |v2base AS (
-        |  SELECT doc_id, source,
-        |    CASE WHEN doc_id % 7 = 5 THEN text || ' v2' ELSE text END AS text
-        |  FROM documents WHERE doc_id % 7 <> 3
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, source, text FROM documents WHERE doc_id % 7 = 4),
-        |v2 AS (SELECT doc_id, source, md5(text) AS fp FROM v2base)
-        |SELECT coalesce(v1.source, v2.source) AS source,
-        |  CASE WHEN v1.fp IS NULL THEN 'added'
-        |       WHEN v2.fp IS NULL THEN 'removed'
-        |       WHEN v1.fp <> v2.fp THEN 'changed'
-        |       ELSE 'same' END AS status,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // same frequency-dense ranking as the Spark side: count DESC then
-    // token ASC, rank-1 = dense new id; n_docs counts docs with >= 1
-    // token (the join drops empty docs, mirroring the flatMap guard)
-    "q73_vocab_remap" ->
-      """WITH toks AS (
-        |  SELECT doc_id, source, unicode(ch) AS tok
-        |  FROM documents, unnest(string_split(text, '')) AS u(ch)
-        |  WHERE length(text) > 0),
-        |vocab AS (
-        |  SELECT tok, row_number() OVER (ORDER BY count(*) DESC, tok) - 1 AS new_id
-        |  FROM toks GROUP BY tok)
-        |SELECT t.source,
-        |  CAST(count(DISTINCT t.doc_id) AS BIGINT) AS n_docs,
-        |  CAST(sum(v.new_id) AS BIGINT) AS remapped_sum,
-        |  CAST(max(v.new_id) AS BIGINT) AS max_new_id
-        |FROM toks t JOIN vocab v USING (tok)
-        |GROUP BY t.source ORDER BY t.source""".stripMargin,
-
-    // integer next-pow2 as a min-over-VALUES ladder (exact — no float
-    // log2 edge at the power-of-two boundaries); length(text) counts
-    // codepoints in DuckDB, same as the Spark side's n_tok. The ladder
-    // extends one rung PAST the fixture's maxLen=32768 clamp: Spark's
-    // kernel computes an unbounded next-pow2, so if a future fixture
-    // ever exceeds the ladder the lateral min yields a NULL bucket
-    // group and the compare fails loudly instead of silently
-    // diverging from the Spark side
-    "q74_length_buckets" ->
-      """SELECT b.bucket,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(length(text)) AS BIGINT) AS token_sum,
-        |  CAST(sum(b.bucket - length(text)) AS BIGINT) AS pad_waste
-        |FROM documents,
-        |  LATERAL (SELECT CAST(min(v.b) AS BIGINT) AS bucket
-        |           FROM (VALUES (16),(32),(64),(128),(256),(512),(1024),
-        |                        (2048),(4096),(8192),(16384),(32768),
-        |                        (65536)) AS v(b)
-        |           WHERE v.b >= greatest(length(text), 1)) b
-        |GROUP BY b.bucket ORDER BY b.bucket""".stripMargin,
-
-    // the oracle takes the naive single-window form — same answer the
-    // Spark side's bounded two-phase top-k must reproduce exactly
-    "q75_stratified_sample" ->
-      """SELECT source, doc_id, CAST(rk AS INTEGER) AS rk FROM (
-        |  SELECT source, doc_id,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        |  FROM documents) WHERE rk <= 5 ORDER BY source, rk""".stripMargin,
-
-    // adjacent-codepoint pairs via zipped parallel unnest (DuckDB's
-    // generate_series cannot lateral-reference a column); the ORDER BY
-    // is total (n DESC, a, b), so the LIMIT boundary is tie-proof
-    "q76_bpe_pair_counts" ->
-      """WITH cs AS (SELECT string_split(text, '') AS c FROM documents
-        |            WHERE length(text) >= 2),
-        |pairs AS (
-        |  SELECT unnest(list_transform(range(1, len(c)), i -> unicode(c[i]))) AS a,
-        |         unnest(list_transform(range(1, len(c)), i -> unicode(c[i+1]))) AS b
-        |  FROM cs)
-        |SELECT CAST(a AS INTEGER) AS a, CAST(b AS INTEGER) AS b,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM pairs GROUP BY a, b ORDER BY n DESC, a, b LIMIT 20""".stripMargin,
-
-    // the same deterministic (shard, md5-order) stream rebuilt
-    // positionally: window cumsum gives each doc's start offset, a
-    // zipped parallel unnest lays tokens+EOD (0x110000) at global
-    // positions, examples group by gpos // 512; HAVING count(*)=512
-    // drops per-shard remainders exactly as the kernel does. The
-    // ORDER BY tie-break is (md5, doc_id-as-VARCHAR) on BOTH sides —
-    // 8-hex shard keys collide at birthday rates over 10^4+ docs, so
-    // the tie-break must agree across engines.
-    "q77_concat_chunk_pack" ->
-      """WITH d AS (
-        |  SELECT CAST(doc_id AS VARCHAR) AS did, string_split(text, '') AS cs,
-        |    length(text) AS len,
-        |    md5(CAST(doc_id AS VARCHAR)) AS h,
-        |    list_reduce(list_transform(range(1, 9),
-        |      i -> CAST(instr('0123456789abcdef',
-        |        substring(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1 AS BIGINT)),
-        |      (a, x) -> a * 16 + x) % 8 AS shard
-        |  FROM documents),
-        |o AS (
-        |  SELECT *, sum(len + 1) OVER (PARTITION BY shard ORDER BY h, did
-        |    ROWS UNBOUNDED PRECEDING) - (len + 1) AS strt
-        |  FROM d),
-        |toks AS (
-        |  SELECT shard, did,
-        |    strt + unnest(range(0, len + 1)) AS gpos,
-        |    unnest(list_append(list_transform(range(1, len + 1),
-        |      i -> CAST(unicode(cs[i]) AS BIGINT)), 1114112)) AS tok
-        |  FROM o)
-        |SELECT shard, CAST(gpos // 512 AS BIGINT) AS ex_idx,
-        |  CAST(sum(tok) AS BIGINT) AS tok_sum,
-        |  CAST(count(DISTINCT did) AS BIGINT) AS n_docs
-        |FROM toks
-        |GROUP BY shard, ex_idx HAVING count(*) = 512
-        |ORDER BY shard, ex_idx""".stripMargin,
-
-    // 5-gram positions vs distinct raw-string 5-grams; the Spark side
-    // counts distinct 64-bit fingerprints, so a pass doubles as the
-    // collision check (the q67/q50 convention). Sources whose docs are
-    // all shorter than 5 words have no gram rows on either side.
-    "q78_ngram_diversity" ->
-      """WITH w AS (SELECT source, string_split(text, ' ') AS w FROM documents),
-        |g AS (SELECT source, unnest(list_transform(range(1, len(w) - 3), i ->
-        |  w[i]||' '||w[i+1]||' '||w[i+2]||' '||w[i+3]||' '||w[i+4])) AS s5
-        |  FROM w)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_positions,
-        |  CAST(count(DISTINCT s5) AS BIGINT) AS n_distinct,
-        |  CAST(((count(*) - count(DISTINCT s5)) * 1000) // count(*) AS BIGINT)
-        |    AS dup_permille
-        |FROM g GROUP BY source ORDER BY source""".stripMargin,
-
-    // mean token commonness in permille, integer floor division both
-    // sides; the LIMIT boundary is tie-broken by doc_id so the top-20
-    // is a total order across engines
-    "q79_unigram_lm_score" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unicode(ch) AS tok
-        |  FROM documents, unnest(string_split(text, '')) AS u(ch)
-        |  WHERE length(text) > 0),
-        |vocab AS (SELECT tok, count(*) AS c FROM toks GROUP BY tok)
-        |SELECT CAST(t.doc_id AS BIGINT) AS doc_id,
-        |  CAST((sum(v.c) * 1000) // count(*) AS BIGINT) AS score_permille
-        |FROM toks t JOIN vocab v USING (tok)
-        |GROUP BY t.doc_id
-        |ORDER BY score_permille DESC, doc_id LIMIT 20""".stripMargin,
-
-    // majority-duplicated docs dropped: strict n_dup*2 > n_grams on
-    // both sides; docs with no 8-grams (fewer than 8 words) have NULL
-    // tallies and are kept via the same coalesce(false)
-    "q80_dup_passage_filter" ->
-      s"""WITH $gram8Cte,
-         |g AS (SELECT DISTINCT doc_id, g8 FROM g0),
-         |dup AS (SELECT g8 FROM g GROUP BY g8 HAVING count(*) >= 2),
-         |pd AS (
-         |  SELECT g.doc_id, count(*) AS n_grams,
-         |    sum(CASE WHEN dup.g8 IS NULL THEN 0 ELSE 1 END) AS n_dup
-         |  FROM g LEFT JOIN dup USING (g8) GROUP BY g.doc_id)
-         |SELECT d.source,
-         |  CAST(sum(CASE WHEN coalesce(pd.n_dup * 2 > pd.n_grams, false)
-         |    THEN 0 ELSE 1 END) AS BIGINT) AS kept_docs,
-         |  CAST(sum(CASE WHEN coalesce(pd.n_dup * 2 > pd.n_grams, false)
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS dropped_docs,
-         |  CAST(sum(CASE WHEN coalesce(pd.n_dup * 2 > pd.n_grams, false)
-         |    THEN 0 ELSE length(d.text) END) AS BIGINT) AS kept_chars
-         |FROM documents d LEFT JOIN pd USING (doc_id)
-         |GROUP BY d.source ORDER BY d.source""".stripMargin,
-
-    // same token_sum convention as q53 (unicode code points of text,
-    // empty docs coalesce to 0); the prefix family is the stringified
-    // numeric doc_id
-    "q81_prefix_lookup" ->
-      """SELECT doc_id, source, CAST(length(text) AS BIGINT) AS n_tok,
-        |  CAST(coalesce((SELECT sum(unicode(ch))
-        |        FROM unnest(string_split(text, '')) AS u(ch)
-        |        WHERE ch <> ''), 0) AS BIGINT) AS token_sum
-        |FROM documents WHERE CAST(doc_id AS VARCHAR) LIKE '4%'
-        |ORDER BY doc_id""".stripMargin,
-
-    // ground truth recomputed from the corpus: lineage totals must
-    // match doc counts, code-point mass, and the documented raw-bytes
-    // accounting (4 B/token + doc_id/source strings + 4 B row header).
-    // ASCII-id assumption (round-5 advice, documented rather than
-    // changed — the oracle SQL is frozen): DuckDB length() counts code
-    // points while the encoder's raw_bytes accumulates
-    // doc_id.length/source.length in UTF-16 code units
-    // (Encoder.scala raw_bytes) — equal for the fixtures' ASCII ids
-    // and sources; a non-BMP doc_id would need the encoder to count
-    // code points for this reconciliation to stay exact.
-    "q82_lineage_reconcile" ->
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(coalesce(sum(length(text)), 0) AS BIGINT) AS n_tokens,
-        |  CAST(sum(4 * length(text) + length(CAST(doc_id AS VARCHAR))
-        |           + length(source) + 4) AS BIGINT) AS raw_bytes
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    // complement of q45's membership predicate over the same corpus;
-    // empty docs contain no 'q' and are kept with n_tok 0
-    "q83_token_not_search" ->
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |  CAST(length(text) AS BIGINT) AS n_tok
-        |FROM documents WHERE NOT contains(text, 'q')
-        |ORDER BY doc_id""".stripMargin,
-
-    "q66_exact_quantiles" ->
-      """WITH h AS (
-        |  SELECT source, n_chars, count(*) AS c
-        |  FROM documents GROUP BY source, n_chars),
-        |cum AS (
-        |  SELECT source, n_chars,
-        |    sum(c) OVER (PARTITION BY source ORDER BY n_chars) AS cum,
-        |    sum(c) OVER (PARTITION BY source) AS cnt
-        |  FROM h)
-        |SELECT source, CAST(max(cnt) AS BIGINT) AS n_docs,
-        |  min(CASE WHEN cum >= (cnt + 1) // 2 THEN n_chars END) AS p50,
-        |  min(CASE WHEN cum >= (cnt * 9 + 9) // 10 THEN n_chars END) AS p90,
-        |  min(CASE WHEN cum >= (cnt * 99 + 99) // 100 THEN n_chars END) AS p99
-        |FROM cum GROUP BY source ORDER BY source""".stripMargin,
-
-    "q01_scan_filter_project" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |WHERE l_shipdate < TIMESTAMP '1996-01-01' AND l_quantity > 45
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // outer CAST(... AS BIGINT): DuckDB's sum(BIGINT) returns HUGEINT,
-    // which pandas/pyarrow surface as float64 — the exact representation
-    // drift this query was de-DECIMALed to avoid
-    "q02_agg_groupby" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |  CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS sum_qty_cents,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_price_cents
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q03_distinct_sorted" ->
-      "SELECT DISTINCT source FROM documents ORDER BY source",
-
-    "q04_sort_topk" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 20""".stripMargin,
-
-    "q05_union_distinct" ->
-      """SELECT DISTINCT doc_id FROM (
-        |  SELECT doc_id FROM documents WHERE n_chars < 100
-        |  UNION ALL
-        |  SELECT doc_id FROM documents WHERE source = 'src1')
-        |ORDER BY doc_id""".stripMargin,
-
-    "q06_join_agg" ->
-      """SELECT o_orderpriority, count(*) AS n_items,
-        |  CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS sum_qty_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q07_filter_regex" ->
-      """SELECT source, count(*) AS n FROM documents
-        |WHERE regexp_matches(text, 'hash (join|agg)')
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    "q08_filter_in_not" ->
-      """SELECT l_returnflag, count(*) AS n FROM lineitem
-        |WHERE l_returnflag IN ('A','R') AND NOT l_linestatus = 'F'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q09_tokenize_counts" ->
-      """SELECT doc_id, CAST(length(text) AS BIGINT) AS n_tok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q10_roundtrip_encode_decode" ->
-      """SELECT source, count(*) AS n_docs,
-        |  CAST(sum(cp_sum) AS BIGINT) AS token_sum
-        |FROM (
-        |  SELECT source,
-        |    coalesce((SELECT sum(unicode(ch)) FROM unnest(string_split(text, '')) AS u(ch)
-        |              WHERE ch <> ''), 0) AS cp_sum
-        |  FROM documents)
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    "q11_dedup_exact" ->
-      """SELECT fp, count(*) AS n, min(doc_id) AS keeper FROM (
-        |  SELECT md5(substring(text, 1, 20)) AS fp, doc_id FROM documents)
-        |GROUP BY fp HAVING count(*) > 1 ORDER BY fp""".stripMargin,
-
-    "q12_dedup_stats" ->
-      """SELECT source, count(*) AS n_docs,
-        |  count(DISTINCT md5(text)) AS n_unique
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    "q13_window_rank" ->
-      """SELECT event_type, day, n, CAST(rk AS INTEGER) AS rk FROM (
-        |  SELECT event_type, day, n,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY n DESC, day) AS rk
-        |  FROM (
-        |    SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day, count(*) AS n
-        |    FROM events GROUP BY event_type, CAST(date_trunc('day', ts) AS DATE)))
-        |WHERE rk <= 3 ORDER BY event_type, rk""".stripMargin,
-
-    "q14_quality_score" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS word_cnt,
-        |  CAST((length(text) - length(replace(text, 'the', ''))) / 3 AS BIGINT) AS the_cnt,
-        |  n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q15_langid" ->
-      """SELECT lang,
-        |  CASE WHEN text LIKE '% the %' THEN 'en' ELSE 'other' END AS predicted,
-        |  count(*) AS n
-        |FROM documents GROUP BY lang, predicted ORDER BY lang, predicted""".stripMargin,
-
-    "q16_token_count_ws" ->
-      """SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q17_fingerprint" ->
-      "SELECT doc_id, md5(text) AS fp FROM documents ORDER BY doc_id",
-
-    // DuckDB single-quoted strings are literal (no backslash escapes),
-    // so the Java pattern string drops in verbatim; \s means the same
-    // whitespace class in RE2 and java.util.regex for this corpus
-    "q25_token_count_bpe" ->
-      ("""SELECT doc_id, CAST(len(regexp_extract_all(text, '""" +
-        graft.text.Analyzer.BpeIshPattern +
-        """')) AS BIGINT) AS n_bpe_tokens FROM documents ORDER BY doc_id"""),
-
-    "q18_minhash" ->
-      """SELECT doc_id,
-        |  list_min(list_transform(sh, x -> substr(md5(x), 1, 8))) AS mh0,
-        |  list_min(list_transform(sh, x -> substr(md5(x), 9, 8))) AS mh1,
-        |  list_min(list_transform(sh, x -> substr(md5(x), 17, 8))) AS mh2,
-        |  list_min(list_transform(sh, x -> substr(md5(x), 25, 8))) AS mh3
-        |FROM (
-        |  SELECT doc_id,
-        |    list_transform(range(1, len(w) - 1),
-        |      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS sh
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))
-        |ORDER BY doc_id""".stripMargin,
-
-    "q19_lsh_buckets" ->
-      """WITH mh AS (
-        |  SELECT doc_id,
-        |    list_min(list_transform(sh, x -> substr(md5(x), 1, 8))) AS mh0,
-        |    list_min(list_transform(sh, x -> substr(md5(x), 9, 8))) AS mh1,
-        |    list_min(list_transform(sh, x -> substr(md5(x), 17, 8))) AS mh2,
-        |    list_min(list_transform(sh, x -> substr(md5(x), 25, 8))) AS mh3
-        |  FROM (
-        |    SELECT doc_id,
-        |      list_transform(range(1, len(w) - 1),
-        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS sh
-        |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))),
-        |bands AS (
-        |  SELECT 0 AS band, mh0 AS bucket, doc_id FROM mh
-        |  UNION ALL SELECT 1, mh1, doc_id FROM mh
-        |  UNION ALL SELECT 2, mh2, doc_id FROM mh
-        |  UNION ALL SELECT 3, mh3, doc_id FROM mh)
-        |SELECT band, bucket, count(*) AS n_docs FROM bands
-        |GROUP BY band, bucket HAVING count(*) > 1
-        |ORDER BY band, bucket""".stripMargin,
-
-    "q20_ngram_jaccard" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(w) - 1),
-        |      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |        WHERE doc_id < 25)),
-        |probe AS (SELECT sh AS probe_sh FROM d WHERE doc_id = 0)
-        |SELECT doc_id,
-        |  CAST(len(list_intersect(sh, probe_sh)) AS BIGINT) AS inter,
-        |  CAST(len(list_distinct(list_concat(sh, probe_sh))) AS BIGINT) AS uni
-        |FROM d, probe ORDER BY doc_id""".stripMargin,
-
-    "q21_embed_stats" ->
-      """SELECT label, count(*) AS n, min(vec_id) AS min_id, max(vec_id) AS max_id
-        |FROM embeddings GROUP BY label ORDER BY label""".stripMargin,
-
-    "q24_intersect_except" ->
-      """WITH a AS (SELECT doc_id FROM documents WHERE n_chars > 200),
-        |b AS (SELECT doc_id FROM documents WHERE source IN ('src1','src2','src3'))
-        |SELECT doc_id, 'both' AS op FROM (SELECT doc_id FROM a INTERSECT SELECT doc_id FROM b)
-        |UNION ALL
-        |SELECT doc_id, 'only_long' AS op FROM (SELECT doc_id FROM a EXCEPT SELECT doc_id FROM b)
-        |ORDER BY op, doc_id""".stripMargin,
-
-    "q23_decode_pruned" ->
-      """SELECT doc_id, CAST(length(text) AS BIGINT) AS n_tok
-        |FROM documents WHERE source = 'src1' ORDER BY doc_id""".stripMargin,
-
-    "q38_shingle_neardup_pairs" ->
-      s"""WITH $shinglePairsCte
-         |SELECT a, b FROM pairs ORDER BY a, b""".stripMargin,
-
-    // exact oracle for Analyzer.winnow (k=8, w=16): poly-31 k-gram hash
-    // + splitmix64 finalize re-expressed in wrapping mod-2^64 HUGEINT
-    // arithmetic (64x64 multiply split at 2^32 so the 128-bit product
-    // never overflows HUGEINT). Two winnowing facts keep the SQL sane:
-    // (1) every gram position is covered by some window, and the
-    // global-min gram wins the window containing it, so min_fp = signed
-    // min over ALL grams — no windowing needed for that column; (2) the
-    // rightmost-min argmin index is non-decreasing as the window slides
-    // (any j left of a rightmost min has a strictly-or-equal greater
-    // hash, so a pick can only move right), so the kernel's
-    // consecutive-dedup pick count equals count(DISTINCT argmin) —
-    // pinned by an AnalyzerSpec property test. Rightmost tie-break is
-    // encoded in the key as (sg+2^63)*2^32 + (2^32-p): unsigned-mapped
-    // signed hash in the high bits, descending position in the low 32.
-    // ASCII precondition as q36 (ord == charAt on these texts).
-    "q35_winnow_fingerprint" ->
-      """WITH docs AS (
-        |  SELECT doc_id, text, length(text) AS n FROM documents
-        |), grams0 AS (
-        |  SELECT d.doc_id, d.n - 7 AS m, gp.p,
-        |    CAST(list_reduce(
-        |      list_prepend(CAST(1125899906842597 AS HUGEINT),
-        |        list_transform(range(CAST(gp.p AS INT), CAST(gp.p + least(d.n, 8) AS INT)),
-        |          i -> CAST(ord(substring(d.text, i, 1)) AS HUGEINT))),
-        |      (h, c) -> (h * 31 + c) % 18446744073709551616
-        |    ) AS UBIGINT) AS h
-        |  FROM docs d, LATERAL (SELECT unnest(range(1, greatest(1, d.n - 7) + 1)) AS p) gp
-        |  WHERE d.n >= 1
-        |), s1 AS (
-        |  SELECT doc_id, m, p,
-        |    CAST((CAST(h AS HUGEINT) + 11400714819323198485) % 18446744073709551616 AS UBIGINT) AS x
-        |  FROM grams0
-        |), s2 AS (SELECT doc_id, m, p, xor(x, x >> 30) AS x FROM s1
-        |), s3 AS (
-        |  SELECT doc_id, m, p,
-        |    CAST((((CAST(x >> 32 AS HUGEINT) * 13787848793156543929) % 4294967296) * 4294967296
-        |         + CAST(x & 4294967295 AS HUGEINT) * 13787848793156543929)
-        |         % 18446744073709551616 AS UBIGINT) AS x
-        |  FROM s2
-        |), s4 AS (SELECT doc_id, m, p, xor(x, x >> 27) AS x FROM s3
-        |), s5 AS (
-        |  SELECT doc_id, m, p,
-        |    CAST((((CAST(x >> 32 AS HUGEINT) * 10723151780598845931) % 4294967296) * 4294967296
-        |         + CAST(x & 4294967295 AS HUGEINT) * 10723151780598845931)
-        |         % 18446744073709551616 AS UBIGINT) AS x
-        |  FROM s4
-        |), grams AS (
-        |  SELECT doc_id, m, p,
-        |    CAST(CAST(xor(x, x >> 31) AS HUGEINT)
-        |         - CASE WHEN xor(x, x >> 31) >= 9223372036854775808
-        |                THEN 18446744073709551616 ELSE 0 END AS BIGINT) AS sg
-        |  FROM s5
-        |), keyed AS (
-        |  SELECT doc_id, m, p,
-        |    (CAST(sg AS HUGEINT) + 9223372036854775808) * 4294967296 + (4294967296 - p) AS key
-        |  FROM grams
-        |), winmin AS (
-        |  SELECT doc_id, m, p,
-        |    min(key) OVER (PARTITION BY doc_id ORDER BY p
-        |                   ROWS BETWEEN CURRENT ROW AND 15 FOLLOWING) AS wmin
-        |  FROM keyed
-        |), picks AS (
-        |  SELECT doc_id, count(DISTINCT 4294967296 - (wmin % 4294967296)) AS n_fp
-        |  FROM winmin WHERE m > 16 AND p <= m - 15
-        |  GROUP BY doc_id
-        |), agg AS (
-        |  SELECT doc_id, min(sg) AS min_sg, max(m) AS m FROM grams GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(CASE WHEN a.m <= 16 THEN 1 ELSE pk.n_fp END, 0) AS BIGINT) AS n_fingerprints,
-        |  CAST(coalesce(a.min_sg, 0) AS BIGINT) AS min_fp
-        |FROM docs d LEFT JOIN agg a USING (doc_id) LEFT JOIN picks pk USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // exact twin of Analyzer.englishScore/langId: hit-rate of the text's
-    // char bigrams against the same 50-bigram table, threshold 0.22
-    // re-expressed integer-exact (50*hits >= 11*(len-1) <=> hits/(len-1)
-    // >= 11/50; the kernel's double divide is correctly rounded and the
-    // nearest rational to the threshold at len <= 32k is ~2e-6 away, 11
-    // orders above double rounding error, so the integer compare and the
-    // double compare agree on every representable input). Texts are
-    // ASCII (checked), so DuckDB lower()/length() match the JVM's
-    // UTF-16 toLowerCase/length.
-    "q36_langid_ngram" -> {
-      val bigrams = graft.text.Analyzer.EnglishBigramList
-        .map(b => "'" + b.replace("'", "''") + "'").mkString("[", ",", "]")
-      s"""WITH scored AS (
-         |  SELECT lang,
-         |    CASE WHEN length(text) >= 2 AND
-         |      50 * len(list_filter(range(1, length(text)),
-         |          i -> list_contains($bigrams, substring(lower(text), CAST(i AS INT), 2))))
-         |      >= 11 * (length(text) - 1)
-         |    THEN 'en' ELSE 'other' END AS predicted
-         |  FROM documents)
-         |SELECT lang, predicted, count(*) AS n FROM scored
-         |GROUP BY lang, predicted ORDER BY lang, predicted""".stripMargin
-    },
-
-    "q26_decode_point_lookup" ->
-      """SELECT doc_id, CAST(length(text) AS BIGINT) AS n_tok
-        |FROM documents WHERE doc_id = 42 ORDER BY doc_id""".stripMargin,
-
-    // ch <> '' + coalesce: string_split('', '') yields [''] and
-    // unicode('') = -1, which would score an empty doc as token_sum -1
-    // where the Spark fold over zero tokens gives 0
-    "q53_doc_index_lookup" ->
-      """SELECT doc_id, source, CAST(length(text) AS BIGINT) AS n_tok,
-        |  CAST(coalesce((SELECT sum(unicode(ch))
-        |        FROM unnest(string_split(text, '')) AS u(ch)
-        |        WHERE ch <> ''), 0) AS BIGINT) AS token_sum
-        |FROM documents WHERE doc_id IN (42, 123, 321) ORDER BY doc_id""".stripMargin,
-
-    // Gopher 2-gram repetition counts: range() is end-exclusive so
-    // list_transform(range(1, len(w)), ...) yields the len-1 2-grams;
-    // docs with < 2 words get max 0 via the LEFT JOIN coalesce
-    "q54_repetition_stats" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |g AS (SELECT doc_id,
-        |        unnest(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS g2
-        |      FROM w),
-        |gc AS (SELECT doc_id, g2, count(*) AS c FROM g GROUP BY doc_id, g2),
-        |m AS (SELECT doc_id, max(c) AS mx FROM gc GROUP BY doc_id)
-        |SELECT w.doc_id,
-        |  CAST(len(w.w) AS BIGINT) AS n_words,
-        |  CAST(len(list_distinct(w.w)) AS BIGINT) AS n_distinct_words,
-        |  CAST(greatest(len(w.w) - 1, 0) AS BIGINT) AS n_2grams,
-        |  CAST(coalesce(m.mx, 0) AS BIGINT) AS max_2gram_count,
-        |  CAST(CASE WHEN len(w.w) > 1 AND coalesce(m.mx, 0) * 5 >= len(w.w) - 1
-        |       THEN 1 ELSE 0 END AS BIGINT) AS flag_repetitive
-        |FROM w LEFT JOIN m ON w.doc_id = m.doc_id
-        |ORDER BY w.doc_id""".stripMargin,
-
-    "q55_vocab_topk" ->
-      """SELECT w AS word, CAST(count(*) AS BIGINT) AS n
-        |FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-        |GROUP BY w HAVING count(*) >= 10
-        |ORDER BY n DESC, word LIMIT 50""".stripMargin,
-
-    // first-row lag is NULL; NULL <= 1800000000 is NULL -> ELSE 1, the
-    // same branch the Spark when/otherwise takes
-    "q56_sessionize" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS tus FROM events),
-        |g AS (SELECT user_id, tus,
-        |  CASE WHEN tus - lag(tus) OVER (PARTITION BY user_id ORDER BY tus)
-        |    <= 1800000000 THEN 0 ELSE 1 END AS new_s FROM e),
-        |s AS (SELECT user_id, tus,
-        |  sum(new_s) OVER (PARTITION BY user_id ORDER BY tus
-        |    ROWS UNBOUNDED PRECEDING) AS sid FROM g),
-        |per AS (SELECT user_id, sid, count(*) AS n_ev,
-        |  max(tus) - min(tus) AS dur FROM s GROUP BY 1, 2)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_sessions,
-        |  CAST(sum(n_ev) AS BIGINT) AS n_events,
-        |  CAST(max(n_ev) AS BIGINT) AS max_session_events,
-        |  CAST(max(dur) AS BIGINT) AS max_session_us
-        |FROM per GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // the oracle states the interval predicate directly — DuckDB can
-    // afford the quadratic plan at oracle scale
-    "q58_range_join" ->
-      """SELECT e.event_id,
-        |  CAST(count(p.event_id) AS BIGINT) AS n_purchases_5min
-        |FROM (SELECT * FROM events WHERE event_type = 'error') e
-        |LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-        |  ON epoch_us(p.ts) > epoch_us(e.ts)
-        | AND epoch_us(p.ts) <= epoch_us(e.ts) + 300000000
-        |GROUP BY e.event_id ORDER BY e.event_id""".stripMargin,
-
-    // DuckDB's native ASOF JOIN (>= includes equal-instant clicks, the
-    // tag-ordering convention of the Spark union+window plan)
-    "q57_asof_join" ->
-      """SELECT p.event_id AS event_id, c.event_id AS click_event_id,
-        |  epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY event_id""".stripMargin,
-
-    // the same quantization in list algebra — DuckDB round() on DOUBLE
-    // is std::round (half away from zero on the exact binary value) ==
-    // the kernel's BigDecimal HALF_UP, and (x * 127.0) / m keeps the
-    // identical IEEE op order; n_mismatch is structurally zero (any
-    // codec round-trip divergence on the Spark side breaks the hash)
-    "q59_embed_quantize" ->
-      """WITH m2 AS (
-        |  SELECT label, de, list_max(list_transform(de, x -> abs(x))) AS m
-        |  FROM (SELECT label,
-        |          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS de
-        |        FROM embeddings)),
-        |q AS (
-        |  SELECT label,
-        |    CASE WHEN m > 0
-        |      THEN list_transform(de, x -> CAST(round(x * 127.0 / m) AS BIGINT))
-        |      ELSE list_transform(de, x -> CAST(0 AS BIGINT)) END AS qe
-        |  FROM m2)
-        |SELECT label,
-        |  CAST(count(*) AS BIGINT) AS n_vecs,
-        |  CAST(sum(len(qe)) AS BIGINT) AS n_dims,
-        |  CAST(sum(list_sum(qe)) AS BIGINT) AS sum_q,
-        |  CAST(sum(list_sum(list_transform(qe, v -> abs(v)))) AS BIGINT)
-        |    AS sum_abs_q,
-        |  CAST(coalesce(sum(len(list_filter(qe, v -> abs(v) = 127))), 0)
-        |    AS BIGINT) AS n_sat,
-        |  CAST(0 AS BIGINT) AS n_mismatch
-        |FROM q GROUP BY label ORDER BY label""".stripMargin,
-
-    // same SQ8 quantization CTE as q59; the integer scale is
-    // round(m * 2^20) with DuckDB round() == std::round == the
-    // kernel's exact-binary BigDecimal HALF_UP, and the score/rank
-    // pipeline is pure BIGINT so the hash compare is exact
-    "q60_quantized_ann" ->
-      """WITH m2 AS (
-        |  SELECT vec_id, de, list_max(list_transform(de, x -> abs(x))) AS m
-        |  FROM (SELECT CAST(vec_id AS BIGINT) AS vec_id,
-        |          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS de
-        |        FROM embeddings)),
-        |cv AS (
-        |  SELECT vec_id,
-        |    CASE WHEN m > 0
-        |      THEN list_transform(de, x -> CAST(round(x * 127.0 / m) AS BIGINT))
-        |      ELSE list_transform(de, x -> CAST(0 AS BIGINT)) END AS qe,
-        |    CASE WHEN m > 0 THEN CAST(round(m * 1048576.0) AS BIGINT)
-        |      ELSE CAST(0 AS BIGINT) END AS scale_i
-        |  FROM m2),
-        |qv AS (SELECT vec_id AS qid, qe AS qqe FROM cv WHERE vec_id < 3),
-        |pairs AS (
-        |  SELECT qv.qid, cv.vec_id, cv.scale_i,
-        |    CAST(list_sum(list_transform(list_zip(cv.qe, qv.qqe),
-        |      p -> p[1] * p[2])) AS BIGINT) AS dot_q
-        |  FROM cv, qv WHERE cv.vec_id <> qv.qid)
-        |SELECT qid, rank, vec_id, dot_q, scale_i, score FROM (
-        |  SELECT qid, vec_id, dot_q, scale_i, dot_q * scale_i AS score,
-        |    CAST(row_number() OVER (PARTITION BY qid
-        |      ORDER BY dot_q * scale_i DESC, vec_id) AS BIGINT) AS rank
-        |  FROM pairs) WHERE rank <= 5
-        |ORDER BY qid, rank""".stripMargin,
-
-    // q42's coarse assignment (x1000 L2, tie-break cent_id) + q60's
-    // SQ8 scoring CTE, both integer-exact as proven by those oracles
-    "q63_ivf_sq8" ->
-      """WITH m2 AS (
-        |  SELECT vec_id, de, list_max(list_transform(de, x -> abs(x))) AS m
-        |  FROM (SELECT CAST(vec_id AS BIGINT) AS vec_id,
-        |          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS de
-        |        FROM embeddings)),
-        |cv AS (
-        |  SELECT vec_id,
-        |    list_transform(de, x -> CAST(round(x * 1000) AS BIGINT)) AS ce,
-        |    CASE WHEN m > 0
-        |      THEN list_transform(de, x -> CAST(round(x * 127.0 / m) AS BIGINT))
-        |      ELSE list_transform(de, x -> CAST(0 AS BIGINT)) END AS qe,
-        |    CASE WHEN m > 0 THEN CAST(round(m * 1048576.0) AS BIGINT)
-        |      ELSE CAST(0 AS BIGINT) END AS scale_i
-        |  FROM m2),
-        |cents AS (SELECT vec_id AS cent_id, ce AS cc FROM cv WHERE vec_id < 16),
-        |assigned AS (
-        |  SELECT vec_id, qe, scale_i, cent_id FROM (
-        |    SELECT v.vec_id, v.qe, v.scale_i, c.cent_id,
-        |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |        list_sum(list_transform(list_zip(v.ce, c.cc),
-        |          p -> (p[1] - p[2]) * (p[1] - p[2]))), c.cent_id) AS rk
-        |    FROM cv v, cents c) WHERE rk = 1),
-        |probe_cells AS (
-        |  SELECT qid, qqe, cent_id FROM (
-        |    SELECT p.vec_id AS qid, p.qe AS qqe, c.cent_id,
-        |      row_number() OVER (PARTITION BY p.vec_id ORDER BY
-        |        list_sum(list_transform(list_zip(p.ce, c.cc),
-        |          p2 -> (p2[1] - p2[2]) * (p2[1] - p2[2]))), c.cent_id) AS rk
-        |    FROM cv p, cents c WHERE p.vec_id < 3) WHERE rk <= 2),
-        |cand AS (
-        |  SELECT pc.qid, a.vec_id, a.cent_id, a.scale_i,
-        |    CAST(list_sum(list_transform(list_zip(a.qe, pc.qqe),
-        |      p -> p[1] * p[2])) AS BIGINT) AS dot_q
-        |  FROM assigned a JOIN probe_cells pc ON a.cent_id = pc.cent_id
-        |  WHERE a.vec_id <> pc.qid)
-        |SELECT qid, rank, vec_id, cent_id, dot_q, scale_i, score FROM (
-        |  SELECT qid, vec_id, cent_id, dot_q, scale_i,
-        |    dot_q * scale_i AS score,
-        |    CAST(row_number() OVER (PARTITION BY qid
-        |      ORDER BY dot_q * scale_i DESC, vec_id) AS BIGINT) AS rank
-        |  FROM cand) WHERE rank <= 5
-        |ORDER BY qid, rank""".stripMargin,
-
-    // the Bloom verdict re-derived from set-bit POSITIONS (equivalent
-    // to the packed words): hit iff both md5-window positions of the
-    // probe shingle appear among the benchmark set's positions. The
-    // hex->int windows are nibble-reduces of md5 chars 1-8 and 9-16 —
-    // the same big-endian value Bloom.positions computes from bytes.
-    "q61_bloom_decontaminate" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |    substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS k,
-        |    list_distinct(list_transform(range(1, len(w) - 3),
-        |      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' ||
-        |           w[i+3] || ' ' || w[i+4])) AS sh
-        |  FROM (SELECT doc_id, source, string_split(text, ' ') AS w
-        |        FROM documents)),
-        |bench AS (SELECT DISTINCT unnest(sh) AS s FROM d WHERE k < '051eb852'),
-        |bpos AS (SELECT DISTINCT p FROM (
-        |  SELECT unnest([
-        |    list_reduce(list_transform(range(1, 9),
-        |      i -> CAST(instr('0123456789abcdef', substring(md5(s), i, 1)) - 1
-        |        AS BIGINT)), (a, x) -> a * 16 + x) % 65536,
-        |    list_reduce(list_transform(range(9, 17),
-        |      i -> CAST(instr('0123456789abcdef', substring(md5(s), i, 1)) - 1
-        |        AS BIGINT)), (a, x) -> a * 16 + x) % 65536]) AS p
-        |  FROM bench)),
-        |tr AS (SELECT source, unnest(sh) AS s FROM d WHERE k >= '051eb852'),
-        |pr AS (
-        |  SELECT source, s,
-        |    list_reduce(list_transform(range(1, 9),
-        |      i -> CAST(instr('0123456789abcdef', substring(md5(s), i, 1)) - 1
-        |        AS BIGINT)), (a, x) -> a * 16 + x) % 65536 AS p1,
-        |    list_reduce(list_transform(range(9, 17),
-        |      i -> CAST(instr('0123456789abcdef', substring(md5(s), i, 1)) - 1
-        |        AS BIGINT)), (a, x) -> a * 16 + x) % 65536 AS p2
-        |  FROM tr),
-        |h AS (
-        |  SELECT source, s,
-        |    CASE WHEN p1 IN (SELECT p FROM bpos)
-        |          AND p2 IN (SELECT p FROM bpos) THEN 1 ELSE 0 END AS hit
-        |  FROM pr)
-        |SELECT source,
-        |  CAST(count(*) AS BIGINT) AS n_probes,
-        |  CAST(sum(hit) AS BIGINT) AS n_bloom_hits,
-        |  CAST(sum(CASE WHEN hit = 1 AND s IN (SELECT s FROM bench)
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_true_hits,
-        |  CAST(sum(hit) - sum(CASE WHEN hit = 1 AND s IN (SELECT s FROM bench)
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_false_pos
-        |FROM h GROUP BY source ORDER BY source""".stripMargin,
-
-    // same quarter-epoch weights, integer fractional-copy rule, and
-    // per-copy shard hash; range(1, n+1) is end-exclusive = [1..n]
-    "q62_epoch_upsample" ->
-      """WITH b AS (
-        |  SELECT doc_id, source, n_chars,
-        |    CAST(substring(source, 4) AS BIGINT) AS srcn,
-        |    list_reduce(list_transform(range(1, 9),
-        |      i -> CAST(instr('0123456789abcdef',
-        |        substring(md5(CAST(doc_id AS VARCHAR) || ':' || source), i, 1))
-        |        - 1 AS BIGINT)), (a, x) -> a * 16 + x) AS key32
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, source, n_chars,
-        |    (1 + (srcn % 5) * 2) // 4
-        |      + CASE WHEN key32 < ((1 + (srcn % 5) * 2) % 4) * 1073741824
-        |        THEN 1 ELSE 0 END AS nc
-        |  FROM b),
-        |e AS (
-        |  SELECT doc_id, source, n_chars,
-        |    unnest(range(1, nc + 1)) AS copy
-        |  FROM c WHERE nc >= 1),
-        |f AS (
-        |  SELECT source, n_chars,
-        |    list_reduce(list_transform(range(1, 9),
-        |      i -> CAST(instr('0123456789abcdef',
-        |        substring(md5(CAST(doc_id AS VARCHAR) || ':' ||
-        |          CAST(copy AS VARCHAR)), i, 1)) - 1 AS BIGINT)),
-        |      (a, x) -> a * 16 + x) % 8 AS shard
-        |  FROM e)
-        |SELECT source, shard, CAST(count(*) AS BIGINT) AS n_copies,
-        |  CAST(sum(n_chars) AS BIGINT) AS n_tokens
-        |FROM f GROUP BY source, shard ORDER BY source, shard""".stripMargin,
-
-    "q27_decode_meta_only" ->
-      """SELECT source, count(*) AS n_docs,
-        |  CAST(sum(length(text)) AS BIGINT) AS tok_sum
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    "q39_admission_report" ->
-      """SELECT source,
-        |  CAST(count(*) AS BIGINT) AS planned_rows,
-        |  CAST(sum(length(text)) AS BIGINT) AS planned_tokens,
-        |  sum(length(text)) * (SELECT count(DISTINCT source) FROM documents)
-        |    <= (SELECT sum(length(text)) FROM documents) AS admitted
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    // occurrence count of 'q' per doc = character-count difference after
-    // removing it; tokens are text codepoints so the counts agree
-    "q45_token_search" ->
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |  CAST(length(text) - length(replace(text, 'q', '')) AS BIGINT) AS n_hits
-        |FROM documents WHERE contains(text, 'q')
-        |ORDER BY doc_id""".stripMargin,
-
-    // the same start-offset packing in SQL: window cumsum per source in
-    // STRING doc_id order (the engine's doc_id is a string; DuckDB's
-    // VARCHAR ordering is codepoint-wise like Spark's)
-    "q46_pack_plan" ->
-      """WITH plan AS (
-        |  SELECT source, length(text) AS n_tok,
-        |    CAST((sum(length(text)) OVER (PARTITION BY source
-        |        ORDER BY CAST(doc_id AS VARCHAR) ROWS UNBOUNDED PRECEDING)
-        |      - length(text)) // 2048 AS BIGINT) AS bin
-        |  FROM documents)
-        |SELECT source, bin, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_tok) AS BIGINT) AS bin_tokens
-        |FROM plan GROUP BY source, bin ORDER BY source, bin""".stripMargin,
-
-    "q47_pack_examples" ->
-      """WITH plan AS (
-        |  SELECT source, length(text) AS n_tok,
-        |    coalesce((SELECT sum(unicode(ch)) FROM unnest(string_split(text, '')) AS u(ch)
-        |              WHERE ch <> ''), 0) AS cp_sum,
-        |    CAST((sum(length(text)) OVER (PARTITION BY source
-        |        ORDER BY CAST(doc_id AS VARCHAR) ROWS UNBOUNDED PRECEDING)
-        |      - length(text)) // 2048 AS BIGINT) AS bin
-        |  FROM documents)
-        |SELECT source, bin, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_tok) AS BIGINT) AS n_tok,
-        |  CAST(sum(cp_sum) AS BIGINT) AS tok_sum
-        |FROM plan GROUP BY source, bin ORDER BY source, bin""".stripMargin,
-
-    // the mix predicate verbatim: lexicographic md5-hex threshold, the
-    // per-source fraction derived from the source's numeric suffix
-    "q48_source_mix_sample" ->
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_sampled,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_sampled
-        |FROM documents
-        |WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) <
-        |  CASE CAST(substring(source, 4) AS INT) % 4
-        |    WHEN 0 THEN '40000000' WHEN 1 THEN '80000000'
-        |    WHEN 2 THEN 'c0000000' ELSE 'g' END
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    "q49_split_assign" ->
-      """SELECT source,
-        |  CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'e0000000'
-        |         THEN 'train'
-        |       WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'f0000000'
-        |         THEN 'val'
-        |       ELSE 'test' END AS split,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS n_chars_sum
-        |FROM documents GROUP BY source, split ORDER BY source, split""".stripMargin,
-
-    // decontamination: same Mix key slice; the oracle counts EXACT
-    // raw-string 5-word shingles where Spark counts xxhash64
-    // fingerprints — equal unless a 64-bit collision occurs, so this
-    // compare is also the collision check (range is end-exclusive:
-    // i <= len-4, like sequence's inclusive 1..size-4)
-    "q50_decontaminate" ->
-      """WITH d AS (
-        |  SELECT doc_id, substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS k,
-        |    list_distinct(list_transform(range(1, len(w) - 3),
-        |      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' ||
-        |           w[i+3] || ' ' || w[i+4])) AS sh
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-        |bench AS (SELECT DISTINCT unnest(sh) AS s FROM d WHERE k < '051eb852'),
-        |tr AS (SELECT doc_id, unnest(sh) AS s FROM d WHERE k >= '051eb852')
-        |SELECT tr.doc_id, CAST(count(DISTINCT tr.s) AS BIGINT) AS n_shared_shingles
-        |FROM tr JOIN bench ON tr.s = bench.s
-        |GROUP BY tr.doc_id ORDER BY tr.doc_id""".stripMargin,
-
-    // dedup-union of the two slices = every src0/src1 doc exactly once
-    // (n_tok == codepoint count == DuckDB length(); see q46)
-    "q52_compact_merge" ->
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(length(text)) AS BIGINT) AS n_tokens
-        |FROM documents WHERE source IN ('src0', 'src1')
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    // counts from the source table; n_mismatch is structurally zero —
-    // any decode bit-divergence on the Spark side breaks the hash
-    "q51_embed_roundtrip" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_vecs,
-        |  CAST(sum(len(embedding)) AS BIGINT) AS n_floats,
-        |  CAST(0 AS BIGINT) AS n_mismatch
-        |FROM embeddings""".stripMargin,
-
-    // CAST(x AS DOUBLE) BEFORE the *1000: DuckDB would otherwise compute
-    // float32 * int in float32 while Spark widens float -> double, and
-    // the two can round differently at the .5 boundary
-    "q40_ann_dot_topk" ->
-      """WITH cv AS (
-        |  SELECT CAST(vec_id AS BIGINT) AS vec_id,
-        |    list_transform(embedding,
-        |      x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS ce
-        |  FROM embeddings),
-        |qv AS (SELECT vec_id AS qid, ce AS qe FROM cv WHERE vec_id < 3),
-        |pairs AS (
-        |  SELECT qv.qid, cv.vec_id,
-        |    CAST(list_sum(list_transform(list_zip(cv.ce, qv.qe),
-        |      p -> p[1] * p[2])) AS BIGINT) AS dot
-        |  FROM cv, qv WHERE cv.vec_id <> qv.qid)
-        |SELECT qid, rank, vec_id, dot FROM (
-        |  SELECT qid, vec_id, dot,
-        |    CAST(row_number() OVER (PARTITION BY qid ORDER BY dot DESC, vec_id)
-        |      AS BIGINT) AS rank
-        |  FROM pairs) WHERE rank <= 5
-        |ORDER BY qid, rank""".stripMargin,
-
-    "q41_embed_neardup_exact" ->
-      """WITH cv AS (
-        |  SELECT CAST(vec_id AS BIGINT) AS vec_id,
-        |    list_transform(embedding,
-        |      x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS ce
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, ce,
-        |    CAST(list_sum(list_transform(ce, x -> x * x)) AS BIGINT) AS n2
-        |  FROM cv),
-        |banded AS (
-        |  SELECT vec_id, b.band,
-        |    CAST(list_sum(list_transform(range(1, 9),
-        |      i -> CASE WHEN ce[b.band * 8 + i] > 0 THEN 1 << (i - 1)
-        |                ELSE 0 END)) AS BIGINT) AS sig
-        |  FROM cv, (SELECT unnest(range(0, 4)) AS band) b),
-        |cand AS (
-        |  SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
-        |  FROM banded x JOIN banded y
-        |    ON x.band = y.band AND x.sig = y.sig AND x.vec_id < y.vec_id),
-        |scored AS (
-        |  SELECT c.a, c.b,
-        |    CAST(list_sum(list_transform(list_zip(va.ce, vb.ce),
-        |      p -> p[1] * p[2])) AS BIGINT) AS dot,
-        |    va.n2 AS na2, vb.n2 AS nb2
-        |  FROM cand c JOIN n va ON c.a = va.vec_id JOIN n vb ON c.b = vb.vec_id)
-        |SELECT a, b, dot, na2, nb2 FROM scored
-        |WHERE dot > 0 AND 25 * dot * dot >= 4 * na2 * nb2
-        |ORDER BY a, b""".stripMargin,
-
-    // same IVF semantics as the Spark side, declared relationally:
-    // nearest-centroid assignment and probe cells via row_number with
-    // the same (d2, cent_id) tiebreak
-    "q42_ann_ivf" ->
-      """WITH cv AS (
-        |  SELECT CAST(vec_id AS BIGINT) AS vec_id,
-        |    list_transform(embedding,
-        |      x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS ce
-        |  FROM embeddings),
-        |cents AS (SELECT vec_id AS cent_id, ce AS cc FROM cv WHERE vec_id < 16),
-        |assigned AS (
-        |  SELECT vec_id, ce, cent_id FROM (
-        |    SELECT v.vec_id, v.ce, c.cent_id,
-        |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |        list_sum(list_transform(list_zip(v.ce, c.cc),
-        |          p -> (p[1] - p[2]) * (p[1] - p[2]))), c.cent_id) AS rk
-        |    FROM cv v, cents c) WHERE rk = 1),
-        |probe_cells AS (
-        |  SELECT qid, qe, cent_id FROM (
-        |    SELECT p.vec_id AS qid, p.ce AS qe, c.cent_id,
-        |      row_number() OVER (PARTITION BY p.vec_id ORDER BY
-        |        list_sum(list_transform(list_zip(p.ce, c.cc),
-        |          p2 -> (p2[1] - p2[2]) * (p2[1] - p2[2]))), c.cent_id) AS rk
-        |    FROM cv p, cents c WHERE p.vec_id < 3) WHERE rk <= 2),
-        |cand AS (
-        |  SELECT pc.qid, a.vec_id, a.cent_id,
-        |    CAST(list_sum(list_transform(list_zip(a.ce, pc.qe),
-        |      p -> p[1] * p[2])) AS BIGINT) AS dot
-        |  FROM assigned a JOIN probe_cells pc ON a.cent_id = pc.cent_id
-        |  WHERE a.vec_id <> pc.qid)
-        |SELECT qid, rank, vec_id, cent_id, dot FROM (
-        |  SELECT qid, vec_id, cent_id, dot,
-        |    CAST(row_number() OVER (PARTITION BY qid ORDER BY dot DESC, vec_id)
-        |      AS BIGINT) AS rank
-        |  FROM cand) WHERE rank <= 5
-        |ORDER BY qid, rank""".stripMargin,
-
-    // same geometry chain as the Spark side in pure integer SQL:
-    // metadata -> stub frame boundaries (per = max(1, len/nf), last
-    // frame takes the remainder) -> stride-2 sample -> 2x box-resize
-    // output sizes (ow = ceil(w/2), oh = ceil(ceil(sz/w)/2))
-    "q43_media_frame_sample" ->
-      """WITH m AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |    CAST(octet_length(encode(text)) AS BIGINT) AS len,
-        |    CAST(CASE CAST(doc_id % 3 AS INTEGER)
-        |      WHEN 0 THEN 1
-        |      WHEN 1 THEN 1 + CAST(n_chars % 3 AS INTEGER)
-        |      ELSE 1 + CAST(n_chars % 7 AS INTEGER) END AS BIGINT) AS nf,
-        |    CAST(16 + doc_id % 64 AS BIGINT) AS w
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id, len, nf, w, greatest(1, len // nf) AS per,
-        |    list_filter(range(0, nf), i -> i % 2 = 0) AS sel
-        |  FROM m),
-        |g AS (
-        |  SELECT doc_id, nf, w, len(sel) AS ns,
-        |    list_transform(sel, i ->
-        |      (CASE WHEN i = nf - 1 THEN len
-        |            ELSE least(len, least(len, i * per) + per) END)
-        |      - least(len, i * per)) AS szs
-        |  FROM f)
-        |SELECT doc_id, nf AS n_frames, CAST(ns AS BIGINT) AS n_sampled,
-        |  CAST(coalesce(list_sum(szs), 0) AS BIGINT) AS sampled_bytes,
-        |  CAST(coalesce(list_sum(list_transform(szs, sz ->
-        |    CASE WHEN sz = 0 THEN 0
-        |         ELSE ((w + 1) // 2) * (((sz + w - 1) // w + 1) // 2) END)), 0)
-        |    AS BIGINT) AS resized_bytes
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    "q44_event_time_windows" ->
-      """SELECT
-        |  strftime(time_bucket(INTERVAL '6 hours', ts), '%Y-%m-%d %H:%M:%S')
-        |    AS window_start,
-        |  event_type,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |    AS sum_value_cents
-        |FROM events
-        |GROUP BY 1, 2
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    "q28_distinct_from_metadata" ->
-      """SELECT source,
-        |  CAST(count(DISTINCT unicode(ch)) AS BIGINT) AS n_distinct_tokens
-        |FROM (
-        |  SELECT source, unnest(string_split(text, '')) AS ch
-        |  FROM documents WHERE text <> '')
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    "q31_simhash" -> {
-      val bitSums = (0 until 16)
-        .map(b => s"sum(CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS b$b")
-        .mkString(",\n    ")
-      val sig = (0 until 16)
-        .map(b => s"(CASE WHEN b$b > 0 THEN ${1L << b} ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH h AS (
-         |  SELECT doc_id,
-         |    CAST(concat('0x', substring(md5(w), 1, 4)) AS INTEGER) AS h
-         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)),
-         |b AS (
-         |  SELECT doc_id,
-         |    $bitSums
-         |  FROM h GROUP BY doc_id)
-         |SELECT doc_id, CAST($sig AS BIGINT) AS simhash
-         |FROM b ORDER BY doc_id""".stripMargin
-    },
-
-    "q22_media_meta" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'image'
-        |       WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  md5(text) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // hist16 is frame-split-invariant: the stub decoder's frames
-    // PARTITION the UTF-8 payload (MediaSpec pins byte conservation),
-    // so the byte histogram equals the histogram of encode(text) —
-    // reconstructed here per code point from the UTF-8 encoding
-    // algebra (1/2/3/4-byte sequences), no blob byte-walk needed
-    "q33_media_features" -> {
-      val bucketSums = (0 until 16)
-        .map(k => s"sum(CASE WHEN b // 16 = $k THEN 1 ELSE 0 END)")
-        .mkString(",\n    ")
-      s"""WITH bytes AS (
-         |  SELECT d.doc_id, t.b
-         |  FROM (SELECT CAST(doc_id AS BIGINT) AS doc_id, unicode(ch) AS c
-         |        FROM documents, unnest(string_split(text, '')) AS u(ch)
-         |        WHERE ch <> '') d,
-         |       unnest(CASE
-         |         WHEN c < 128 THEN [c]
-         |         WHEN c < 2048 THEN [192 + c // 64, 128 + c % 64]
-         |         WHEN c < 65536 THEN [224 + c // 4096, 128 + (c // 64) % 64, 128 + c % 64]
-         |         ELSE [240 + c // 262144, 128 + (c // 4096) % 64, 128 + (c // 64) % 64, 128 + c % 64]
-         |       END) AS t(b)),
-         |hist AS (
-         |  SELECT doc_id, count(*) AS n_bytes,
-         |    concat_ws(',',
-         |    $bucketSums) AS hist16
-         |  FROM bytes GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |  CASE d.doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
-         |  CAST(coalesce(h.n_bytes, 0) AS BIGINT) AS n_bytes,
-         |  coalesce(h.hist16, '0,0,0,0,0,0,0,0,0,0,0,0,0,0,0,0') AS hist16
-         |FROM (SELECT DISTINCT CAST(doc_id AS BIGINT) AS doc_id FROM documents) d
-         |LEFT JOIN hist h USING (doc_id)
-         |ORDER BY doc_id""".stripMargin
-    }
-  )
+  private[graft] def merge(families: Seq[Query]*): Seq[Query] = {
+    val all = families.flatten
+    val dups = all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    all
+  }
+
+  lazy val registry: Seq[Query] =
+    merge(Tpch.all, Events.all, CodecReads.all, Dedup.all, Ann.all, TextQuality.all, Packing.all)
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.plan).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

@@ -137,6 +137,7 @@ object StrCodec {
   private def readDict(r: Reader): Array[String] = {
     val dn = r.readUvarint()
     val dlens = IntCodec.decode(r)
+    require(dlens.length == dn, s"str dict: $dn entries, ${dlens.length} lengths")
     val total = r.readUvarint()
     val dict = strings(r.buf, r.pos, dlens, dn)
     r.pos += total
@@ -166,6 +167,7 @@ object StrCodec {
     id match {
       case PlainId =>
         val lens = IntCodec.decode(r)
+        require(lens.length == n, s"str plain: $n rows, ${lens.length} lengths")
         val total = r.readUvarint()
         val out = strings(r.buf, r.pos, lens, n)
         r.pos += total
@@ -173,12 +175,14 @@ object StrCodec {
       case DictId =>
         val dict = readDict(r)
         val codes = IntCodec.decode(r)
+        require(codes.length == n, s"str dict: $n rows, ${codes.length} codes")
         val out = new Array[String](n)
         var i = 0
         while (i < n) { out(i) = dict(codes(i)); i += 1 }
         out
       case FsstId =>
         val lens = IntCodec.decode(r)
+        require(lens.length == n, s"str fsst: $n rows, ${lens.length} lengths")
         strings(Fsst.decompress(r), 0, lens, n)
       case other => throw new IllegalArgumentException(s"unknown str codec $other")
     }

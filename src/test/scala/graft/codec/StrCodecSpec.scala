@@ -128,4 +128,51 @@ class StrCodecSpec extends AnyFunSuite {
       assert(dec.sameElements(arr))
     }
   }
+
+  /** `buf` with the uvarint that follows the codec id byte and `skip`
+    * further uvarints replaced by `v`.
+    */
+  private def withHeader(buf: Array[Byte], skip: Int, v: Int): Array[Byte] = {
+    val r = new BitIO.Reader(buf, 1)
+    (0 until skip).foreach(_ => r.readUvarint())
+    val at = r.pos
+    r.readUvarint()
+    val out = new ByteSink()
+    out.addBytes(buf, 0, at)
+    BitIO.writeUvarint(out, v)
+    out.addBytes(buf, r.pos, buf.length - r.pos)
+    out.result()
+  }
+
+  test("a header row count that disagrees with the blocks throws") {
+    val plainRows = Array("alpha", "beta", "gamma")
+    val (pid, plain) = StrCodec.encodeAuto(plainRows)
+    assert(pid == StrCodec.PlainId)
+    val dictRows = Array.tabulate(100)(i => Seq("web", "books", "code")(i % 3))
+    val (did, dict) = StrCodec.encodeAuto(dictRows)
+    assert(did == StrCodec.DictId)
+    // the encoder picks FSST only when it wins after zstd, so lay out
+    // an FSST buffer directly: id, row count, lengths block, symbols
+    val fsstRows = Array.fill(40)("ABCDEFGH-ABCDEFGH")
+    val fsst = {
+      val raw = fsstRows.mkString.getBytes(UTF_8)
+      val out = new ByteSink()
+      out.addByte(StrCodec.FsstId)
+      BitIO.writeUvarint(out, fsstRows.length)
+      out.addBytes(IntCodec.Plain.encode(fsstRows.map(_.length)))
+      Fsst.compress(raw, 0, raw.length, out)
+      out.result()
+    }
+    for ((name, buf, rows) <- Seq(("plain", plain, plainRows), ("dict", dict, dictRows),
+        ("fsst", fsst, fsstRows))) {
+      assert(StrCodec.decode(buf).sameElements(rows), name)
+      val n = rows.length
+      for (bad <- Seq(n - 1, n + 1, 1 << 30))
+        intercept[IllegalArgumentException](StrCodec.decode(withHeader(buf, 0, bad)))
+    }
+    // the dictionary's own entry count against its lengths block
+    for (bad <- Seq(2, 4, 1 << 30))
+      intercept[IllegalArgumentException](StrCodec.decode(withHeader(dict, 1, bad)))
+    intercept[IllegalArgumentException](StrCodec.dictValues(withHeader(dict, 1, 2)))
+  }
 }
