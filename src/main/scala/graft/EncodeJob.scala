@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.engine.{Admission, Chunker, Pipeline, Quota, ResourceExhausted, TokenRow, Verifier}
+import graft.engine.{Admission, Chunker, Pipeline, Quota, ResourceExhausted, Tables, TokenRow, Verifier}
 import graft.BenchEmit.{jstr, num}
 
 /** spark-submit entry point for the production encode job.
@@ -75,7 +75,7 @@ object EncodeJob {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    val ds = spark.read.parquet(input).as[TokenRow]
+    val ds = Tables.read(spark, input).as[TokenRow]
     val t0 = System.nanoTime()
     val report = Pipeline.run(spark, ds, out, tokensPerChunk, waves, inputSplit)
     val encodeSecs = (System.nanoTime() - t0) / 1e9
@@ -209,7 +209,7 @@ object EncodeJob {
     spark.sparkContext.setLogLevel("WARN")
     Pipeline.buildDocIndex(spark, out,
       indexFiles = opts.getOrElse("indexFiles", "0").toInt)
-    val n = spark.read.parquet(Pipeline.docIndexPath(out)).count()
+    val n = Tables.read(spark, Pipeline.docIndexPath(out)).count()
     println(s"""{"index_rows":$n,"index":${jstr(Pipeline.docIndexPath(out))}}""")
     spark.stop()
   }

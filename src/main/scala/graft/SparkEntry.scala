@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{EncodedChunk, Encoder, SessionMemo, TokenRow, Verifier}
+import graft.engine.{EncodedChunk, Encoder, SessionMemo, Tables, TokenRow, Verifier}
 import graft.queries.{Ann, CodecReads, Dedup, Events, Packing, Query, TextQuality, Tpch}
 
 /** Driver contract — queries demonstrating every operator family from
@@ -19,8 +19,11 @@ import graft.queries.{Ann, CodecReads, Dedup, Events, Packing, Query, TextQualit
   */
 object SparkEntry {
 
+  /** Fixture table `name` of the corpus in `dir`, read with its
+    * session-memoized schema ([[Tables.read]]).
+    */
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Tables.read(s, s"$dir/$name.parquet")
 
   /** Scale-adaptive kernel parallelism (guide §2.5 "input skew — one
     * huge unsplittable file ... repartition immediately after the

@@ -128,7 +128,7 @@ object Pipeline {
 
   def readChunks(spark: SparkSession, outDir: String): Dataset[EncodedChunk] = {
     import spark.implicits._
-    withMetadataDefaults(spark.read.parquet(chunksPath(outDir))).as[EncodedChunk]
+    withMetadataDefaults(Tables.read(spark, chunksPath(outDir))).as[EncodedChunk]
   }
 
   /** Consumer read path: decode the chunks table back to token rows,
@@ -660,13 +660,22 @@ object Pipeline {
       spark: SparkSession,
       outDir: String,
       keys: DocKeys
-  ): Option[Seq[Long]] = {
-    import spark.implicits._
+  ): Option[Seq[Long]] =
     if (!docIndexIsFresh(spark, outDir)) None
-    else Some(spark.read.parquet(docIndexPath(outDir))
-      .filter(keys.indexFilter)
-      .select(col("chunk_id")).distinct()
-      .as[Long].collect().toSeq)
+    else Some(indexProbe(spark, outDir, keys.indexFilter).collect().distinct.toSeq)
+
+  /** The chunk ids of the doc-index rows passing `filter`, deduplicated
+    * within each index partition and finished on the driver: one job,
+    * no shuffle (a `distinct` is an exchange, a second job under AQE).
+    * The collected ids are bounded by index partitions × chunks hit,
+    * never by the number of docs a range or prefix matches.
+    */
+  private[graft] def indexProbe(spark: SparkSession, outDir: String, filter: Column): Dataset[Long] = {
+    import spark.implicits._
+    Tables.read(spark, docIndexPath(outDir))
+      .filter(filter)
+      .select(col("chunk_id")).as[Long]
+      .mapPartitions(_.toSet.iterator)
   }
 
   /** Candidates from ONE payload-free metadata scan (chunk_id, doc_id

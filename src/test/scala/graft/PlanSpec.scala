@@ -156,6 +156,17 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"admission pre-flight pays payload I/O: $read")
   }
 
+  test("doc-index probe: chunk ids deduplicate per partition, no Exchange") {
+    import graft.engine.Pipeline
+    Pipeline.buildDocIndex(spark, chunksDir)
+    // a range probe matches many docs per chunk: the dedup that folds
+    // them must not shuffle (an Exchange is a second job under AQE)
+    val probe = Pipeline.indexProbe(spark, chunksDir, col("doc_id") >= "1")
+    assert(probe.collect().nonEmpty)
+    val p = probe.queryExecution.executedPlan.toString()
+    assert(!p.contains("Exchange"), s"doc-index probe shuffles: $p")
+  }
+
   test("point-lookup doc_id bounds are pushed to the parquet scan") {
     import org.apache.spark.sql.functions.col
     val df = spark.read.parquet(graft.engine.Pipeline.chunksPath(chunksDir))

@@ -83,6 +83,42 @@ class SessionMemoSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     Verifier.rmTree(local)
   }
 
+  /** An encoded, doc-indexed table of 400 docs in a fresh directory. */
+  private def indexedTable(): String = {
+    val dir = Files.createTempDirectory("graft-memo-jobs").toString
+    Pipeline.run(spark, Fixtures.tokenTable(spark, 400, seed = 5, partitions = 2),
+      dir, tokensPerChunk = 16 * 1024, waves = 1)
+    Pipeline.buildDocIndex(spark, dir)
+    dir
+  }
+
+  /** Asserts `body` submits `expected` jobs once warmed by a first run. */
+  private def assertWarmJobs(what: String, expected: Int)(body: => Unit): Unit = {
+    body
+    val jobs = jobsOf(body)
+    assert(jobs == expected, s"$what: submitted $jobs job(s), expected $expected")
+  }
+
+  test("an indexed point lookup submits 2 jobs: the index probe and the fetch") {
+    val dir = indexedTable()
+    val docId = Pipeline.readTokens(spark, dir).first().doc_id
+    assertWarmJobs(s"readTokensForDocId on $dir", 2)(
+      assert(Pipeline.readTokensForDocId(spark, dir, docId).collect().length == 1))
+    Verifier.rmTree(dir)
+  }
+
+  test("a full-scan count submits 2 jobs: no schema inference") {
+    val dir = indexedTable()
+    assertWarmJobs(s"readTokens count on $dir", 2)(
+      assert(Pipeline.readTokens(spark, dir).count() == 400))
+    Verifier.rmTree(dir)
+  }
+
+  test("defining a fixture table again on an unchanged file submits no job") {
+    assertWarmJobs(s"SparkEntry.t documents on $sf", 0)(
+      SparkEntry.t(spark, sf, "documents"))
+  }
+
   // runs last: it stops the suite's session. A raw unpersist of a
   // stopped session's persisted Dataset or checkpoint RDD throws (its
   // block manager endpoint is gone), which would fail the next lookup

@@ -957,6 +957,41 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "resume over an adopted old dir must re-encode nothing (duplicate append)")
   }
 
+  /** A copy of `src`'s chunks table without the token payload column. */
+  private def writeWithoutTokens(src: String, dst: String): Unit =
+    spark.read.parquet(Pipeline.chunksPath(src)).drop("tokens_enc")
+      .write.mode("overwrite").option("compression", "zstd")
+      .parquet(Pipeline.chunksPath(dst))
+
+  private def assertPayloadMissing(dir: String): Unit = {
+    import org.apache.spark.sql.AnalysisException
+    intercept[AnalysisException](Pipeline.readChunks(spark, dir))
+    intercept[AnalysisException](Pipeline.readTokens(spark, dir).collect())
+  }
+
+  test("chunks written without the token payload fail loudly, never read as null") {
+    val ds = Fixtures.tokenTable(spark, 100, seed = 23, medianLen = 64, maxLen = 512, partitions = 2)
+    val good = tmpDir()
+    Pipeline.run(spark, ds, good, tokensPerChunk = 16 * 1024, waves = 1)
+    val bad = tmpDir()
+    writeWithoutTokens(good, bad)
+    assertPayloadMissing(bad)
+    Verifier.rmTree(good); Verifier.rmTree(bad)
+  }
+
+  test("a rewritten chunks table drops its memoized schema") {
+    val ds = Fixtures.tokenTable(spark, 100, seed = 29, medianLen = 64, maxLen = 512, partitions = 2)
+    val good = tmpDir()
+    Pipeline.run(spark, ds, good, tokensPerChunk = 16 * 1024, waves = 1)
+    val dir = tmpDir()
+    Pipeline.run(spark, ds, dir, tokensPerChunk = 16 * 1024, waves = 1)
+    // read once with the full layout: its schema (with tokens_enc) is memoized
+    assert(Pipeline.readTokens(spark, dir).count() == 100)
+    writeWithoutTokens(good, dir)
+    assertPayloadMissing(dir)
+    Verifier.rmTree(good); Verifier.rmTree(dir)
+  }
+
   test("compact: overlapping dirs merge deduplicated, independent of input order") {
     import spark.implicits._
     val ds = Fixtures.tokenTable(spark, 300, seed = 5, medianLen = 64, maxLen = 512, partitions = 2)
