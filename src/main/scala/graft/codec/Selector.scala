@@ -141,26 +141,27 @@ object Selector {
     distinct
   }
 
-  /** Choose the cheapest codec for the slice by the cost model.
-    * Chunks above [[SampleThreshold]] are measured on a strided sample
-    * (the "sampled" in sampled cost model) — encode cost stays O(n),
-    * stats cost drops to O(sample).
+  /** The cost model's stats of the slice. Slices above
+    * [[SampleThreshold]] are measured on a strided sample (the "sampled"
+    * in sampled cost model) — encode cost stays O(n), stats cost drops
+    * to O(sample) — and the counts that depend on n are rescaled to
+    * the full slice.
     */
-  def choose(a: Array[Int], from: Int, n: Int): IntCodec = {
-    val s =
-      if (n <= SampleThreshold) stats(a, from, n)
-      else {
-        val stride = n / SampleThreshold + 1
-        val m = n / stride
-        val sample = new Array[Int](m)
-        var i = 0
-        while (i < m) { sample(i) = a(from + i * stride); i += 1 }
-        val raw = stats(sample, 0, m)
-        // re-scale counts that depend on n
-        raw.copy(n = n, rleBytes = raw.rleBytes * stride)
-      }
-    chooseFromStats(s)
-  }
+  private[codec] def sampledStats(a: Array[Int], from: Int, n: Int): ChunkStats =
+    if (n <= SampleThreshold) stats(a, from, n)
+    else {
+      val stride = n / SampleThreshold + 1
+      val m = n / stride
+      val sample = new Array[Int](m)
+      var i = 0
+      while (i < m) { sample(i) = a(from + i * stride); i += 1 }
+      val raw = stats(sample, 0, m)
+      raw.copy(n = n, rleBytes = raw.rleBytes * stride)
+    }
+
+  /** Choose the cheapest codec for the slice by the cost model. */
+  def choose(a: Array[Int], from: Int, n: Int): IntCodec =
+    chooseFromStats(sampledStats(a, from, n))
 
   def chooseFromStats(s: ChunkStats): IntCodec =
     IntCodec.all.minBy(_.estimate(s))
@@ -196,6 +197,15 @@ object Selector {
   private[codec] def zstdSize(b: Array[Byte]): Long =
     com.github.luben.zstd.Zstd.compress(b, ZstdTrialLevel).length.toLong
 
+  /** The codecs the zstd trial scores: the two best by the cost model's
+    * estimate, plus ForAligned, ForSplit and Plain, which lose pre-zstd
+    * by construction but often win post-zstd (byte alignment / plane
+    * decomposition).
+    */
+  private[codec] def trialCandidates(s: ChunkStats): Seq[IntCodec] =
+    (IntCodec.all.sortBy(_.estimate(s)).take(2) :+
+      IntCodec.Plain :+ IntCodec.ForAligned :+ IntCodec.ForSplit).distinct
+
   /** Choose the codec minimizing bytes AFTER the downstream zstd pass.
     *
     * Rationale: bit-packed/dict streams destroy the byte-level patterns
@@ -208,23 +218,7 @@ object Selector {
     */
   def encodeAutoZstdAware(a: Array[Int], from: Int, n: Int): (IntCodec, Array[Byte]) = {
     if (n < 1024) return encodeAuto(a, from, n) // too small for zstd to matter
-    val s =
-      if (n <= SampleThreshold) stats(a, from, n)
-      else {
-        val stride = n / SampleThreshold + 1
-        val m = n / stride
-        val sample = new Array[Int](m)
-        var i = 0
-        while (i < m) { sample(i) = a(from + i * stride); i += 1 }
-        stats(sample, 0, m).copy(n = n)
-      }
-    val ranked = IntCodec.all.sortBy(_.estimate(s))
-    // ForAligned/ForSplit/Plain are always trialed: they lose pre-zstd
-    // by construction but often win post-zstd (byte alignment / plane
-    // decomposition)
-    val candidates =
-      (ranked.take(2) :+ IntCodec.Plain :+ IntCodec.ForAligned :+ IntCodec.ForSplit).distinct
-
+    val candidates = trialCandidates(sampledStats(a, from, n))
     val (tFrom, tN) =
       if (n <= TrialValues) (from, n)
       else (from + (n - TrialValues) / 2, TrialValues)

@@ -21,9 +21,8 @@ package graft.engine
   * false-positive rate is <1%, and the filter costs ~0.1% of a chunk's
   * encoded payload (8K docs → 16 KiB bitset vs ~16 MB chunk).
   *
-  * An absent filter (null / too short — chunks written by older engine
-  * versions) means MAY-CONTAIN: pruning is an optimization, never a
-  * correctness gate.
+  * A null, too short or malformed filter is bad input and means
+  * MAY-CONTAIN: pruning is an optimization, never a correctness gate.
   */
 object DocBloom {
   private val factory = net.jpountz.xxhash.XXHashFactory.fastestJavaInstance()
@@ -70,7 +69,7 @@ object DocBloom {
   }
 
   def mayContain(bloom: Array[Byte], docId: String): Boolean = {
-    if (bloom == null || bloom.length < 2) return true // never-prune default
+    if (bloom == null || bloom.length < 2) return true // bad input → never prune
     val bits = (bloom.length - 1) * 8
     if (Integer.bitCount(bits) != 1) return true // malformed → never prune
     val mask = bits - 1

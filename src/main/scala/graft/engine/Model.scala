@@ -49,8 +49,9 @@ final case class EncodedChunk(
     /** Bloom filter over the chunk's doc_ids ([[DocBloom]] layout) —
       * the membership rung that keeps point lookups sub-linear under
       * HASH-bucketed chunking, where [min_doc_id, max_doc_id] covers
-      * nearly the full corpus range at production chunk sizes. null =
-      * unknown (older layouts) = may-contain, never prune.
+      * nearly the full corpus range at production chunk sizes. A null
+      * or malformed filter is bad input and reads as may-contain, never
+      * prune.
       */
     doc_bloom: Array[Byte],
     /** exact distinct token count when < 2^16, else -1 — the

@@ -1,7 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** Job wiring: a resumable encode whose chunks table is its own ledger.
   *
@@ -82,43 +83,20 @@ object Pipeline {
   def readLineage(spark: SparkSession, outDir: String): Option[DataFrame] =
     existingChunkMeta(spark, outDir).map(lineageFromChunks)
 
-  /** Schema evolution for chunks at rest: metadata columns added in
-    * later engine versions (input_split, token_cardinality, min_token /
-    * max_token) are filled with unknown/never-prune defaults when a
-    * directory written by an older version lacks them (absent column)
-    * or an explicit-schema read surfaced them as null. Payload columns
-    * are NOT defaulted — their absence still fails loudly. min_token =
-    * MinValue / max_token = MaxValue is the never-prune range (the
-    * inverse of the empty-chunk (MaxValue, MinValue) prune-always
-    * convention); token_cardinality -1 = unknown, consumers decode.
+  /** The chunks table, read with the [[EncodedChunk]] layout
+    * ([[Tables.read]]): a missing layout column fails loudly, a table
+    * with no chunks reads as empty, and `part_source` is always a
+    * string. The one read of the table: every view below is a
+    * projection of it.
     */
-  private def withMetadataDefaults(df: DataFrame): DataFrame = {
-    val defaults = Seq[(String, Column)](
-      ("input_split", lit("")),
-      ("token_cardinality", lit(-1)),
-      ("min_token", lit(Int.MinValue)),
-      ("max_token", lit(Int.MaxValue)))
-    val d0 =
-      // doc_bloom's never-prune default IS null (DocBloom.mayContain
-      // treats null as may-contain), so only the absent-column case
-      // needs a synthesized column — no coalesce
-      if (!df.columns.contains("doc_bloom"))
-        df.withColumn("doc_bloom", lit(null).cast("binary"))
-      else df
-    defaults.foldLeft(d0) { case (d, (name, dflt)) =>
-      if (!d.columns.contains(name)) d.withColumn(name, dflt)
-      else d.withColumn(name, coalesce(col(name), dflt))
-    }
-  }
+  private def chunksTable(spark: SparkSession, outDir: String): DataFrame =
+    Tables.read(spark, chunksPath(outDir), Encoders.product[EncodedChunk].schema)
 
   /** Payload-free chunk metadata: every chunk column but the four
-    * encoded payloads (never read from parquet), defaults filled.
+    * encoded payloads (never read from parquet).
     */
   private def chunkMeta(spark: SparkSession, outDir: String): DataFrame =
-    withMetadataDefaults(spark.read
-      .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-      .parquet(chunksPath(outDir))
-      .drop("doc_ids_enc", "sources_enc", "lengths_enc", "tokens_enc"))
+    chunksTable(spark, outDir).drop("doc_ids_enc", "sources_enc", "lengths_enc", "tokens_enc")
 
   /** [[chunkMeta]], or None when `outDir` holds no chunks table yet. */
   private def existingChunkMeta(spark: SparkSession, outDir: String): Option[DataFrame] = {
@@ -126,10 +104,8 @@ object Pipeline {
     if (fsOf(spark, outDir).exists(p)) Some(chunkMeta(spark, outDir)) else None
   }
 
-  def readChunks(spark: SparkSession, outDir: String): Dataset[EncodedChunk] = {
-    import spark.implicits._
-    withMetadataDefaults(Tables.read(spark, chunksPath(outDir))).as[EncodedChunk]
-  }
+  def readChunks(spark: SparkSession, outDir: String): Dataset[EncodedChunk] =
+    chunksTable(spark, outDir).as(Encoders.product[EncodedChunk])
 
   /** Consumer read path: decode the chunks table back to token rows,
     * optionally restricted to some sources. The source filter lands on
@@ -164,20 +140,9 @@ object Pipeline {
     * and reserved against `budgets` BEFORE any payload is read — a
     * refused query costs one footer-grade metadata job, never a
     * full-cluster decode (the reference's quota checks before page
-    * materialization, reference: search/materialize.go:939-957).
-    */
-  def readTokensAdmitted(
-      spark: SparkSession,
-      outDir: String,
-      budgets: Admission.Budgets,
-      sources: Seq[String] = Nil,
-      verifyChecksum: Boolean = true
-  ): Dataset[TokenRow] =
-    readTokensAdmittedWithCost(spark, outDir, budgets, sources, verifyChecksum)._1
-
-  /** [[readTokensAdmitted]] plus the cost the reservation admitted, so
-    * callers report it without a second metadata job (and without
-    * duplicating the source-pruning logic).
+    * materialization, reference: search/materialize.go:939-957). The
+    * admitted cost comes back with the decode, so callers report it
+    * without a second metadata job.
     */
   def readTokensAdmittedWithCost(
       spark: SparkSession,
@@ -384,16 +349,16 @@ object Pipeline {
       require(splits == Set(tag),
         s"compact target $outDir holds a chunks table from a different input set " +
           s"(${splits.mkString(", ")}); compaction writes a NEW table or resumes its own partial output")
-      if (fs.exists(fpFile)) {
-        val stored = readSmallText(fs, fpFile, 64) // a Long prints in <= 20 chars
-        require(stored == contentFp,
-          s"compact inputs changed since the partial run in $outDir " +
-            s"(fingerprint $stored -> $contentFp); inputs must be immutable across " +
-            "a resumed compaction — restart into a fresh target")
-      }
-      // an older partial output without a fingerprint file resumes on
-      // the tag check alone (pre-fingerprint behavior), and gains the
-      // file below for subsequent resumes
+      // the fingerprint is written before the first wave, so every
+      // partial output of a compaction holds one
+      require(fs.exists(fpFile),
+        s"compact target $outDir holds chunks but no input fingerprint ($fpFile), so " +
+          "its inputs cannot be checked — restart into a fresh target")
+      val stored = readSmallText(fs, fpFile, 64) // a Long prints in <= 20 chars
+      require(stored == contentFp,
+        s"compact inputs changed since the partial run in $outDir " +
+          s"(fingerprint $stored -> $contentFp); inputs must be immutable across " +
+          "a resumed compaction — restart into a fresh target")
     }
     writeSmallText(fs, fpFile, contentFp)
     val (winners, _, metaWinnersRaw) = compactPlanInternal(spark, inDirs, dirMeta)
@@ -447,6 +412,14 @@ object Pipeline {
   // bloom path, never to a wrong answer.
 
   def docIndexPath(outDir: String) = s"$outDir/doc_index"
+
+  /** The doc-sorted index at `outDir`, read with its (doc_id, chunk_id)
+    * layout ([[Tables.read]]).
+    */
+  private[graft] def readIndexTable(spark: SparkSession, outDir: String): DataFrame =
+    Tables.read(spark, docIndexPath(outDir),
+      new StructType().add("doc_id", StringType).add("chunk_id", LongType))
+
   private def docIndexFpPath(outDir: String) =
     new org.apache.hadoop.fs.Path(outDir, "_doc_index.fp")
 
@@ -645,10 +618,10 @@ object Pipeline {
     }
   }
 
-  /** Longest chunk-id list fetched as an In-list; a longer one (an
-    * old-layout dir with null blooms names every range-covering chunk)
-    * falls back to the pushable [[DocKeys.chunkFilter]], which selects a
-    * superset the decode predicate then makes exact.
+  /** Longest chunk-id list fetched as an In-list; a longer one (a wide
+    * range, or many keys) falls back to the pushable
+    * [[DocKeys.chunkFilter]], which selects a superset the decode
+    * predicate then makes exact.
     */
   private val MaxInListIds = 1024
 
@@ -672,7 +645,7 @@ object Pipeline {
     */
   private[graft] def indexProbe(spark: SparkSession, outDir: String, filter: Column): Dataset[Long] = {
     import spark.implicits._
-    Tables.read(spark, docIndexPath(outDir))
+    readIndexTable(spark, outDir)
       .filter(filter)
       .select(col("chunk_id")).as[Long]
       .mapPartitions(_.toSet.iterator)
@@ -826,9 +799,7 @@ object Pipeline {
     */
   def readDocIndex(spark: SparkSession, outDir: String): Dataset[DocIndexRow] = {
     import spark.implicits._
-    spark.read
-      .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-      .parquet(chunksPath(outDir))
+    chunksTable(spark, outDir)
       .select(col("chunk_id"), col("doc_ids_enc"), col("lengths_enc"), col("sources_enc"))
       .as[(Long, Array[Byte], Array[Byte], Array[Byte])]
       .mapPartitions(_.flatMap { case (id, d, l, s) =>
@@ -874,8 +845,7 @@ object Pipeline {
     // by input_split (disjoint across splits), so the completed chunks
     // OF THIS SPLIT are exactly the planned ones a resume skips —
     // counting every chunk would overstate skips when the target also
-    // holds chunks from other splits (e.g. streaming micro-batches). A
-    // chunk of an older layout without input_split reads as ""
+    // holds chunks from other splits (e.g. streaming micro-batches)
     val skippedCount = done
       .map(_.filter(col("input_split") === inputSplit).select("chunk_id").distinct().count())
       .getOrElse(0L)
@@ -905,8 +875,8 @@ object Pipeline {
     // staging write + 1x staging read + 1x shuffle + 1x final write.
     val wavesEff = math.max(1, waves)
     val stagingDir = s"$outDir/_staging"
-    val stagedSchema = org.apache.spark.sql.Encoders.product[ChunkedRow].schema
-      .add("wave", org.apache.spark.sql.types.LongType)
+    val stagedSchema = Encoders.product[ChunkedRow].schema
+      .add("wave", LongType)
 
     val source: Int => Dataset[ChunkedRow] =
       if (wavesEff == 1) { _ => pending } // single wave: no staging pass
@@ -929,7 +899,7 @@ object Pipeline {
         if (failOnChunk(c.chunk_id))
           throw new RuntimeException(s"injected failure on chunk ${c.chunk_id}")
         c
-      }(org.apache.spark.sql.Encoders.product[EncodedChunk])
+      }(Encoders.product[EncodedChunk])
 
       // the wave's one write: its chunks, which are the ledger. The
       // report sums ride it as observed metrics — nothing is read back.

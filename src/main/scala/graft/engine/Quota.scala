@@ -47,7 +47,7 @@ final class Quota(val limit: Long) extends Serializable {
   /** Return a reservation to the budget — used to roll back the earlier
     * legs of a multi-quota admission when a later leg is refused, so a
     * refused query leaves EVERY budget untouched (see
-    * [[Admission.decodeAdmitted]]).
+    * [[Admission.decodeAdmittedWithCost]]).
     */
   def release(n: Long): Unit = {
     require(n >= 0, s"negative release: $n")
@@ -104,18 +104,11 @@ object Admission {
   final case class AdmittedCost(rows: Long, tokens: Long, encodedBytes: Long)
 
   /** Pre-flight the cost of decoding `chunks` against `budgets`; returns
-    * the decode Dataset only when every budget admits the reservation.
-    * The pre-flight aggregate reads ONLY small metadata columns
-    * (n_rows, n_tokens, encoded_bytes) — a refused query never touches,
-    * let alone decodes, the payload.
+    * the decode Dataset, with the cost it reserved, only when every
+    * budget admits the reservation. The pre-flight aggregate reads ONLY
+    * small metadata columns (n_rows, n_tokens, encoded_bytes) — a
+    * refused query never touches, let alone decodes, the payload.
     */
-  def decodeAdmitted(
-      chunks: Dataset[EncodedChunk],
-      budgets: Budgets,
-      verifyChecksum: Boolean = true
-  ): Dataset[TokenRow] =
-    decodeAdmittedWithCost(chunks, budgets, verifyChecksum)._1
-
   def decodeAdmittedWithCost(
       chunks: Dataset[EncodedChunk],
       budgets: Budgets,

@@ -153,8 +153,9 @@ object CodecReads {
     // all-sources mean token cost) — the reference's row-count/bytes
     // quotas (reference: search/limits.go:45-74, checks
     // search/materialize.go:939-957) surfaced as data. The refusal path
-    // itself (Admission.decodeAdmitted throwing ResourceExhausted before
-    // any payload decode) is exercised in QuotaSpec.
+    // itself (Admission.decodeAdmittedWithCost throwing
+    // ResourceExhausted before any payload decode) is exercised in
+    // QuotaSpec.
     Query("q39_admission_report", (s, dir) => {
       val per = chunksFor(s, dir, tokensPerChunk = 16384)
         .toDF()

@@ -30,6 +30,27 @@ class ReadSchemaLintSpec extends AnyFunSuite {
       src.substring(0, m.start).count(_ == '\n') + 1
     }.toSeq
 
+  /** A read of the chunks table: a `.read` call chain, or a
+    * `Tables.read`, whose path argument calls `chunksPath(`.
+    */
+  private val chunksRead =
+    """(?:\.read\b(?:\s*\.(?!parquet\()\w+\((?:[^()]|\([^()]*\))*\))*\s*\.parquet|Tables\.read)\((?:[^()]|\([^()]*\))*?chunksPath\(""".r
+
+  /** The enclosing `def` of each chunks-table read in `src`. */
+  private def chunksReads(src: String): Seq[String] =
+    chunksRead.findAllMatchIn(src).map { m =>
+      val d = src.lastIndexOf("def ", m.start)
+      if (d < 0) "" else src.substring(d + 4).takeWhile(c => c.isLetterOrDigit || c == '_')
+    }.toSeq
+
+  private def sources: Seq[(String, String)] = {
+    assert(Files.isDirectory(root), s"sources not found at ${root.toAbsolutePath}")
+    val walk = Files.walk(root)
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    files.map(f => root.relativize(f).toString -> new String(Files.readAllBytes(f), "UTF-8"))
+  }
+
   test("the lint flags a read without a schema and passes one with it") {
     assert(bareReads("""val a = spark.read.parquet(p)""") == Seq(1))
     assert(bareReads("x\nspark.read\n  .option(\"k\", f(1))\n  .parquet(p)") == Seq(2))
@@ -39,17 +60,30 @@ class ReadSchemaLintSpec extends AnyFunSuite {
   }
 
   test("no parquet read under src/main/scala/graft infers its schema") {
-    assert(Files.isDirectory(root), s"sources not found at ${root.toAbsolutePath}")
-    val walk = Files.walk(root)
-    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
     val hits = for {
-      f <- files
-      rel = root.relativize(f).toString
+      (rel, src) <- sources
       if !exempt(rel)
-      line <- bareReads(new String(Files.readAllBytes(f), "UTF-8"))
+      line <- bareReads(src)
     } yield s"$rel:$line"
     assert(hits.isEmpty,
       s"spark.read.parquet without a schema (read through graft.engine.Tables.read): ${hits.mkString(", ")}")
+  }
+
+  test("the chunks lint finds every read of chunksPath and no write") {
+    assert(chunksReads("def a = spark.read.schema(s).parquet(chunksPath(d))") == Seq("a"))
+    assert(chunksReads("def b = spark.read\n  .schema(s)\n  .parquet(Pipeline.chunksPath(d))") == Seq("b"))
+    assert(chunksReads("def c = Tables.read(spark, chunksPath(outDir))") == Seq("c"))
+    assert(chunksReads("def d = Tables.read(spark, chunksPath(o), layout)") == Seq("d"))
+    assert(chunksReads("df.write.partitionBy(\"w\").parquet(chunksPath(d))").isEmpty)
+    assert(chunksReads("Tables.read(spark, docIndexPath(o), l); x.readChunks(s, chunksPath(o))").isEmpty)
+  }
+
+  test("the chunks table is read in one place: Pipeline.chunksTable") {
+    val hits = for {
+      (rel, src) <- sources
+      d <- chunksReads(src)
+    } yield s"$rel:$d"
+    assert(hits == Seq("engine/Pipeline.scala:chunksTable"),
+      s"chunks-table reads outside Pipeline.chunksTable (build on it instead): ${hits.mkString(", ")}")
   }
 }

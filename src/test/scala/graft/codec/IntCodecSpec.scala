@@ -92,6 +92,27 @@ class IntCodecSpec extends AnyFunSuite {
     assert(enc.length < 4 * data.length / 8, s"chose ${c.name} at ${enc.length}")
   }
 
+  test("sampled stats: choose and the zstd trial see n and rleBytes at full scale") {
+    // 16-bit values with no runs: RLE costs ~4 bytes a value, far behind
+    // the frame-of-reference codecs — unless its bytes stay at the scale
+    // of the 1-in-5 sample, where they would rank it first
+    val rnd = new scala.util.Random(17)
+    val n = 4 * Selector.SampleThreshold
+    val a = Array.fill(n)(rnd.nextInt(1 << 16))
+    val s = Selector.sampledStats(a, 0, n)
+    val exact = Selector.stats(a, 0, n)
+    assert(s.n == n)
+    assert(math.abs(s.rleBytes.toDouble / exact.rleBytes - 1) < 0.05,
+      s"sampled rleBytes ${s.rleBytes} vs exact ${exact.rleBytes}")
+    assert(Selector.choose(a, 0, n) == Selector.chooseFromStats(s))
+    assert(!Selector.trialCandidates(s).contains(IntCodec.Rle),
+      s"trial candidates ${Selector.trialCandidates(s).map(_.name)}")
+    // at or under the threshold the stats are exact, never sampled
+    val small = a.take(Selector.SampleThreshold)
+    assert(Selector.sampledStats(small, 0, small.length) ==
+      Selector.stats(small, 0, small.length))
+  }
+
   test("stats: exact on small input") {
     val s = Selector.stats(Array(3, 3, 7, 7, 7, 1), 0, 6)
     assert(s.n == 6 && s.min == 1 && s.max == 7 && s.runs == 3 && s.distinct == 3 && !s.sorted)

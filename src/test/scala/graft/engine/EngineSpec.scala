@@ -923,45 +923,114 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Verifier.rmTree(victim.toString)
   }
 
-  test("chunks written by an older layout (missing metadata columns) still read") {
-    import spark.implicits._
+  /** A copy of `src`'s chunks table without the columns `drop`. */
+  private def writeWithout(src: String, dst: String, drop: Seq[String]): Unit =
+    spark.read.parquet(Pipeline.chunksPath(src)).drop(drop: _*)
+      .write.mode("overwrite").option("compression", "zstd")
+      .parquet(Pipeline.chunksPath(dst))
+
+  test("a chunks table missing a layout column fails loudly on every read path") {
+    import org.apache.spark.sql.AnalysisException
     val ds = Fixtures.tokenTable(spark, 200, seed = 21, medianLen = 64, maxLen = 512, partitions = 2)
-    val cur = tmpDir()
-    Pipeline.run(spark, ds, cur, tokensPerChunk = 16 * 1024, waves = 1)
-    // simulate a directory written before input_split/token_cardinality/
-    // min_token/max_token/doc_bloom existed
-    val old = tmpDir()
-    spark.read.parquet(Pipeline.chunksPath(cur))
-      .drop("input_split", "token_cardinality", "min_token", "max_token", "doc_bloom")
-      .write.option("compression", "zstd")
-      .parquet(Pipeline.chunksPath(old))
-    // read/decode path: defaults fill in, every row decodes
-    val decoded = Pipeline.readTokens(spark, old).collect()
-    assert(decoded.length == 200)
-    // unknown token bounds must NEVER prune: a point lookup by value on
-    // the old layout decodes rather than skipping
-    val chunks = Pipeline.readChunks(spark, old).collect()
-    assert(chunks.forall(c => c.min_token == Int.MinValue && c.max_token == Int.MaxValue))
-    assert(chunks.forall(_.token_cardinality == -1))
-    // absent doc_bloom = may-contain: a point lookup on the old layout
-    // still finds its row (the bloom rung never prunes on null)
-    assert(chunks.forall(_.doc_bloom == null))
-    val someDoc = decoded.head
-    val found = Pipeline.readTokensForDocId(spark, old, someDoc.doc_id).collect()
-    assert(found.length == 1 && found.head.tokens.sameElements(someDoc.tokens))
-    // resume over the old dir: the chunk ledger reads the absent
-    // input_split as the unknown-split default
-    val rpt = Pipeline.run(spark, ds, old, tokensPerChunk = 16 * 1024, waves = 1)
-    assert(rpt.chunksSkipped > 0, "adopted old chunks must be resumable")
-    assert(rpt.chunksEncoded == 0,
-      "resume over an adopted old dir must re-encode nothing (duplicate append)")
+    val good = tmpDir()
+    Pipeline.run(spark, ds, good, tokensPerChunk = 16 * 1024, waves = 1)
+    val doc = Pipeline.readTokens(spark, good).first().doc_id
+    Seq(
+      Seq("min_doc_id", "max_doc_id"),
+      Seq("input_split", "token_cardinality", "min_token", "max_token", "doc_bloom")
+    ).foreach { drop =>
+      val dir = tmpDir()
+      writeWithout(good, dir, drop)
+      val reads = Seq[(String, () => Any)](
+        "readChunks" -> (() => Pipeline.readChunks(spark, dir).collect()),
+        "readTokens" -> (() => Pipeline.readTokens(spark, dir).collect()),
+        "readLineage" -> (() => Pipeline.readLineage(spark, dir).map(_.collect())),
+        "readDocIndex" -> (() => Pipeline.readDocIndex(spark, dir).collect()),
+        "pointLookupChunkIds" -> (() => Pipeline.pointLookupChunkIds(spark, dir, doc)),
+        // no doc index built: the metadata-scan lookup
+        "readTokensForDocId" -> (() => Pipeline.readTokensForDocId(spark, dir, doc).collect()))
+      reads.foreach { case (name, read) =>
+        val e = intercept[AnalysisException](read())
+        assert(e.getCondition.startsWith("UNRESOLVED_COLUMN"),
+          s"$name without ${drop.mkString(", ")}: ${e.getMessage}")
+      }
+      Verifier.rmTree(dir)
+    }
+    Verifier.rmTree(good)
+  }
+
+  test("every read path agrees on all-numeric sources") {
+    import spark.implicits._
+    val rows = Seq(
+      TokenRow("a", Array(1, 2, 3), 3, "007"),
+      TokenRow("b", Array(4, 5), 2, "007"),
+      TokenRow("c", Array(6), 1, "2024"))
+    val dir = tmpDir()
+    Pipeline.run(spark, spark.createDataset(rows), dir, tokensPerChunk = 1024, waves = 1)
+    assert(Pipeline.readChunks(spark, dir).collect().map(_.part_source).toSet == Set("007", "2024"))
+    assert(Pipeline.readLineage(spark, dir).get.collect()
+      .map(_.getAs[String]("part_source")).toSet == Set("007", "2024"))
+    assert(Pipeline.readTokens(spark, dir, sources = Seq("7")).collect().isEmpty)
+    assert(Pipeline.readTokens(spark, dir, sources = Seq("007")).collect().map(_.doc_id).sorted
+      .sameElements(Seq("a", "b")))
+    assert(Pipeline.readDocIndex(spark, dir).collect().map(r => r.doc_id -> r.source).sorted
+      .sameElements(Seq("a" -> "007", "b" -> "007", "c" -> "2024")))
+    Verifier.rmTree(dir)
+  }
+
+  test("EncodeJob reads an input partitioned by all-numeric sources as written") {
+    import spark.implicits._
+    val in = tmpDir() + "/tokens"
+    spark.createDataset(Seq(
+      TokenRow("a", Array(1, 2), 2, "007"),
+      TokenRow("b", Array(3), 1, "2024")))
+      .write.partitionBy("source").parquet(in)
+    val got = graft.EncodeJob.readInput(spark, in).collect().map(r => r.doc_id -> r.source).sorted
+    assert(got.sameElements(Seq("a" -> "007", "b" -> "2024")), got.mkString(", "))
+    Verifier.rmTree(in)
+  }
+
+  test("an encode of an empty table reads as 0 rows on every path") {
+    import spark.implicits._
+    val dir = tmpDir()
+    val empty = spark.emptyDataset[TokenRow]
+    Pipeline.run(spark, empty, dir, tokensPerChunk = 1024, waves = 1)
+    def allEmpty(): Unit = {
+      assert(Pipeline.readChunks(spark, dir).collect().isEmpty)
+      assert(Pipeline.readTokens(spark, dir).collect().isEmpty)
+      assert(Pipeline.readLineage(spark, dir).get.collect().isEmpty)
+      assert(Pipeline.readDocIndex(spark, dir).collect().isEmpty)
+      assert(Pipeline.pointLookupChunkIds(spark, dir, "x").isEmpty)
+      assert(Pipeline.readTokensForDocId(spark, dir, "x").collect().isEmpty)
+    }
+    allEmpty()
+    val again = Pipeline.run(spark, empty, dir, tokensPerChunk = 1024, waves = 2)
+    assert(again.chunksEncoded == 0 && again.chunksSkipped == 0)
+    allEmpty()
+    // and a table that starts empty takes real chunks afterwards
+    val ds = Fixtures.tokenTable(spark, 50, seed = 37, medianLen = 32, maxLen = 128, partitions = 1)
+    Pipeline.run(spark, ds, dir, tokensPerChunk = 16 * 1024, waves = 1)
+    assert(Pipeline.readTokens(spark, dir).count() == 50)
+    Verifier.rmTree(dir)
+  }
+
+  test("a compaction target holding chunks but no input fingerprint refuses") {
+    val ds = Fixtures.tokenTable(spark, 100, seed = 41, medianLen = 64, maxLen = 512, partitions = 2)
+    val in = tmpDir()
+    Pipeline.run(spark, ds, in, tokensPerChunk = 16 * 1024, waves = 1)
+    val out = tmpDir() + "/out"
+    Pipeline.compact(spark, Seq(in), out, tokensPerChunk = 16 * 1024, waves = 1)
+    Files.delete(java.nio.file.Paths.get(out, "_compact_inputs.fp"))
+    val e = intercept[IllegalArgumentException](
+      Pipeline.compact(spark, Seq(in), out, tokensPerChunk = 16 * 1024, waves = 1))
+    assert(e.getMessage.contains("no input fingerprint"), e.getMessage)
+    assert(Pipeline.readTokens(spark, out).count() == 100, "a refused resume writes nothing")
+    Verifier.rmTree(in); Verifier.rmTree(out)
   }
 
   /** A copy of `src`'s chunks table without the token payload column. */
   private def writeWithoutTokens(src: String, dst: String): Unit =
-    spark.read.parquet(Pipeline.chunksPath(src)).drop("tokens_enc")
-      .write.mode("overwrite").option("compression", "zstd")
-      .parquet(Pipeline.chunksPath(dst))
+    writeWithout(src, dst, Seq("tokens_enc"))
 
   private def assertPayloadMissing(dir: String): Unit = {
     import org.apache.spark.sql.AnalysisException

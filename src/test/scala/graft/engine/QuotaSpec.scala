@@ -91,7 +91,7 @@ class QuotaSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(c => c.copy(tokens_enc = Array[Byte](1, 2, 3)))
     val tight = Admission.Budgets(tokens = Quota(10)) // corpus is way bigger
     val e = intercept[ResourceExhausted] {
-      Admission.decodeAdmitted(corrupted, tight).count()
+      Admission.decodeAdmittedWithCost(corrupted, tight)._1.count()
     }
     assert(e.resource == "token_count" && e.limit == 10)
   }
@@ -107,13 +107,13 @@ class QuotaSpec extends AnyFunSuite with BeforeAndAfterAll {
     // wrongly starve later queries sharing it
     val budgets = Admission.Budgets(rows = Quota(1000), tokens = Quota(10))
     intercept[ResourceExhausted] {
-      Pipeline.readTokensAdmitted(spark, out, budgets).count()
+      Pipeline.readTokensAdmittedWithCost(spark, out, budgets)._1.count()
     }
     assert(budgets.rows.used == 0, s"rows budget leaked: ${budgets.rows.used}")
     assert(budgets.tokens.used == 0)
     // the shared rows budget still admits a query that fits
     val ok = Admission.Budgets(rows = budgets.rows)
-    assert(Pipeline.readTokensAdmitted(spark, out, ok).count() == 100)
+    assert(Pipeline.readTokensAdmittedWithCost(spark, out, ok)._1.count() == 100)
   }
 
   test("admission: a roomy budget decodes identically to the unguarded path") {
@@ -124,7 +124,7 @@ class QuotaSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val budgets = Admission.Budgets(
       rows = Quota(1000000), tokens = Quota(1L << 40), encodedBytes = Quota(1L << 40))
-    val guarded = Pipeline.readTokensAdmitted(spark, out, budgets)
+    val guarded = Pipeline.readTokensAdmittedWithCost(spark, out, budgets)._1
       .map(r => (r.doc_id, r.tokens.toSeq)).collect().toMap
     val plain = Pipeline.readTokens(spark, out)
       .map(r => (r.doc_id, r.tokens.toSeq)).collect().toMap
@@ -142,9 +142,9 @@ class QuotaSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // budget admits one full decode but not two (tenant-style sharing)
     val budgets = Admission.Budgets(rows = Quota(150))
-    assert(Pipeline.readTokensAdmitted(spark, out, budgets).count() == 100)
+    assert(Pipeline.readTokensAdmittedWithCost(spark, out, budgets)._1.count() == 100)
     intercept[ResourceExhausted] {
-      Pipeline.readTokensAdmitted(spark, out, budgets).count()
+      Pipeline.readTokensAdmittedWithCost(spark, out, budgets)._1.count()
     }
   }
 }
