@@ -3,6 +3,9 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.io.api.Binary
+import scala.jdk.CollectionConverters._
 
 /** Job wiring: a resumable encode whose chunks table is its own ledger.
   *
@@ -404,12 +407,12 @@ object Pipeline {
   // search). Graft keeps hash-bucketed chunks (deterministic, resume-
   // friendly, skew-free) and instead offers a DERIVED index table:
   // (doc_id, chunk_id) range-partitioned and sorted by doc_id, so a
-  // lookup is a pushed-filter probe that parquet min/max stats prune
-  // to ~one row-group — O(log) file/row-group selection, independent
-  // of corpus size. The index is rebuildable metadata (~12 bytes/doc
-  // at rest), carries a chunk-set fingerprint, and every lookup
-  // validates freshness — a stale or absent index falls back to the
-  // bloom path, never to a wrong answer.
+  // lookup is a driver-side probe ([[IndexProbe]]) that the files'
+  // doc_id fences and parquet min/max stats prune to ~one file and a
+  // few pages — no Spark job, one fence per index file. The index is
+  // rebuildable metadata (~12 bytes/doc at rest), carries a chunk-set
+  // fingerprint, and every lookup validates freshness — a stale or
+  // absent index falls back to the bloom path, never to a wrong answer.
 
   def docIndexPath(outDir: String) = s"$outDir/doc_index"
 
@@ -558,18 +561,22 @@ object Pipeline {
   // (reference: search/constraint.go:33-49: a cheap superset test from
   // stats and blooms, then an exact filter, applied by one search
   // loop). Every read runs the same two phases: candidate chunk ids
-  // ([[candidateChunkIds]]: one index probe, or one payload-free
-  // metadata scan), then one payload job that decodes only the
-  // matching docs' token slices ([[fetchAndDecode]]).
+  // ([[candidateChunkIds]]: one driver-side index probe, or one
+  // payload-free metadata scan job), then one payload job that decodes
+  // only the matching docs' token slices ([[fetchAndDecode]]).
 
-  /** A doc-id key set and the four filters it implies. */
+  /** A doc-id key set and the filters it implies. */
   private sealed trait DocKeys extends Serializable {
     def isEmpty: Boolean = false
-    /** (a) doc-index rows holding a key — a pushed filter over the
-      * doc-sorted index, whose min/max stats prune it to the few
-      * row-groups covering the keys.
+    /** (a) may a doc-index file whose doc_ids span [lo, hi] (its footer
+      * fence) hold a key?
       */
-    def indexFilter: Column
+    def fenceAdmits(lo: String, hi: String): Boolean
+    /** (a) doc-index rows holding a key, as a parquet predicate: the
+      * doc-sorted index's row-group stats and column index prune it to
+      * the few pages covering the keys.
+      */
+    def indexRows: FilterPredicate
     /** (b) chunks whose [min_doc_id, max_doc_id] may hold a key — pushed
       * to parquet row-group stats. Also the candidate fetch's filter
       * when the id list is too long for an In-list.
@@ -592,7 +599,10 @@ object Pipeline {
     final case class Ids(keys: Seq[String]) extends DocKeys {
       private val keySet = keys.toSet
       override def isEmpty: Boolean = keys.isEmpty
-      def indexFilter: Column = col("doc_id").isin(keys: _*)
+      def fenceAdmits(lo: String, hi: String): Boolean =
+        keys.exists(k => Utf8Order.lteq(lo, k) && Utf8Order.lteq(k, hi))
+      def indexRows: FilterPredicate =
+        FilterApi.in(FilterApi.binaryColumn("doc_id"), keys.map(Binary.fromString).toSet.asJava)
       def chunkFilter: Column =
         col("min_doc_id") <= keys.max(Utf8Order) && col("max_doc_id") >= keys.min(Utf8Order)
       // the bloom rung keeps a point probe selective under hash
@@ -608,8 +618,13 @@ object Pipeline {
       * Bloom cannot answer a range, so (c) admits whatever (b) kept.
       */
     final case class Range(lo: String, hi: Option[String]) extends DocKeys {
-      def indexFilter: Column =
-        hi.foldLeft(col("doc_id") >= lo)((p, h) => p && col("doc_id") < h)
+      def fenceAdmits(fenceLo: String, fenceHi: String): Boolean =
+        Utf8Order.lteq(lo, fenceHi) && hi.forall(Utf8Order.lt(fenceLo, _))
+      def indexRows: FilterPredicate = {
+        val docId = FilterApi.binaryColumn("doc_id")
+        hi.foldLeft[FilterPredicate](FilterApi.gtEq(docId, Binary.fromString(lo)))((p, h) =>
+          FilterApi.and(p, FilterApi.lt(docId, Binary.fromString(h))))
+      }
       def chunkFilter: Column =
         hi.foldLeft(col("max_doc_id") >= lo)((p, h) => p && col("min_doc_id") < h)
       def admits(minId: String, maxId: String, bloom: Array[Byte]): Boolean = true
@@ -625,9 +640,10 @@ object Pipeline {
     */
   private val MaxInListIds = 1024
 
-  /** Candidates from the doc-sorted index, or None when the index is
-    * absent or stale (its fingerprint no longer matches the chunk-id
-    * set — e.g. chunks appended since the build).
+  /** Candidates from the doc-sorted index, probed on the driver with no
+    * Spark job ([[IndexProbe]]), or None when the index is absent or
+    * stale (its fingerprint no longer matches the chunk-id set — e.g.
+    * chunks appended since the build).
     */
   private def probeIndex(
       spark: SparkSession,
@@ -635,21 +651,7 @@ object Pipeline {
       keys: DocKeys
   ): Option[Seq[Long]] =
     if (!docIndexIsFresh(spark, outDir)) None
-    else Some(indexProbe(spark, outDir, keys.indexFilter).collect().distinct.toSeq)
-
-  /** The chunk ids of the doc-index rows passing `filter`, deduplicated
-    * within each index partition and finished on the driver: one job,
-    * no shuffle (a `distinct` is an exchange, a second job under AQE).
-    * The collected ids are bounded by index partitions × chunks hit,
-    * never by the number of docs a range or prefix matches.
-    */
-  private[graft] def indexProbe(spark: SparkSession, outDir: String, filter: Column): Dataset[Long] = {
-    import spark.implicits._
-    readIndexTable(spark, outDir)
-      .filter(filter)
-      .select(col("chunk_id")).as[Long]
-      .mapPartitions(_.toSet.iterator)
-  }
+    else Some(IndexProbe.chunkIds(spark, docIndexPath(outDir), keys.fenceAdmits, keys.indexRows))
 
   /** Candidates from ONE payload-free metadata scan (chunk_id, doc_id
     * bounds, doc bloom — tokens_enc never read) filtered by (b) then

@@ -11,26 +11,43 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * One rule, applied before every lookup: each entry of another
   * application (a stopped session) and each entry of the looked-up key
-  * whose stamp changed is released, then dropped. A missing path has no
-  * stamp and is never memoized. Lookups on one memo are serialized, so
-  * concurrent callers of a key compute it once.
+  * whose stamp changed is released, then dropped; and whenever a value
+  * is computed, so is each entry whose directory no longer exists (a
+  * deleted table's value would otherwise live as long as the session).
+  * A missing path has no stamp and is never memoized. Lookups on one
+  * memo are serialized, so concurrent callers of a key compute it once.
   */
 final class SessionMemo[K, V](release: V => Unit) {
-  private val entries = scala.collection.mutable.HashMap.empty[(String, K), (Long, V)]
+  /** (appId, key) -> (directory, stamp, value) */
+  private val entries = scala.collection.mutable.HashMap.empty[(String, K), (String, Long, V)]
 
   /** The value of `key` in session `s`, derived from directory `path`. */
-  def apply(s: SparkSession, key: K, path: String)(compute: => V): V =
-    get(s.sparkContext.applicationId, key,
-      SessionMemo.dirStamp(s.sparkContext.hadoopConfiguration, path))(compute)
+  def apply(s: SparkSession, key: K, path: String)(compute: => V): V = {
+    val conf = s.sparkContext.hadoopConfiguration
+    get(s.sparkContext.applicationId, key, path, SessionMemo.dirStamp(conf, path),
+      p => { val d = new Path(p); d.getFileSystem(conf).exists(d) })(compute)
+  }
 
-  /** The rule on plain values: `stamp` is None for a missing path. */
-  def get(appId: String, key: K, stamp: Option[Long])(compute: => V): V = synchronized {
-    entries.filterInPlace { case ((a, k), (st, v)) =>
-      val keep = a == appId && (k != key || stamp.contains(st))
-      if (!keep) release(v)
-      keep
+  /** The rule on plain values: `stamp` is None for a missing `path`, and
+    * `exists` tells whether a memoized entry's directory is still there.
+    */
+  def get(appId: String, key: K, path: String, stamp: Option[Long], exists: String => Boolean)(
+      compute: => V): V = synchronized {
+    def dropUnless(keep: ((String, K), (String, Long, V)) => Boolean): Unit =
+      entries.filterInPlace { (k, e) =>
+        val kept = keep(k, e)
+        if (!kept) release(e._3)
+        kept
+      }
+    dropUnless { case ((a, k), (_, st, _)) => a == appId && (k != key || stamp.contains(st)) }
+    entries.get((appId, key)) match {
+      case Some((_, _, v)) => v
+      case None =>
+        dropUnless { case (_, (p, _, _)) => exists(p) }
+        val v = compute
+        stamp.foreach(st => entries((appId, key)) = (path, st, v))
+        v
     }
-    stamp.fold(compute)(st => entries.getOrElseUpdate((appId, key), (st, compute))._2)
   }
 }
 

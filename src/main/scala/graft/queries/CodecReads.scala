@@ -305,14 +305,16 @@ object CodecReads {
 
     // doc-sorted index lookup: the log-pruning point-lookup path over
     // AT-REST chunks — build the (doc_id, chunk_id) index once, then a
-    // batch lookup probes it with a pushed isin filter (parquet min/max
-    // on the sorted files prune to ~one row-group) and decodes each
-    // candidate chunk once for all its keys (Decoder.decodeDocsTokensWhere)
+    // batch lookup probes it on the driver, no Spark job (the index
+    // files' doc_id fences pick the files to open, their row-group
+    // stats and column index the pages to read), and one fetch decodes
+    // each candidate chunk once for all its keys
+    // (Decoder.decodeDocsTokensWhere)
     Query("q53_doc_index_lookup", (s, dir) => {
       val tmp = chunksDirFor(s, dir, tokensPerChunk = 16384)
       val keys = Seq("42", "123", "321")
       // one probe decides build-or-lookup AND supplies the candidates —
-      // a fresh-index lookup pays exactly one freshness check + probe
+      // a fresh-index lookup pays one freshness check + driver probe
       val ids = graft.engine.Pipeline.lookupChunkIdsViaIndex(s, tmp, keys).getOrElse {
         graft.engine.Pipeline.buildDocIndex(s, tmp)
         graft.engine.Pipeline.lookupChunkIdsViaIndex(s, tmp, keys)
@@ -376,10 +378,10 @@ object CodecReads {
     // prefix point-family lookup over AT-REST chunks: the reference
     // derives [minv,maxv] page bounds for prefix regexes
     // (search/constraint.go:894-909); graft serves doc_id LIKE 'p%' as
-    // the range [p, prefixSuccessor(p)) — a pushed range probe on the
-    // doc-sorted index (parquet min/max prunes to the few row-groups
-    // covering the range, O(log) in corpus size; absent/stale index
-    // falls back to chunk min/max metadata), then each candidate chunk
+    // the range [p, prefixSuccessor(p)) — a driver-side range probe of
+    // the doc-sorted index (file fences and parquet min/max prune it to
+    // the few pages covering the range, no Spark job; absent/stale
+    // index falls back to chunk min/max metadata), then each candidate chunk
     // decodes its doc index once and slices only the matching docs'
     // token ranges
     Query("q81_prefix_lookup", (s, dir) => {

@@ -156,15 +156,18 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"admission pre-flight pays payload I/O: $read")
   }
 
-  test("doc-index probe: chunk ids deduplicate per partition, no Exchange") {
+  test("doc-index probe: a range probe reads the index on the driver, no Spark job") {
     import graft.engine.Pipeline
     Pipeline.buildDocIndex(spark, chunksDir)
-    // a range probe matches many docs per chunk: the dedup that folds
-    // them must not shuffle (an Exchange is a second job under AQE)
-    val probe = Pipeline.indexProbe(spark, chunksDir, col("doc_id") >= "1")
-    assert(probe.collect().nonEmpty)
-    val p = probe.queryExecution.executedPlan.toString()
-    assert(!p.contains("Exchange"), s"doc-index probe shuffles: $p")
+    assert(Pipeline.docIndexIsFresh(spark, chunksDir))
+    // a range probe matches many docs per chunk; it reads the index
+    // files itself and submits no job
+    var ids = Seq.empty[Long]
+    val jobs = SparkJobs.jobsOf(spark) { ids = Pipeline.lookupChunkIdsForRange(spark, chunksDir, "1", None) }
+    assert(jobs == 0, s"doc-index probe submitted $jobs job(s)")
+    val expected = Pipeline.readIndexTable(spark, chunksDir).filter(col("doc_id") >= "1")
+      .select("chunk_id").distinct().collect().map(_.getLong(0))
+    assert(ids.nonEmpty && ids.sorted == expected.toSeq.sorted)
   }
 
   test("point-lookup doc_id bounds are pushed to the parquet scan") {

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source lint: every parquet read in the program passes a schema, so no
   * read starts a schema-inference job. A read whose schema the caller
   * does not spell out goes through `graft.engine.Tables.read`, which
-  * infers once per table version per session.
+  * infers once per table version per session. The one read outside
+  * Spark, parquet-mr's readers on the driver, is the doc-index probe.
   */
 class ReadSchemaLintSpec extends AnyFunSuite {
 
@@ -42,6 +43,9 @@ class ReadSchemaLintSpec extends AnyFunSuite {
       val d = src.lastIndexOf("def ", m.start)
       if (d < 0) "" else src.substring(d + 4).takeWhile(c => c.isLetterOrDigit || c == '_')
     }.toSeq
+
+  /** A parquet-mr reader: `ParquetFileReader` or `ParquetReader`. */
+  private val parquetMrReader = """\bParquet(?:File)?Reader\b""".r
 
   private def sources: Seq[(String, String)] = {
     assert(Files.isDirectory(root), s"sources not found at ${root.toAbsolutePath}")
@@ -85,5 +89,17 @@ class ReadSchemaLintSpec extends AnyFunSuite {
     } yield s"$rel:$d"
     assert(hits == Seq("engine/Pipeline.scala:chunksTable"),
       s"chunks-table reads outside Pipeline.chunksTable (build on it instead): ${hits.mkString(", ")}")
+  }
+
+  test("the parquet-mr lint finds both readers and no Spark reader") {
+    assert(parquetMrReader.findFirstIn("ParquetFileReader.open(f)").nonEmpty)
+    assert(parquetMrReader.findFirstIn("val r = ParquetReader.builder(s, p)").nonEmpty)
+    assert(parquetMrReader.findFirstIn("VectorizedParquetRecordReader; ParquetReadSupport").isEmpty)
+  }
+
+  test("parquet-mr readers appear only in engine/IndexProbe.scala") {
+    val hits = sources.collect { case (rel, src) if parquetMrReader.findFirstIn(src).nonEmpty => rel }
+    assert(hits == Seq("engine/IndexProbe.scala"),
+      s"parquet-mr readers outside the doc-index probe (read through Tables.read): ${hits.mkString(", ")}")
   }
 }

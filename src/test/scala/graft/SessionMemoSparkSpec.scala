@@ -29,25 +29,7 @@ class SessionMemoSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def checkpointRddIds(df: DataFrame): Seq[Int] =
     df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }
 
-  /** Spark jobs `body` submits. The status store fills from the listener
-    * bus in event order, so once a marker job submitted after `body` is
-    * visible, every job of `body` is too.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"memo-spec-${System.nanoTime()}"
-    def inGroup(g: String)(f: => Unit): Unit = {
-      sc.setJobGroup(g, g)
-      try f finally sc.clearJobGroup()
-    }
-    inGroup(group)(body)
-    inGroup(s"$group-marker")(sc.parallelize(Seq(1), 1).count())
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup(s"$group-marker").nonEmpty)
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
+  private def jobsOf(body: => Unit): Int = SparkJobs.jobsOf(spark)(body)
 
   test("q64: regenerating the corpus releases the evicted components checkpoint") {
     val dir = Files.createTempDirectory("graft-memo-q64").toString
@@ -99,11 +81,29 @@ class SessionMemoSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobs == expected, s"$what: submitted $jobs job(s), expected $expected")
   }
 
-  test("an indexed point lookup submits 2 jobs: the index probe and the fetch") {
+  test("an indexed point lookup submits 1 job: the fetch") {
     val dir = indexedTable()
     val docId = Pipeline.readTokens(spark, dir).first().doc_id
-    assertWarmJobs(s"readTokensForDocId on $dir", 2)(
+    assertWarmJobs(s"readTokensForDocId on $dir", 1)(
       assert(Pipeline.readTokensForDocId(spark, dir, docId).collect().length == 1))
+    Verifier.rmTree(dir)
+  }
+
+  test("an indexed miss submits no job") {
+    val dir = indexedTable()
+    val docId = Pipeline.readTokens(spark, dir).first().doc_id + "x"
+    assertWarmJobs(s"readTokensForDocId($docId) on $dir", 0)(
+      assert(Pipeline.readTokensForDocId(spark, dir, docId).collect().isEmpty))
+    Verifier.rmTree(dir)
+  }
+
+  test("an indexed prefix lookup submits 1 job: the fetch") {
+    val dir = indexedTable()
+    val docIds = Pipeline.readTokens(spark, dir).collect().map(_.doc_id)
+    val prefix = docIds.head.dropRight(1)
+    assertWarmJobs(s"readTokensForDocIdPrefix($prefix) on $dir", 1)(
+      assert(Pipeline.readTokensForDocIdPrefix(spark, dir, prefix).collect().length ==
+        docIds.count(_.startsWith(prefix))))
     Verifier.rmTree(dir)
   }
 

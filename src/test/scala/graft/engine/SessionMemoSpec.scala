@@ -12,8 +12,10 @@ class SessionMemoSpec extends AnyFunSuite {
   private final class Logged {
     val log = ArrayBuffer.empty[String]
     val memo = new SessionMemo[String, String](v => log += s"release:$v")
+    /** Directories that no longer exist. */
+    val gone = scala.collection.mutable.Set.empty[String]
     def get(app: String, key: String, stamp: Option[Long], v: String): String =
-      memo.get(app, key, stamp) { log += s"compute:$v"; v }
+      memo.get(app, key, s"/$key", stamp, p => !gone(p)) { log += s"compute:$v"; v }
   }
 
   test("a hit computes once") {
@@ -52,6 +54,18 @@ class SessionMemoSpec extends AnyFunSuite {
     assert(m.get("app", "k", Some(1L), "v5") == "v5")
     assert(m.log == Seq("compute:v1", "compute:v2", "compute:v3",
       "release:v3", "compute:v4", "compute:v5"))
+  }
+
+  test("a compute releases entries whose directory is gone; a hit does not") {
+    val m = new Logged
+    m.get("app", "a", Some(1L), "a1")
+    m.get("app", "b", Some(1L), "b1")
+    m.gone += "/a"
+    assert(m.get("app", "b", Some(1L), "b2") == "b1")
+    assert(m.log == Seq("compute:a1", "compute:b1"))
+    m.get("app", "c", Some(1L), "c1")
+    assert(m.log.drop(2) == Seq("release:a1", "compute:c1"))
+    assert(m.get("app", "b", Some(1L), "b3") == "b1")
   }
 
   private val conf = new Configuration()
