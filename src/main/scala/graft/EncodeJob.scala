@@ -99,7 +99,7 @@ object EncodeJob {
     * keeps each source string as written (`source=007` stays "007").
     */
   def readInput(spark: SparkSession, input: String): Dataset[TokenRow] =
-    Tables.read(spark, input, Encoders.product[TokenRow].schema).as(Encoders.product[TokenRow])
+    Tables.read(spark, input, Encoders.product[TokenRow])
 
   /** Admission-controlled bulk decode (mode=read): the decode's cost is
     * pre-flighted from chunk metadata and reserved against the given

@@ -345,10 +345,14 @@ object IntCodec {
         hdr(s) + dictBytes + packedBytes(s.n, bits(s.distinct - 1))
       }
     /** The sorted distinct values, with r just past the (id, n) header
-      * of a non-empty block; leaves r.pos on the code width byte.
+      * of a non-empty block; leaves r.pos on the code width byte. Each
+      * entry takes a byte or more: a larger count throws, unallocated.
       */
     private[IntCodec] def values(r: Reader): Array[Int] = {
-      val dict = new Array[Int](r.readUvarint())
+      val distinct = r.readUvarint()
+      require(distinct > 0 && distinct <= r.remaining,
+        s"dict of $distinct values in ${r.remaining} bytes")
+      val dict = new Array[Int](distinct)
       dict(0) = unzigzag(r.readUvarint())
       var i = 1
       while (i < dict.length) {

@@ -31,19 +31,33 @@ private[engine] object IndexProbe {
   /** A data file of the index and its doc_id fence; None when a row
     * group has no doc_id stats, so the file is always read.
     */
-  private final case class IndexFile(path: Path, fence: Option[(String, String)])
+  final case class IndexFile(path: Path, fence: Option[(String, String)])
 
-  private val files = new SessionMemo[String, Seq[IndexFile]](_ => ())
+  /** One version of the index: the `chunks/` stamp it was built from, and its data files. */
+  final case class Index(builtFrom: Long, files: Seq[IndexFile])
 
-  /** The data files of the index at `dir`, named as Spark lists them
-    * (no `_` or `.` prefix), each with its fence. A file with no row
-    * groups holds no row and is left out.
+  /** The marker, written after the index files, that holds the stamp; `_`
+    * keeps it out of Spark's listing. An index without it reads as absent.
     */
-  private def indexFiles(spark: SparkSession, dir: String): Seq[IndexFile] =
-    files(spark, dir, dir) {
+  val BuiltFrom = "_built_from"
+
+  private val versions = new SessionMemo[String, Option[Index]](_ => ())
+
+  /** The index at `dir`, read once per index version: the stamp in its
+    * [[BuiltFrom]] marker, then its data files, named as Spark lists them
+    * (no `_` or `.` prefix), each with its fence. A file with no row
+    * groups holds no row and is left out. None when the directory or
+    * its marker is missing, or the marker holds no stamp.
+    */
+  def at(spark: SparkSession, dir: String): Option[Index] =
+    versions(spark, dir, dir) {
       val conf = spark.sparkContext.hadoopConfiguration
       val root = new Path(dir)
-      root.getFileSystem(conf).listStatus(root).toSeq
+      val fs = root.getFileSystem(conf)
+      val marker = new Path(root, BuiltFrom)
+      val builtFrom =
+        if (fs.exists(marker)) Pipeline.readSmallText(fs, marker, 32).toLongOption else None
+      builtFrom.map(Index(_, fs.listStatus(root).toSeq
         .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
           !st.getPath.getName.startsWith("."))
         .flatMap { st =>
@@ -58,22 +72,22 @@ private[engine] object IndexProbe {
             if (bounds.exists(_.isEmpty)) None
             else Some((bounds.flatten.map(_._1).min(Utf8Order), bounds.flatten.map(_._2).max(Utf8Order)))
           if (blocks.isEmpty) None else Some(IndexFile(st.getPath, fence))
-        }
+        }))
     }
 
-  /** The distinct chunk ids of the index rows at `dir` that `rows` holds
+  /** The distinct chunk ids of the rows of `index` that `rows` holds
     * for, reading only the files whose fence `[min, max]` passes
     * `admits`.
     */
   def chunkIds(
       spark: SparkSession,
-      dir: String,
+      index: Index,
       admits: (String, String) => Boolean,
       rows: FilterPredicate
   ): Seq[Long] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val ids = scala.collection.mutable.HashSet.empty[Long]
-    indexFiles(spark, dir).filter(_.fence.forall(admits.tupled)).foreach { f =>
+    index.files.filter(_.fence.forall(admits.tupled)).foreach { f =>
       val reader = ParquetReader.builder(ChunkIdOfRow, f.path)
         .withConf(conf).withFilter(FilterCompat.get(rows)).build()
       try {

@@ -92,8 +92,11 @@ object Pipeline {
     * string. The one read of the table: every view below is a
     * projection of it.
     */
-  private def chunksTable(spark: SparkSession, outDir: String): DataFrame =
-    Tables.read(spark, chunksPath(outDir), Encoders.product[EncodedChunk].schema)
+  private def chunksTable(spark: SparkSession, outDir: String): Dataset[EncodedChunk] =
+    Tables.read(spark, chunksPath(outDir), ChunkLayout)
+
+  /** The [[EncodedChunk]] encoder, built once for every chunk read and write. */
+  private val ChunkLayout = Encoders.product[EncodedChunk]
 
   /** Payload-free chunk metadata: every chunk column but the four
     * encoded payloads (never read from parquet).
@@ -108,7 +111,7 @@ object Pipeline {
   }
 
   def readChunks(spark: SparkSession, outDir: String): Dataset[EncodedChunk] =
-    chunksTable(spark, outDir).as(Encoders.product[EncodedChunk])
+    chunksTable(spark, outDir)
 
   /** Consumer read path: decode the chunks table back to token rows,
     * optionally restricted to some sources. The source filter lands on
@@ -410,9 +413,11 @@ object Pipeline {
   // lookup is a driver-side probe ([[IndexProbe]]) that the files'
   // doc_id fences and parquet min/max stats prune to ~one file and a
   // few pages — no Spark job, one fence per index file. The index is
-  // rebuildable metadata (~12 bytes/doc at rest), carries a chunk-set
-  // fingerprint, and every lookup validates freshness — a stale or
-  // absent index falls back to the bloom path, never to a wrong answer.
+  // rebuildable metadata (~12 bytes/doc at rest) that names the chunks-
+  // table version it was built from (the `chunks/` stamp in its
+  // [[IndexProbe.BuiltFrom]] marker), and every lookup checks that
+  // version against the current one — a stale or absent index falls
+  // back to the bloom path, never to a wrong answer.
 
   def docIndexPath(outDir: String) = s"$outDir/doc_index"
 
@@ -421,97 +426,70 @@ object Pipeline {
     */
   private[graft] def readIndexTable(spark: SparkSession, outDir: String): DataFrame =
     Tables.read(spark, docIndexPath(outDir),
-      new StructType().add("doc_id", StringType).add("chunk_id", LongType))
+      Encoders.row(new StructType().add("doc_id", StringType).add("chunk_id", LongType)))
 
-  private def docIndexFpPath(outDir: String) =
-    new org.apache.hadoop.fs.Path(outDir, "_doc_index.fp")
+  /** The version of the chunks table: its [[SessionMemo.dirStamp]]. */
+  private def chunksStamp(spark: SparkSession, outDir: String): Option[Long] =
+    SessionMemo.dirStamp(spark.sparkContext.hadoopConfiguration, chunksPath(outDir))
 
-  /** Session memo of [[chunkSetFingerprint]] per chunks directory:
-    * every freshness check still VALIDATES against the current
-    * directory contents (an appended chunk changes the stamp and forces
-    * a recompute — the stale-index fallback contract is untouched), but
-    * repeated lookups against an unchanged table stop paying one Spark
-    * job each. Nothing persists across JVMs.
-    */
-  private val fpMemo = new SessionMemo[String, String](_ => ())
-
-  /** Order-independent fingerprint of the chunk-id set — one tiny
-    * single-column agg (memoized per content stamp); pairs the index
-    * with the exact chunks table it was built from. Format
-    * "chunkCount:hashSum".
-    */
-  private def chunkSetFingerprint(spark: SparkSession, outDir: String): String = {
-    val cp = chunksPath(outDir)
-    fpMemo(spark, cp, cp) {
-      val r = chunkMeta(spark, outDir)
-        .select(xxhash64(col("chunk_id")).as("h"))
-        .agg(count(lit(1)), sum(col("h").cast("decimal(20,0)"))).first()
-      val s = if (r.isNullAt(1)) "0" else r.getDecimal(1).toBigInteger.toString
-      s"${r.getLong(0)}:$s"
-    }
+  /** The doc-sorted index, if it was built from the current chunks table. */
+  private def freshIndex(spark: SparkSession, outDir: String): Option[IndexProbe.Index] = {
+    val current = chunksStamp(spark, outDir)
+    IndexProbe.at(spark, docIndexPath(outDir)).filter(i => current.contains(i.builtFrom))
   }
 
-  /** Is the doc-sorted index present and paired with the CURRENT
-    * chunks table? The freshness half of [[lookupChunkIdsViaIndex]]
-    * without the probe — callers deciding build-vs-lookup check this
-    * first instead of paying a throwaway probe job.
+  /** Is the doc-sorted index present and built from the CURRENT chunks
+    * table (the `chunks/` stamp in its marker equals the stamp now)? No
+    * Spark job. Precondition, as for [[SessionMemo.dirStamp]]: chunk
+    * files are immutable once committed, as Spark's writers guarantee
+    * (an encode or re-encode adds files under fresh names).
     */
-  def docIndexIsFresh(spark: SparkSession, outDir: String): Boolean = {
-    val fs = fsOf(spark, outDir)
-    fs.exists(docIndexFpPath(outDir)) &&
-      readSmallText(fs, docIndexFpPath(outDir), 96) == chunkSetFingerprint(spark, outDir)
-  }
+  def docIndexIsFresh(spark: SparkSession, outDir: String): Boolean =
+    freshIndex(spark, outDir).isDefined
 
   /** Build (or rebuild) the doc_id → chunk_id index for an encoded
     * directory. Payload-free: reads only the three small encoded index
     * columns ([[readDocIndex]]), writes doc-sorted parquet. One range
     * shuffle of (doc_id, chunk_id) pairs — metadata-priced at any
-    * scale. Derived data: safe to rebuild at any time; concurrent
-    * encodes invalidate it via the fingerprint, not via locking.
+    * scale. Derived data: safe to rebuild at any time; a concurrent
+    * encode changes the `chunks/` stamp, which then no longer matches
+    * the stamp the index stores, so it invalidates the index without
+    * locking (files immutable once committed, see [[docIndexIsFresh]]).
     */
   def buildDocIndex(spark: SparkSession, outDir: String, indexFiles: Int = 0): Unit = {
-    // fingerprint FIRST, then read the pairs: chunks appended while the
-    // (long) index write runs are then absent from the STORED
-    // fingerprint too, so the next lookup sees stored != current and
-    // falls back — computing it after the write would capture the
-    // appended chunks in the fingerprint but not in the index, making
-    // a stale index validate as fresh
-    val fpAtStart = chunkSetFingerprint(spark, outDir)
+    // stamp FIRST, then read the pairs: chunks appended during the
+    // (long) index write are then absent from the STORED stamp too, so
+    // the next lookup sees stored != current and falls back; a stamp
+    // taken after the write would let a stale index validate as fresh
+    val builtFrom = chunksStamp(spark, outDir)
+    require(builtFrom.isDefined, s"no chunks table at ${chunksPath(outDir)}")
     val pairs = readDocIndex(spark, outDir).toDF()
       .select(col("doc_id"), col("chunk_id"))
+    // ~8 chunks' doc ids per index file keeps files in the low MBs
     val files =
       if (indexFiles > 0) indexFiles
-      else {
-        // chunk count is the first field of the fingerprint already
-        // computed above — no separate count job
-        val nChunks = fpAtStart.split(":")(0).toLong
-        // ~8 chunks' doc ids per index file keeps files in the low MBs
-        math.max(1, (nChunks / 8).toInt)
-      }
+      else math.max(1, (chunkMeta(spark, outDir).count() / 8).toInt)
     pairs.repartitionByRange(files, col("doc_id"))
       .sortWithinPartitions(col("doc_id"))
       .write.mode(SaveMode.Overwrite).option("compression", "zstd")
       .parquet(docIndexPath(outDir))
-    writeSmallText(fsOf(spark, outDir), docIndexFpPath(outDir), fpAtStart)
+    // the overwrite removed the old marker; the new one goes in last,
+    // so an index whose write did not finish reads as absent
+    writeSmallText(fsOf(spark, outDir),
+      new org.apache.hadoop.fs.Path(docIndexPath(outDir), IndexProbe.BuiltFrom), builtFrom.get.toString)
   }
 
-  /** Whole small file as trimmed UTF-8, short-read safe (Hadoop input
-    * streams may return fewer bytes than asked — a single read() can
-    * truncate the fingerprint and poison the comparison).
+  /** At most the first `cap` bytes of a small file as trimmed UTF-8,
+    * short-read safe: `readNBytes` reads until `cap` bytes or the end,
+    * where one `read()` may return fewer bytes than asked.
     */
-  private def readSmallText(
+  private[engine] def readSmallText(
       fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path,
       cap: Int
   ): String = {
     val in = fs.open(p)
-    try {
-      val buf = new Array[Byte](cap)
-      var off = 0
-      var n = 0
-      while (off < cap && { n = in.read(buf, off, cap - off); n > 0 }) off += n
-      new String(buf, 0, off, "UTF-8").trim
-    } finally in.close()
+    try new String(in.readNBytes(cap), "UTF-8").trim finally in.close()
   }
 
   /** Write `text` as the whole small file `p` (UTF-8), replacing it. */
@@ -642,16 +620,15 @@ object Pipeline {
 
   /** Candidates from the doc-sorted index, probed on the driver with no
     * Spark job ([[IndexProbe]]), or None when the index is absent or
-    * stale (its fingerprint no longer matches the chunk-id set — e.g.
-    * chunks appended since the build).
+    * stale (built from another chunks-table version — e.g. chunks
+    * appended or re-encoded since the build).
     */
   private def probeIndex(
       spark: SparkSession,
       outDir: String,
       keys: DocKeys
   ): Option[Seq[Long]] =
-    if (!docIndexIsFresh(spark, outDir)) None
-    else Some(IndexProbe.chunkIds(spark, docIndexPath(outDir), keys.fenceAdmits, keys.indexRows))
+    freshIndex(spark, outDir).map(IndexProbe.chunkIds(spark, _, keys.fenceAdmits, keys.indexRows))
 
   /** Candidates from ONE payload-free metadata scan (chunk_id, doc_id
     * bounds, doc bloom — tokens_enc never read) filtered by (b) then
@@ -901,7 +878,7 @@ object Pipeline {
         if (failOnChunk(c.chunk_id))
           throw new RuntimeException(s"injected failure on chunk ${c.chunk_id}")
         c
-      }(Encoders.product[EncodedChunk])
+      }(ChunkLayout)
 
       // the wave's one write: its chunks, which are the ledger. The
       // report sums ride it as observed metrics — nothing is read back.

@@ -387,10 +387,10 @@ object CodecReads {
     Query("q81_prefix_lookup", (s, dir) => {
       val tmp = chunksDirFor(s, dir, tokensPerChunk = 16384)
       // same build-if-stale discipline as q53: the index is derived
-      // metadata, rebuilt when the chunk-set fingerprint moved. The
-      // freshness question alone needs no probe job — docIndexIsFresh
-      // compares fingerprints (memoized per content stamp), where the
-      // old dummy-key lookup paid a probe collect on every invocation
+      // metadata, rebuilt when the chunks table is no longer the version
+      // it was built from. The freshness question alone starts no Spark
+      // job — docIndexIsFresh compares the chunks stamp the index stores
+      // with the current one
       if (!graft.engine.Pipeline.docIndexIsFresh(s, tmp))
         graft.engine.Pipeline.buildDocIndex(s, tmp)
       tokenSums(graft.engine.Pipeline.readTokensForDocIdPrefix(s, tmp, "4"))

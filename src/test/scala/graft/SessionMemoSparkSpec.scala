@@ -65,6 +65,16 @@ class SessionMemoSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     Verifier.rmTree(local)
   }
 
+  test("building the doc index of a newly encoded table submits at most 6 jobs") {
+    val dir = Files.createTempDirectory("graft-memo-build").toString
+    Pipeline.run(spark, Fixtures.tokenTable(spark, 400, seed = 4, partitions = 2),
+      dir, tokensPerChunk = 16 * 1024, waves = 1)
+    val jobs = jobsOf(Pipeline.buildDocIndex(spark, dir))
+    assert(jobs <= 6, s"buildDocIndex on $dir submitted $jobs job(s)")
+    assert(Pipeline.docIndexIsFresh(spark, dir))
+    Verifier.rmTree(dir)
+  }
+
   /** An encoded, doc-indexed table of 400 docs in a fresh directory. */
   private def indexedTable(): String = {
     val dir = Files.createTempDirectory("graft-memo-jobs").toString

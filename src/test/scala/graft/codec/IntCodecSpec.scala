@@ -246,6 +246,21 @@ class IntCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("dict value counts the buffer cannot hold throw before allocating") {
+    val enc = IntCodec.Dict.encode(Array(7, 7, 9)) // id, n, 2 distinct, values, width, codes
+    assert(enc(0) == IntCodec.Dict.id && enc(2) == 2)
+    val left = enc.length - 3 // bytes after the count
+    // zero, one more than the bytes left, Int.MaxValue, and 2^32 - 1,
+    // which readUvarint's toInt turns negative
+    val counts = Seq(Seq(0), Seq(left + 1), Seq(0xff, 0xff, 0xff, 0xff, 0x07), Seq(0xff, 0xff, 0xff, 0xff, 0x0f))
+    for (count <- counts) {
+      val forged = enc.take(2) ++ count.map(_.toByte) ++ enc.drop(3)
+      intercept[IllegalArgumentException](IntCodec.decode(forged))
+      intercept[IllegalArgumentException](IntCodec.decodeRange(forged, 0, 1))
+      intercept[IllegalArgumentException](IntCodec.dictValues(forged))
+    }
+  }
+
   test("decodeRange bounds are checked") {
     val enc = IntCodec.Plain.encode(Array(1, 2, 3))
     intercept[IllegalArgumentException](IntCodec.decodeRange(enc, 2, 2))

@@ -590,9 +590,10 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(org.apache.spark.sql.functions.col("doc_id") === keys.head)
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("doc_id"), plan)
-    // append more chunks (content change) → fingerprint mismatch → the
-    // index reports stale and the single-key path still answers
-    // correctly through the bloom fallback
+    // append more chunks (a new chunks-table version: its stamp no
+    // longer matches the one the index was built from) → the index
+    // reports stale and the single-key path still answers correctly
+    // through the bloom fallback
     val extra = Fixtures.tokenTable(spark, 60, seed = 82, medianLen = 64, maxLen = 512, partitions = 1)
       .map(r => r.copy(doc_id = "zz-" + r.doc_id))
     Pipeline.run(spark, extra, out, tokensPerChunk = 32 * 1024, waves = 1,
@@ -609,6 +610,54 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // batch lookup with absent keys returns only the present ones
     val mixed = Pipeline.readTokensForDocIds(spark, out, Seq(keys.head, "no-such-doc")).collect()
     assert(mixed.length == 1 && mixed.head.doc_id == keys.head)
+  }
+
+  test("doc index: other docs re-encoded in place under the same chunk ids read as stale") {
+    import spark.implicits._
+    // one source and a chunk budget far above the table: every doc lands
+    // in the one chunk whose id depends on (planTag, source, bucket,
+    // salt), never on the doc ids
+    def docs(prefix: String) = (0 until 50).map(i =>
+      TokenRow(s"$prefix-$i", Array.tabulate(3 + i % 5)(j => i * 31 + j), 3 + i % 5, "src"))
+    val out = tmpDir()
+    def encode(prefix: String): Set[Long] = {
+      Pipeline.run(spark, docs(prefix).toDS().repartition(2), out, tokensPerChunk = 1L << 20, waves = 1)
+      Pipeline.readChunks(spark, out).map(_.chunk_id).collect().toSet
+    }
+    val aIds = encode("a")
+    Pipeline.buildDocIndex(spark, out)
+    assert(Pipeline.docIndexIsFresh(spark, out))
+    Verifier.rmTree(Pipeline.chunksPath(out))
+    val bIds = encode("b")
+    assert(bIds == aIds, s"the re-encode must keep the chunk-id set: $aIds -> $bIds")
+    assert(!Pipeline.docIndexIsFresh(spark, out), "an index of the a-* docs must not serve b-*")
+    assert(Pipeline.lookupChunkIdsViaIndex(spark, out, Seq("b-7")).isEmpty)
+    val want = docs("b")(7)
+    val got = Pipeline.readTokensForDocId(spark, out, "b-7").collect()
+    assert(got.length == 1 && got.head.source == want.source && got.head.n_tok == want.n_tok &&
+      got.head.tokens.sameElements(want.tokens), got.toSeq)
+    // rebuilt, the index serves the b-* docs
+    Pipeline.buildDocIndex(spark, out)
+    assert(Pipeline.lookupChunkIdsViaIndex(spark, out, Seq("b-7")).contains(bIds.toSeq))
+    Verifier.rmTree(out)
+  }
+
+  test("doc index: an index directory without its built-from marker reads as absent") {
+    import spark.implicits._
+    val ds = Fixtures.tokenTable(spark, 300, seed = 84, medianLen = 64, maxLen = 512, partitions = 2)
+    val out = tmpDir()
+    Pipeline.run(spark, ds, out, tokensPerChunk = 16 * 1024, waves = 1)
+    Pipeline.buildDocIndex(spark, out)
+    val key = ds.head().doc_id
+    assert(Pipeline.lookupChunkIdsViaIndex(spark, out, Seq(key)).exists(_.nonEmpty))
+    val marker = java.nio.file.Paths.get(Pipeline.docIndexPath(out), IndexProbe.BuiltFrom)
+    assert(Files.deleteIfExists(marker), s"no marker at $marker")
+    assert(!Pipeline.docIndexIsFresh(spark, out))
+    assert(Pipeline.lookupChunkIdsViaIndex(spark, out, Seq(key)).isEmpty)
+    assert(Pipeline.readTokensForDocId(spark, out, key).collect().map(_.doc_id).toSeq == Seq(key))
+    // the index files are still there: Spark reads them, the probe does not
+    assert(Pipeline.readIndexTable(spark, out).count() == 300)
+    Verifier.rmTree(out)
   }
 
   test("prefix successor: exact exclusive bound in UTF-8 order") {
