@@ -422,6 +422,19 @@ object IntCodec {
     dst
   }
 
+  /** The value count in the (id, n) header of a self-describing buffer,
+    * read without decoding or allocating: a block of width 0 is valid
+    * with any count in O(1) bytes, so a caller checks the count against
+    * the one it expects before a decode sizes an array by it.
+    */
+  def count(buf: Array[Byte]): Int = {
+    val r = new Reader(buf, 0)
+    forId(r.readByte())
+    val n = r.readUvarint()
+    require(n >= 0, s"negative value count $n")
+    n
+  }
+
   /** Decode a self-describing buffer produced by any IntCodec. */
   def decode(buf: Array[Byte]): Array[Int] = decode(new Reader(buf, 0))
 

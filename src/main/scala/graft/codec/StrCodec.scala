@@ -159,6 +159,18 @@ object StrCodec {
     }
   }
 
+  /** The row count in the (id, n) header of a string buffer, read
+    * without decoding anything ([[IntCodec.count]]'s twin).
+    */
+  def count(buf: Array[Byte]): Int = {
+    val r = new Reader(buf, 0)
+    val id = r.readByte()
+    require(id == PlainId || id == DictId || id == FsstId, s"unknown str codec $id")
+    val n = r.readUvarint()
+    require(n >= 0, s"negative row count $n")
+    n
+  }
+
   def decode(buf: Array[Byte]): Array[String] = decode(new Reader(buf, 0))
 
   def decode(r: Reader): Array[String] = {

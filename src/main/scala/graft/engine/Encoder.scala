@@ -256,32 +256,38 @@ object Decoder {
     *
     * Skips checksum verification by design — the checksum covers the
     * whole token stream, and hashing it would cost the O(chunk) decode
-    * this path exists to avoid.
+    * this path exists to avoid. It runs on the driver too
+    * ([[IndexProbe.fetch]]), so the header counts are checked against
+    * each other before any array is sized by them: the lengths and
+    * sources counts must equal the doc-id count, and the token count
+    * the lengths' sum, or it throws IllegalArgumentException.
     */
   def decodeDocsTokensWhere(
       c: EncodedChunk,
       pred: String => Boolean
   ): Iterator[TokenRow] = {
+    val n = StrCodec.count(c.doc_ids_enc)
+    val nLengths = IntCodec.count(c.lengths_enc)
+    val nSources = StrCodec.count(c.sources_enc)
+    require(nLengths == n && nSources == n,
+      s"chunk ${c.chunk_id}: $n doc ids, $nLengths lengths, $nSources sources")
+    val lengths = IntCodec.decode(c.lengths_enc)
+    val offsets = new Array[Long](n)
+    var off = 0L
+    var i = 0
+    while (i < n) { offsets(i) = off; off += lengths(i); i += 1 }
+    // the token count is an Int, so every in-chunk offset fits one
+    val nTokens = IntCodec.count(c.tokens_enc)
+    require(nTokens == off, s"chunk ${c.chunk_id}: $nTokens tokens, lengths sum to $off")
     val docIds = StrCodec.decode(c.doc_ids_enc)
     val hits = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var i = 0
-    while (i < docIds.length) {
+    i = 0
+    while (i < n) {
       if (pred(docIds(i))) hits += i
       i += 1
     }
     if (hits.isEmpty) return Iterator.empty
-    val lengths = IntCodec.decode(c.lengths_enc)
     val sources = StrCodec.decode(c.sources_enc)
-    val offsets = new Array[Long](lengths.length)
-    var off = 0L
-    i = 0
-    while (i < lengths.length) { offsets(i) = off; off += lengths(i); i += 1 }
-    // any encodable chunk's token stream is one Int-indexed array
-    // (encodeChunk builds it), so every in-chunk offset fits an Int;
-    // guard the narrowing anyway — corrupt lengths metadata must fail
-    // loudly, not slice at a wrapped offset
-    require(off <= Int.MaxValue,
-      s"chunk ${c.chunk_id} claims $off tokens — exceeds the Int-indexed chunk bound")
     hits.iterator.map { idx =>
       val toks = IntCodec.decodeRange(c.tokens_enc, offsets(idx).toInt, lengths(idx))
       TokenRow(docIds(idx), toks, lengths(idx), sources(idx))

@@ -2,10 +2,11 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.LongType
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.io.api.Binary
 import scala.jdk.CollectionConverters._
+import graft.codec.StrCodec
 
 /** Job wiring: a resumable encode whose chunks table is its own ledger.
   *
@@ -421,12 +422,11 @@ object Pipeline {
 
   def docIndexPath(outDir: String) = s"$outDir/doc_index"
 
-  /** The doc-sorted index at `outDir`, read with its (doc_id, chunk_id)
-    * layout ([[Tables.read]]).
+  /** The doc-sorted index at `outDir`, read with its layout
+    * ([[IndexProbe.Layout]], through [[Tables.read]]).
     */
   private[graft] def readIndexTable(spark: SparkSession, outDir: String): DataFrame =
-    Tables.read(spark, docIndexPath(outDir),
-      Encoders.row(new StructType().add("doc_id", StringType).add("chunk_id", LongType)))
+    Tables.read(spark, docIndexPath(outDir), Encoders.row(IndexProbe.Layout))
 
   /** The version of the chunks table: its [[SessionMemo.dirStamp]]. */
   private def chunksStamp(spark: SparkSession, outDir: String): Option[Long] =
@@ -448,28 +448,37 @@ object Pipeline {
     freshIndex(spark, outDir).isDefined
 
   /** Build (or rebuild) the doc_id → chunk_id index for an encoded
-    * directory. Payload-free: reads only the three small encoded index
-    * columns ([[readDocIndex]]), writes doc-sorted parquet. One range
-    * shuffle of (doc_id, chunk_id) pairs — metadata-priced at any
-    * scale. Derived data: safe to rebuild at any time; a concurrent
+    * directory. Payload-free: reads only the encoded doc ids, each
+    * chunk's `encoded_bytes` and where the chunk lives (the hidden
+    * `_metadata.file_path` and `_metadata.row_index` of its row), and
+    * writes doc-sorted parquet ([[IndexProbe.Layout]]). One range
+    * shuffle of the index rows — metadata-priced at any scale. Derived
+    * data: safe to rebuild at any time; a concurrent
     * encode changes the `chunks/` stamp, which then no longer matches
     * the stamp the index stores, so it invalidates the index without
     * locking (files immutable once committed, see [[docIndexIsFresh]]).
     */
   def buildDocIndex(spark: SparkSession, outDir: String, indexFiles: Int = 0): Unit = {
-    // stamp FIRST, then read the pairs: chunks appended during the
+    import spark.implicits._
+    // stamp FIRST, then read the rows: chunks appended during the
     // (long) index write are then absent from the STORED stamp too, so
     // the next lookup sees stored != current and falls back; a stamp
     // taken after the write would let a stale index validate as fresh
     val builtFrom = chunksStamp(spark, outDir)
     require(builtFrom.isDefined, s"no chunks table at ${chunksPath(outDir)}")
-    val pairs = readDocIndex(spark, outDir).toDF()
-      .select(col("doc_id"), col("chunk_id"))
+    val rows = chunksTable(spark, outDir)
+      .select(col("chunk_id"), col("doc_ids_enc"), col("_metadata.file_path"),
+        col("_metadata.row_index"), col("encoded_bytes"))
+      .as[(Long, Array[Byte], String, Long, Long)]
+      .flatMap { case (id, docIds, file, row, bytes) =>
+        StrCodec.decode(docIds).iterator.map(d => (d, id, file, row, bytes))
+      }
+      .toDF(IndexProbe.Layout.fieldNames.toSeq: _*)
     // ~8 chunks' doc ids per index file keeps files in the low MBs
     val files =
       if (indexFiles > 0) indexFiles
       else math.max(1, (chunkMeta(spark, outDir).count() / 8).toInt)
-    pairs.repartitionByRange(files, col("doc_id"))
+    rows.repartitionByRange(files, col("doc_id"))
       .sortWithinPartitions(col("doc_id"))
       .write.mode(SaveMode.Overwrite).option("compression", "zstd")
       .parquet(docIndexPath(outDir))
@@ -538,13 +547,16 @@ object Pipeline {
   // chunk-grain analog of the reference's single Constraint interface
   // (reference: search/constraint.go:33-49: a cheap superset test from
   // stats and blooms, then an exact filter, applied by one search
-  // loop). Every read runs the same two phases: candidate chunk ids
-  // ([[candidateChunkIds]]: one driver-side index probe, or one
-  // payload-free metadata scan job), then one payload job that decodes
-  // only the matching docs' token slices ([[fetchAndDecode]]).
+  // loop). Every read runs the same two phases ([[readDocs]]):
+  // candidate chunks (one driver-side index probe, or one payload-free
+  // metadata scan job), then a fetch that decodes only the matching
+  // docs' token slices. With a fresh index, a lookup of at most
+  // [[IndexProbe.MaxChunks]] chunks and [[IndexProbe.MaxBytes]] bytes
+  // fetches on the driver too ([[IndexProbe.fetch]]): no Spark job at
+  // all. Any other lookup pays one payload job ([[fetchAndDecode]]).
 
   /** A doc-id key set and the filters it implies. */
-  private sealed trait DocKeys extends Serializable {
+  private[engine] sealed trait DocKeys extends Serializable {
     def isEmpty: Boolean = false
     /** (a) may a doc-index file whose doc_ids span [lo, hi] (its footer
       * fence) hold a key?
@@ -568,7 +580,7 @@ object Pipeline {
     def matches(docId: String): Boolean
   }
 
-  private object DocKeys {
+  private[engine] object DocKeys {
 
     /** Exact keys. Key extremes and bound compares use [[Utf8Order]]:
       * they must agree with the Spark column predicates and the stored
@@ -618,17 +630,21 @@ object Pipeline {
     */
   private val MaxInListIds = 1024
 
-  /** Candidates from the doc-sorted index, probed on the driver with no
-    * Spark job ([[IndexProbe]]), or None when the index is absent or
-    * stale (built from another chunks-table version — e.g. chunks
-    * appended or re-encoded since the build).
+  /** Candidates, each with where its chunk lives, from the doc-sorted
+    * index, probed on the driver with no Spark job ([[IndexProbe]]), or
+    * None when the index is absent or stale (built from another
+    * chunks-table version — e.g. chunks appended or re-encoded since the
+    * build), so a stale locator is never used.
     */
   private def probeIndex(
       spark: SparkSession,
       outDir: String,
       keys: DocKeys
-  ): Option[Seq[Long]] =
-    freshIndex(spark, outDir).map(IndexProbe.chunkIds(spark, _, keys.fenceAdmits, keys.indexRows))
+  ): Option[Seq[IndexProbe.Candidate]] =
+    freshIndex(spark, outDir).map(IndexProbe.candidates(spark, _, keys.fenceAdmits, keys.indexRows))
+
+  private def chunkIdsOf(candidates: Seq[IndexProbe.Candidate]): Seq[Long] =
+    candidates.map(_.chunkId).distinct
 
   /** Candidates from ONE payload-free metadata scan (chunk_id, doc_id
     * bounds, doc bloom — tokens_enc never read) filtered by (b) then
@@ -661,14 +677,16 @@ object Pipeline {
       keys: DocKeys
   ): Seq[Long] =
     if (keys.isEmpty) Nil
-    else probeIndex(spark, outDir, keys).getOrElse(scanChunkMeta(spark, outDir, keys))
+    else probeIndex(spark, outDir, keys).map(chunkIdsOf).getOrElse(scanChunkMeta(spark, outDir, keys))
 
-  /** Phase 2: read the candidate chunks — chunk_id is a plain parquet
-    * column, so the In-list pushes to row-group stats — and decode each
-    * ONCE for all its matching docs, materializing only their token
-    * slices ([[Decoder.decodeDocsTokensWhere]]: O(doc), not O(chunk)).
+  /** Phase 2 as one Spark job: read the candidate chunks — chunk_id is a
+    * plain parquet column, so the In-list pushes to row-group stats —
+    * and decode each ONCE for all its matching docs, materializing only
+    * their token slices ([[Decoder.decodeDocsTokensWhere]]: O(doc), not
+    * O(chunk)). Lazy, as any Spark read: it runs at the action. The
+    * fetch of every lookup the driver does not take ([[readDocs]]).
     */
-  private def fetchAndDecode(
+  private[engine] def fetchAndDecode(
       spark: SparkSession,
       outDir: String,
       ids: Seq[Long],
@@ -683,8 +701,24 @@ object Pipeline {
     hit.flatMap(c => Decoder.decodeDocsTokensWhere(c, keys.matches))
   }
 
+  /** Both phases. With a fresh index, candidates within the driver caps
+    * are fetched and decoded on the driver at the call
+    * ([[IndexProbe.fetch]]) and come back as a local Dataset, so an
+    * action on it submits no job (a transformation of it may); any other
+    * lookup is the lazy Spark fetch.
+    */
   private def readDocs(spark: SparkSession, outDir: String, keys: DocKeys): Dataset[TokenRow] =
-    fetchAndDecode(spark, outDir, candidateChunkIds(spark, outDir, keys), keys)
+    if (keys.isEmpty) spark.emptyDataset(TokenLayout)
+    else probeIndex(spark, outDir, keys) match {
+      case Some(candidates) =>
+        IndexProbe.fetch(spark, candidates, keys.matches)
+          .map(spark.createDataset(_)(TokenLayout))
+          .getOrElse(fetchAndDecode(spark, outDir, chunkIdsOf(candidates), keys))
+      case None => fetchAndDecode(spark, outDir, scanChunkMeta(spark, outDir, keys), keys)
+    }
+
+  /** The [[TokenRow]] encoder, built once for every driver-fetched read. */
+  private val TokenLayout = Encoders.product[TokenRow]
 
   /** Point lookup: every row with this doc_id, decoding only chunks the
     * index (or the bounds and bloom) admit — the reference's precise
@@ -756,7 +790,7 @@ object Pipeline {
       outDir: String,
       docIds: Seq[String]
   ): Option[Seq[Long]] =
-    probeIndex(spark, outDir, DocKeys.Ids(docIds))
+    probeIndex(spark, outDir, DocKeys.Ids(docIds)).map(chunkIdsOf)
 
   /** Phase 1 of a range read: chunk ids whose doc_id span intersects
     * [lo, hi).

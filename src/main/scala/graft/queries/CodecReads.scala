@@ -305,22 +305,18 @@ object CodecReads {
 
     // doc-sorted index lookup: the log-pruning point-lookup path over
     // AT-REST chunks — build the (doc_id, chunk_id) index once, then a
-    // batch lookup probes it on the driver, no Spark job (the index
-    // files' doc_id fences pick the files to open, their row-group
-    // stats and column index the pages to read), and one fetch decodes
-    // each candidate chunk once for all its keys
-    // (Decoder.decodeDocsTokensWhere)
+    // batch lookup probes it on the driver (the index files' doc_id
+    // fences pick the files to open, their row-group stats and column
+    // index the pages to read) and, its few candidate chunks within the
+    // driver caps, reads them on the driver too, decoding each once for
+    // all its keys (Decoder.decodeDocsTokensWhere): no Spark job until
+    // the readback's own
     Query("q53_doc_index_lookup", (s, dir) => {
       val tmp = chunksDirFor(s, dir, tokensPerChunk = 16384)
-      val keys = Seq("42", "123", "321")
-      // one probe decides build-or-lookup AND supplies the candidates —
-      // a fresh-index lookup pays one freshness check + driver probe
-      val ids = graft.engine.Pipeline.lookupChunkIdsViaIndex(s, tmp, keys).getOrElse {
+      // same build-if-stale discipline as q81
+      if (!graft.engine.Pipeline.docIndexIsFresh(s, tmp))
         graft.engine.Pipeline.buildDocIndex(s, tmp)
-        graft.engine.Pipeline.lookupChunkIdsViaIndex(s, tmp, keys)
-          .getOrElse(sys.error(s"doc index stale immediately after build in $tmp"))
-      }
-      tokenSums(graft.engine.Pipeline.readTokensForChunkIds(s, tmp, ids, keys))
+      tokenSums(graft.engine.Pipeline.readTokensForDocIds(s, tmp, Seq("42", "123", "321")))
     }, Some(
       // ch <> '' + coalesce: string_split('', '') yields [''] and
       // unicode('') = -1, which would score an empty doc as token_sum -1
@@ -386,11 +382,10 @@ object CodecReads {
     // token ranges
     Query("q81_prefix_lookup", (s, dir) => {
       val tmp = chunksDirFor(s, dir, tokensPerChunk = 16384)
-      // same build-if-stale discipline as q53: the index is derived
-      // metadata, rebuilt when the chunks table is no longer the version
-      // it was built from. The freshness question alone starts no Spark
-      // job — docIndexIsFresh compares the chunks stamp the index stores
-      // with the current one
+      // build-if-stale: the index is derived metadata, rebuilt when the
+      // chunks table is no longer the version it was built from. The
+      // freshness question alone starts no Spark job — docIndexIsFresh
+      // compares the chunks stamp the index stores with the current one
       if (!graft.engine.Pipeline.docIndexIsFresh(s, tmp))
         graft.engine.Pipeline.buildDocIndex(s, tmp)
       tokenSums(graft.engine.Pipeline.readTokensForDocIdPrefix(s, tmp, "4"))

@@ -91,10 +91,10 @@ class SessionMemoSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobs == expected, s"$what: submitted $jobs job(s), expected $expected")
   }
 
-  test("an indexed point lookup submits 1 job: the fetch") {
+  test("an indexed point lookup submits no job: the driver fetches it") {
     val dir = indexedTable()
     val docId = Pipeline.readTokens(spark, dir).first().doc_id
-    assertWarmJobs(s"readTokensForDocId on $dir", 1)(
+    assertWarmJobs(s"readTokensForDocId on $dir", 0)(
       assert(Pipeline.readTokensForDocId(spark, dir, docId).collect().length == 1))
     Verifier.rmTree(dir)
   }
@@ -107,13 +107,37 @@ class SessionMemoSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     Verifier.rmTree(dir)
   }
 
-  test("an indexed prefix lookup submits 1 job: the fetch") {
+  /** The most candidate chunks a lookup fetches on the driver. */
+  private val driverChunks = 8
+
+  /** Each ten-doc id family of the table (the ids less their last
+    * digit) with its candidate chunk count.
+    */
+  private def prefixes(dir: String): Seq[(String, Int)] =
+    Pipeline.readTokens(spark, dir).collect().map(_.doc_id.dropRight(1)).distinct.sorted.toSeq
+      .map(p => p -> Pipeline.lookupChunkIdsForRange(spark, dir, p, Pipeline.prefixSuccessor(p)).length)
+
+  test("a narrow indexed prefix lookup submits no job: the driver fetches it") {
     val dir = indexedTable()
     val docIds = Pipeline.readTokens(spark, dir).collect().map(_.doc_id)
-    val prefix = docIds.head.dropRight(1)
+    val (prefix, _) = prefixes(dir).find(_._2 <= driverChunks).get
+    assertWarmJobs(s"readTokensForDocIdPrefix($prefix) on $dir", 0)(
+      assert(Pipeline.readTokensForDocIdPrefix(spark, dir, prefix).collect().length ==
+        docIds.count(_.startsWith(prefix))))
+    Verifier.rmTree(dir)
+  }
+
+  test("an indexed lookup over the driver's chunk cap submits 1 job: the Spark fetch") {
+    val dir = indexedTable()
+    val docIds = Pipeline.readTokens(spark, dir).collect().map(_.doc_id)
+    val (prefix, n) = prefixes(dir).find(_._2 > driverChunks).get
+    info(s"$prefix: $n candidate chunks")
     assertWarmJobs(s"readTokensForDocIdPrefix($prefix) on $dir", 1)(
       assert(Pipeline.readTokensForDocIdPrefix(spark, dir, prefix).collect().length ==
         docIds.count(_.startsWith(prefix))))
+    val keys = docIds.filter(_.startsWith(prefix)).toSeq
+    assertWarmJobs(s"readTokensForDocIds(${keys.length} keys) on $dir", 1)(
+      assert(Pipeline.readTokensForDocIds(spark, dir, keys).collect().length == keys.length))
     Verifier.rmTree(dir)
   }
 

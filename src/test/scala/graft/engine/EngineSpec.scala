@@ -371,6 +371,31 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.head.source == "web" && got.head.n_tok == 300)
   }
 
+  test("decodeDocsTokensWhere: forged header counts throw before anything is sized by them") {
+    import graft.codec.{BitIO, ByteSink, IntCodec, StrCodec}
+    val rows = (0 until 20).map(i => TokenRow(f"d$i%02d", Array.tabulate(3 + i % 4)(j => i * 7 + j), 3 + i % 4, "web"))
+    val c = Encoder.encodeTable(spark.createDataset(rows)(org.apache.spark.sql.Encoders.product[TokenRow]),
+      tokensPerChunk = 1 << 30).collect().head
+    assert(Decoder.decodeDocsTokensWhere(c, _ => true).length == rows.length)
+    // a frame-of-reference block of width 0 is valid with any count in
+    // four bytes: a decode that trusted it would size 2^30 ints
+    val out = new ByteSink()
+    out.addByte(IntCodec.For.id)
+    BitIO.writeUvarint(out, 1 << 30)
+    BitIO.writeUvarint(out, BitIO.zigzag(0))
+    out.addByte(0)
+    val forged = out.result()
+    assert(IntCodec.count(forged) == (1 << 30))
+    val bad = Seq(
+      "lengths forged to 2^30 values" -> c.copy(lengths_enc = forged),
+      "sources one row short" -> c.copy(sources_enc = StrCodec.encodeAuto(rows.dropRight(1).map(_.source).toArray)._2),
+      "tokens one value short" -> c.copy(tokens_enc = IntCodec.Plain.encode(rows.flatMap(_.tokens).dropRight(1).toArray)))
+    bad.foreach { case (what, chunk) =>
+      intercept[IllegalArgumentException](Decoder.decodeDocsTokensWhere(chunk, _ => true).toList)
+      info(s"$what: throws IllegalArgumentException")
+    }
+  }
+
   test("readLineage reports the input_split each chunk was written under") {
     import spark.implicits._
     val ds = Fixtures.tokenTable(spark, 300, seed = 41, medianLen = 64, maxLen = 512, partitions = 2)
@@ -735,6 +760,30 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (inRange) hits += 1 else misses += 1
     }
     assert(hits > 200 && misses > 200, s"degenerate sample: $hits hits, $misses misses")
+  }
+
+  test("doc index: an index without the chunk locator columns reads as absent") {
+    import spark.implicits._
+    val ds = Fixtures.tokenTable(spark, 300, seed = 85, medianLen = 64, maxLen = 512, partitions = 2)
+    val out = tmpDir()
+    Pipeline.run(spark, ds, out, tokensPerChunk = 16 * 1024, waves = 1)
+    Pipeline.buildDocIndex(spark, out)
+    val key = ds.head().doc_id
+    // the (doc_id, chunk_id) index of an older layout, under the marker
+    // of the current chunks table
+    val staging = s"${tmpDir()}/doc_index"
+    Pipeline.readIndexTable(spark, out).select("doc_id", "chunk_id").write.parquet(staging)
+    val target = Pipeline.docIndexPath(out)
+    Files.move(java.nio.file.Paths.get(target, IndexProbe.BuiltFrom),
+      java.nio.file.Paths.get(staging, IndexProbe.BuiltFrom))
+    Verifier.rmTree(target)
+    Files.move(java.nio.file.Paths.get(staging), java.nio.file.Paths.get(target))
+    assert(!Pipeline.docIndexIsFresh(spark, out))
+    assert(Pipeline.lookupChunkIdsViaIndex(spark, out, Seq(key)).isEmpty)
+    assert(Pipeline.readTokensForDocId(spark, out, key).collect().map(_.doc_id).toSeq == Seq(key))
+    Pipeline.buildDocIndex(spark, out)
+    assert(Pipeline.lookupChunkIdsViaIndex(spark, out, Seq(key)).exists(_.nonEmpty))
+    Verifier.rmTree(out)
   }
 
   test("a repeated row comes back from every doc-id read shape") {

@@ -12,7 +12,9 @@ import graft.codec.PropCheck.forAll
 
 /** The driver-side doc-index probe against a Spark filter over the same
   * index ([[Pipeline.readIndexTable]]): for exact keys, ranges and
-  * prefixes, both must name the same chunk-id set.
+  * prefixes, both must name the same chunk-id set. And the driver fetch
+  * of the chunks it names against the Spark fetch of the same chunks:
+  * both must return the same rows.
   */
 class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -26,8 +28,16 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
   locally { spark.sparkContext.setLogLevel("WARN") }
 
+  private val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
+
+  private def tmpDir(): String = {
+    val d = Files.createTempDirectory("graft-index-probe").toString
+    dirs += d
+    d
+  }
+
   override def afterAll(): Unit = {
-    Verifier.rmTree(dir)
+    dirs.foreach(Verifier.rmTree)
     spark.stop()
   }
 
@@ -53,7 +63,7 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ids = Iterator.continually(Seq.fill(1 + rnd.nextInt(4))(alphabet(rnd.nextInt(alphabet.length))).mkString)
       .distinct.take(600).toVector
     val rows = ids.zipWithIndex.map { case (id, i) => TokenRow(id, Array(i, i + 1, i + 2), 3, s"s${i % 2}") }
-    val d = Files.createTempDirectory("graft-index-probe").toString
+    val d = tmpDir()
     Pipeline.run(spark, rows.toDS().repartition(2), d, tokensPerChunk = 128, waves = 1)
     (d, ids)
   }
@@ -156,5 +166,134 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(withStats.contains(true) && withStats.contains(false), s"files with stats: $withStats")
     assert(footers.exists(_.length > 1), s"row groups per file: ${footers.map(_.length)}")
     agree(30)
+  }
+
+  private def bag(rows: Seq[TokenRow]): Map[(String, String, Int, Seq[Int]), Int] =
+    rows.groupMapReduce(r => (r.doc_id, r.source, r.n_tok, r.tokens.toSeq))(_ => 1)(_ + _)
+
+  /** [[docIds]] in three sources, where every tenth id comes back once
+    * more as the identical row (the chunk that holds it holds both
+    * copies) and every tenth, shifted by five, in the next source with
+    * other tokens (another chunk holds it).
+    */
+  private lazy val repeatedRows: Seq[TokenRow] = {
+    val base = docIds.zipWithIndex.map { case (id, i) =>
+      TokenRow(id, Array.tabulate(1 + i % 5)(j => i * 5 + j), 1 + i % 5, s"w${i % 3}")
+    }
+    base ++ base.indices.collect {
+      case i if i % 10 == 0 => base(i)
+      case i if i % 10 == 5 => base(i).copy(source = s"w${(i + 1) % 3}", tokens = base(i).tokens.map(_ + 1))
+    }
+  }
+
+  /** `rows` encoded over three waves into many small chunks, indexed. */
+  private def indexedTable(rows: Seq[TokenRow]): String = {
+    import spark.implicits._
+    val d = tmpDir()
+    Pipeline.run(spark, rows.toDS().repartition(3), d, tokensPerChunk = 96, waves = 3)
+    Pipeline.buildDocIndex(spark, d, indexFiles = 3)
+    d
+  }
+
+  private lazy val multiWave = indexedTable(repeatedRows)
+
+  /** Key sets of each shape over the ids of [[repeatedRows]]: 1-5 ids
+    * (a repeated, absent or edge-code-point id among them), a range and
+    * a prefix of one or two code points.
+    */
+  private def keyShapes: Seq[(String, Gen[Pipeline.DocKeys])] = {
+    val key = Gen.frequency(3 -> Gen.oneOf(docIds), 1 -> genId)
+    Seq(
+      "Ids" -> Gen.choose(1, 5).flatMap(k => Gen.listOfN(k, key)).map(Pipeline.DocKeys.Ids(_)),
+      "Range" -> Gen.zip(key, Gen.option(key)).map { case (lo, hi) => Pipeline.DocKeys.Range(lo, hi) },
+      "prefix" -> Gen.zip(key, Gen.choose(1, 2)).map { case (k, n) =>
+        val p = codePoints(k, n)
+        Pipeline.DocKeys.Range(p, Pipeline.prefixSuccessor(p))
+      })
+  }
+
+  test("the driver fetch returns the rows the Spark fetch returns, for any chunks it may fetch") {
+    val index = IndexProbe.at(spark, Pipeline.docIndexPath(multiWave)).get
+    assert(Pipeline.docIndexIsFresh(spark, multiWave))
+    var fetched = 0
+    keyShapes.foreach { case (shape, gen) =>
+      forAll(Gen.zip(gen, Gen.long), 25) { case (keys, seed) =>
+        val all = IndexProbe.candidates(spark, index, keys.fenceAdmits, keys.indexRows)
+        // any few of the candidates: a fetch returns their chunks' rows
+        // and no other chunk's, whatever else their row groups hold
+        val rnd = new scala.util.Random(seed)
+        val some = rnd.shuffle(all).take(1 + rnd.nextInt(IndexProbe.MaxChunks))
+        val driver = IndexProbe.fetch(spark, some, keys.matches)
+        assert(driver.isDefined, s"$shape $keys: ${some.length} chunks over a cap")
+        val viaSpark = Pipeline.fetchAndDecode(spark, multiWave, some.map(_.chunkId), keys).collect()
+        assert(bag(driver.get) == bag(viaSpark.toSeq), s"$shape $keys over ${some.map(_.chunkId)}")
+        if (driver.get.nonEmpty) fetched += 1
+        if (all.length > IndexProbe.MaxChunks)
+          assert(IndexProbe.fetch(spark, all, keys.matches).isEmpty, s"$shape $keys: ${all.length} chunks")
+      }
+    }
+    assert(fetched > 20, s"only $fetched key sets fetched a row")
+  }
+
+  test("every doc-id read shape returns the rows a full scan holds, driver-fetched or not") {
+    val rows = repeatedRows
+    keyShapes.foreach { case (shape, gen) =>
+      forAll(gen, 15) { keys =>
+        val got = keys match {
+          case Pipeline.DocKeys.Ids(ids) => Pipeline.readTokensForDocIds(spark, multiWave, ids)
+          case Pipeline.DocKeys.Range(lo, hi) => Pipeline.readTokensForDocIdRange(spark, multiWave, lo, hi)
+        }
+        assert(bag(got.collect().toSeq) == bag(rows.filter(r => keys.matches(r.doc_id))), s"$shape $keys")
+      }
+    }
+  }
+
+  test("a compacted table under a stale index falls back and returns the compacted rows") {
+    val table = indexedTable(repeatedRows)
+    val compacted = tmpDir()
+    Pipeline.compact(spark, Seq(table), s"$compacted/out")
+    // the compacted chunks replace the indexed ones: the index, and
+    // every locator in it, is now stale
+    Verifier.rmTree(Pipeline.chunksPath(table))
+    Files.move(java.nio.file.Paths.get(Pipeline.chunksPath(s"$compacted/out")),
+      java.nio.file.Paths.get(Pipeline.chunksPath(table)))
+    assert(!Pipeline.docIndexIsFresh(spark, table))
+    val rows = Pipeline.readTokens(spark, table).collect().toSeq
+    assert(rows.length < repeatedRows.length, "compaction keeps one copy of a repeated doc id")
+    keyShapes.foreach { case (shape, gen) =>
+      forAll(gen, 10) { keys =>
+        val got = keys match {
+          case Pipeline.DocKeys.Ids(ids) => Pipeline.readTokensForDocIds(spark, table, ids)
+          case Pipeline.DocKeys.Range(lo, hi) => Pipeline.readTokensForDocIdRange(spark, table, lo, hi)
+        }
+        assert(bag(got.collect().toSeq) == bag(rows.filter(r => keys.matches(r.doc_id))), s"$shape $keys")
+      }
+    }
+  }
+
+  test("chunk locators survive partition values that need escaping in a path or a URI") {
+    import spark.implicits._
+    // a JVM whose file-name encoding cannot name "café" (an ASCII
+    // locale) cannot write its partition directory at all
+    val nonAscii = Seq("caf\u00e9").filter(java.nio.charset.Charset.forName(
+      System.getProperty("sun.jnu.encoding")).newEncoder().canEncode(_))
+    if (nonAscii.isEmpty) info("this JVM cannot name a file \"caf\u00e9\": that source is left out")
+    val sources = Seq("a b", "50%", "k=v", "#1", "say \"hi\"", "007") ++ nonAscii
+    val rows = for ((src, s) <- sources.zipWithIndex; i <- 0 until 12)
+      yield TokenRow(s"d$s-$i", Array.tabulate(2 + i % 3)(j => s * 100 + i * 3 + j), 2 + i % 3, src)
+    val d = tmpDir()
+    Pipeline.run(spark, rows.toDS().repartition(2), d, tokensPerChunk = 16, waves = 3)
+    Pipeline.buildDocIndex(spark, d)
+    assert(Pipeline.readChunks(spark, d).map(_.part_source).distinct().collect().toSet == sources.toSet)
+    val ids = rows.map(_.doc_id)
+    val scan = bag(Pipeline.readTokens(spark, d).collect().toSeq)
+    assert(scan == bag(rows))
+    val viaSpark = Pipeline.readTokensForChunkIds(spark, d, Pipeline.lookupChunkIdsViaIndex(spark, d, ids).get, ids)
+    assert(bag(viaSpark.collect().toSeq) == scan)
+    var driver = Seq.empty[TokenRow]
+    val jobs = graft.SparkJobs.jobsOf(spark)(
+      ids.foreach(id => driver ++= Pipeline.readTokensForDocId(spark, d, id).collect()))
+    assert(jobs == 0, s"driver fetches submitted $jobs job(s)")
+    assert(bag(driver) == scan)
   }
 }
