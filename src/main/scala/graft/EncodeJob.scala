@@ -21,7 +21,9 @@ import graft.BenchEmit.{jstr, num}
   *   [tokensPerChunk=4194304] [waves=16] [verify=true]
   *   // fold several encoded tables (streaming micro-batch
   *   // accumulations, backfills) into one deduplicated table —
-  *   // refuses in-place or already-populated targets
+  *   // re-running it resumes its own partial output; it refuses an
+  *   // in-place target, a target holding any other table, and a
+  *   // resume whose inputs changed since the partial run
   * spark-submit ... mode=read   out=<output-dir> \
   *   [sources=src1,src2] [maxRows=N] [maxTokens=N] [maxBytes=N] [sink=<path>]
   *   // admission-controlled bulk decode: cost pre-flighted from chunk
@@ -34,10 +36,10 @@ import graft.BenchEmit.{jstr, num}
   * Reads the token table (doc_id, tokens, n_tok, source), runs the
   * resumable chunk-encode pipeline ([[graft.engine.Pipeline.run]]),
   * optionally round-trip-verifies, and prints one JSON report line.
-  * Re-running the same command after a failure resumes: chunks already
-  * in the chunks table are skipped via a left_anti join on their ids
-  * (the table is the only ledger; each wave commits atomically, so
-  * nothing is re-encoded or duplicated).
+  * Re-running the same command after a failure resumes: the chunk ids
+  * its input split already wrote are read from the chunks table and
+  * filtered out of the plan (the table is the only ledger; each wave
+  * commits atomically, so nothing is re-encoded or duplicated).
   *
   * No master/parallelism is set here — spark-submit owns cluster
   * sizing (the north rule's N vs 4N executors); the job's explicit

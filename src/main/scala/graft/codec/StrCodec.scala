@@ -144,21 +144,6 @@ object StrCodec {
     dict
   }
 
-  /** O(distinct) read of the sorted dictionary of a Dict-coded string
-    * buffer, without decoding the per-row codes — distinct values of a
-    * column chunk straight from its dictionary header (the reference's
-    * dictionary-page-only distinct, search/materialize.go:358-380).
-    * None when another codec was chosen.
-    */
-  def dictValues(buf: Array[Byte]): Option[Array[String]] = {
-    val r = new Reader(buf, 0)
-    if (r.readByte() != DictId) None
-    else {
-      r.readUvarint() // row count, unused here
-      Some(readDict(r))
-    }
-  }
-
   /** The row count in the (id, n) header of a string buffer, read
     * without decoding anything ([[IntCodec.count]]'s twin).
     */

@@ -47,8 +47,8 @@ object Chunker {
     * `planTag` scopes chunk identity to one input split: the plan
     * (bucket counts) is a function of the split's token mass, so two
     * DIFFERENT splits (e.g. two streaming micro-batches) would otherwise
-    * collide on chunk ids and the resume left_anti would silently drop
-    * the later split's data. Same split + same data → same ids
+    * collide on chunk ids, which key every chunk of the table (lookups,
+    * the doc index). Same split + same data → same ids
     * (resume/replay idempotence); different split → disjoint ids.
     */
   /** @param meta optional lightweight plan-statistics source: a
@@ -94,7 +94,7 @@ object Chunker {
     val sc = df.sparkSession.sparkContext
 
     // pre-pass 1: token mass per source -> base bucket count per source
-    val numBase = sc.broadcast(statsIn
+    val numBaseMap = statsIn
       .groupBy(col("source"))
       .agg(sum(col("n_tok")).as("src_tokens"))
       .where(col("source").isNotNull) // an inner join never matches null
@@ -104,7 +104,19 @@ object Chunker {
           lit(1L),
           ceil(col("src_tokens").cast("double") / tokensPerChunk).cast("long")
         ))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // each source names a `part_source=` directory of the chunks table.
+    // A JVM whose file-name charset cannot encode a source (`café` under
+    // an ASCII locale) would fail that write mid-encode, after earlier
+    // waves committed; such a source is refused here, before any wave
+    // writes
+    val fileNames = java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+    numBaseMap.keys.find(!fileNames.newEncoder().canEncode(_)).foreach { s =>
+      throw new IllegalArgumentException(
+        s"source \"$s\" cannot be a directory name: this JVM's file-name charset " +
+          s"(sun.jnu.encoding) is $fileNames; run under a UTF-8 locale or rename the source")
+    }
+    val numBase = sc.broadcast(numBaseMap)
     val numBaseOf = udf((s: String) => numBase.value.get(s).map(Long.box).orNull)
     // rows whose source has no base count drop out, as in an inner join
     def withBase(rows: DataFrame) = rows

@@ -329,26 +329,4 @@ object Decoder {
     t >= c.min_token && t <= c.max_token &&
       graft.codec.IntCodec.dictValues(c.tokens_enc)
         .forall(vs => java.util.Arrays.binarySearch(vs, t) >= 0)
-
-  /** Distinct token values of a chunk. For Dict-coded chunks this reads
-    * ONLY the dictionary header — O(distinct), no row decode (the
-    * reference's dictionary-page-only distinct,
-    * reference: search/materialize.go:358-380); other codecs fall back
-    * to full decode + dedup. Returned ascending either way.
-    */
-  def distinctTokens(c: EncodedChunk): Array[Int] =
-    IntCodec.dictValues(c.tokens_enc).getOrElse {
-      val all = IntCodec.decode(c.tokens_enc)
-      val sorted = all.clone()
-      java.util.Arrays.sort(sorted)
-      var distinct = 0
-      var i = 0
-      while (i < sorted.length) {
-        if (i == 0 || sorted(i) != sorted(i - 1)) {
-          sorted(distinct) = sorted(i); distinct += 1
-        }
-        i += 1
-      }
-      java.util.Arrays.copyOf(sorted, distinct)
-    }
 }

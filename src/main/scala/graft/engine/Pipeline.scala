@@ -22,9 +22,11 @@ import graft.codec.StrCodec
   * Resume model: encoding proceeds in `waves` (hash-partitioned groups
   * of chunk ids); each wave is one atomic Spark write of its chunks,
   * its only write boundary. A failure kills at most the current wave;
-  * a re-run left_anti-joins the chunk ids already in the table out of
-  * the plan and re-encodes only the remainder — per-partition
-  * checkpointing at the granularity a 1000-executor job needs.
+  * a re-run reads the chunk ids its input split already wrote, filters
+  * them out of the plan and re-encodes only the remainder —
+  * per-partition checkpointing at the granularity a 1000-executor job
+  * needs. A compaction's input split names each input's version, so a
+  * resume whose inputs changed is refused ([[compact]]).
   */
 object Pipeline {
 
@@ -54,7 +56,7 @@ object Pipeline {
     * pmod(xxhash64(chunk_id), waves) — Spark's xxhash64 uses seed 42.
     * Lets tests/tools target one wave deterministically.
     */
-  def waveOfId(id: Long, waves: Int): Long =
+  private[engine] def waveOfId(id: Long, waves: Int): Long =
     Math.floorMod(
       org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(id, 42L),
       waves.toLong)
@@ -115,19 +117,15 @@ object Pipeline {
     chunksTable(spark, outDir)
 
   /** Consumer read path: decode the chunks table back to token rows,
-    * optionally restricted to some sources. The source filter lands on
+    * every chunk checked against its stored checksum, optionally
+    * restricted to some sources. The source filter lands on
     * the Hive partition column (`partitionBy(part_source)` at write),
     * so pruning happens at the directory/file-listing level — chunks of
     * other sources are never read, the analog of the reference's
     * stats-driven row-range pruning (reference: search/constraint.go:394-433).
     */
-  def readTokens(
-      spark: SparkSession,
-      outDir: String,
-      sources: Seq[String] = Nil,
-      verifyChecksum: Boolean = true
-  ): Dataset[TokenRow] =
-    Decoder.decode(chunksOfSources(spark, outDir, sources), verifyChecksum)
+  def readTokens(spark: SparkSession, outDir: String, sources: Seq[String] = Nil): Dataset[TokenRow] =
+    Decoder.decode(chunksOfSources(spark, outDir, sources))
 
   /** The chunks of `sources` (all chunks when empty), pruned on the
     * `part_source` partition column.
@@ -155,39 +153,33 @@ object Pipeline {
       spark: SparkSession,
       outDir: String,
       budgets: Admission.Budgets,
-      sources: Seq[String] = Nil,
-      verifyChecksum: Boolean = true
+      sources: Seq[String] = Nil
   ): (Dataset[TokenRow], Admission.AdmittedCost) =
-    Admission.decodeAdmittedWithCost(
-      chunksOfSources(spark, outDir, sources), budgets, verifyChecksum)
+    Admission.decodeAdmittedWithCost(chunksOfSources(spark, outDir, sources), budgets)
 
-  /** Per-input-dir chunk metadata in ONE Spark job (guide §1/§2: the
-    * former shape paid one tiny driver job per dir per question —
-    * ranges, fingerprint, row counts — 3·|dirs| scheduling floors for
-    * data a single union+groupBy answers): for each dir index,
-    * (min doc_id, max doc_id, decimal sum of the per-chunk content
-    * hashes, sum of n_rows). Dirs may repeat; the index keys them.
+  /** Per-input-dir chunk metadata in ONE Spark job (guide §1/§2: one
+    * union+groupBy, not a scheduling floor per dir): for each dir
+    * index, (min doc_id, max doc_id, sum of n_rows). Dirs may repeat;
+    * the index keys them.
     */
   private def compactDirMeta(
       spark: SparkSession,
       inDirs: Seq[String]
-  ): IndexedSeq[(Option[String], Option[String], Option[java.math.BigDecimal], Long)] = {
+  ): IndexedSeq[(Option[String], Option[String], Long)] = {
     val per = inDirs.zipWithIndex.map { case (d, i) =>
       chunkMeta(spark, d).select(
         lit(i).as("dir"),
         col("min_doc_id"), col("max_doc_id"),
-        xxhash64(col("chunk_id"), col("checksum"), col("n_rows"))
-          .cast("decimal(20,0)").as("h"),
         col("n_rows").cast("long").as("n_rows"))
     }.reduce(_ unionByName _)
     val rows = per.groupBy(col("dir")).agg(
-      min("min_doc_id"), max("max_doc_id"), sum("h"), sum("n_rows"))
+      min("min_doc_id"), max("max_doc_id"), sum("n_rows"))
       .collect()
       .map(r => r.getInt(0) -> ((Option(r.getString(1)), Option(r.getString(2)),
-        Option(r.getDecimal(3)), if (r.isNullAt(4)) 0L else r.getLong(4))))
+        if (r.isNullAt(3)) 0L else r.getLong(3))))
       .toMap
     // a dir with zero chunk rows produces no group — fill the empty shape
-    inDirs.indices.map(i => rows.getOrElse(i, (None, None, None, 0L)))
+    inDirs.indices.map(i => rows.getOrElse(i, (None, None, 0L)))
   }
 
   /** The decoded-and-deduplicated row plan a compaction encodes, plus
@@ -214,13 +206,13 @@ object Pipeline {
   private def compactPlanInternal(
       spark: SparkSession,
       inDirs: Seq[String],
-      dirMeta: IndexedSeq[(Option[String], Option[String], Option[java.math.BigDecimal], Long)]
+      dirMeta: IndexedSeq[(Option[String], Option[String], Long)]
   ): (Dataset[TokenRow], Boolean, DataFrame) = {
     import spark.implicits._
     val all = inDirs.map(d => readTokens(spark, d)).reduce(_ union _)
     val metaAll = inDirs.map(d => readDocIndex(spark, d).toDF()
       .select(col("source"), col("doc_id"), col("n_tok"))).reduce(_ union _)
-    val nonEmpty = dirMeta.collect { case (Some(lo), Some(hi), _, _) => (lo, hi) }
+    val nonEmpty = dirMeta.collect { case (Some(lo), Some(hi), _) => (lo, hi) }
     // Utf8Order throughout: the per-dir bounds were aggregated by Spark
     // in UTF-8 byte order, so the driver-side disjointness proof must
     // sort and compare in the SAME order — mixing in Java's UTF-16
@@ -275,7 +267,7 @@ object Pipeline {
     }
   }
 
-  def compactPlan(
+  private[engine] def compactPlan(
       spark: SparkSession,
       inDirs: Seq[String]
   ): (Dataset[TokenRow], Boolean) = {
@@ -294,9 +286,10 @@ object Pipeline {
     *
     * Duplicate doc_ids (within or across inputs) keep ONE deterministic
     * winner — min by (source, n_tok, content checksum) — so the output
-    * is a pure function of the input SET, independent of directory
-    * order, partitioning or cluster size (the same idempotence
-    * discipline as chunk ids and resume).
+    * is a pure function of the input SET at its versions (the input
+    * split names each input's `chunks/` stamp and seeds the chunk ids),
+    * independent of directory order, partitioning or cluster size (the
+    * same idempotence discipline as chunk ids and resume).
     *
     * Scale shape: inputs are decoded once (chunk-parallel); dedup is
     * one shuffle on doc_id with map-side combine (reduceGroups); then
@@ -314,60 +307,42 @@ object Pipeline {
       waves: Int = 4,
       verify: Boolean = false
   ): EncodeReport = {
-    import spark.implicits._
     require(inDirs.nonEmpty, "compact needs at least one input dir")
-    val tag = s"compact:${inDirs.sorted.mkString(",")}"
     // in-place compaction can never work: run() appends to the target
     // while readTokens streams from it
     def canon(p: String) = try new java.io.File(p).getCanonicalPath catch { case _: Throwable => p }
     require(!inDirs.map(canon).contains(canon(outDir)),
       s"compact target $outDir must not be one of its inputs (in-place compaction would read while appending)")
+    // the input split names each input dir at the version of its chunks
+    // table (its `chunks/` stamp). It scopes the chunk ids and is stored
+    // in every chunk row, so the target's chunks record which input
+    // versions they were planned from
+    val tag = "compact:" +
+      inDirs.sorted.map(d => s"$d@${chunksStamp(spark, d).fold("")(_.toString)}").mkString(",")
     // a populated target is allowed ONLY when it is this exact
-    // compaction's partial output (same input set -> same persisted
-    // input_split -> identical deterministic chunk ids): that is run()'s
-    // designed wave-checkpoint resume. Any other content would be
-    // silently duplicated by the append semantics — refuse.
-    //
-    // The input-split tag names the input DIRECTORIES; it cannot see
-    // that a directory's CONTENT changed between the partial run and
-    // this resume (appended waves, a re-encode) — in which case resume
-    // would mix chunks planned against the old content with chunks
-    // planned against the new, and the same doc could land twice. A
-    // content fingerprint (order-independent hash over every input
-    // chunk's (chunk_id, checksum, n_rows) — metadata-only scan) is
-    // persisted beside the partial output and must match on resume.
-    val fpFile = new org.apache.hadoop.fs.Path(outDir, "_compact_inputs.fp")
-    val fs = fsOf(spark, outDir)
-    // ONE metadata job answers every per-dir question (content
-    // fingerprint, doc_id ranges, input row counts) — the former shape
-    // ran 3 separate driver jobs per input dir for the same tiny scan
-    val dirMeta = compactDirMeta(spark, inDirs)
-    val contentFp: String = {
-      // decimal sum: order-independent AND overflow-free under ANSI
-      // mode (a long sum of 2^63-scale hashes would throw); the global
-      // sum is the sum of the per-dir sums
-      val tot = dirMeta.flatMap(_._3)
-        .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
-      if (dirMeta.forall(_._3.isEmpty)) "0" else tot.toBigInteger.toString
-    }
+    // compaction's partial output (same inputs at the same versions ->
+    // same input_split -> identical deterministic chunk ids): that is
+    // run()'s designed wave-checkpoint resume. Any other content would
+    // be silently duplicated by the append semantics — refuse. A
+    // resume whose input dirs match but whose versions differ (waves
+    // appended, a re-encode; or a tag written without versions) would
+    // mix chunks planned against the old content with chunks planned
+    // against the new, so the same doc could land twice
     val targetMeta = existingChunkMeta(spark, outDir)
     targetMeta.foreach { meta =>
       val splits = meta.select("input_split").distinct().collect().map(_.getString(0)).toSet
-      require(splits == Set(tag),
+      def dirsOf(split: String) = split.replaceAll("@-?\\d*(?=,|$)", "")
+      require(splits.forall(dirsOf(_) == dirsOf(tag)),
         s"compact target $outDir holds a chunks table from a different input set " +
           s"(${splits.mkString(", ")}); compaction writes a NEW table or resumes its own partial output")
-      // the fingerprint is written before the first wave, so every
-      // partial output of a compaction holds one
-      require(fs.exists(fpFile),
-        s"compact target $outDir holds chunks but no input fingerprint ($fpFile), so " +
-          "its inputs cannot be checked — restart into a fresh target")
-      val stored = readSmallText(fs, fpFile, 64) // a Long prints in <= 20 chars
-      require(stored == contentFp,
+      require(splits == Set(tag),
         s"compact inputs changed since the partial run in $outDir " +
-          s"(fingerprint $stored -> $contentFp); inputs must be immutable across " +
+          s"(${splits.mkString(", ")} -> $tag); inputs must be immutable across " +
           "a resumed compaction — restart into a fresh target")
     }
-    writeSmallText(fs, fpFile, contentFp)
+    // ONE metadata job answers every per-dir question (doc_id ranges,
+    // input row counts)
+    val dirMeta = compactDirMeta(spark, inDirs)
     val (winners, _, metaWinnersRaw) = compactPlanInternal(spark, inDirs, dirMeta)
     // persist the METADATA twin for the duration of the encode: the two
     // Chunker pre-passes both aggregate it, and without the persist the
@@ -398,7 +373,7 @@ object Pipeline {
         val r = chunkMeta(spark, outDir).agg(sum("n_rows")).first()
         if (r.isNullAt(0)) 0L else r.getLong(0)
       }
-    rpt.copy(rowsDropped = dirMeta.map(_._4).sum - outRows)
+    rpt.copy(rowsDropped = dirMeta.map(_._3).sum - outRows)
   }
 
   // ---- doc_id → chunk_id index (the log-pruning lookup path) --------
@@ -850,26 +825,26 @@ object Pipeline {
     // different split gets disjoint chunk ids
     val planned = Chunker.chunked(input, tokensPerChunk, planTag = inputSplit, meta = planMeta)
 
-    // the ledger: chunks durable from a previous (partial) run. Each
-    // wave's parquet commit is atomic, so a chunk present in the table
-    // is complete and valid
-    val done = existingChunkMeta(spark, outDir)
-    // report-only: skipped = planned ∩ completed. Chunk ids are scoped
-    // by input_split (disjoint across splits), so the completed chunks
-    // OF THIS SPLIT are exactly the planned ones a resume skips —
-    // counting every chunk would overstate skips when the target also
-    // holds chunks from other splits (e.g. streaming micro-batches)
-    val skippedCount = done
-      .map(_.filter(col("input_split") === inputSplit).select("chunk_id").distinct().count())
-      .getOrElse(0L)
+    // the ledger: the chunk ids this split already wrote (one read, its
+    // input_split filter pushed to parquet stats). Each wave's parquet
+    // commit is atomic, so a chunk present in the table is complete and
+    // valid. Chunk ids are scoped by input_split (disjoint across
+    // splits), so only this split's chunks can be in the plan: they are
+    // exactly what a resume skips
+    val done = existingChunkMeta(spark, outDir).fold(Array.emptyLongArray)(
+      _.filter(col("input_split") === inputSplit).select("chunk_id").as[Long].collect().distinct.sorted)
 
-    val pending = done match {
-      case Some(d) =>
-        // completed chunk ids are tiny relative to data: broadcast anti-join
-        planned.join(broadcast(d.select("chunk_id").distinct()), Seq("chunk_id"), "left_anti")
-          .as[ChunkedRow]
-      case None => planned
-    }
+    // a split with nothing written (a fresh encode, a new micro-batch)
+    // plans no ledger filter at all; otherwise its ids ship as a sorted
+    // broadcast array, as Chunker ships its plan maps (a broadcast
+    // join's hash relation would hold a 16 MB page on the driver)
+    val pending =
+      if (done.isEmpty) planned
+      else {
+        val doneIds = spark.sparkContext.broadcast(done)
+        val isDone = udf((id: Long) => java.util.Arrays.binarySearch(doneIds.value, id) >= 0)
+        planned.filter(!isDone(col("chunk_id")))
+      }
 
     // wave = hash of chunk_id, NOT chunk_id % waves: chunk ids are
     // base*MaxSplit + salt, and MaxSplit ≡ 0 mod any small wave count,
@@ -946,7 +921,7 @@ object Pipeline {
     }
     if (wavesEff > 1) fsOf(spark, stagingDir).delete(new org.apache.hadoop.fs.Path(stagingDir), true)
     def total(k: String) = waveStats.map(_(k).asInstanceOf[Long]).sum
-    EncodeReport(wavesEff, total("chunks"), skippedCount, total("n_rows"), total("n_tokens"),
+    EncodeReport(wavesEff, total("chunks"), done.length, total("n_rows"), total("n_tokens"),
       total("raw_bytes"), total("encoded_bytes"))
   }
 }

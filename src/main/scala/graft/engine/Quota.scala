@@ -111,8 +111,7 @@ object Admission {
     */
   def decodeAdmittedWithCost(
       chunks: Dataset[EncodedChunk],
-      budgets: Budgets,
-      verifyChecksum: Boolean = true
+      budgets: Budgets
   ): (Dataset[TokenRow], AdmittedCost) = {
     val stats = preflightStats(chunks).first()
     // all-or-nothing across the three budgets: a refusal on a later leg
@@ -131,7 +130,7 @@ object Admission {
       case e: ResourceExhausted if e.resource != "row_count" =>
         budgets.rows.release(stats.getLong(0)); throw e
     }
-    (Decoder.decode(chunks, verifyChecksum),
+    (Decoder.decode(chunks),
       AdmittedCost(stats.getLong(0), stats.getLong(1), stats.getLong(2)))
   }
 }

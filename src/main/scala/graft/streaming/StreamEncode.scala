@@ -11,9 +11,10 @@ import graft.engine.{Chunker, Pipeline, TokenRow}
   * Each micro-batch runs the SAME resumable batch pipeline
   * ([[graft.engine.Pipeline.run]]) with the batch id as the input
   * split tag; chunk ids are deterministic functions of the data, so a
-  * replayed micro-batch (at-least-once source semantics) left_anti-joins
-  * against the chunks table and re-encodes nothing — end-to-end idempotence from
-  * the same mechanism that gives batch resume. Checkpointing of source
+  * replayed micro-batch (at-least-once source semantics) finds its
+  * chunk ids already under its split in the chunks table and re-encodes
+  * nothing — end-to-end idempotence from the same mechanism that gives
+  * batch resume. Checkpointing of source
   * offsets is Spark's own (checkpointLocation).
   *
   * At scale this is the continuous-ingest topology: a file/Kafka source

@@ -95,7 +95,7 @@ object StreamOps {
     * when the watermark advances, unlike a processing-time timeout
     * which forces continuous empty micro-batches). After eviction a
     * replay of the same key would pass again, which is the right trade
-    * at 10^12 keys: the encode pipeline's chunk-id left_anti join
+    * at 10^12 keys: the encode pipeline's chunk-id resume filter
     * ([[graft.engine.Pipeline]]) remains the durable exactly-once
     * ledger; this operator is the cheap in-flight filter in front of
     * it. (This is `dropDuplicatesWithinWatermark` semantics, built on

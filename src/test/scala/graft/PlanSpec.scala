@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -193,7 +194,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("chunks table write carries a bloom filter on chunk_id") {
-    import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(graft.engine.Pipeline.chunksPath(chunksDir))
     val fs = root.getFileSystem(conf)
@@ -212,6 +212,52 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
     assert(found, "no parquet bloom filter found on chunk_id")
+  }
+
+  /** The executed plan of every query `body` runs. The listener bus
+    * delivers in order, so once a marker query run after `body` is
+    * seen, every query of `body` is too.
+    */
+  private def executedPlans(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val marker = s"plans-marker-${System.nanoTime()}"
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(org.apache.spark.sql.functions.lit(marker)).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_.contains(marker)) && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    val plans = seen.asScala.toSeq
+    assert(plans.exists(_.contains(marker)), "the marker query was never seen")
+    plans.filterNot(_.contains(marker))
+  }
+
+  test("a new split's wave write plans no join against the chunks table") {
+    import graft.engine.{Fixtures, Pipeline}
+    val dir = java.nio.file.Files.createTempDirectory("graft-planspec-split").toString
+    def encode(seed: Long, split: String): Unit =
+      Pipeline.run(spark, Fixtures.tokenTable(spark, 200, seed = seed, partitions = 2), dir,
+        tokensPerChunk = 16 * 1024, waves = 1, inputSplit = split)
+    encode(1, "a")
+    val plans = executedPlans(encode(2, "b"))
+    val chunks = Pipeline.chunksPath(dir)
+    def scansChunks(p: String) = p.linesIterator.exists(l => l.contains("FileScan") && l.contains(s"$chunks]"))
+    val writes = plans.filter(_.contains(s"InsertIntoHadoopFsRelationCommand file:$chunks,"))
+    assert(writes.length == 1, s"expected one wave write:\n${plans.mkString("\n\n")}")
+    assert(!writes.head.contains("Join") && !scansChunks(writes.head),
+      s"the wave write reads the chunks table:\n${writes.head}")
+    // the one ledger read: this split's ids, the split filter pushed
+    val ledger = plans.filter(scansChunks)
+    assert(ledger.length == 1 && ledger.head.contains("PushedFilters: [IsNotNull(input_split), EqualTo(input_split,b)]"),
+      s"ledger reads:\n${ledger.mkString("\n\n")}")
+    graft.engine.Verifier.rmTree(dir)
   }
 
   test("q37: embedding vectors do not ride the LSH band self-join") {

@@ -148,6 +148,43 @@ class SessionMemoSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     Verifier.rmTree(dir)
   }
 
+  /** Spark jobs of one `Pipeline.run` of `ds` into `dir`, with its report. */
+  private def runJobs(ds: org.apache.spark.sql.Dataset[graft.engine.TokenRow], dir: String,
+      split: String): (Int, Pipeline.EncodeReport) = {
+    var report: Pipeline.EncodeReport = null
+    val jobs = jobsOf {
+      report = Pipeline.run(spark, ds, dir, tokensPerChunk = 16 * 1024, waves = 1, inputSplit = split)
+    }
+    (jobs, report)
+  }
+
+  test("a resume with nothing to encode reads its split's ids once: 7 jobs") {
+    val dir = Files.createTempDirectory("graft-memo-resume").toString
+    val ds = Fixtures.tokenTable(spark, 400, seed = 6, partitions = 2)
+    Pipeline.run(spark, ds, dir, tokensPerChunk = 16 * 1024, waves = 1)
+    val written = Pipeline.readChunks(spark, dir).count()
+    val (jobs, report) = runJobs(ds, dir, "")
+    assert(report.chunksEncoded == 0 && report.chunksSkipped == written, report)
+    // the two Chunker pre-passes (2 jobs each), the ledger read (1) and
+    // the empty wave write (2)
+    assert(jobs == 7, s"a resume with nothing to encode submitted $jobs job(s)")
+    Verifier.rmTree(dir)
+  }
+
+  test("a new split into a table holding other splits submits 8 jobs") {
+    val dir = Files.createTempDirectory("graft-memo-split").toString
+    Seq("a", "b").zipWithIndex.foreach { case (split, i) =>
+      Pipeline.run(spark, Fixtures.tokenTable(spark, 200, seed = 10 + i, partitions = 2), dir,
+        tokensPerChunk = 16 * 1024, waves = 1, inputSplit = split)
+    }
+    val (jobs, report) = runJobs(Fixtures.tokenTable(spark, 200, seed = 12, partitions = 2), dir, "c")
+    assert(report.chunksSkipped == 0 && report.rows == 200, report)
+    // as a resume, plus one schema inference of the new table version;
+    // the wave write plans no ledger filter
+    assert(jobs == 8, s"a new split submitted $jobs job(s)")
+    Verifier.rmTree(dir)
+  }
+
   test("defining a fixture table again on an unchanged file submits no job") {
     assertWarmJobs(s"SparkEntry.t documents on $sf", 0)(
       SparkEntry.t(spark, sf, "documents"))

@@ -5,12 +5,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import java.nio.file.Files
 
-/** Brute-force distinct for cross-checking the dictionary-only path. */
-object IntCodecBrute {
-  def distinct(c: EncodedChunk): Array[Int] =
-    graft.codec.IntCodec.decode(c.tokens_enc).distinct.sorted
-}
-
 /** E2E engine suite per FIXTURES.md §§2-3: bit-identical round-trip,
   * kill-one-partition resume, token-weighted skew splitting, and the
   * size-vs-stock-parquet bar.
@@ -450,7 +444,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(idx == src)
   }
 
-  test("distinctTokens: dict chunks read dictionary only; cardinality exact") {
+  test("token_cardinality is the exact distinct token count of each chunk") {
     import spark.implicits._
     // low-cardinality tokens force the dict codec
     val rows = (0 until 50).map { i =>
@@ -460,10 +454,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val chunks = Encoder.encodeTable(ds, tokensPerChunk = 1 << 24).collect()
     assert(chunks.nonEmpty)
     chunks.foreach { c =>
-      val viaApi = Decoder.distinctTokens(c)
-      val brute = IntCodecBrute.distinct(c)
-      assert(viaApi.sameElements(brute))
-      assert(c.token_cardinality == viaApi.length)
+      assert(c.token_cardinality == graft.codec.IntCodec.decode(c.tokens_enc).distinct.length)
     }
   }
 
@@ -572,8 +563,9 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // same inputs, unchanged: idempotent resume/replay still allowed
     Pipeline.compact(spark, Seq(dirA), out, tokensPerChunk = 16 * 1024, waves = 1)
     // now APPEND to the input dir (content changes, path set unchanged —
-    // the input_split tag alone cannot see this); a distinct inputSplit
-    // gives the new docs disjoint chunk ids so the append is real
+    // only the input's version in the input_split tag changes); a
+    // distinct inputSplit gives the new docs disjoint chunk ids so the
+    // append is real
     val extra = Fixtures.tokenTable(spark, 50, seed = 62, medianLen = 64, maxLen = 512, partitions = 1)
       .map(r => r.copy(doc_id = "zz-" + r.doc_id))
     Pipeline.run(spark, extra, dirA, tokensPerChunk = 16 * 1024, waves = 1,
@@ -1112,17 +1104,22 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Verifier.rmTree(dir)
   }
 
-  test("a compaction target holding chunks but no input fingerprint refuses") {
+  test("a partial compaction target tagged without input versions refuses") {
     val ds = Fixtures.tokenTable(spark, 100, seed = 41, medianLen = 64, maxLen = 512, partitions = 2)
     val in = tmpDir()
     Pipeline.run(spark, ds, in, tokensPerChunk = 16 * 1024, waves = 1)
     val out = tmpDir() + "/out"
-    Pipeline.compact(spark, Seq(in), out, tokensPerChunk = 16 * 1024, waves = 1)
-    Files.delete(java.nio.file.Paths.get(out, "_compact_inputs.fp"))
+    // a killed compaction of the earlier format: its input split names
+    // the input dir without the version of its chunks table
+    intercept[Exception](Pipeline.run(spark, Pipeline.readTokens(spark, in), out,
+      tokensPerChunk = 512, waves = 3, inputSplit = s"compact:$in",
+      failOnChunk = id => Pipeline.waveOfId(id, 3) == 2))
+    val partial = Pipeline.readTokens(spark, out).count()
+    assert(partial > 0 && partial < 100, s"the killed run left $partial rows")
     val e = intercept[IllegalArgumentException](
-      Pipeline.compact(spark, Seq(in), out, tokensPerChunk = 16 * 1024, waves = 1))
-    assert(e.getMessage.contains("no input fingerprint"), e.getMessage)
-    assert(Pipeline.readTokens(spark, out).count() == 100, "a refused resume writes nothing")
+      Pipeline.compact(spark, Seq(in), out, tokensPerChunk = 512, waves = 3))
+    assert(e.getMessage.contains("inputs changed"), e.getMessage)
+    assert(Pipeline.readTokens(spark, out).count() == partial, "a refused resume writes nothing")
     Verifier.rmTree(in); Verifier.rmTree(out)
   }
 

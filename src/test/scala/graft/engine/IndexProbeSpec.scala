@@ -273,14 +273,24 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("chunk locators survive partition values that need escaping in a path or a URI") {
     import spark.implicits._
-    // a JVM whose file-name encoding cannot name "café" (an ASCII
-    // locale) cannot write its partition directory at all
-    val nonAscii = Seq("caf\u00e9").filter(java.nio.charset.Charset.forName(
-      System.getProperty("sun.jnu.encoding")).newEncoder().canEncode(_))
-    if (nonAscii.isEmpty) info("this JVM cannot name a file \"caf\u00e9\": that source is left out")
-    val sources = Seq("a b", "50%", "k=v", "#1", "say \"hi\"", "007") ++ nonAscii
-    val rows = for ((src, s) <- sources.zipWithIndex; i <- 0 until 12)
+    def rowsOf(sources: Seq[String]) = for ((src, s) <- sources.zipWithIndex; i <- 0 until 12)
       yield TokenRow(s"d$s-$i", Array.tabulate(2 + i % 3)(j => s * 100 + i * 3 + j), 2 + i % 3, src)
+    val escaped = Seq("a b", "50%", "k=v", "#1", "say \"hi\"", "007")
+    // "café" names a partition directory only in a JVM whose file-name
+    // charset can encode it; any other JVM (an ASCII locale) refuses
+    // the source before a wave writes
+    val cafe = "caf\u00e9"
+    val fileNames = java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+    val nameable = fileNames.newEncoder().canEncode(cafe)
+    if (!nameable) {
+      val refused = tmpDir()
+      val e = intercept[IllegalArgumentException](Pipeline.run(spark,
+        rowsOf(escaped :+ cafe).toDS().repartition(2), refused, tokensPerChunk = 16, waves = 3))
+      assert(e.getMessage.contains(cafe) && e.getMessage.contains(fileNames.name), e.getMessage)
+      assert(!Files.exists(java.nio.file.Paths.get(Pipeline.chunksPath(refused))), "a refused encode writes nothing")
+    }
+    val sources = if (nameable) escaped :+ cafe else escaped
+    val rows = rowsOf(sources)
     val d = tmpDir()
     Pipeline.run(spark, rows.toDS().repartition(2), d, tokensPerChunk = 16, waves = 3)
     Pipeline.buildDocIndex(spark, d)
