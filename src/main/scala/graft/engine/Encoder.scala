@@ -208,11 +208,41 @@ object Decoder {
     extends RuntimeException(
       s"chunk $chunkId checksum mismatch: stored=$expected decoded=$got")
 
-  /** Decode one chunk back into rows; throws on checksum mismatch. */
+  /** The lengths of one chunk, its header counts checked against each
+    * other before any array is sized by them: the lengths and sources
+    * counts must equal the doc-id count and, when the token payload is
+    * given, its count must equal the lengths' sum, or it throws
+    * IllegalArgumentException. The token checksum cannot see such a
+    * mismatch: it covers the token stream, not how the lengths slice it.
+    */
+  private def checkedLengths(
+      chunkId: Long,
+      docIdsEnc: Array[Byte],
+      lengthsEnc: Array[Byte],
+      sourcesEnc: Array[Byte],
+      tokensEnc: Option[Array[Byte]]
+  ): Array[Int] = {
+    val n = StrCodec.count(docIdsEnc)
+    val nLengths = IntCodec.count(lengthsEnc)
+    val nSources = StrCodec.count(sourcesEnc)
+    require(nLengths == n && nSources == n,
+      s"chunk $chunkId: $n doc ids, $nLengths lengths, $nSources sources")
+    val lengths = IntCodec.decode(lengthsEnc)
+    tokensEnc.foreach { t =>
+      val nTokens = IntCodec.count(t)
+      val sum = lengths.foldLeft(0L)(_ + _)
+      require(nTokens == sum, s"chunk $chunkId: $nTokens tokens, lengths sum to $sum")
+    }
+    lengths
+  }
+
+  /** Decode one chunk back into rows; throws on checksum mismatch and,
+    * before any decode but the lengths', on header counts that disagree.
+    */
   def decodeChunk(c: EncodedChunk, verifyChecksum: Boolean = true): Iterator[TokenRow] = {
+    val lengths = checkedLengths(c.chunk_id, c.doc_ids_enc, c.lengths_enc, c.sources_enc, Some(c.tokens_enc))
     val docIds = StrCodec.decode(c.doc_ids_enc)
     val sources = StrCodec.decode(c.sources_enc)
-    val lengths = IntCodec.decode(c.lengths_enc)
     val tokens = IntCodec.decode(c.tokens_enc)
     if (verifyChecksum) {
       val got = Checksum.ofTokens(tokens, tokens.length)
@@ -257,28 +287,21 @@ object Decoder {
     * Skips checksum verification by design — the checksum covers the
     * whole token stream, and hashing it would cost the O(chunk) decode
     * this path exists to avoid. It runs on the driver too
-    * ([[IndexProbe.fetch]]), so the header counts are checked against
-    * each other before any array is sized by them: the lengths and
-    * sources counts must equal the doc-id count, and the token count
-    * the lengths' sum, or it throws IllegalArgumentException.
+    * ([[IndexProbe.fetch]]), so the header counts are checked
+    * ([[checkedLengths]]) before any array is sized by them.
     */
   def decodeDocsTokensWhere(
       c: EncodedChunk,
       pred: String => Boolean
   ): Iterator[TokenRow] = {
-    val n = StrCodec.count(c.doc_ids_enc)
-    val nLengths = IntCodec.count(c.lengths_enc)
-    val nSources = StrCodec.count(c.sources_enc)
-    require(nLengths == n && nSources == n,
-      s"chunk ${c.chunk_id}: $n doc ids, $nLengths lengths, $nSources sources")
-    val lengths = IntCodec.decode(c.lengths_enc)
-    val offsets = new Array[Long](n)
-    var off = 0L
+    val lengths = checkedLengths(c.chunk_id, c.doc_ids_enc, c.lengths_enc, c.sources_enc, Some(c.tokens_enc))
+    val n = lengths.length
+    // the token count is an Int and equals the lengths' sum, so every
+    // in-chunk offset fits one
+    val offsets = new Array[Int](n)
+    var off = 0
     var i = 0
     while (i < n) { offsets(i) = off; off += lengths(i); i += 1 }
-    // the token count is an Int, so every in-chunk offset fits one
-    val nTokens = IntCodec.count(c.tokens_enc)
-    require(nTokens == off, s"chunk ${c.chunk_id}: $nTokens tokens, lengths sum to $off")
     val docIds = StrCodec.decode(c.doc_ids_enc)
     val hits = scala.collection.mutable.ArrayBuffer.empty[Int]
     i = 0
@@ -289,7 +312,7 @@ object Decoder {
     if (hits.isEmpty) return Iterator.empty
     val sources = StrCodec.decode(c.sources_enc)
     hits.iterator.map { idx =>
-      val toks = IntCodec.decodeRange(c.tokens_enc, offsets(idx).toInt, lengths(idx))
+      val toks = IntCodec.decodeRange(c.tokens_enc, offsets(idx), lengths(idx))
       TokenRow(docIds(idx), toks, lengths(idx), sources(idx))
     }
   }
@@ -300,7 +323,8 @@ object Decoder {
     * ([[Pipeline.readDocIndex]]) and a metadata consumer pays neither
     * token I/O nor token decode — the projection split the reference
     * achieves with separate labels/chunks files
-    * (reference: convert/writer.go:222-243).
+    * (reference: convert/writer.go:222-243). Its three counts are
+    * checked against each other ([[checkedLengths]]).
     */
   def decodeDocIndex(
       chunkId: Long,
@@ -308,9 +332,9 @@ object Decoder {
       lengthsEnc: Array[Byte],
       sourcesEnc: Array[Byte]
   ): Iterator[DocIndexRow] = {
+    val lengths = checkedLengths(chunkId, docIdsEnc, lengthsEnc, sourcesEnc, None)
     val docIds = StrCodec.decode(docIdsEnc)
     val sources = StrCodec.decode(sourcesEnc)
-    val lengths = IntCodec.decode(lengthsEnc)
     Iterator.tabulate(docIds.length) { i =>
       DocIndexRow(chunkId, docIds(i), lengths(i), sources(i))
     }

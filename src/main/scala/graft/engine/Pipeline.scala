@@ -157,122 +157,73 @@ object Pipeline {
   ): (Dataset[TokenRow], Admission.AdmittedCost) =
     Admission.decodeAdmittedWithCost(chunksOfSources(spark, outDir, sources), budgets)
 
-  /** Per-input-dir chunk metadata in ONE Spark job (guide §1/§2: one
-    * union+groupBy, not a scheduling floor per dir): for each dir
-    * index, (min doc_id, max doc_id, sum of n_rows). Dirs may repeat;
-    * the index keys them.
+  /** The doc table of a compaction: the union of its inputs' doc
+    * indexes ([[readDocIndex]], payload never read) grouped by doc_id.
+    * Each group keeps its winner's (source, n_tok), the min by (source,
+    * n_tok), and `n`, the count of its input rows. A null doc_id is one
+    * group, as in the payload dedup. Its rows are the (source, doc_id,
+    * n_tok) of the compacted output: the payload dedup's min by (source,
+    * n_tok, checksum) keeps the same pair for every doc, since the
+    * checksum only breaks exact ties, which share source and n_tok.
+    * (Struct min orders strings in UTF-8 byte order vs the kernel's
+    * UTF-16: for a supplementary-plane source name the two could pick
+    * different winners; that would only shift Chunker's bucket masses,
+    * never which rows encode, and both orders are deterministic, so
+    * chunk ids stay a pure function of the input set.)
     */
-  private def compactDirMeta(
-      spark: SparkSession,
-      inDirs: Seq[String]
-  ): IndexedSeq[(Option[String], Option[String], Long)] = {
-    val per = inDirs.zipWithIndex.map { case (d, i) =>
-      chunkMeta(spark, d).select(
-        lit(i).as("dir"),
-        col("min_doc_id"), col("max_doc_id"),
-        col("n_rows").cast("long").as("n_rows"))
-    }.reduce(_ unionByName _)
-    val rows = per.groupBy(col("dir")).agg(
-      min("min_doc_id"), max("max_doc_id"), sum("n_rows"))
-      .collect()
-      .map(r => r.getInt(0) -> ((Option(r.getString(1)), Option(r.getString(2)),
-        if (r.isNullAt(3)) 0L else r.getLong(3))))
-      .toMap
-    // a dir with zero chunk rows produces no group — fill the empty shape
-    inDirs.indices.map(i => rows.getOrElse(i, (None, None, 0L)))
+  private def compactDocs(spark: SparkSession, inDirs: Seq[String]): DataFrame =
+    inDirs.map(d => readDocIndex(spark, d).toDF().select(col("source"), col("doc_id"), col("n_tok")))
+      .reduce(_ union _)
+      .groupBy(col("doc_id"))
+      .agg(min(struct(col("source"), col("n_tok"))).as("w"), count(lit(1)).as("n"))
+      .select(col("w.source").as("source"), col("doc_id"), col("w.n_tok").as("n_tok"), col("n"))
+
+  /** One aggregate over [[compactDocs]]: (input rows, output rows, does
+    * no doc repeat).
+    */
+  private def docCounts(docs: DataFrame): (Long, Long, Boolean) = {
+    val r = docs.agg(coalesce(sum("n"), lit(0L)), count(lit(1)), coalesce(max("n"), lit(1L))).first()
+    (r.getLong(0), r.getLong(1), r.getLong(2) <= 1)
   }
 
-  /** The decoded-and-deduplicated row plan a compaction encodes, plus
-    * whether the dedup shuffle was provably unnecessary and skipped.
-    *
-    * Fast path (the common case at scale — backfills compact disjoint
-    * date/id ranges): when (a) the input dirs' doc_id RANGES are
-    * pairwise disjoint (exact proof from chunk metadata min/max — one
-    * tiny agg per dir) and (b) each dir is internally duplicate-free
-    * (count == countDistinct over the payload-free doc index), no doc
-    * can appear twice, so the union feeds the encoder directly and the
-    * only payload shuffle left is run()'s repartition-by-chunk. The
-    * proofs are metadata-priced: (a) never touches row data at all,
-    * (b) shuffles only doc_id strings with partial aggregation. Any
-    * doubt (overlapping ranges, an internal duplicate, an empty dir
-    * answer) falls back to the full dedup — the fast path is an
-    * optimization, never a correctness gate.
-    *
-    * Also returns the metadata-only (source, doc_id, n_tok)
-    * row-equivalent of the winners, which [[run]] feeds to the Chunker
-    * pre-passes so the expensive decode(+dedup) plan evaluates once,
-    * not three times ([[Chunker.assignChunks]] meta).
+  /** The decoded rows a compaction encodes. When no doc repeats it is
+    * the plain union of the inputs, and the only payload shuffle left is
+    * [[run]]'s repartition by chunk. Otherwise one deterministic winner
+    * per doc_id, min by (source, n_tok, content checksum): one shuffle on
+    * doc_id with map-side combine.
     */
-  private def compactPlanInternal(
+  private def compactRows(
       spark: SparkSession,
       inDirs: Seq[String],
-      dirMeta: IndexedSeq[(Option[String], Option[String], Long)]
-  ): (Dataset[TokenRow], Boolean, DataFrame) = {
+      duplicateFree: Boolean
+  ): Dataset[TokenRow] = {
     import spark.implicits._
     val all = inDirs.map(d => readTokens(spark, d)).reduce(_ union _)
-    val metaAll = inDirs.map(d => readDocIndex(spark, d).toDF()
-      .select(col("source"), col("doc_id"), col("n_tok"))).reduce(_ union _)
-    val nonEmpty = dirMeta.collect { case (Some(lo), Some(hi), _) => (lo, hi) }
-    // Utf8Order throughout: the per-dir bounds were aggregated by Spark
-    // in UTF-8 byte order, so the driver-side disjointness proof must
-    // sort and compare in the SAME order — mixing in Java's UTF-16
-    // compare could declare overlapping supplementary-plane ranges
-    // disjoint and wrongly skip the dedup
-    val rangesDisjoint = nonEmpty.sortBy(_._1)(Utf8Order).sliding(2).forall {
-      case Seq((_, aHi), (bLo, _)) => Utf8Order.lt(aHi, bLo)
-      case _ => true
-    }
-    // internal-duplicate proof for ALL dirs in ONE payload-free job
-    // (was one job per dir): count == countDistinct over each dir's
-    // doc index
-    val provablyUnique = rangesDisjoint && {
-      val per = inDirs.zipWithIndex.map { case (d, i) =>
-        readDocIndex(spark, d).toDF().select(lit(i).as("dir"), col("doc_id"))
-      }.reduce(_ unionByName _)
-        .groupBy(col("dir"))
-        .agg(count(col("doc_id")).as("n"), countDistinct(col("doc_id")).as("nd"))
-        .collect()
-      per.forall(r => r.getLong(1) == r.getLong(2))
-    }
-    if (provablyUnique) (all, true, metaAll)
-    else {
+    if (duplicateFree) all
+    else
       // key each row ONCE (content checksum is O(n_tok)); the combiner
       // then compares precomputed keys however many inputs collide. No
       // persist: at target scale materializing the decoded union would
       // demand corpus-size executor storage — the single remaining
-      // payload evaluation (the encode pass; pre-passes read metadata)
-      // is the cheaper trade, and compact's row accounting is
-      // metadata-only.
-      val winners = all
+      // payload evaluation (the encode pass; pre-passes read the doc
+      // table) is the cheaper trade
+      all
         .map(r => ((r.source, r.n_tok, Checksum.ofTokens(r.tokens, r.n_tok)), r))
         .groupByKey(_._2.doc_id)
         .reduceGroups((x, y) =>
           if (Ordering[(String, Int, Long)].lteq(x._1, y._1)) x else y)
         .map(_._2._2)
-      // metadata twin of the dedup: min by (source, n_tok) per doc_id —
-      // same (source, n_tok) as the winners' (source, n_tok, checksum)
-      // min for every doc (the checksum only breaks exact ties, which
-      // share source and n_tok), so the Chunker pre-pass masses match.
-      // (Struct min orders strings in UTF-8 byte order vs the kernel's
-      // UTF-16 — for a supplementary-plane source name the two could
-      // pick different winners; that would only shift bucket masses,
-      // never which rows encode, and both orders are deterministic, so
-      // chunk ids stay a pure function of the input set.)
-      val metaWinners = metaAll
-        .groupBy(col("doc_id"))
-        .agg(min(struct(col("source"), col("n_tok"))).as("w"))
-        .select(col("w.source").as("source"), col("doc_id"),
-          col("w.n_tok").as("n_tok"))
-      (winners, false, metaWinners)
-    }
   }
 
+  /** A compaction's row plan and whether it skips the dedup (no doc
+    * repeats across or within the inputs).
+    */
   private[engine] def compactPlan(
       spark: SparkSession,
       inDirs: Seq[String]
   ): (Dataset[TokenRow], Boolean) = {
-    val (winners, fast, _) = compactPlanInternal(spark, inDirs, compactDirMeta(spark, inDirs))
-    (winners, fast)
+    val (_, _, duplicateFree) = docCounts(compactDocs(spark, inDirs))
+    (compactRows(spark, inDirs, duplicateFree), duplicateFree)
   }
 
   /** Compact one or more chunks tables into a NEW deduplicated table —
@@ -291,13 +242,15 @@ object Pipeline {
     * independent of directory order, partitioning or cluster size (the
     * same idempotence discipline as chunk ids and resume).
     *
-    * Scale shape: inputs are decoded once (chunk-parallel); dedup is
-    * one shuffle on doc_id with map-side combine (reduceGroups); then
-    * the standard encode pipeline (one payload shuffle + write).
-    * When the inputs are PROVABLY duplicate-free ([[compactPlan]]'s
-    * metadata checks) the dedup shuffle is skipped entirely — the
-    * common 100 TB compaction (backfills of disjoint date/id ranges)
-    * pays one payload shuffle, not two.
+    * Scale shape: one payload-free doc table ([[compactDocs]], the
+    * inputs' doc indexes grouped by doc_id) is persisted for the run,
+    * and one aggregate over it gives the input rows, the output rows
+    * and whether any doc repeats. When none does ([[compactPlan]]), the
+    * inputs' union feeds the encoder directly: backfills of disjoint
+    * ranges and streaming micro-batches with interleaved ones pay one
+    * payload shuffle, not two. The doc table also feeds both Chunker
+    * pre-passes, so the payload plan evaluates once, and `rowsDropped`
+    * (input rows less output rows) is known before the run.
     */
   def compact(
       spark: SparkSession,
@@ -309,9 +262,10 @@ object Pipeline {
   ): EncodeReport = {
     require(inDirs.nonEmpty, "compact needs at least one input dir")
     // in-place compaction can never work: run() appends to the target
-    // while readTokens streams from it
-    def canon(p: String) = try new java.io.File(p).getCanonicalPath catch { case _: Throwable => p }
-    require(!inDirs.map(canon).contains(canon(outDir)),
+    // while readTokens streams from it. Both sides are qualified by
+    // their file system, so `/x` and `file:/x` name the same dir
+    def qualified(p: String) = fsOf(spark, p).makeQualified(new org.apache.hadoop.fs.Path(p))
+    require(!inDirs.map(qualified).contains(qualified(outDir)),
       s"compact target $outDir must not be one of its inputs (in-place compaction would read while appending)")
     // the input split names each input dir at the version of its chunks
     // table (its `chunks/` stamp). It scopes the chunk ids and is stored
@@ -328,8 +282,7 @@ object Pipeline {
     // appended, a re-encode; or a tag written without versions) would
     // mix chunks planned against the old content with chunks planned
     // against the new, so the same doc could land twice
-    val targetMeta = existingChunkMeta(spark, outDir)
-    targetMeta.foreach { meta =>
+    existingChunkMeta(spark, outDir).foreach { meta =>
       val splits = meta.select("input_split").distinct().collect().map(_.getString(0)).toSet
       def dirsOf(split: String) = split.replaceAll("@-?\\d*(?=,|$)", "")
       require(splits.forall(dirsOf(_) == dirsOf(tag)),
@@ -340,40 +293,22 @@ object Pipeline {
           s"(${splits.mkString(", ")} -> $tag); inputs must be immutable across " +
           "a resumed compaction — restart into a fresh target")
     }
-    // ONE metadata job answers every per-dir question (doc_id ranges,
-    // input row counts)
-    val dirMeta = compactDirMeta(spark, inDirs)
-    val (winners, _, metaWinnersRaw) = compactPlanInternal(spark, inDirs, dirMeta)
-    // persist the METADATA twin for the duration of the encode: the two
-    // Chunker pre-passes both aggregate it, and without the persist the
-    // doc-index union + dedup shuffle evaluates once per pre-pass. This
-    // is ~1% of the payload bytes (ids/lengths/sources only) — bounded,
-    // unlike the corpus-sized payload persist compactPlan deliberately
-    // declines above.
-    val metaWinners = metaWinnersRaw
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rpt =
-      try run(spark, winners, outDir, tokensPerChunk, waves, inputSplit = tag,
-        planMeta = Some(metaWinners))
-      finally metaWinners.unpersist()
-    if (verify) {
-      val v = Verifier.verify(winners, readChunks(spark, outDir))
-      require(v.ok, s"compact round-trip verification FAILED: $v")
-    }
-    // dedup accounting from chunk METADATA (payload pruned), correct on
-    // resume too — rpt.rows counts only the waves this invocation
-    // wrote. Input row counts come from the combined dirMeta job. A
-    // FRESH target needs no metadata job at all: every output row was
-    // written by this invocation's waves, so rpt.rows IS the target
-    // row count; only a resumed target (pre-existing chunks) re-reads
-    // the directory.
-    val outRows =
-      if (targetMeta.isEmpty) rpt.rows
-      else {
-        val r = chunkMeta(spark, outDir).agg(sum("n_rows")).first()
-        if (r.isNullAt(0)) 0L else r.getLong(0)
+    // persisted for the run: the aggregate below and the two Chunker
+    // pre-passes all read it, and without the persist the doc-index
+    // union and its grouping shuffle evaluate once per read. It is ~1%
+    // of the payload bytes (ids/lengths/sources only) — bounded, unlike
+    // the corpus-sized payload persist compactRows declines
+    val docs = compactDocs(spark, inDirs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (inputRows, outputRows, duplicateFree) = docCounts(docs)
+      val rows = compactRows(spark, inDirs, duplicateFree)
+      val rpt = run(spark, rows, outDir, tokensPerChunk, waves, inputSplit = tag, planMeta = Some(docs))
+      if (verify) {
+        val v = Verifier.verify(rows, readChunks(spark, outDir))
+        require(v.ok, s"compact round-trip verification FAILED: $v")
       }
-    rpt.copy(rowsDropped = dirMeta.map(_._3).sum - outRows)
+      rpt.copy(rowsDropped = inputRows - outputRows)
+    } finally docs.unpersist()
   }
 
   // ---- doc_id → chunk_id index (the log-pruning lookup path) --------

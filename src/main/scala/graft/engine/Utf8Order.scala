@@ -11,7 +11,7 @@ package graft.engine
   *
   * Every doc_id min/max the engine computes driver-side or kernel-side
   * is later compared against Spark column predicates (chunk-range
-  * pruning, compaction disjointness proofs), so those computations
+  * pruning, doc-index fences), so those computations
   * must use THIS ordering, not the default String one — otherwise a
   * chunk's stored [min_doc_id, max_doc_id] can exclude a doc_id it
   * contains (under Spark's comparator) and range pruning silently

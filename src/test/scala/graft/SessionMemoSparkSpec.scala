@@ -185,6 +185,37 @@ class SessionMemoSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     Verifier.rmTree(dir)
   }
 
+  test("a compaction of two overlapping inputs submits 13 jobs, and its resume 15") {
+    val ds = Fixtures.tokenTable(spark, 300, seed = 5, medianLen = 64, maxLen = 512, partitions = 2)
+    val inputs = Seq(
+      ds.filter(_.doc_id < "doc_000000000200"),   // docs 0-199
+      ds.filter(_.doc_id >= "doc_000000000100")   // docs 100-299 (100 shared)
+    ).map { part =>
+      val dir = Files.createTempDirectory("graft-memo-compact-in").toString
+      Pipeline.run(spark, part, dir, tokensPerChunk = 16 * 1024, waves = 1)
+      dir
+    }
+    val out = Files.createTempDirectory("graft-memo-compact").toString + "/out"
+    def compact(): (Int, Pipeline.EncodeReport) = {
+      var report: Pipeline.EncodeReport = null
+      val jobs = jobsOf {
+        report = Pipeline.compact(spark, inputs, out, tokensPerChunk = 16 * 1024, waves = 1)
+      }
+      (jobs, report)
+    }
+    val (fresh, first) = compact()
+    assert(first.rows == 300 && first.rowsDropped == 100, first)
+    val (resumed, again) = compact()
+    assert(again.chunksEncoded == 0 && again.rowsDropped == 100, again)
+    // fresh: the inputs' schema checks (2), the doc table's aggregate
+    // (2), the Chunker pre-passes and the wave write (9). A resume finds
+    // the inputs' schemas memoized, checks the target's (1), and adds
+    // the target check (2) and the ledger read (1)
+    assert(fresh == 13, s"a fresh compaction submitted $fresh job(s)")
+    assert(resumed == 15, s"a resumed compaction submitted $resumed job(s)")
+    (inputs :+ out).foreach(Verifier.rmTree)
+  }
+
   test("defining a fixture table again on an unchanged file submits no job") {
     assertWarmJobs(s"SparkEntry.t documents on $sf", 0)(
       SparkEntry.t(spark, sf, "documents"))

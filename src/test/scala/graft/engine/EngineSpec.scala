@@ -390,6 +390,28 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("decodeChunk: lengths whose sum disagrees with the token count throw, checksum intact") {
+    import graft.codec.{IntCodec, StrCodec}
+    val rows = (0 until 20).map(i => TokenRow(f"d$i%02d", Array.tabulate(3 + i % 4)(j => i * 7 + j), 3 + i % 4, "web"))
+    val c = Encoder.encodeTable(spark.createDataset(rows)(org.apache.spark.sql.Encoders.product[TokenRow]),
+      tokensPerChunk = 1 << 30).collect().head
+    assert(Decoder.decodeChunk(c).length == rows.length)
+    val lengths = IntCodec.decode(c.lengths_enc)
+    // the token stream and its checksum are untouched: only how the
+    // lengths slice it changes (a longer sum would read past the end,
+    // a shorter one drop the trailing tokens)
+    Seq(1, -1).foreach { shift =>
+      val shifted = lengths.clone()
+      shifted(shifted.length - 1) += shift
+      val chunk = c.copy(lengths_enc = IntCodec.Plain.encode(shifted))
+      intercept[IllegalArgumentException](Decoder.decodeChunk(chunk).toList)
+    }
+    // the doc index checks its three counts too
+    val shortSources = StrCodec.encodeAuto(rows.dropRight(1).map(_.source).toArray)._2
+    intercept[IllegalArgumentException](
+      Decoder.decodeDocIndex(c.chunk_id, c.doc_ids_enc, c.lengths_enc, shortSources).toList)
+  }
+
   test("readLineage reports the input_split each chunk was written under") {
     import spark.implicits._
     val ds = Fixtures.tokenTable(spark, 300, seed = 41, medianLen = 64, maxLen = 512, partitions = 2)
@@ -920,7 +942,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert((ladder & members).isEmpty && (ladder ++ members).size == rows.size)
   }
 
-  test("compact: provably disjoint inputs skip the dedup shuffle; overlap does not") {
+  test("compact: inputs sharing no doc skip the dedup shuffle; overlap does not") {
     import spark.implicits._
     val dsA = Fixtures.tokenTable(spark, 200, seed = 71, medianLen = 64, maxLen = 512, partitions = 2)
     val dsB = dsA.map(r => r.copy(doc_id = "zz-" + r.doc_id))
@@ -929,7 +951,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Pipeline.run(spark, dsB, dirB, tokensPerChunk = 16 * 1024, waves = 1)
     // doc ranges: dirA = doc_*, dirB = zz-doc_* — disjoint, both unique
     val (fastPlan, skipped) = Pipeline.compactPlan(spark, Seq(dirA, dirB))
-    assert(skipped, "disjoint unique inputs must take the no-dedup fast path")
+    assert(skipped, "inputs sharing no doc must take the no-dedup fast path")
     // the fast plan is decode+union only: no shuffle stage at all
     // before the encoder's own repartition
     val physical = fastPlan.queryExecution.executedPlan.toString
@@ -949,6 +971,37 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     srcRows.foreach(r => assert(decoded(r.doc_id) == r.tokens.toSeq))
   }
 
+  test("compact: inputs with interleaved doc ranges and no shared doc skip the dedup") {
+    import spark.implicits._
+    val ds = Fixtures.tokenTable(spark, 300, seed = 73, medianLen = 64, maxLen = 512, partitions = 2)
+    // even and odd docs: each input's doc range spans the other's, as
+    // streaming micro-batches' ranges do
+    val dirA = tmpDir(); val dirB = tmpDir()
+    Pipeline.run(spark, ds.filter(_.doc_id.last.asDigit % 2 == 0), dirA, tokensPerChunk = 16 * 1024, waves = 1)
+    Pipeline.run(spark, ds.filter(_.doc_id.last.asDigit % 2 == 1), dirB, tokensPerChunk = 16 * 1024, waves = 1)
+    val (plan, skipped) = Pipeline.compactPlan(spark, Seq(dirA, dirB))
+    assert(skipped, "inputs sharing no doc must take the no-dedup fast path")
+    val physical = plan.queryExecution.executedPlan.toString
+    assert(!physical.contains("Exchange"), s"fast path still shuffles:\n$physical")
+    val out = tmpDir()
+    val rpt = Pipeline.compact(spark, Seq(dirA, dirB), out, tokensPerChunk = 16 * 1024, waves = 1)
+    assert(rpt.rowsDropped == 0 && rpt.rows == 300, rpt)
+    val decoded = Pipeline.readTokens(spark, out).collect().map(r => r.doc_id -> r.tokens.toSeq).toMap
+    assert(decoded == ds.collect().map(r => r.doc_id -> r.tokens.toSeq).toMap)
+    Seq(dirA, dirB, out).foreach(Verifier.rmTree)
+  }
+
+  test("compact refuses a target that names one of its inputs by a file: URI") {
+    val ds = Fixtures.tokenTable(spark, 100, seed = 43, medianLen = 64, maxLen = 512, partitions = 2)
+    val dir = tmpDir()
+    Pipeline.run(spark, ds, dir, tokensPerChunk = 16 * 1024, waves = 1)
+    val e = intercept[IllegalArgumentException](
+      Pipeline.compact(spark, Seq(dir), "file:" + dir, tokensPerChunk = 16 * 1024, waves = 1))
+    assert(e.getMessage.contains("must not be one of its inputs"), e.getMessage)
+    assert(Pipeline.readTokens(spark, dir).count() == 100, "a refused compaction writes nothing")
+    Verifier.rmTree(dir)
+  }
+
   test("Utf8Order agrees with Spark's own string sort order") {
     import spark.implicits._
     val tricky = Seq(
@@ -965,16 +1018,17 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"Utf8Order ${tricky.sorted(Utf8Order).map(_.map(_.toInt.toHexString).mkString("+"))}")
   }
 
-  test("compact disjointness proof survives supplementary-plane doc ids") {
+  test("compact duplicate check survives supplementary-plane doc ids") {
     import spark.implicits._
     // Regression (r04 review): Encoder computed chunk doc_id bounds in
     // UTF-16 order while Spark aggregates/compares in UTF-8 order. With
     // a supplementary-plane id (U+10000, UTF-16 surrogate sorts LOW,
     // UTF-8 4-byte sequence sorts HIGH) sharing a chunk with \ue000,
-    // the stored chunk min was U+10000, the dir-level UTF-8 agg then
-    // produced a range EXCLUDING \ue000, and compactPlan declared an
-    // overlapping pair of dirs disjoint -- doc \ue000 landed twice in
-    // the compacted output.
+    // the stored chunk min was U+10000, a range proof built on the
+    // stored bounds declared an overlapping pair of dirs disjoint --
+    // doc \ue000 landed twice in the compacted output. The stored
+    // bounds must still be UTF-8-ordered (lookups prune on them); the
+    // dedup is decided per doc id, not from the bounds.
     val supp = new String(Character.toChars(0x10000))
     def row(id: String, src: String, t0: Int) = TokenRow(id, Array(t0, t0 + 1), 2, src)
     // two sources -> two single-source chunks in dirA: {\ue001} and {supp, \ue000}
