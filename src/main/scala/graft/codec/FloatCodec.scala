@@ -98,8 +98,13 @@ object FloatCodec {
     val id = r.readByte()
     val c = all.find(_.id == id).getOrElse(
       throw new IllegalArgumentException(s"unknown FloatCodec id ${id & 0xff}"))
-    val out = new Array[Float](r.readUvarint())
-    c.decodeInto(r, out.length, out)
+    // both codecs read exactly 4n payload bytes: bound n by them before
+    // sizing the output
+    val n = r.readUvarint()
+    require(n >= 0 && n <= r.remaining / 4,
+      s"float count $n exceeds the ${r.remaining} payload bytes")
+    val out = new Array[Float](n)
+    c.decodeInto(r, n, out)
     out
   }
 

@@ -208,39 +208,48 @@ object Decoder {
     extends RuntimeException(
       s"chunk $chunkId checksum mismatch: stored=$expected decoded=$got")
 
-  /** The lengths of one chunk, its header counts checked against each
-    * other before any array is sized by them: the lengths and sources
-    * counts must equal the doc-id count and, when the token payload is
-    * given, its count must equal the lengths' sum, or it throws
-    * IllegalArgumentException. The token checksum cannot see such a
-    * mismatch: it covers the token stream, not how the lengths slice it.
+  /** The lengths of one chunk, its header counts checked before any
+    * array is sized by them: the doc-id count must equal the chunk row's
+    * `n_rows`, the lengths and sources counts must equal it and, when
+    * the token payload is given with the row's `n_tokens`, its count
+    * must equal both `n_tokens` and the lengths' sum, or it throws
+    * IllegalArgumentException. A width-0 block is valid with any count
+    * in O(1) bytes, so only the row's counts bound the header's. The
+    * token checksum cannot see such a mismatch: it covers the token
+    * stream, not how the lengths slice it.
     */
   private def checkedLengths(
       chunkId: Long,
+      nRows: Int,
       docIdsEnc: Array[Byte],
       lengthsEnc: Array[Byte],
       sourcesEnc: Array[Byte],
-      tokensEnc: Option[Array[Byte]]
+      tokens: Option[(Array[Byte], Long)]
   ): Array[Int] = {
     val n = StrCodec.count(docIdsEnc)
     val nLengths = IntCodec.count(lengthsEnc)
     val nSources = StrCodec.count(sourcesEnc)
-    require(nLengths == n && nSources == n,
-      s"chunk $chunkId: $n doc ids, $nLengths lengths, $nSources sources")
+    require(n == nRows && nLengths == n && nSources == n,
+      s"chunk $chunkId: n_rows $nRows, $n doc ids, $nLengths lengths, $nSources sources")
     val lengths = IntCodec.decode(lengthsEnc)
-    tokensEnc.foreach { t =>
-      val nTokens = IntCodec.count(t)
+    tokens.foreach { case (t, nTokens) =>
+      val count = IntCodec.count(t)
       val sum = lengths.foldLeft(0L)(_ + _)
-      require(nTokens == sum, s"chunk $chunkId: $nTokens tokens, lengths sum to $sum")
+      require(count == nTokens && sum == nTokens,
+        s"chunk $chunkId: n_tokens $nTokens, $count tokens, lengths sum to $sum")
     }
     lengths
   }
+
+  private def checkedLengths(c: EncodedChunk): Array[Int] =
+    checkedLengths(c.chunk_id, c.n_rows, c.doc_ids_enc, c.lengths_enc, c.sources_enc,
+      Some((c.tokens_enc, c.n_tokens)))
 
   /** Decode one chunk back into rows; throws on checksum mismatch and,
     * before any decode but the lengths', on header counts that disagree.
     */
   def decodeChunk(c: EncodedChunk, verifyChecksum: Boolean = true): Iterator[TokenRow] = {
-    val lengths = checkedLengths(c.chunk_id, c.doc_ids_enc, c.lengths_enc, c.sources_enc, Some(c.tokens_enc))
+    val lengths = checkedLengths(c)
     val docIds = StrCodec.decode(c.doc_ids_enc)
     val sources = StrCodec.decode(c.sources_enc)
     val tokens = IntCodec.decode(c.tokens_enc)
@@ -294,7 +303,7 @@ object Decoder {
       c: EncodedChunk,
       pred: String => Boolean
   ): Iterator[TokenRow] = {
-    val lengths = checkedLengths(c.chunk_id, c.doc_ids_enc, c.lengths_enc, c.sources_enc, Some(c.tokens_enc))
+    val lengths = checkedLengths(c)
     val n = lengths.length
     // the token count is an Int and equals the lengths' sum, so every
     // in-chunk offset fits one
@@ -324,15 +333,16 @@ object Decoder {
     * token I/O nor token decode — the projection split the reference
     * achieves with separate labels/chunks files
     * (reference: convert/writer.go:222-243). Its three counts are
-    * checked against each other ([[checkedLengths]]).
+    * checked against the chunk row's `n_rows` ([[checkedLengths]]).
     */
   def decodeDocIndex(
       chunkId: Long,
+      nRows: Int,
       docIdsEnc: Array[Byte],
       lengthsEnc: Array[Byte],
       sourcesEnc: Array[Byte]
   ): Iterator[DocIndexRow] = {
-    val lengths = checkedLengths(chunkId, docIdsEnc, lengthsEnc, sourcesEnc, None)
+    val lengths = checkedLengths(chunkId, nRows, docIdsEnc, lengthsEnc, sourcesEnc, None)
     val docIds = StrCodec.decode(docIdsEnc)
     val sources = StrCodec.decode(sourcesEnc)
     Iterator.tabulate(docIds.length) { i =>

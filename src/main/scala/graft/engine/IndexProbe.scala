@@ -76,8 +76,11 @@ private[engine] object IndexProbe {
     */
   val MaxBytes: Long = 64L << 20
 
-  /** The chunk columns a driver fetch reads: the id and the four payloads. */
-  private val PayloadColumns = Seq("chunk_id", "doc_ids_enc", "sources_enc", "lengths_enc", "tokens_enc")
+  /** The chunk columns a driver fetch reads: the id, the row and token
+    * counts that bound the payloads' header counts, and the four payloads.
+    */
+  private val PayloadColumns =
+    Seq("chunk_id", "n_rows", "n_tokens", "doc_ids_enc", "sources_enc", "lengths_enc", "tokens_enc")
 
   private val versions = new SessionMemo[String, Option[Index]](_ => ())
 
@@ -181,8 +184,9 @@ private[engine] object IndexProbe {
             def bytes(i: Int) = v(i).asInstanceOf[Binary].getBytes
             val id = v(0).asInstanceOf[Long]
             seen += id
-            rows ++= Decoder.decodeDocsTokensWhere(Payload.copy(chunk_id = id, doc_ids_enc = bytes(1),
-              sources_enc = bytes(2), lengths_enc = bytes(3), tokens_enc = bytes(4)), matches)
+            rows ++= Decoder.decodeDocsTokensWhere(Payload.copy(chunk_id = id,
+              n_rows = v(1).asInstanceOf[Int], n_tokens = v(2).asInstanceOf[Long], doc_ids_enc = bytes(3),
+              sources_enc = bytes(4), lengths_enc = bytes(5), tokens_enc = bytes(6)), matches)
           }
           if (seen != ids)
             throw new IllegalStateException(s"doc index locators name chunks ${(ids -- seen).mkString(", ")} " +
@@ -207,8 +211,8 @@ private[engine] object IndexProbe {
 
   /** Each row of the row groups `blocks` of `file` that the record filter
     * of `options` keeps, passed to `each` as its values of `columns` (a
-    * Long, or a Binary valid until `each` returns), through one reader
-    * opened on `stream` from the parsed `footer`.
+    * Long, an Int or a Binary valid until `each` returns), through one
+    * reader opened on `stream` from the parsed `footer`.
     */
   private def read(
       file: InputFile,
@@ -247,6 +251,7 @@ private[engine] object IndexProbe {
     private val row = new Array[Any](n)
     private val root = new GroupConverter {
       private val columns = Array.tabulate[Converter](n)(i => new PrimitiveConverter {
+        override def addInt(v: Int): Unit = row(i) = v
         override def addLong(v: Long): Unit = row(i) = v
         override def addBinary(v: Binary): Unit = row(i) = v
       })

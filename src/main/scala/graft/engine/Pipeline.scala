@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.rdd.PartitionPruningRDD
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.io.api.Binary
 import scala.jdk.CollectionConverters._
@@ -19,8 +19,9 @@ import graft.codec.StrCodec
   * chunk, so no second table can lag the data; [[readLineage]] is a
   * view of that metadata.
   *
-  * Resume model: encoding proceeds in `waves` (hash-partitioned groups
-  * of chunk ids); each wave is one atomic Spark write of its chunks,
+  * Resume model: the plan is encoded by one shuffle whose partitions
+  * are committed in `waves` (wave w holds the partitions p with
+  * p % waves == w); each wave is one atomic Spark write of its chunks,
   * its only write boundary. A failure kills at most the current wave;
   * a re-run reads the chunk ids its input split already wrote, filters
   * them out of the plan and re-encodes only the remainder —
@@ -51,15 +52,6 @@ object Pipeline {
   private def fsOf(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** JVM-side mirror of the SQL wave assignment
-    * pmod(xxhash64(chunk_id), waves) — Spark's xxhash64 uses seed 42.
-    * Lets tests/tools target one wave deterministically.
-    */
-  private[engine] def waveOfId(id: Long, waves: Int): Long =
-    Math.floorMod(
-      org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(id, 42L),
-      waves.toLong)
 
   /** Lineage rows over chunk metadata. `input_split` comes from the
     * CHUNK (persisted at encode time), so it names the split each chunk
@@ -723,14 +715,18 @@ object Pipeline {
   def readDocIndex(spark: SparkSession, outDir: String): Dataset[DocIndexRow] = {
     import spark.implicits._
     chunksTable(spark, outDir)
-      .select(col("chunk_id"), col("doc_ids_enc"), col("lengths_enc"), col("sources_enc"))
-      .as[(Long, Array[Byte], Array[Byte], Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, d, l, s) =>
-        Decoder.decodeDocIndex(id, d, l, s)
+      .select(col("chunk_id"), col("n_rows"), col("doc_ids_enc"), col("lengths_enc"), col("sources_enc"))
+      .as[(Long, Int, Array[Byte], Array[Byte], Array[Byte])]
+      .mapPartitions(_.flatMap { case (id, n, d, l, s) =>
+        Decoder.decodeDocIndex(id, n, d, l, s)
       })
   }
 
-  /** Run the resumable encode job.
+  /** Run the resumable encode job: one encode shuffle, its partitions
+    * written in `waves` slices ([[org.apache.spark.rdd.PartitionPruningRDD]],
+    * a Spark `@DeveloperApi`). `waves = 1` is the one slice holding every
+    * partition. Chunk ids do not depend on `waves`; the stored `wave_id`
+    * records which wave wrote a chunk.
     *
     * @param failOnChunk test hook: a predicate on chunk_id that makes
     *        the encode kernel throw (kill-one-partition test,
@@ -781,48 +777,27 @@ object Pipeline {
         planned.filter(!isDone(col("chunk_id")))
       }
 
-    // wave = hash of chunk_id, NOT chunk_id % waves: chunk ids are
-    // base*MaxSplit + salt, and MaxSplit ≡ 0 mod any small wave count,
-    // so modulo would pile every unsalted chunk into wave 0
-    def waveOf(c: org.apache.spark.sql.Column) = pmod(xxhash64(c), lit(waves.toLong))
-
-    // ---- stage the plan ONCE, wave-partitioned --------------------------
-    // Waves exist for checkpoint granularity (each wave is one atomic
-    // chunks write; a crash loses at most one wave).
-    // Round 1 paid for that granularity with `waves` FULL input scans —
-    // pending.filter(waveOf) recomputed the whole scan+chunk-plan per
-    // wave, the dominant cost of the job at 100 TB. Now the planned rows
-    // are written once to a staging dir partitioned by wave; each wave's
-    // job reads only its own partition directory (file-listing-level
-    // pruning). Total I/O regardless of `waves`: 1x input scan + 1x
-    // staging write + 1x staging read + 1x shuffle + 1x final write.
+    // ---- one encode shuffle, committed in waves --------------------------
+    // Waves exist for checkpoint granularity: each wave is one atomic
+    // chunks write, so a crash loses at most the wave being written.
+    // The plan is encoded by ONE shuffle: its RDD is taken once (under
+    // AQE that runs the map stage), and wave w is the slice of its
+    // partitions p with p % waves == w. Every later wave reads the same
+    // shuffle files; a lost executor recomputes only its lost map
+    // outputs, from lineage. Total I/O regardless of `waves`: 1x input
+    // scan + 1x shuffle + 1x final write.
     val wavesEff = math.max(1, waves)
-    val stagingDir = s"$outDir/_staging"
-    val stagedSchema = Encoders.product[ChunkedRow].schema
-      .add("wave", LongType)
-
-    val source: Int => Dataset[ChunkedRow] =
-      if (wavesEff == 1) { _ => pending } // single wave: no staging pass
-      else {
-        pending.withColumn("wave", waveOf(col("chunk_id")))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("wave")
-          .parquet(stagingDir)
-        w =>
-          spark.read.schema(stagedSchema).parquet(stagingDir)
-            .filter(col("wave") === w.toLong)
-            .drop("wave")
-            .as[ChunkedRow]
-      }
+    val encoded = Encoder.encode(pending, inputSplit).map { c =>
+      if (failOnChunk(c.chunk_id))
+        throw new RuntimeException(s"injected failure on chunk ${c.chunk_id}")
+      c
+    }(ChunkLayout).rdd
 
     // each wave's report sums: chunks written, then these chunk columns
     val summed = Seq("n_rows", "n_tokens", "raw_bytes", "encoded_bytes")
     val waveStats = (0 until wavesEff).map { w =>
-      val enc = Encoder.encode(source(w), inputSplit).map { c =>
-        if (failOnChunk(c.chunk_id))
-          throw new RuntimeException(s"injected failure on chunk ${c.chunk_id}")
-        c
-      }(ChunkLayout)
+      val enc = spark.createDataset(
+        PartitionPruningRDD.create(encoded, _ % wavesEff == w))(ChunkLayout)
 
       // the wave's one write: its chunks, which are the ledger. The
       // report sums ride it as observed metrics — nothing is read back.
@@ -854,7 +829,6 @@ object Pipeline {
         .parquet(chunksPath(outDir))
       obs.get
     }
-    if (wavesEff > 1) fsOf(spark, stagingDir).delete(new org.apache.hadoop.fs.Path(stagingDir), true)
     def total(k: String) = waveStats.map(_(k).asInstanceOf[Long]).sum
     EncodeReport(wavesEff, total("chunks"), done.length, total("n_rows"), total("n_tokens"),
       total("raw_bytes"), total("encoded_bytes"))

@@ -453,7 +453,7 @@ object CodecReads {
       chunksFor(s, dir, tokensPerChunk = 16384)
         .flatMap { c =>
           if (!Decoder.chunkMayContainToken(c, probe))
-            Decoder.decodeDocIndex(c.chunk_id, c.doc_ids_enc, c.lengths_enc, c.sources_enc)
+            Decoder.decodeDocIndex(c.chunk_id, c.n_rows, c.doc_ids_enc, c.lengths_enc, c.sources_enc)
               .map(r => (r.doc_id.toLong, r.n_tok.toLong))
           else Decoder.decodeChunk(c).flatMap { r =>
             if (r.tokens.contains(probe)) Iterator.empty

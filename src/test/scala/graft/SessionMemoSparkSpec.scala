@@ -185,6 +185,20 @@ class SessionMemoSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     Verifier.rmTree(dir)
   }
 
+  test("a fresh 4-wave encode submits 9 jobs: one encode shuffle for every wave") {
+    val dir = Files.createTempDirectory("graft-memo-waves").toString
+    var report: Pipeline.EncodeReport = null
+    val jobs = jobsOf {
+      report = Pipeline.run(spark, Fixtures.tokenTable(spark, 400, seed = 7, partitions = 2), dir,
+        tokensPerChunk = 16 * 1024, waves = 4)
+    }
+    assert(report.wavesRun == 4 && report.rows == 400, report)
+    // the two Chunker pre-passes (2 jobs each), the encode shuffle's map
+    // stage (1) and one write per wave (4), an empty wave's too
+    assert(jobs == 9, s"a fresh 4-wave encode submitted $jobs job(s)")
+    Verifier.rmTree(dir)
+  }
+
   test("a compaction of two overlapping inputs submits 13 jobs, and its resume 15") {
     val ds = Fixtures.tokenTable(spark, 300, seed = 5, medianLen = 64, maxLen = 512, partitions = 2)
     val inputs = Seq(

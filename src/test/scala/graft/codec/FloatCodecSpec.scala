@@ -59,6 +59,21 @@ class FloatCodecSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](FloatCodec.decode(cut))
   }
 
+  test("a count that says more values than the payload bytes hold throws before any allocation") {
+    val payload = FloatCodec.Plain.encode(Array(1.0f, 2.0f)).drop(2) // 8 bytes, both layouts
+    def forged(c: FloatCodec, n: Int): Array[Byte] = {
+      val out = new ByteSink()
+      out.addByte(c.id)
+      BitIO.writeUvarint(out, n)
+      out.result() ++ payload
+    }
+    for (c <- FloatCodec.all; n <- Seq(3, Int.MaxValue, -1)) {
+      intercept[IllegalArgumentException](FloatCodec.decode(forged(c, n)))
+      info(s"${c.name} count $n over 8 bytes: throws IllegalArgumentException")
+    }
+    FloatCodec.all.foreach(c => assert(FloatCodec.decode(forged(c, 2)).length == 2))
+  }
+
   test("unknown codec id throws") {
     intercept[IllegalArgumentException](FloatCodec.decode(Array[Byte](9, 0)))
   }

@@ -109,38 +109,88 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(v.sourceTokens == v.decodedTokens)
   }
 
-  test("resume: kill one wave, re-run encodes only the remainder") {
+  test("the chunk set is the same at waves 1, 4 and 16, and no staging dir is left")(uncoalesced {
+    val ds = Fixtures.tokenTable(spark, 1500, seed = 45, medianLen = 100, maxLen = 2048, partitions = 4)
+    val runs = Seq(1, 4, 16).map { waves =>
+      val out = tmpDir()
+      val report = Pipeline.run(spark, ds, out, tokensPerChunk = 32 * 1024, waves = waves)
+      assert(report.wavesRun == waves && report.rows == 1500)
+      val v = Verifier.verify(ds, Pipeline.readChunks(spark, out))
+      assert(v.ok, s"waves=$waves: verify failed: $v")
+      assert(!new java.io.File(out, "_staging").exists, s"waves=$waves left a _staging dir")
+      val chunks = Pipeline.readChunks(spark, out).collect().map(c => c.chunk_id -> c.checksum).toSet
+      val used = storedWaves(out).values.toSet
+      Verifier.rmTree(out)
+      waves -> (chunks, used)
+    }.toMap
+    assert(runs(4)._1 == runs(1)._1 && runs(16)._1 == runs(1)._1,
+      "chunk ids and checksums must not depend on the wave count")
+    assert(runs(4)._2.size > 1 && runs(16)._2.size > 1, s"waves written: ${runs.view.mapValues(_._2).toMap}")
+  })
+
+  /** `body` with AQE's partition coalescing off: the encode shuffle keeps
+    * all its partitions, so a multi-wave run of a small table writes
+    * several waves (coalesced, such a table is one partition, one wave).
+    */
+  private def uncoalesced[T](body: => T): T = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** chunk_id -> the wave_id it is stored under in `out`'s chunks table. */
+  private def storedWaves(out: String): Map[Long, Int] =
+    spark.read.parquet(Pipeline.chunksPath(out)).select("chunk_id", "wave_id").collect()
+      .map(r => r.getLong(0) -> r.getAs[Number](1).intValue).toMap
+
+  /** The last non-empty wave_id of a clean run of `ds` into a scratch
+    * dir, and the chunk ids stored under it: a kill set for that wave.
+    */
+  private def lastWave(ds: org.apache.spark.sql.Dataset[TokenRow], tokensPerChunk: Long, waves: Int,
+      inputSplit: String = ""): (Int, Set[Long]) = {
+    val scratch = tmpDir()
+    Pipeline.run(spark, ds, scratch, tokensPerChunk, waves, inputSplit)
+    val stored = storedWaves(scratch)
+    Verifier.rmTree(scratch)
+    val last = stored.values.max
+    assert(last > 0, s"the clean run wrote only wave $last")
+    (last, stored.collect { case (id, w) if w == last => id }.toSet)
+  }
+
+  test("resume: kill one wave, re-run encodes only the remainder")(uncoalesced {
     val ds = Fixtures.tokenTable(spark, 1500, seed = 4, medianLen = 100, maxLen = 2048, partitions = 4)
     val out = tmpDir()
-    // first run: fail every chunk of (hash-)wave 2
+    val (lastId, killed) = lastWave(ds, 64 * 1024, 3)
+    // first run: fail every chunk of the last wave
     val failed = try {
       Pipeline.run(spark, ds, out, tokensPerChunk = 64 * 1024, waves = 3,
-        failOnChunk = id => Pipeline.waveOfId(id, 3) == 2)
+        failOnChunk = killed.contains)
       false
     } catch { case _: Exception => true }
     assert(failed, "injected failure must surface")
 
-    // waves 0 and 1 are durable
+    // the earlier waves are durable
     val lin1 = Pipeline.readLineage(spark, out).get
     val done1 = lin1.select("chunk_id").distinct().count()
     assert(done1 > 0, "completed waves must have lineage")
-    val wave2Done = lin1.select("chunk_id").collect()
-      .count(r => Pipeline.waveOfId(r.getLong(0), 3) == 2)
-    assert(wave2Done == 0, "failed wave must have no lineage")
+    val killedDone = lin1.select("chunk_id").collect()
+      .count(r => killed.contains(r.getLong(0)))
+    assert(killedDone == 0, "failed wave must have no lineage")
 
     // second run: no failure; must skip completed chunks
     val report2 = Pipeline.run(spark, ds, out, tokensPerChunk = 64 * 1024, waves = 3)
     assert(report2.chunksSkipped == done1, s"expected $done1 skipped, got ${report2.chunksSkipped}")
     val lin2 = Pipeline.readLineage(spark, out).get
     assert(lin2.select("chunk_id").distinct().count() == lin2.count(), "no duplicate lineage rows")
-    val wave2Now = lin2.select("chunk_id").collect()
-      .count(r => Pipeline.waveOfId(r.getLong(0), 3) == 2)
-    assert(wave2Now > 0, "failed wave now completed")
+    val killedNow = storedWaves(out).filter { case (id, _) => killed.contains(id) }
+    assert(killedNow.size == killed.size && killedNow.values.forall(_ == lastId),
+      s"failed wave now completed: $killedNow")
 
     // and the union still round-trips
     val v = Verifier.verify(ds, Pipeline.readChunks(spark, out))
     assert(v.ok, s"post-resume verify failed: $v")
-  }
+  })
 
   /** (chunks, rows, tokens, raw bytes, encoded bytes) summed over the
     * chunks table, and the same fields of a report.
@@ -153,25 +203,25 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def reportSums(r: Pipeline.EncodeReport): Seq[Long] =
     Seq(r.chunksEncoded, r.rows, r.tokens, r.rawBytes, r.encodedBytes)
 
-  test("EncodeReport of a fresh multi-wave run equals the chunks table's sums") {
+  test("EncodeReport of a fresh multi-wave run equals the chunks table's sums")(uncoalesced {
     val ds = Fixtures.tokenTable(spark, 1200, seed = 43, medianLen = 100, maxLen = 2048, partitions = 4)
     val out = tmpDir()
     val waves = 8
     val report = Pipeline.run(spark, ds, out, tokensPerChunk = 32 * 1024, waves = waves)
-    val ids = Pipeline.readChunks(spark, out).collect().map(_.chunk_id)
-    val used = ids.map(Pipeline.waveOfId(_, waves)).toSet
+    val used = storedWaves(out).values.toSet
     // pins the fixture: several waves write, and some write nothing
     assert(used.size > 1 && used.size < waves, s"waves with chunks: $used")
     assert(report.wavesRun == waves && report.chunksSkipped == 0)
     assert(reportSums(report) == tableSums(out))
     assert(report.rows == 1200)
-  }
+  })
 
-  test("a killed then resumed run reports every chunk once") {
+  test("a killed then resumed run reports every chunk once")(uncoalesced {
     val ds = Fixtures.tokenTable(spark, 1500, seed = 4, medianLen = 100, maxLen = 2048, partitions = 4)
     val out = tmpDir()
+    val (_, lastIds) = lastWave(ds, 64 * 1024, 3)
     intercept[Exception](Pipeline.run(spark, ds, out, tokensPerChunk = 64 * 1024, waves = 3,
-      failOnChunk = id => Pipeline.waveOfId(id, 3) == 2))
+      failOnChunk = lastIds.contains))
     // the killed run's report is lost with it; its work is what it
     // committed to the table
     val killed = tableSums(out)
@@ -180,7 +230,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(resumed.chunksSkipped == killed.head)
     assert(killed.zip(reportSums(resumed)).map { case (a, b) => a + b } == tableSums(out))
     assert(resumed.rows + killed(1) == 1500)
-  }
+  })
 
   test("a re-run with every wave done reports zeros and returns") {
     import scala.concurrent.{Await, Future}
@@ -225,25 +275,28 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "expected partition pruning on part_source")
   }
 
-  test("input is scanned O(1) times regardless of wave count") {
+  test("input is scanned O(1) times regardless of wave count")(uncoalesced {
     import spark.implicits._
     // every materialization of the input bumps the accumulator; the
     // wave loop must NOT multiply input scans (round-1 regression:
-    // waves=16 re-scanned the full input 16 times)
+    // waves=16 re-scanned the full input 16 times). Uncoalesced, each of
+    // the 4 waves reads its own partitions of the one shuffle
     val n = 600
     val base = Fixtures.tokenTable(spark, n, seed = 21, medianLen = 64, maxLen = 512, partitions = 2)
     val acc1 = spark.sparkContext.longAccumulator("scan1")
     Pipeline.run(spark, base.map { r => acc1.add(1); r }, tmpDir(),
       tokensPerChunk = 32 * 1024, waves = 1)
     val acc4 = spark.sparkContext.longAccumulator("scan4")
-    Pipeline.run(spark, base.map { r => acc4.add(1); r }, tmpDir(),
+    val out4 = tmpDir()
+    Pipeline.run(spark, base.map { r => acc4.add(1); r }, out4,
       tokensPerChunk = 32 * 1024, waves = 4)
+    assert(storedWaves(out4).values.toSet.size > 1, "waves=4 wrote one wave")
     val scans1 = acc1.value.toDouble / n
     val scans4 = acc4.value.toDouble / n
     info(s"input materializations: waves=1 -> $scans1, waves=4 -> $scans4")
     assert(scans4 <= scans1 + 0.01,
       s"wave count multiplied input scans: $scans1 vs $scans4")
-  }
+  })
 
   test("the chunks table is the only ledger: a leftover lineage/ dir is inert") {
     val ds = Fixtures.tokenTable(spark, 400, seed = 31, medianLen = 64, maxLen = 512, partitions = 2)
@@ -409,7 +462,25 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the doc index checks its three counts too
     val shortSources = StrCodec.encodeAuto(rows.dropRight(1).map(_.source).toArray)._2
     intercept[IllegalArgumentException](
-      Decoder.decodeDocIndex(c.chunk_id, c.doc_ids_enc, c.lengths_enc, shortSources).toList)
+      Decoder.decodeDocIndex(c.chunk_id, c.n_rows, c.doc_ids_enc, c.lengths_enc, shortSources).toList)
+  }
+
+  test("a chunk whose blocks agree but whose n_rows or n_tokens is off by one throws") {
+    val rows = (0 until 20).map(i => TokenRow(f"d$i%02d", Array.tabulate(3 + i % 4)(j => i * 7 + j), 3 + i % 4, "web"))
+    val c = Encoder.encodeTable(spark.createDataset(rows)(org.apache.spark.sql.Encoders.product[TokenRow]),
+      tokensPerChunk = 1 << 30).collect().head
+    assert(Decoder.decodeChunk(c).length == rows.length)
+    Seq(
+      "n_rows + 1" -> c.copy(n_rows = c.n_rows + 1),
+      "n_rows - 1" -> c.copy(n_rows = c.n_rows - 1),
+      "n_tokens + 1" -> c.copy(n_tokens = c.n_tokens + 1)
+    ).foreach { case (what, chunk) =>
+      intercept[IllegalArgumentException](Decoder.decodeChunk(chunk).toList)
+      intercept[IllegalArgumentException](Decoder.decodeDocsTokensWhere(chunk, _ => true).toList)
+      info(s"$what: both decoders throw IllegalArgumentException")
+    }
+    intercept[IllegalArgumentException](
+      Decoder.decodeDocIndex(c.chunk_id, c.n_rows + 1, c.doc_ids_enc, c.lengths_enc, c.sources_enc).toList)
   }
 
   test("readLineage reports the input_split each chunk was written under") {
@@ -929,7 +1000,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // complement ladder (q83's kernel) vs brute-force full decode
     val ladder = chunks.flatMap { c =>
       if (!Decoder.chunkMayContainToken(c, probe))
-        Decoder.decodeDocIndex(c.chunk_id, c.doc_ids_enc, c.lengths_enc, c.sources_enc)
+        Decoder.decodeDocIndex(c.chunk_id, c.n_rows, c.doc_ids_enc, c.lengths_enc, c.sources_enc)
           .map(_.doc_id)
       else Decoder.decodeChunk(c).collect {
         case r if !r.tokens.contains(probe) => r.doc_id
@@ -1158,16 +1229,17 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Verifier.rmTree(dir)
   }
 
-  test("a partial compaction target tagged without input versions refuses") {
+  test("a partial compaction target tagged without input versions refuses")(uncoalesced {
     val ds = Fixtures.tokenTable(spark, 100, seed = 41, medianLen = 64, maxLen = 512, partitions = 2)
     val in = tmpDir()
     Pipeline.run(spark, ds, in, tokensPerChunk = 16 * 1024, waves = 1)
     val out = tmpDir() + "/out"
     // a killed compaction of the earlier format: its input split names
     // the input dir without the version of its chunks table
+    val (_, killed) = lastWave(Pipeline.readTokens(spark, in), 512, 3, inputSplit = s"compact:$in")
     intercept[Exception](Pipeline.run(spark, Pipeline.readTokens(spark, in), out,
       tokensPerChunk = 512, waves = 3, inputSplit = s"compact:$in",
-      failOnChunk = id => Pipeline.waveOfId(id, 3) == 2))
+      failOnChunk = killed.contains))
     val partial = Pipeline.readTokens(spark, out).count()
     assert(partial > 0 && partial < 100, s"the killed run left $partial rows")
     val e = intercept[IllegalArgumentException](
@@ -1175,7 +1247,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("inputs changed"), e.getMessage)
     assert(Pipeline.readTokens(spark, out).count() == partial, "a refused resume writes nothing")
     Verifier.rmTree(in); Verifier.rmTree(out)
-  }
+  })
 
   /** A copy of `src`'s chunks table without the token payload column. */
   private def writeWithoutTokens(src: String, dst: String): Unit =
