@@ -285,12 +285,59 @@ object IntCodec {
     * codes. The read side gets O(1) distinct-values from the dictionary —
     * the trick the reference exploits via Parquet dictionary pages
     * (reference: search/materialize.go:358-380).
+    *
+    * Encode collects the distinct values in an open-addressing table
+    * sized to the slice, sorts only those d values and looks each code
+    * up by hash: O(n + d log d). A slice with more than [[MaxHashed]]
+    * distinct values sorts a copy of itself and binary-searches each
+    * code instead, O(n log n). Both write the same bytes.
     */
   case object Dict extends IntCodec {
     val id: Byte = 5; val name = "dict"
+    /** Most distinct values the hash table holds; past it encode sorts. */
+    final val MaxHashed = 1 << 16
+
     def encode(a: Array[Int], from: Int, n: Int, out: ByteSink): Unit = {
       out.addByte(id); writeUvarint(out, n)
       if (n == 0) return
+      // a power of two at least twice the entries it can take; an
+      // occupied slot holds its value in keys and a code >= 0 in codes
+      val cap = math.min(n, MaxHashed)
+      val slots = Integer.highestOneBit(math.max(cap - 1, 1)) << 2
+      val shift = 32 - Integer.numberOfTrailingZeros(slots)
+      val keys = new Array[Int](slots)
+      val codes = new Array[Int](slots)
+      java.util.Arrays.fill(codes, -1)
+      // the slot of v: where it sits, or the empty slot it would take
+      @inline def slotOf(v: Int): Int = {
+        var h = (v * 0x9e3779b1) >>> shift
+        while (codes(h) >= 0 && keys(h) != v) h = (h + 1) & (slots - 1)
+        h
+      }
+      val values = new Array[Int](cap)
+      var distinct = 0
+      var i = 0
+      while (i < n) {
+        val v = a(from + i)
+        val h = slotOf(v)
+        if (codes(h) < 0) {
+          if (distinct == MaxHashed) return encodeSorted(a, from, n, out)
+          keys(h) = v; codes(h) = 0
+          values(distinct) = v; distinct += 1
+        }
+        i += 1
+      }
+      java.util.Arrays.sort(values, 0, distinct)
+      i = 0
+      while (i < distinct) { codes(slotOf(values(i))) = i; i += 1 }
+      writeDict(values, distinct, out)
+      packCodes(a, from, n, bits(distinct - 1), out)(v => codes(slotOf(v)))
+    }
+
+    /** The O(n log n) encode of a slice past [[MaxHashed]] distinct
+      * values: sort a copy, dedup it in place, binary-search each code.
+      */
+    private def encodeSorted(a: Array[Int], from: Int, n: Int, out: ByteSink): Unit = {
       val sorted = new Array[Int](n)
       System.arraycopy(a, from, sorted, 0, n)
       java.util.Arrays.sort(sorted)
@@ -300,30 +347,35 @@ object IntCodec {
         if (sorted(i) != sorted(i - 1)) { sorted(distinct) = sorted(i); distinct += 1 }
         i += 1
       }
+      writeDict(sorted, distinct, out)
+      packCodes(a, from, n, bits(distinct - 1), out)(java.util.Arrays.binarySearch(sorted, 0, distinct, _))
+    }
+
+    /** The dictionary header: count, first value, then ascending deltas. */
+    private def writeDict(sorted: Array[Int], distinct: Int, out: ByteSink): Unit = {
       writeUvarint(out, distinct)
       writeUvarint(out, zigzag(sorted(0)))
-      i = 1
+      var i = 1
       while (i < distinct) {
         writeUvarintLong(out, sorted(i).toLong - sorted(i - 1).toLong)
         i += 1
       }
-      val width = bits(distinct - 1)
+    }
+
+    /** The width byte, then each value's code packed inline at `width`
+      * bits (no codes array).
+      */
+    private def packCodes(a: Array[Int], from: Int, n: Int, width: Int, out: ByteSink)(
+        code: Int => Int): Unit = {
       out.addByte(width.toByte)
-      // pack codes inline: binary search per value, no codes array
       out.ensure(BitIO.packedBytes(n, width) + 8)
       if (width > 0) {
         var acc = 0L
         var accBits = 0
         val mask = (1L << width) - 1
-        i = 0
+        var i = 0
         while (i < n) {
-          var lo = 0; var hi = distinct - 1
-          val v = a(from + i)
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (sorted(mid) < v) lo = mid + 1 else hi = mid
-          }
-          acc |= (lo & mask) << accBits
+          acc |= (code(a(from + i)) & mask) << accBits
           accBits += width
           while (accBits >= 8) {
             out.addByte((acc & 0xff).toByte)

@@ -1,6 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.col
 import graft.codec.{IntCodec, Selector, StrCodec}
 
@@ -34,14 +37,17 @@ object Checksum {
 
 /** Encode/decode between the token table and encoded column chunks.
   *
-  * The encode kernel is a typed mapGroups over deterministic chunk ids —
-  * the whole-codec-on-whole-chunk design (SURVEY.md §4.3): Catalyst
+  * The encode kernel runs over deterministic chunk ids — the
+  * whole-codec-on-whole-chunk design (SURVEY.md §4.3): Catalyst
   * expressions would pay per-row overhead for nothing, while one
   * shuffle by chunk_id is the minimal data movement any re-clustering
   * encode can do. This replaces the reference's hand-rolled goroutine
   * pipeline (reference: convert/reader.go:75-100) with Spark tasks.
   */
 object Encoder {
+
+  /** The [[EncodedChunk]] encoder, built once for every chunk read and write. */
+  private[engine] val ChunkLayout = Encoders.product[EncodedChunk]
 
   /** Growable int buffer for concatenating a chunk's token stream.
     * Thread-local + reset-reused: steady-state encode must not allocate
@@ -52,14 +58,25 @@ object Encoder {
     var arr = new Array[Int](math.max(initial, 64))
     var len = 0
     def reset(): Unit = len = 0
-    def add(src: Array[Int]): Unit = {
-      if (len + src.length > arr.length) {
+    /** Appends the ints of `src`, straight from Spark's array data (no
+      * boxed element, no intermediate array), and returns their count.
+      * A null element throws: `ArrayData.toIntArray` would read it as 0.
+      */
+    def add(src: ArrayData, docId: String): Int = {
+      val n = src.numElements()
+      if (len + n > arr.length) {
         var cap = arr.length * 2
-        while (cap < len + src.length) cap *= 2
+        while (cap < len + n) cap *= 2
         arr = java.util.Arrays.copyOf(arr, cap)
       }
-      System.arraycopy(src, 0, arr, len, src.length)
-      len += src.length
+      var i = 0
+      while (i < n) {
+        if (src.isNullAt(i)) throw new NullPointerException(s"doc $docId: null token at index $i")
+        arr(len + i) = src.getInt(i)
+        i += 1
+      }
+      len += n
+      n
     }
   }
 
@@ -67,11 +84,17 @@ object Encoder {
     override def initialValue(): IntBuf = new IntBuf(1 << 20)
   }
 
-  /** Encode one chunk's rows (already sorted by doc_id for deterministic
-    * output) into an EncodedChunk.
+  /** Ordinals of the columns the kernel reads in a [[sortedChunks]] row. */
+  private final case class Columns(chunkId: Int, docId: Int, tokens: Int, source: Int)
+
+  /** Encode the next chunk of `rows` — every leading row with the head
+    * row's chunk_id, already sorted by doc_id for deterministic output —
+    * into an EncodedChunk. Each row is read whole before the iterator
+    * advances: Spark reuses the row object it hands out.
     */
-  def encodeChunk(chunkId: Long, rows: Iterator[ChunkedRow],
-                  inputSplit: String = ""): EncodedChunk = {
+  private def encodeChunk(rows: scala.collection.BufferedIterator[InternalRow], cols: Columns,
+                          inputSplit: String): EncodedChunk = {
+    val chunkId = rows.head.getLong(cols.chunkId)
     val docIds = scala.collection.mutable.ArrayBuffer.empty[String]
     val sources = scala.collection.mutable.ArrayBuffer.empty[String]
     val lengths = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -79,23 +102,25 @@ object Encoder {
     toks.reset()
     var rawBytes = 0L
     // lexicographic doc_id bounds: rows arrive sorted by doc_id (see
-    // encode()), but track running min/max anyway so direct callers
-    // with unsorted iterators still get correct pruning stats
+    // sortedChunks), but track running min/max anyway so the bounds
+    // never depend on the sort's collation
     var minDoc: String = null
     var maxDoc: String = null
-    while (rows.hasNext) {
+    while (rows.hasNext && rows.head.getLong(cols.chunkId) == chunkId) {
       val r = rows.next()
-      docIds += r.doc_id
-      sources += r.source
-      lengths += r.tokens.length
-      toks.add(r.tokens)
-      rawBytes += 4L * r.tokens.length + r.doc_id.length + r.source.length + 4L
+      val docId = r.getUTF8String(cols.docId).toString
+      val source = r.getUTF8String(cols.source).toString
+      val n = toks.add(r.getArray(cols.tokens), docId)
+      docIds += docId
+      sources += source
+      lengths += n
+      rawBytes += 4L * n + docId.length + source.length + 4L
       // Utf8Order, not <: the stored bounds are later compared by Spark
       // column predicates (UTF-8 byte order); Java's UTF-16 compare
       // disagrees for supplementary-plane ids and would store bounds
       // that exclude a contained key (range pruning would drop a hit)
-      if (minDoc == null || Utf8Order.lt(r.doc_id, minDoc)) minDoc = r.doc_id
-      if (maxDoc == null || Utf8Order.gt(r.doc_id, maxDoc)) maxDoc = r.doc_id
+      if (minDoc == null || Utf8Order.lt(docId, minDoc)) minDoc = docId
+      if (maxDoc == null || Utf8Order.gt(docId, maxDoc)) maxDoc = docId
     }
     val n = docIds.length
     // token value bounds for chunk-stat pruning (one cheap pass; the
@@ -144,45 +169,46 @@ object Encoder {
     )
   }
 
-  /** Dataset[ChunkedRow] → Dataset[EncodedChunk].
-    *
-    * Repartition on the chunk_id COLUMN (not groupByKey on a lambda):
-    * a typed groupByKey would deserialize every row map-side — copying
-    * every tokens array — just to extract a key that already exists as
-    * a column. Column-based repartition shuffles Tungsten binary rows
-    * untouched; rows are deserialized exactly once, reduce-side, inside
-    * the encode kernel. sortWithinPartitions gives the secondary sort
-    * by doc_id (chunk payloads byte-deterministic across runs — the
-    * property lineage checksums and resume rely on — and sorted
-    * doc_ids delta/FSST-compress better).
+  /** The encode kernel's input: the [[ChunkedRow]] columns of `chunks`,
+    * repartitioned on the chunk_id COLUMN and sorted by (chunk_id,
+    * doc_id) within each partition. Column-based repartition shuffles
+    * Tungsten binary rows untouched (a typed groupByKey would
+    * deserialize every row map-side just to extract a key that already
+    * exists as a column). The secondary sort by doc_id makes chunk
+    * payloads byte-deterministic across runs — the property lineage
+    * checksums and resume rely on — and sorted doc_ids delta/FSST-
+    * compress better.
     */
-  def encode(chunks: Dataset[ChunkedRow], inputSplit: String = ""): Dataset[EncodedChunk] = {
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    chunks.toDF()
-      .repartition(col("chunk_id"))
-      .sortWithinPartitions(col("chunk_id"), col("doc_id"))
-      .as[ChunkedRow]
-      .mapPartitions { rows =>
-        // group consecutive rows sharing chunk_id (partition is sorted)
-        new Iterator[EncodedChunk] {
-          private var head: ChunkedRow = if (rows.hasNext) rows.next() else null
-          def hasNext: Boolean = head != null
-          def next(): EncodedChunk = {
-            val id = head.chunk_id
-            val group = new Iterator[ChunkedRow] {
-              def hasNext: Boolean = head != null && head.chunk_id == id
-              def next(): ChunkedRow = {
-                val r = head
-                head = if (rows.hasNext) rows.next() else null
-                r
-              }
-            }
-            encodeChunk(id, group, inputSplit)
-          }
-        }
+  private[graft] def sortedChunks(chunks: DataFrame): DataFrame =
+    chunks.repartition(col("chunk_id")).sortWithinPartitions(col("chunk_id"), col("doc_id"))
+
+  /** The encode kernel over [[sortedChunks]]' rows: one EncodedChunk per
+    * run of equal chunk_ids in a partition. It iterates the rows of
+    * `sorted.queryExecution.toRdd` as Spark's binary rows, with no
+    * deserializer: each doc's tokens are copied straight from Spark's
+    * array data into the chunk's token buffer, never boxed. Under AQE,
+    * taking that RDD runs the shuffle's map stage.
+    */
+  private[graft] def encodeSorted(sorted: DataFrame, inputSplit: String): RDD[EncodedChunk] = {
+    val s = sorted.schema
+    val cols = Columns(s.fieldIndex("chunk_id"), s.fieldIndex("doc_id"), s.fieldIndex("tokens"),
+      s.fieldIndex("source"))
+    sorted.queryExecution.toRdd.mapPartitions { rows =>
+      val in = rows.buffered
+      new Iterator[EncodedChunk] {
+        def hasNext: Boolean = in.hasNext
+        def next(): EncodedChunk = encodeChunk(in, cols, inputSplit)
       }
+    }
   }
+
+  /** Dataset[ChunkedRow] → Dataset[EncodedChunk]: [[encodeSorted]] over
+    * [[sortedChunks]]. Rows reach the kernel as the sorted plan's binary
+    * rows, never through a typed deserializer, so no token is boxed.
+    * Under AQE the call runs the shuffle's map stage.
+    */
+  def encode(chunks: Dataset[ChunkedRow], inputSplit: String = ""): Dataset[EncodedChunk] =
+    chunks.sparkSession.createDataset(encodeSorted(sortedChunks(chunks.toDF()), inputSplit))(ChunkLayout)
 
   /** Full path: token table → deterministic chunks → encoded chunks.
     * @param meta optional (source, doc_id, n_tok) plan-statistics

@@ -88,10 +88,7 @@ object Pipeline {
     * projection of it.
     */
   private def chunksTable(spark: SparkSession, outDir: String): Dataset[EncodedChunk] =
-    Tables.read(spark, chunksPath(outDir), ChunkLayout)
-
-  /** The [[EncodedChunk]] encoder, built once for every chunk read and write. */
-  private val ChunkLayout = Encoders.product[EncodedChunk]
+    Tables.read(spark, chunksPath(outDir), Encoder.ChunkLayout)
 
   /** Payload-free chunk metadata: every chunk column but the four
     * encoded payloads (never read from parquet).
@@ -273,17 +270,26 @@ object Pipeline {
     // resume whose input dirs match but whose versions differ (waves
     // appended, a re-encode; or a tag written without versions) would
     // mix chunks planned against the old content with chunks planned
-    // against the new, so the same doc could land twice
-    existingChunkMeta(spark, outDir).foreach { meta =>
-      val splits = meta.select("input_split").distinct().collect().map(_.getString(0)).toSet
-      def dirsOf(split: String) = split.replaceAll("@-?\\d*(?=,|$)", "")
-      require(splits.forall(dirsOf(_) == dirsOf(tag)),
-        s"compact target $outDir holds a chunks table from a different input set " +
-          s"(${splits.mkString(", ")}); compaction writes a NEW table or resumes its own partial output")
-      require(splits == Set(tag),
-        s"compact inputs changed since the partial run in $outDir " +
-          s"(${splits.mkString(", ")} -> $tag); inputs must be immutable across " +
-          "a resumed compaction — restart into a fresh target")
+    // against the new, so the same doc could land twice. One read of
+    // the target serves both this check and the resume's ledger: each
+    // chunk's id and whether this split wrote it. Only a target holding
+    // another split pays a second read, of its distinct splits, to say
+    // which
+    val done = existingChunkMeta(spark, outDir).fold(Array.emptyLongArray) { meta =>
+      val chunks = meta.select(col("chunk_id"), coalesce(col("input_split") === tag, lit(false)))
+        .collect()
+      if (chunks.isEmpty || chunks.exists(!_.getBoolean(1))) {
+        val splits = meta.select("input_split").distinct().collect().map(_.getString(0)).toSet
+        def dirsOf(split: String) = split.replaceAll("@-?\\d*(?=,|$)", "")
+        require(splits.forall(dirsOf(_) == dirsOf(tag)),
+          s"compact target $outDir holds a chunks table from a different input set " +
+            s"(${splits.mkString(", ")}); compaction writes a NEW table or resumes its own partial output")
+        require(splits == Set(tag),
+          s"compact inputs changed since the partial run in $outDir " +
+            s"(${splits.mkString(", ")} -> $tag); inputs must be immutable across " +
+            "a resumed compaction — restart into a fresh target")
+      }
+      chunks.map(_.getLong(0)).distinct.sorted
     }
     // persisted for the run: the aggregate below and the two Chunker
     // pre-passes all read it, and without the persist the doc-index
@@ -294,7 +300,7 @@ object Pipeline {
     try {
       val (inputRows, outputRows, duplicateFree) = docCounts(docs)
       val rows = compactRows(spark, inDirs, duplicateFree)
-      val rpt = run(spark, rows, outDir, tokensPerChunk, waves, inputSplit = tag, planMeta = Some(docs))
+      val (rpt, _) = encodeRun(spark, rows, outDir, tokensPerChunk, waves, tag, _ => false, Some(docs), done)
       if (verify) {
         val v = Verifier.verify(rows, readChunks(spark, outDir))
         require(v.ok, s"compact round-trip verification FAILED: $v")
@@ -748,22 +754,42 @@ object Pipeline {
         * times.
         */
       planMeta: Option[DataFrame] = None
-  ): EncodeReport = {
-    import spark.implicits._
+  ): EncodeReport =
+    encodeRun(spark, input, outDir, tokensPerChunk, waves, inputSplit, failOnChunk, planMeta,
+      ledger(spark, outDir, inputSplit))._1
 
+  /** The ledger: the chunk ids `inputSplit` already wrote to `outDir`,
+    * sorted and distinct (one read, its input_split filter pushed to
+    * parquet stats). Each wave's parquet commit is atomic, so a chunk
+    * present in the table is complete and valid. Chunk ids are scoped by
+    * input_split (disjoint across splits), so only this split's chunks
+    * can be in its plan: they are exactly what a resume skips.
+    */
+  private[graft] def ledger(spark: SparkSession, outDir: String, inputSplit: String): Array[Long] =
+    existingChunkMeta(spark, outDir).fold(Array.emptyLongArray)(
+      _.filter(col("input_split") === inputSplit).select("chunk_id").as(Encoders.scalaLong)
+        .collect().distinct.sorted)
+
+  /** [[run]] with its split's ledger already read (`done`, sorted and
+    * distinct: [[ledger]], or [[compact]]'s one read of its target).
+    * Also returns the encode kernel's input ([[Encoder.sortedChunks]]):
+    * the frame whose plan the run executed.
+    */
+  private[graft] def encodeRun(
+      spark: SparkSession,
+      input: Dataset[TokenRow],
+      outDir: String,
+      tokensPerChunk: Long,
+      waves: Int,
+      inputSplit: String,
+      failOnChunk: Long => Boolean,
+      planMeta: Option[DataFrame],
+      done: Array[Long]
+  ): (EncodeReport, DataFrame) = {
     // inputSplit scopes chunk identity (Chunker.assignChunks planTag):
     // re-running the SAME split resumes/replays idempotently; a
     // different split gets disjoint chunk ids
-    val planned = Chunker.chunked(input, tokensPerChunk, planTag = inputSplit, meta = planMeta)
-
-    // the ledger: the chunk ids this split already wrote (one read, its
-    // input_split filter pushed to parquet stats). Each wave's parquet
-    // commit is atomic, so a chunk present in the table is complete and
-    // valid. Chunk ids are scoped by input_split (disjoint across
-    // splits), so only this split's chunks can be in the plan: they are
-    // exactly what a resume skips
-    val done = existingChunkMeta(spark, outDir).fold(Array.emptyLongArray)(
-      _.filter(col("input_split") === inputSplit).select("chunk_id").as[Long].collect().distinct.sorted)
+    val planned = Chunker.chunked(input, tokensPerChunk, planTag = inputSplit, meta = planMeta).toDF()
 
     // a split with nothing written (a fresh encode, a new micro-batch)
     // plans no ledger filter at all; otherwise its ids ship as a sorted
@@ -780,24 +806,25 @@ object Pipeline {
     // ---- one encode shuffle, committed in waves --------------------------
     // Waves exist for checkpoint granularity: each wave is one atomic
     // chunks write, so a crash loses at most the wave being written.
-    // The plan is encoded by ONE shuffle: its RDD is taken once (under
-    // AQE that runs the map stage), and wave w is the slice of its
+    // The plan is encoded by ONE shuffle: the kernel's RDD is taken once
+    // (under AQE that runs the map stage), and wave w is the slice of its
     // partitions p with p % waves == w. Every later wave reads the same
     // shuffle files; a lost executor recomputes only its lost map
     // outputs, from lineage. Total I/O regardless of `waves`: 1x input
     // scan + 1x shuffle + 1x final write.
     val wavesEff = math.max(1, waves)
-    val encoded = Encoder.encode(pending, inputSplit).map { c =>
+    val sorted = Encoder.sortedChunks(pending)
+    val encoded = Encoder.encodeSorted(sorted, inputSplit).map { c =>
       if (failOnChunk(c.chunk_id))
         throw new RuntimeException(s"injected failure on chunk ${c.chunk_id}")
       c
-    }(ChunkLayout).rdd
+    }
 
     // each wave's report sums: chunks written, then these chunk columns
     val summed = Seq("n_rows", "n_tokens", "raw_bytes", "encoded_bytes")
     val waveStats = (0 until wavesEff).map { w =>
       val enc = spark.createDataset(
-        PartitionPruningRDD.create(encoded, _ % wavesEff == w))(ChunkLayout)
+        PartitionPruningRDD.create(encoded, _ % wavesEff == w))(Encoder.ChunkLayout)
 
       // the wave's one write: its chunks, which are the ledger. The
       // report sums ride it as observed metrics — nothing is read back.
@@ -825,12 +852,21 @@ object Pipeline {
         .option("compression", "zstd")
         .option("parquet.bloom.filter.enabled#chunk_id", "true")
         .option("parquet.bloom.filter.expected.ndv#chunk_id", "4096")
+        .options(NoPayloadDictionary)
         .partitionBy("wave_id", "part_source")
         .parquet(chunksPath(outDir))
       obs.get
     }
     def total(k: String) = waveStats.map(_(k).asInstanceOf[Long]).sum
-    EncodeReport(wavesEff, total("chunks"), done.length, total("n_rows"), total("n_tokens"),
-      total("raw_bytes"), total("encoded_bytes"))
+    (EncodeReport(wavesEff, total("chunks"), done.length, total("n_rows"), total("n_tokens"),
+      total("raw_bytes"), total("encoded_bytes")), sorted)
   }
+
+  /** No parquet dictionary on the chunk columns whose values are unique
+    * per chunk: parquet would hash every value into a dictionary, then
+    * fall back to plain anyway.
+    */
+  private val NoPayloadDictionary =
+    Seq("tokens_enc", "doc_ids_enc", "lengths_enc", "doc_bloom")
+      .map(c => s"parquet.enable.dictionary#$c" -> "false").toMap
 }

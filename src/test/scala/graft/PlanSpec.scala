@@ -242,13 +242,23 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a new split's wave write plans no join against the chunks table") {
     import graft.engine.{Fixtures, Pipeline}
     val dir = java.nio.file.Files.createTempDirectory("graft-planspec-split").toString
-    def encode(seed: Long, split: String): Unit =
-      Pipeline.run(spark, Fixtures.tokenTable(spark, 200, seed = seed, partitions = 2), dir,
-        tokensPerChunk = 16 * 1024, waves = 1, inputSplit = split)
-    encode(1, "a")
-    val plans = executedPlans(encode(2, "b"))
+    def input(seed: Long) = Fixtures.tokenTable(spark, 200, seed = seed, partitions = 2)
+    Pipeline.run(spark, input(1), dir, tokensPerChunk = 16 * 1024, waves = 1, inputSplit = "a")
+    // what `run` does for split b, keeping the frame the encode kernel
+    // read: the wave write's own plan is an RDD scan, so the encode plan
+    // (Chunker plan, ledger filter, shuffle) is seen only here
+    var sorted: org.apache.spark.sql.DataFrame = null
+    val plans = executedPlans {
+      sorted = Pipeline.encodeRun(spark, input(2), dir, 16 * 1024, 1, "b", _ => false, None,
+        Pipeline.ledger(spark, dir, "b"))._2
+    }
     val chunks = Pipeline.chunksPath(dir)
     def scansChunks(p: String) = p.linesIterator.exists(l => l.contains("FileScan") && l.contains(s"$chunks]"))
+    val encodePlan = sorted.queryExecution.executedPlan.toString
+    assert(encodePlan.contains("isFinalPlan=true") && encodePlan.contains("hashpartitioning(chunk_id"),
+      s"not the executed encode plan:\n$encodePlan")
+    assert(!encodePlan.contains("Join") && !scansChunks(encodePlan),
+      s"the encode reads the chunks table:\n$encodePlan")
     val writes = plans.filter(_.contains(s"InsertIntoHadoopFsRelationCommand file:$chunks,"))
     assert(writes.length == 1, s"expected one wave write:\n${plans.mkString("\n\n")}")
     assert(!writes.head.contains("Join") && !scansChunks(writes.head),
@@ -258,6 +268,27 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ledger.length == 1 && ledger.head.contains("PushedFilters: [IsNotNull(input_split), EqualTo(input_split,b)]"),
       s"ledger reads:\n${ledger.mkString("\n\n")}")
     graft.engine.Verifier.rmTree(dir)
+  }
+
+  test("the encode kernel reads its sorted input's rows with no deserializer over tokens") {
+    import graft.engine.{Chunker, Encoder, Fixtures, Tables, TokenRow}
+    // a parquet read types tokens as array<int> with nullable elements,
+    // which a typed view of the rows would box element by element
+    val tmp = java.nio.file.Files.createTempDirectory("graft-planspec-kernel").toString + "/tokens"
+    Fixtures.tokenTable(spark, 200, seed = 3, partitions = 2).write.parquet(tmp)
+    val tokens = Tables.read(spark, tmp, org.apache.spark.sql.Encoders.product[TokenRow])
+    val sorted = Encoder.sortedChunks(Chunker.chunked(tokens, 16 * 1024).toDF())
+    val kernel = Encoder.encodeSorted(sorted, "")
+    // the kernel iterates the sorted plan's own rows, not a typed view's
+    assert(kernel.dependencies.map(_.rdd) == Seq(sorted.queryExecution.toRdd),
+      s"the kernel reads another plan than its input's:\n${kernel.toDebugString}")
+    val qe = sorted.queryExecution
+    for ((stage, p) <- Seq("analyzed" -> qe.analyzed.toString, "optimized" -> qe.optimizedPlan.toString,
+                           "executed" -> qe.executedPlan.toString))
+      assert(!p.contains("DeserializeToObject") && !p.contains("MapObjects"),
+        s"the $stage encode input deserializes rows:\n$p")
+    assert(kernel.count() > 0)
+    graft.engine.Verifier.rmTree(new java.io.File(tmp).getParent)
   }
 
   test("q37: embedding vectors do not ride the LSH band self-join") {

@@ -153,6 +153,64 @@ class IntCodecSpec extends AnyFunSuite {
     }
   }
 
+  /** The sort-based dict encoding, kept as the reference for the hashed
+    * one: sort a copy of the slice, dedup it, write the ascending
+    * dictionary, then binary-search and pack each value's code.
+    */
+  private def sortedDictEncoding(a: Array[Int], from: Int, n: Int): Array[Byte] = {
+    val out = new ByteSink()
+    out.addByte(IntCodec.Dict.id); BitIO.writeUvarint(out, n)
+    if (n > 0) {
+      val dict = a.slice(from, from + n).sorted.distinct
+      BitIO.writeUvarint(out, dict.length)
+      BitIO.writeUvarint(out, BitIO.zigzag(dict(0)))
+      for (i <- 1 until dict.length) BitIO.writeUvarintLong(out, dict(i).toLong - dict(i - 1).toLong)
+      val width = BitIO.bits(dict.length - 1)
+      out.addByte(width.toByte)
+      val codes = Array.tabulate(n)(i => java.util.Arrays.binarySearch(dict, a(from + i)))
+      if (width > 0) BitIO.packBits(codes, 0, n, width, out)
+    }
+    out.result()
+  }
+
+  private def dictEncoding(a: Array[Int], from: Int, n: Int): Array[Byte] = {
+    val out = new ByteSink()
+    IntCodec.Dict.encode(a, from, n, out)
+    out.result()
+  }
+
+  test("property: dict encode equals the sort-based encoding byte for byte") {
+    // a slice [from, from + n) of a padded array, so from != 0 and the
+    // values around the slice must not leak into it
+    val genSlice = for {
+      a <- Gen.oneOf(genArray, Gen.containerOf[Array, Int](Gen.oneOf(Int.MinValue, Int.MaxValue, -1, 0)))
+      pre <- Gen.containerOf[Array, Int](Gen.chooseNum(Int.MinValue, Int.MaxValue))
+      post <- Gen.containerOf[Array, Int](Gen.chooseNum(Int.MinValue, Int.MaxValue))
+    } yield (pre ++ a ++ post, pre.length, a.length)
+    forAll(genSlice) { case (a, from, n) =>
+      assert(dictEncoding(a, from, n).sameElements(sortedDictEncoding(a, from, n)))
+    }
+    val fixed = Seq(
+      "n = 1" -> Array(5),
+      "n = 1 at Int.MinValue" -> Array(Int.MinValue),
+      "all equal" -> Array.fill(10000)(-7),
+      "extremes" -> Array(Int.MaxValue, Int.MinValue, Int.MaxValue, 0, -1, Int.MinValue),
+      "negatives" -> Array.tabulate(5000)(i => -(i * 7919 % 300) - 1),
+      "65,536 distinct" -> Array.tabulate(200000)(i => ((i.toLong * 40503) % 65536).toInt * 3 - 98304),
+      "65,537 distinct" -> Array.tabulate(200000)(i => ((i.toLong * 40503) % 65537).toInt * -5),
+      "65,537 distinct, the last one new" -> (Array.tabulate(65536)(i => i) :+ Int.MinValue)
+    )
+    for ((name, a) <- fixed; (pre, post) <- Seq((0, 0), (3, 2))) {
+      val padded = Array.fill(pre)(42) ++ a ++ Array.fill(post)(Int.MaxValue - 1)
+      val got = dictEncoding(padded, pre, a.length)
+      assert(got.sameElements(sortedDictEncoding(padded, pre, a.length)), s"$name, from $pre")
+      assert(IntCodec.decode(got).sameElements(a), s"$name, from $pre")
+    }
+    // the fixtures sit on either side of the hashed path's limit
+    assert(fixed(5)._2.distinct.length == IntCodec.Dict.MaxHashed)
+    assert(fixed(6)._2.distinct.length == IntCodec.Dict.MaxHashed + 1)
+  }
+
   test("property: auto decode∘encode == id and size <= plain+slack") {
     forAll(genArray) { a =>
       val (_, enc) = Selector.encodeAuto(a)

@@ -95,6 +95,39 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(withNulls == plan(ds), "null-source rows changed other rows' chunk ids")
   }
 
+  /** 20 docs of one source plus `extra`, with `tokens` typed
+    * array<int> with nullable elements, as a parquet read types it.
+    */
+  private def withRow(extra: org.apache.spark.sql.Row): org.apache.spark.sql.Dataset[TokenRow] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("doc_id", StringType),
+      StructField("tokens", ArrayType(IntegerType, containsNull = true)),
+      StructField("n_tok", IntegerType), StructField("source", StringType)))
+    val rows = (0 until 20).map(i => Row(f"doc_$i%03d", Seq(1, 2, 3), 3, "web")) :+ extra
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      .as(org.apache.spark.sql.Encoders.product[TokenRow])
+  }
+
+  private def causes(e: Throwable): Seq[Throwable] = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  test("a null token element fails the encode, never encodes as a 0 token") {
+    val ds = withRow(org.apache.spark.sql.Row("doc_x", Seq(5, null, 7), 3, "web"))
+    intercept[Exception](Encoder.encodeTable(ds, 1 << 20).collect())
+    val out = tmpDir()
+    intercept[Exception](Pipeline.run(spark, ds, out, tokensPerChunk = 1 << 20, waves = 1))
+    assert(Pipeline.readLineage(spark, out).forall(_.count() == 0), "a chunk with the null token was written")
+    Verifier.rmTree(out)
+  }
+
+  test("a null tokens array or a null doc_id fails the encode with a NullPointerException") {
+    for (extra <- Seq(org.apache.spark.sql.Row("doc_x", null, 0, "web"),
+                      org.apache.spark.sql.Row(null, Seq(5, 6, 7), 3, "web"))) {
+      val e = intercept[org.apache.spark.SparkException](Encoder.encodeTable(withRow(extra), 1 << 20).collect())
+      assert(causes(e).exists(_.isInstanceOf[NullPointerException]), s"$extra: $e")
+    }
+  }
+
   test("encode -> decode round-trip is bit-identical (keystone)") {
     val ds = Fixtures.tokenTable(spark, 3000, seed = 3, medianLen = 200, maxLen = 8192, partitions = 4)
     val out = tmpDir()
