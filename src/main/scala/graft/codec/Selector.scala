@@ -75,7 +75,7 @@ object Selector {
     var distinct = 0
     @inline def addDistinct(v: Int): Unit = {
       if (distinct >= 0 && distinct < DistinctCap) {
-        var h = (v * 0x9e3779b1) >>> 16 & capMask
+        var h = (v * 0x9e3779b1) >>> 15 & capMask
         var cont = true
         while (cont) {
           if (stamp(h) != gen) { stamp(h) = gen; table(h) = v; distinct += 1; cont = false }
@@ -127,7 +127,7 @@ object Selector {
     var i = 0
     while (i < n) {
       val v = a(from + i)
-      var h = (v * 0x9e3779b1) >>> 16 & capMask
+      var h = (v * 0x9e3779b1) >>> 15 & capMask
       var cont = true
       while (cont) {
         if (stamp(h) != gen) {

@@ -92,13 +92,15 @@ object StrCodec {
       val (buf, lens) = concatUtf8(values)
       // FSST trial on a sample, judged POST-zstd: the parquet layer
       // zstd-compresses the cell either way, so FSST only wins if its
-      // output still compresses smaller than zstd(plain) would
-      val sampleLen = math.min(buf.length, Fsst.MaxSampleBytes)
-      val trial = new ByteSink(sampleLen)
-      Fsst.compress(buf, 0, sampleLen, trial)
-      val fsstZ = Selector.zstdSize(trial.result())
-      val plainZ = Selector.zstdSize(java.util.Arrays.copyOfRange(buf, 0, sampleLen))
-      if (buf.length > 64 && fsstZ < plainZ) {
+      // output still compresses smaller than zstd(plain) would. A
+      // column of 64 bytes or less stays plain, untried
+      def fsstWins: Boolean = {
+        val sampleLen = math.min(buf.length, Fsst.MaxSampleBytes)
+        val trial = new ByteSink(sampleLen)
+        Fsst.compress(buf, 0, sampleLen, trial)
+        Selector.zstdSize(trial.result()) < Selector.zstdSize(java.util.Arrays.copyOfRange(buf, 0, sampleLen))
+      }
+      if (buf.length > 64 && fsstWins) {
         out.addByte(FsstId)
         writeUvarint(out, n)
         writeIntBlock(lens, out)

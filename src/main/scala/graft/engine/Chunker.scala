@@ -1,7 +1,10 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deterministic, skew-aware, source-clustered chunk assignment.
   *
@@ -26,8 +29,11 @@ import org.apache.spark.sql.functions._
   * split into ceil(sum/budget) sub-buckets by a second hash) — the
   * analog of the reference's greedy shard cuts on row/column overflow
   * (convert/convert.go:799-844). Both pre-passes are column-only scans
-  * with map-side partial aggregation; at 100 TB they read two small
-  * columns, never the payload.
+  * that read three small columns, never the payload, and each is ONE
+  * Spark job ([[sourceBuckets]]: per-task sums folded on the driver;
+  * [[bucketSplits]]: one map-side-combined shuffle). At 100 TB pre-pass
+  * 1 ships |sources| sums per task, pre-pass 2 shuffles one partial sum
+  * per (task, bucket), and no per-doc state reaches the driver.
   */
 object Chunker {
   /** Max split factor per base bucket (second-level skew salting). */
@@ -55,7 +61,7 @@ object Chunker {
     *        DataFrame with (source, doc_id, n_tok) columns ROW-
     *        EQUIVALENT to df's projection onto those columns. The two
     *        pre-passes (per-source token mass, per-bucket split
-    *        factors) aggregate `meta` instead of re-evaluating `df` —
+    *        factors) read `meta` instead of re-evaluating `df` —
     *        decisive when df is an expensive opaque plan (compaction's
     *        decode+dedup) that column pruning cannot reach: the
     *        payload plan then evaluates exactly ONCE (the final
@@ -85,26 +91,14 @@ object Chunker {
     // cheaper row-equivalent metadata plan
     val statsIn = meta.getOrElse(df).select(col("source"), col("doc_id"), col("n_tok"))
 
-    // Both pre-passes yield small tables (|sources| rows; the
-    // overweight buckets). Each is collected to the driver and looked
-    // up per row from an ordinary broadcast map, not joined: a
-    // broadcast join's hash relation takes a whole Tungsten page
-    // (16 MB at the default page size) however few its rows, and the
-    // driver keeps it until the ContextCleaner drops the broadcast.
+    // Both pre-passes yield small maps (|sources| entries; the
+    // overweight buckets), each looked up per row from an ordinary
+    // broadcast, not joined: a broadcast join's hash relation takes a
+    // whole Tungsten page (16 MB at the default page size) however few
+    // its rows, and the driver keeps it until the ContextCleaner drops
+    // the broadcast.
     val sc = df.sparkSession.sparkContext
-
-    // pre-pass 1: token mass per source -> base bucket count per source
-    val numBaseMap = statsIn
-      .groupBy(col("source"))
-      .agg(sum(col("n_tok")).as("src_tokens"))
-      .where(col("source").isNotNull) // an inner join never matches null
-      .select(
-        col("source"),
-        greatest(
-          lit(1L),
-          ceil(col("src_tokens").cast("double") / tokensPerChunk).cast("long")
-        ))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val numBaseMap = sourceBuckets(statsIn, tokensPerChunk)
     // each source names a `part_source=` directory of the chunks table.
     // A JVM whose file-name charset cannot encode a source (`café` under
     // an ASCII locale) would fail that write mid-encode, after earlier
@@ -117,37 +111,12 @@ object Chunker {
           s"(sun.jnu.encoding) is $fileNames; run under a UTF-8 locale or rename the source")
     }
     val numBase = sc.broadcast(numBaseMap)
-    val numBaseOf = udf((s: String) => numBase.value.get(s).map(Long.box).orNull)
-    // rows whose source has no base count drop out, as in an inner join
-    def withBase(rows: DataFrame) = rows
-      .withColumn("num_base", numBaseOf(col("source")))
-      .where(col("num_base").isNotNull)
-      .withColumn("base_id", pmod(xxhash64(col("doc_id")), col("num_base")))
-      .drop("num_base")
-
-    // pre-pass 2: token-weighted per-bucket mass -> split factors for
-    // the overweight minority (long-tail n_tok / hot hash buckets).
-    // Aggregated from statsIn (same rows, same base_id formula) so an
-    // expensive df is not evaluated a third time.
-    val splits = sc.broadcast(withBase(statsIn)
-      .groupBy(col("source"), col("base_id"))
-      .agg(sum(col("n_tok")).as("bucket_tokens"))
-      .select(
-        col("source"),
-        col("base_id"),
-        greatest(
-          lit(1),
-          least(
-            lit(MaxSplit),
-            ceil(col("bucket_tokens").cast("double") / tokensPerChunk)
-          )
-        ).cast("int").as("split")
-      )
-      .where(col("split") > 1) // keep only the skewed minority
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap)
+    // pre-pass 2 reads statsIn (same rows, same base_id formula) so an
+    // expensive df is not evaluated a third time
+    val splits = sc.broadcast(bucketSplits(withBase(statsIn, numBase), tokensPerChunk))
     val splitOf = udf((s: String, base: Long) => splits.value.getOrElse((s, base), 1))
 
-    withBase(df)
+    withBase(df, numBase)
       .withColumn(
         "chunk_id",
         xxhash64(
@@ -156,6 +125,72 @@ object Chunker {
           col("base_id"),
           pmod(xxhash64(col("doc_id"), lit("salt")), splitOf(col("source"), col("base_id")).cast("long"))))
       .drop("base_id")
+  }
+
+  /** Pre-pass 1: each source's base bucket count, max(1, ceil(token
+    * mass / tokensPerChunk)), from the (source, n_tok) columns of
+    * `stats`. One Spark job, no shuffle: each task folds its rows into per-source
+    * sums keyed by the source's UTF-8 bytes (as a SQL group-by keys
+    * them), and the driver adds the tasks' |sources|-entry partials. A
+    * null source drops out; a null n_tok adds nothing.
+    */
+  private[engine] def sourceBuckets(stats: DataFrame, tokensPerChunk: Long): Map[String, Long] = {
+    val rows = stats.select(col("source"), col("n_tok").cast("long")).queryExecution.toRdd
+    val mass = rows.aggregate(mutable.HashMap.empty[UTF8String, Long])(
+      (m, r) => {
+        if (!r.isNullAt(0)) {
+          val n = if (r.isNullAt(1)) 0L else r.getLong(1)
+          val s = r.getUTF8String(0) // a view into the reused row
+          m.get(s) match {
+            case Some(sum) => m.update(s, sum + n)
+            case None => m.update(s.copy(), n)
+          }
+        }
+        m
+      },
+      (a, b) => { b.foreach { case (s, n) => a.update(s, a.getOrElse(s, 0L) + n) }; a })
+    mass.iterator.map { case (s, n) =>
+      s.toString -> math.max(1L, math.ceil(n.toDouble / tokensPerChunk).toLong)
+    }.toMap
+  }
+
+  /** `rows` with `base_id`, the doc's base bucket within its source:
+    * pmod(xxhash64(doc_id), the source's bucket count). Rows whose
+    * source has no bucket count drop out, as in an inner join.
+    */
+  private[engine] def withBase(rows: DataFrame, numBase: Broadcast[Map[String, Long]]): DataFrame = {
+    val numBaseOf = udf((s: String) => numBase.value.get(s).map(Long.box).orNull)
+    rows
+      .withColumn("num_base", numBaseOf(col("source")))
+      .where(col("num_base").isNotNull)
+      .withColumn("base_id", pmod(xxhash64(col("doc_id")), col("num_base")))
+      .drop("num_base")
+  }
+
+  /** Pre-pass 2: the split factor of each overweight base bucket,
+    * min(MaxSplit, ceil(bucket mass / tokensPerChunk)), for the buckets
+    * where it is above 1, from the (source, base_id, n_tok) columns of
+    * `based`. One Spark job with one shuffle: a `reduceByKey` with
+    * map-side combine, as wide as the scan but never wider than
+    * `spark.sql.shuffle.partitions`. A bucket whose every n_tok is null
+    * has no mass and takes MaxSplit, as the SQL aggregate gave it (its
+    * sum is null, and `least` skips a null).
+    */
+  private[engine] def bucketSplits(based: DataFrame, tokensPerChunk: Long): Map[(String, Long), Int] = {
+    val rows = based.select(col("source"), col("base_id"), col("n_tok").cast("long")).queryExecution.toRdd
+    val width = math.max(1,
+      math.min(rows.getNumPartitions, based.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt))
+    val noMass: java.lang.Long = null
+    rows
+      .map(r => (r.getUTF8String(0).copy(), r.getLong(1)) -> (if (r.isNullAt(2)) noMass else Long.box(r.getLong(2))))
+      .reduceByKey((a, b) => if (a == null) b else if (b == null) a else Long.box(a + b), width)
+      .flatMap { case ((s, base), mass) =>
+        val split =
+          if (mass == null) MaxSplit
+          else math.max(1L, math.min(MaxSplit.toLong, math.ceil(mass.toDouble / tokensPerChunk).toLong)).toInt
+        if (split > 1) Some((s.toString, base) -> split) else None
+      }
+      .collect().toMap
   }
 
   /** Typed variant producing ChunkedRow. */

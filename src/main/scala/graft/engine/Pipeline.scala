@@ -167,12 +167,17 @@ object Pipeline {
       .agg(min(struct(col("source"), col("n_tok"))).as("w"), count(lit(1)).as("n"))
       .select(col("w.source").as("source"), col("doc_id"), col("w.n_tok").as("n_tok"), col("n"))
 
-  /** One aggregate over [[compactDocs]]: (input rows, output rows, does
-    * no doc repeat).
+  /** One pass over [[compactDocs]]: (input rows, output rows, does no
+    * doc repeat). One Spark job, no shuffle: each task folds its groups'
+    * `n` into (sum, count, max), and the driver adds the partials.
     */
   private def docCounts(docs: DataFrame): (Long, Long, Boolean) = {
-    val r = docs.agg(coalesce(sum("n"), lit(0L)), count(lit(1)), coalesce(max("n"), lit(1L))).first()
-    (r.getLong(0), r.getLong(1), r.getLong(2) <= 1)
+    val parts = docs.select(col("n")).queryExecution.toRdd.mapPartitions { rows =>
+      var in, out, most = 0L
+      rows.foreach { r => val n = r.getLong(0); in += n; out += 1; most = math.max(most, n) }
+      Iterator((in, out, most))
+    }.collect()
+    (parts.map(_._1).sum, parts.map(_._2).sum, parts.forall(_._3 <= 1))
   }
 
   /** The decoded rows a compaction encodes. When no doc repeats it is
@@ -233,11 +238,11 @@ object Pipeline {
     *
     * Scale shape: one payload-free doc table ([[compactDocs]], the
     * inputs' doc indexes grouped by doc_id) is persisted for the run,
-    * and one aggregate over it gives the input rows, the output rows
-    * and whether any doc repeats. When none does ([[compactPlan]]), the
-    * inputs' union feeds the encoder directly: backfills of disjoint
-    * ranges and streaming micro-batches with interleaved ones pay one
-    * payload shuffle, not two. The doc table also feeds both Chunker
+    * and one pass over it ([[docCounts]]) gives the input rows, the
+    * output rows and whether any doc repeats. When none does
+    * ([[compactPlan]]), the inputs' union feeds the encoder directly:
+    * backfills of disjoint ranges and streaming micro-batches with
+    * interleaved ones pay one payload shuffle, not two. The doc table also feeds both Chunker
     * pre-passes, so the payload plan evaluates once, and `rowsDropped`
     * (input rows less output rows) is known before the run.
     */
@@ -291,7 +296,7 @@ object Pipeline {
       }
       chunks.map(_.getLong(0)).distinct.sorted
     }
-    // persisted for the run: the aggregate below and the two Chunker
+    // persisted for the run: docCounts below and the two Chunker
     // pre-passes all read it, and without the persist the doc-index
     // union and its grouping shuffle evaluate once per read. It is ~1%
     // of the payload bytes (ids/lengths/sources only) — bounded, unlike

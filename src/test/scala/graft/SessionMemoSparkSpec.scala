@@ -148,6 +148,12 @@ class SessionMemoSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     Verifier.rmTree(dir)
   }
 
+  test("Chunker.chunked submits 2 jobs: one per sizing pre-pass") {
+    val ds = Fixtures.tokenTable(spark, 400, seed = 8, partitions = 2)
+    val jobs = jobsOf(graft.engine.Chunker.chunked(ds, tokensPerChunk = 4 * 1024))
+    assert(jobs == 2, s"planning a chunk assignment submitted $jobs job(s)")
+  }
+
   /** Spark jobs of one `Pipeline.run` of `ds` into `dir`, with its report. */
   private def runJobs(ds: org.apache.spark.sql.Dataset[graft.engine.TokenRow], dir: String,
       split: String): (Int, Pipeline.EncodeReport) = {
@@ -158,20 +164,20 @@ class SessionMemoSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     (jobs, report)
   }
 
-  test("a resume with nothing to encode reads its split's ids once: 7 jobs") {
+  test("a resume with nothing to encode reads its split's ids once: 5 jobs") {
     val dir = Files.createTempDirectory("graft-memo-resume").toString
     val ds = Fixtures.tokenTable(spark, 400, seed = 6, partitions = 2)
     Pipeline.run(spark, ds, dir, tokensPerChunk = 16 * 1024, waves = 1)
     val written = Pipeline.readChunks(spark, dir).count()
     val (jobs, report) = runJobs(ds, dir, "")
     assert(report.chunksEncoded == 0 && report.chunksSkipped == written, report)
-    // the two Chunker pre-passes (2 jobs each), the ledger read (1) and
+    // the two Chunker pre-passes (1 job each), the ledger read (1) and
     // the empty wave write (2)
-    assert(jobs == 7, s"a resume with nothing to encode submitted $jobs job(s)")
+    assert(jobs == 5, s"a resume with nothing to encode submitted $jobs job(s)")
     Verifier.rmTree(dir)
   }
 
-  test("a new split into a table holding other splits submits 8 jobs") {
+  test("a new split into a table holding other splits submits 6 jobs") {
     val dir = Files.createTempDirectory("graft-memo-split").toString
     Seq("a", "b").zipWithIndex.foreach { case (split, i) =>
       Pipeline.run(spark, Fixtures.tokenTable(spark, 200, seed = 10 + i, partitions = 2), dir,
@@ -181,11 +187,11 @@ class SessionMemoSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(report.chunksSkipped == 0 && report.rows == 200, report)
     // as a resume, plus one schema inference of the new table version;
     // the wave write plans no ledger filter
-    assert(jobs == 8, s"a new split submitted $jobs job(s)")
+    assert(jobs == 6, s"a new split submitted $jobs job(s)")
     Verifier.rmTree(dir)
   }
 
-  test("a fresh 4-wave encode submits 9 jobs: one encode shuffle for every wave") {
+  test("a fresh 4-wave encode submits 7 jobs: one encode shuffle for every wave") {
     val dir = Files.createTempDirectory("graft-memo-waves").toString
     var report: Pipeline.EncodeReport = null
     val jobs = jobsOf {
@@ -193,13 +199,13 @@ class SessionMemoSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         tokensPerChunk = 16 * 1024, waves = 4)
     }
     assert(report.wavesRun == 4 && report.rows == 400, report)
-    // the two Chunker pre-passes (2 jobs each), the encode shuffle's map
+    // the two Chunker pre-passes (1 job each), the encode shuffle's map
     // stage (1) and one write per wave (4), an empty wave's too
-    assert(jobs == 9, s"a fresh 4-wave encode submitted $jobs job(s)")
+    assert(jobs == 7, s"a fresh 4-wave encode submitted $jobs job(s)")
     Verifier.rmTree(dir)
   }
 
-  test("a compaction of two overlapping inputs submits 13 jobs, and its resume 13") {
+  test("a compaction of two overlapping inputs submits 10 jobs, its resume 10") {
     val ds = Fixtures.tokenTable(spark, 300, seed = 5, medianLen = 64, maxLen = 512, partitions = 2)
     val inputs = Seq(
       ds.filter(_.doc_id < "doc_000000000200"),   // docs 0-199
@@ -221,13 +227,14 @@ class SessionMemoSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(first.rows == 300 && first.rowsDropped == 100, first)
     val (resumed, again) = compact()
     assert(again.chunksEncoded == 0 && again.rowsDropped == 100, again)
-    // fresh: the inputs' schema checks (2), the doc table's aggregate
-    // (2), the Chunker pre-passes and the wave write (9). A resume finds
-    // the inputs' schemas memoized, checks the target's (1), and adds
-    // one read of the target's (chunk_id, input_split), which serves
-    // both the target check and the ledger (1)
-    assert(fresh == 13, s"a fresh compaction submitted $fresh job(s)")
-    assert(resumed == 13, s"a resumed compaction submitted $resumed job(s)")
+    // fresh: the inputs' schema checks (2), the doc table's grouping
+    // shuffle, its cache and its counts (3), the Chunker pre-passes (1
+    // job each), the dedup and encode shuffles and the wave write (3).
+    // A resume finds the inputs' schemas memoized, checks the target's
+    // (1), and adds one read of the target's (chunk_id, input_split),
+    // which serves both the target check and the ledger (1)
+    assert(fresh == 10, s"a fresh compaction submitted $fresh job(s)")
+    assert(resumed == 10, s"a resumed compaction submitted $resumed job(s)")
     (inputs :+ out).foreach(Verifier.rmTree)
   }
 

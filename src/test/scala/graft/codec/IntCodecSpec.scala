@@ -118,6 +118,40 @@ class IntCodecSpec extends AnyFunSuite {
     assert(s.n == 6 && s.min == 1 && s.max == 7 && s.runs == 3 && s.distinct == 3 && !s.sorted)
   }
 
+  test("property: distinct counts equal a HashSet at and around the cap") {
+    val cap = Selector.DistinctCap
+    // exactDistinct: exact up to the cap, -1 once a value past it arrives
+    def exactRule(a: Array[Int]): Int = { val d = a.toSet.size; if (d > cap) -1 else d }
+    // stats: counts at each run start; a run start after the cap is full is -1
+    def statsRule(a: Array[Int]): Int = {
+      val seen = scala.collection.mutable.HashSet.empty[Int]
+      var over = false
+      for (i <- a.indices if !over && (i == 0 || a(i) != a(i - 1)))
+        if (seen.size < cap) seen += a(i) else over = true
+      if (over) -1 else seen.size
+    }
+    val genSlice = for {
+      d <- Gen.oneOf(cap - 1, cap, cap + 1)
+      seed <- Gen.choose(0L, Long.MaxValue)
+      repeats <- Gen.oneOf(0, 1, 3)
+      ordered <- Gen.oneOf(true, false)
+    } yield {
+      val rnd = new scala.util.Random(seed)
+      val values = Iterator.continually(rnd.nextInt()).distinct.take(d).toArray
+      val slice = values ++ Array.fill(repeats * d / 4)(values(rnd.nextInt(d)))
+      if (ordered) slice else rnd.shuffle(slice.toSeq).toArray
+    }
+    forAll(genSlice, n = 12) { a =>
+      assert(Selector.exactDistinct(a, 0, a.length) == exactRule(a))
+      assert(Selector.stats(a, 0, a.length).distinct == statsRule(a))
+    }
+    // one run per value: at d == cap the cap's value is the last run, so stats still counts it
+    for (d <- Seq(cap - 1, cap, cap + 1)) {
+      val a = Array.tabulate(d)(identity)
+      assert(Selector.exactDistinct(a, 0, d) == exactRule(a) && Selector.stats(a, 0, d).distinct == statsRule(a))
+    }
+  }
+
   // ---------------------------------------------------------- properties
   val genArray: Gen[Array[Int]] = Gen.oneOf(
     Gen.containerOf[Array, Int](Gen.chooseNum(Int.MinValue, Int.MaxValue)),

@@ -125,6 +125,19 @@ class StrCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("columns of 64 and 65 bytes encode exactly as before the FSST trial moved") {
+    def hex(b: Array[Byte]) = b.map(x => f"${x & 0xff}%02x").mkString
+    val c64 = (1 to 8).map(i => f"token-$i%02d").toArray
+    val c65 = c64.updated(7, "token-08x")
+    // both plain: id, row count, the length block, byte count, the bytes
+    assert(hex(StrCodec.encodeAuto(c64)._2) == "0a080208100040" +
+      "746f6b656e2d3031746f6b656e2d3032746f6b656e2d3033746f6b656e2d3034" +
+      "746f6b656e2d3035746f6b656e2d3036746f6b656e2d3037746f6b656e2d3038")
+    assert(hex(StrCodec.encodeAuto(c65)._2) == "0a08020810018041" +
+      "746f6b656e2d3031746f6b656e2d3032746f6b656e2d3033746f6b656e2d3034" +
+      "746f6b656e2d3035746f6b656e2d3036746f6b656e2d3037746f6b656e2d303878")
+  }
+
   /** `buf` with the uvarint that follows the codec id byte and `skip`
     * further uvarints replaced by `v`.
     */

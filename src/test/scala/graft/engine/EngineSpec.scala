@@ -95,6 +95,99 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(withNulls == plan(ds), "null-source rows changed other rows' chunk ids")
   }
 
+  /** A plan-statistics table: (source, doc_id, n_tok) rows, any of
+    * source and n_tok null, in `partitions` partitions, n_tok typed
+    * int or long.
+    */
+  private final case class PlanCase(rows: Seq[(String, String, java.lang.Integer)], partitions: Int,
+      tokensPerChunk: Long, longNTok: Boolean) {
+    def df: org.apache.spark.sql.DataFrame = {
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types._
+      val schema = StructType(Seq(StructField("source", StringType), StructField("doc_id", StringType),
+        StructField("n_tok", IntegerType)))
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map { case (s, d, n) => Row(s, d, n) }, partitions), schema)
+      if (longNTok) df.withColumn("n_tok", df("n_tok").cast("long")) else df
+    }
+  }
+
+  private val planSources = Seq("web", "code", "books", "arxiv", "wiki", "news", "forum", "legal",
+    "patents", "math", "chat", "mail", "subs", "docs", "qa", "recipes", "poems", "reviews", "lyrics", "tweets")
+  private val nonAsciiSources = Seq("café", "日本語", "naïve", "\ud83d\ude00")
+
+  private def genPlanCase(sources: Seq[String]): org.scalacheck.Gen[PlanCase] = {
+    import org.scalacheck.Gen
+    val genNTok: Gen[java.lang.Integer] = Gen.frequency(
+      12 -> Gen.choose(1, 600).map(Int.box), 2 -> Gen.choose(2000, 20000).map(Int.box),
+      1 -> Gen.const(Int.box(0)), 1 -> Gen.const(null: java.lang.Integer))
+    for {
+      nSources <- Gen.choose(1, sources.size)
+      nDocs <- Gen.choose(1, 300)
+      srcs <- Gen.listOfN(nDocs, Gen.frequency(30 -> Gen.choose(0, nSources - 1).map(sources(_)),
+        1 -> Gen.const(null: String)))
+      ntoks <- Gen.listOfN(nDocs, genNTok)
+      partitions <- Gen.choose(1, 4)
+      tokensPerChunk <- Gen.oneOf(256L, 1000L, 4096L)
+      longNTok <- Gen.oneOf(false, true)
+    } yield PlanCase(srcs.zip(ntoks).zipWithIndex.map { case ((s, n), i) => (s, f"doc_$i%05d", n) },
+      partitions, tokensPerChunk, longNTok)
+  }
+
+  /** Both pre-pass maps and the (doc_id, source) -> chunk_id assignment
+    * of `c` equal those of the DataFrame aggregates in [[ChunkerReference]].
+    */
+  private def assertPlansAsReference(c: PlanCase, meta: Option[org.apache.spark.sql.DataFrame] = None): Unit = {
+    val df = c.df
+    val stats = meta.getOrElse(df).select("source", "doc_id", "n_tok")
+    val buckets = Chunker.sourceBuckets(stats, c.tokensPerChunk)
+    assert(buckets == ChunkerReference.sourceBuckets(stats, c.tokensPerChunk), s"pre-pass 1 of $c")
+    val based = Chunker.withBase(stats, spark.sparkContext.broadcast(buckets))
+    assert(Chunker.bucketSplits(based, c.tokensPerChunk) == ChunkerReference.bucketSplits(based, c.tokensPerChunk),
+      s"pre-pass 2 of $c")
+    def chunks(plan: => org.apache.spark.sql.DataFrame): Either[String, Seq[(String, String, Long)]] =
+      try Right(plan.select("doc_id", "source", "chunk_id").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq.sorted)
+      catch { case e: IllegalArgumentException => Left(e.getClass.getName) }
+    val planned = chunks(Chunker.assignChunks(df, c.tokensPerChunk, "tag", meta))
+    assert(planned == chunks(ChunkerReference.assignChunks(df, c.tokensPerChunk, "tag", meta)), s"chunk ids of $c")
+    // a charset that cannot name a source refuses it in both
+    val fileNames = java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding")).newEncoder()
+    assert(planned.isLeft == buckets.keys.exists(!fileNames.canEncode(_)), s"$c: $planned")
+  }
+
+  test("chunker: one-job pre-passes plan exactly as the DataFrame aggregates") {
+    graft.codec.PropCheck.forAll(genPlanCase(planSources), n = 10)(assertPlansAsReference(_))
+    graft.codec.PropCheck.forAll(genPlanCase(planSources.take(3) ++ nonAsciiSources), n = 4)(assertPlansAsReference(_))
+  }
+
+  test("chunker: the one-job pre-passes agree with the aggregates on edge tables") {
+    val n = Int.box(100)
+    val cases = Seq(
+      "empty" -> PlanCase(Nil, 2, 1000L, longNTok = false),
+      "a null-source row" -> PlanCase(Seq(("web", "a", n), (null, "b", n), ("web", "c", n)), 2, 150L, false),
+      "a doc over the budget" -> PlanCase(Seq(("web", "a", Int.box(50000)), ("web", "b", n)), 1, 1000L, false),
+      "null n_tok" -> PlanCase(Seq(("web", "a", null), ("web", "b", n), ("code", "c", null)), 2, 64L, true),
+      "1 source" -> PlanCase((0 until 200).map(i => ("web", s"d$i", Int.box(i))), 3, 2000L, false),
+      "20 sources" -> PlanCase((0 until 400).map(i => (planSources(i % 20), s"d$i", Int.box(i % 97))), 4, 300L,
+        true),
+      "non-ASCII sources" -> PlanCase((0 until 60).map(i => (nonAsciiSources(i % 4), s"d$i", n)), 2, 500L, false))
+    cases.foreach { case (name, c) => withClue(name)(assertPlansAsReference(c)) }
+  }
+
+  test("chunker: a compaction-shaped meta table plans as the DataFrame aggregates") {
+    import org.apache.spark.sql.functions._
+    // as Pipeline.compactDocs: one row per doc_id, its winner's
+    // (source, n_tok) and the count of its input rows
+    graft.codec.PropCheck.forAll(genPlanCase(planSources), n = 3) { c =>
+      val docs = c.df.union(c.df.limit(c.rows.size / 3))
+        .groupBy(col("doc_id"))
+        .agg(min(struct(col("source"), col("n_tok"))).as("w"), count(lit(1)).as("n"))
+        .select(col("w.source").as("source"), col("doc_id"), col("w.n_tok").as("n_tok"), col("n"))
+      assertPlansAsReference(c, Some(docs))
+    }
+  }
+
   /** 20 docs of one source plus `extra`, with `tokens` typed
     * array<int> with nullable elements, as a parquet read types it.
     */
